@@ -865,6 +865,19 @@ def test_linear_probe_recovers_exact_relation(spark):
     assert "Join" not in plan  # prediction pass is a pure projection
 
 
+def test_probe_fit_predict_zero_row_state_gives_null_coefficients(spark):
+    """A zero-row moment state is the empty-input case: every row is
+    returned with NULL y_hat/resid instead of an IndexError."""
+    from xcube_spark.pipeline.curation import probe_fit_predict, probe_moments
+
+    docs = spark.createDataFrame([(1, 2, 3, 4), (2, 3, 4, 5)],
+                                 "doc_id long, x1 long, x2 long, y long")
+    state = probe_moments(docs, "y", "x1", "x2").limit(0)
+    out = probe_fit_predict(state, docs, "y", "x1", "x2").collect()
+    assert sorted(r.doc_id for r in out) == [1, 2]
+    assert all(r.y_hat is None and r.resid is None for r in out)
+
+
 def test_chunk_split_window_arithmetic_and_coverage(spark):
     """chunk_split: every token lands in >= 1 window, consecutive
     windows overlap by exactly `overlap`, the tail window may be
@@ -982,6 +995,24 @@ def test_class_rebalance_balances_and_is_stable(spark):
     # explicit per_class cap
     capped = class_rebalance(docs, label_col="lang", per_class=3).collect()
     assert sum(1 for r in capped if r["kept"]) == 3 + 3
+
+
+def test_class_rebalance_keeps_null_label_docs(spark):
+    """NULL labels form their own class under the default cap: every
+    input document comes back, none dropped by the cap join."""
+    from xcube_spark.pipeline.curation import class_rebalance
+
+    docs = spark.createDataFrame(
+        [(i, "a") for i in range(6)] + [(10 + i, "b") for i in range(4)]
+        + [(20 + i, None) for i in range(3)],
+        "doc_id long, lang string")
+    out = class_rebalance(docs, label_col="lang").collect()
+    assert sorted(r.doc_id for r in out) == sorted(
+        r.doc_id for r in docs.collect())
+    kept = {}
+    for r in out:
+        kept[r.label] = kept.get(r.label, 0) + bool(r.kept)
+    assert kept == {"a": 3, "b": 3, None: 3}  # cap = the NULL class's 3
 
 
 # ---- n-gram novelty (round-10 third-session addition) --------------------

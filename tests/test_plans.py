@@ -493,3 +493,120 @@ def test_kmv_set_ops_two_bnlj_max(spark, sf_dir):
     plan = _plan(q.fn(spark, sf_dir))
     assert plan.count("BroadcastNestedLoopJoin") <= 2
     assert "CartesianProduct" not in plan
+
+
+# ---- zarr read path: coordinates from the chunk generator, no joins ----
+
+ZGRID = CubeGrid(width=8, height=4, time_periods=3, x_res=45.0,
+                 y_res=45.0, chunks=(1, 2, 4))
+
+
+def _zarr_store(spark, path, axes=None):
+    """A small zarr cube; ``axes`` maps an axis name to
+    ``(values, dtype, attrs[, chunk])`` written over the default
+    single-chunk ``<f8`` one (``chunk`` must divide the length)."""
+    import os
+
+    import numpy as np
+
+    from xcube_spark.sources.zarrio import (ZarrArray, _write_array_meta,
+                                            _write_bytes, encode_chunk,
+                                            write_zarr_cube)
+
+    write_zarr_cube(new_cube(spark, ZGRID, {"v": "CAST(t_i AS DOUBLE) + x"}),
+                    path, ZGRID)
+    for name, (vals, dtype, attrs, *chunk) in (axes or {}).items():
+        vals = np.asarray(vals)
+        c = chunk[0] if chunk else len(vals)
+        meta = ZarrArray(name=name, shape=vals.shape, chunks=(c,),
+                         dtype=dtype, compressor=None, fill_value=None,
+                         attrs={"_ARRAY_DIMENSIONS": [name], **attrs})
+        _write_array_meta(path, meta)
+        for i in range(len(vals) // c):
+            _write_bytes(os.path.join(path, name, meta.chunk_key(i)),
+                         encode_chunk(vals[i * c:(i + 1) * c], meta))
+    return path
+
+
+ZARR_SCHEMA = ("struct<t_i:int,y_i:int,x_i:int,time:timestamp,y:double,"
+               "x:double,v:double>")
+
+
+def test_open_zarr_cube_plan_has_no_axis_join(spark, tmp_path):
+    """The coordinates come out of the chunk generator: the optimized
+    plan has no Join and no LocalRelation (axis table)."""
+    from xcube_spark.sources.zarrio import open_zarr_cube
+
+    cube = open_zarr_cube(spark, _zarr_store(spark, str(tmp_path / "z")))
+    opt = cube._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in opt and "LocalRelation" not in opt, opt
+    assert cube.schema.simpleString() == ZARR_SCHEMA
+
+
+@pytest.mark.parametrize("case", ["f8", "f4", "noleap_int", "x_chunked"])
+def test_open_zarr_cube_axis_schema_and_values(spark, tmp_path, case):
+    """Axis columns keep their types whatever the stored dtype: a
+    ``<f4`` coordinate decodes to DOUBLE like ``<f8`` (CF decode is
+    float64), and an integer noleap time axis decodes to TIMESTAMP.
+    An axis stored in several chunks is read whole."""
+    import datetime as dt
+
+    from xcube_spark.sources.zarrio import open_zarr_cube
+
+    axes = {
+        "f8": {},
+        "f4": {"y": ([67.5, 22.5, -22.5, -67.5], "<f4", {})},
+        "noleap_int": {"time": ([0, 59, 400], "<i8", {
+            "units": "days since 2000-01-01", "calendar": "noleap"})},
+        "x_chunked": {"x": ([-180.0 + (i + 0.5) * 45.0 for i in range(8)],
+                            "<f8", {}, 4)},
+    }[case]
+    cube = open_zarr_cube(spark, _zarr_store(spark, str(tmp_path / case),
+                                             axes))
+    assert cube.schema.simpleString() == ZARR_SCHEMA
+    assert all(f.nullable for f in cube.schema.fields)
+    rows = cube.collect()
+    assert len(rows) == ZGRID.size
+    by_cell = {(r.t_i, r.y_i, r.x_i): r for r in rows}
+    r = by_cell[(2, 0, 3)]
+    assert r.x == -180.0 + 3.5 * 45.0 and r.v == 2.0 + r.x
+    if case == "f4":
+        assert r.y == 67.5
+    else:
+        assert r.y == -90.0 + 0.5 * 45.0
+    if case == "noleap_int":
+        # day 400 of a 365-day calendar: 2001-01-01 + 35 days
+        assert by_cell[(1, 0, 0)].time == dt.datetime(2000, 3, 1)
+        assert r.time == dt.datetime(2001, 2, 5)
+    else:
+        assert r.time == dt.datetime(2010, 1, 3, 12)
+
+
+def test_open_zarr_cube_short_axis_raises(spark, tmp_path):
+    from xcube_spark.sources.zarrio import open_zarr_cube
+
+    path = _zarr_store(spark, str(tmp_path / "z"),
+                       {"x": (list(range(7)), "<f8", {})})
+    with pytest.raises(ValueError, match="axis 'x'"):
+        open_zarr_cube(spark, path)
+
+
+def test_zarr_point_statistics_job_count(spark, tmp_path):
+    """A point-statistics request on an opened cube starts at most two
+    jobs: the aggregate's shuffle stage and its result stage — no
+    broadcast jobs for axis tables."""
+    from xcube_spark.operators.statistics import compute_statistics
+    from xcube_spark.sources.zarrio import open_zarr_cube
+
+    path = _zarr_store(spark, str(tmp_path / "z"))
+    sc = spark.sparkContext
+    sc.setJobGroup("zarr-point-stats", "point statistics on a zarr cube")
+    try:
+        row = compute_statistics(
+            open_zarr_cube(spark, path), "v",
+            mask=(F.col("x_i") == 1) & (F.col("y_i") == 2)).collect()[0]
+        jobs = sc.statusTracker().getJobIdsForGroup("zarr-point-stats")
+    finally:
+        sc.setJobGroup("", "")
+    assert row["count"] == ZGRID.time_periods
+    assert len(jobs) <= 2, jobs

@@ -283,6 +283,22 @@ def test_zarr_roundtrip_bitexact(spark, tmp_path):
             == cube.where(F.col("B").isNull()).count())
 
 
+def test_zarr_write_raises_no_user_warning(spark, tmp_path):
+    """The chunk writer's applyInPandas function carries no partial
+    type hints, so pyspark has no eval type to (fail to) infer and
+    warns nothing."""
+    import warnings
+
+    from xcube_spark.sources.zarrio import write_zarr_cube
+
+    grid = _small_grid()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        n = write_zarr_cube(new_cube(spark, grid, {"A": 1.0}),
+                            str(tmp_path / "w.zarr"), grid)
+    assert n > 0
+
+
 def test_zarr_cf_packing(spark, tmp_path):
     """int16 + scale/offset/_FillValue packing decodes NULLs and values
     like the reference's CF decode (dsio.py ZarrDatasetIO semantics)."""

@@ -347,6 +347,59 @@ def test_render_tile_png_roundtrips_channel_values(spark):
     assert n_opaque == len(covered)
 
 
+def _reference_tile_png(rows, tile_size, background=(0, 0, 0, 0)):
+    """The per-row renderer the Arrow path replaced: scatter each
+    (px, py, r, g, b, a) row into a bytearray, then frame filter-0
+    scanlines as IHDR + IDAT(zlib level 9) + IEND."""
+    import struct
+    import zlib
+
+    buf = bytearray(background * (tile_size * tile_size))
+    for px, py, r, g, b, a in rows:
+        if 0 <= px < tile_size and 0 <= py < tile_size:
+            o = 4 * (py * tile_size + px)
+            buf[o:o + 4] = bytes((r & 255, g & 255, b & 255, a & 255))
+    stride = 4 * tile_size
+    raw = b"".join(b"\x00" + buf[y * stride:(y + 1) * stride]
+                   for y in range(tile_size))
+
+    def chunk(tag, data):
+        return (struct.pack(">I", len(data)) + tag + data
+                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
+
+    return (b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", struct.pack(">IIBBBBB", tile_size, tile_size,
+                                         8, 6, 0, 0, 0))
+            + chunk(b"IDAT", zlib.compress(raw, 9)) + chunk(b"IEND", b""))
+
+
+@pytest.mark.parametrize("case", ["empty", "out_of_range", "partial"])
+def test_render_tile_png_matches_per_row_reference(spark, case):
+    """render_tile_png (Arrow collect + numpy scatter) is byte-identical
+    to the per-row reference on fixed RGBA frames: an empty frame,
+    out-of-range pixels (dropped), and a partial tile with a repeated
+    pixel (last row wins), channels outside 0..255 (taken mod 256) and
+    a non-default background."""
+    from xcube_spark.operators.tiles import render_tile_png
+
+    size, background = 8, (0, 0, 0, 0)
+    rows = []
+    if case == "out_of_range":
+        rows = [(-1, 0, 1, 2, 3, 255), (8, 3, 1, 2, 3, 255),
+                (2, -5, 9, 9, 9, 255), (4, 8, 7, 7, 7, 255),
+                (3, 3, 10, 20, 30, 255)]
+    elif case == "partial":
+        size, background = 256, (1, 2, 3, 4)
+        rows = [(px, py, px % 256, py % 256, (px * py) % 300, 255)
+                for py in range(0, 100, 3) for px in range(0, 256, 7)]
+        rows += [(5, 5, 256, -1, 300, 0), (0, 0, 1, 1, 1, 1),
+                 (0, 0, 2, 2, 2, 2)]
+    schema = "px int, py int, r int, g int, b int, a int"
+    df = spark.createDataFrame(rows, schema).coalesce(1)
+    got = render_tile_png(df, tile_size=size, background=background)
+    assert got == _reference_tile_png(rows, size, background)
+
+
 def test_colormap_registry_lookup_reverse_register():
     from xcube_spark.operators.tiles import (
         COLORMAPS, get_colormap, register_colormap)

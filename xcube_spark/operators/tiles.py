@@ -13,9 +13,10 @@ tile.py:39-74 reduced to its Spark shape (SURVEY §2.11):
    arithmetic.
 
 ``compute_rgba_tile`` (tile.py:355-538): value -> RGBA via a linear
-4-stop colormap + vmin/vmax normalization, all Column expressions —
-the PNG encode of the 256x256 result is a driver-side concern outside
-the engine (like the reference's ``encode_image``).
+4-stop colormap + vmin/vmax normalization, all Column expressions.
+``render_tile_png`` collects the 256x256 result as one Arrow table and
+encodes the PNG on the driver with numpy + zlib (the reference's
+``encode_image``).
 """
 
 from __future__ import annotations
@@ -566,23 +567,26 @@ def _png_chunk(tag: bytes, data: bytes) -> bytes:
     )
 
 
-def encode_rgba_png(rgba_rows: bytes, width: int, height: int) -> bytes:
-    """RGBA8 pixel bytes (row-major, ``4 * width * height``) -> PNG."""
+def encode_rgba_png(rgba_rows, width: int, height: int) -> bytes:
+    """RGBA8 pixel bytes (row-major, ``4 * width * height``; any
+    C-contiguous buffer, e.g. a uint8 ndarray) -> PNG."""
     import struct
     import zlib
 
-    if len(rgba_rows) != 4 * width * height:
+    import numpy as np
+
+    px = np.frombuffer(rgba_rows, np.uint8)
+    if px.size != 4 * width * height:
         raise ValueError(
-            f"expected {4 * width * height} RGBA bytes, got {len(rgba_rows)}")
+            f"expected {4 * width * height} RGBA bytes, got {px.size}")
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 6, 0, 0, 0)
-    raw = b"".join(
-        b"\x00" + rgba_rows[y * 4 * width:(y + 1) * 4 * width]
-        for y in range(height)
-    )
+    # filter-0 scanlines: a zero byte ahead of every pixel row
+    raw = np.zeros((height, 1 + 4 * width), np.uint8)
+    raw[:, 1:] = px.reshape(height, 4 * width)
     return (
         b"\x89PNG\r\n\x1a\n"
         + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw, 9))
+        + _png_chunk(b"IDAT", zlib.compress(raw.tobytes(), 9))
         + _png_chunk(b"IEND", b"")
     )
 
@@ -627,15 +631,34 @@ def render_tile_png(
     """Collect an RGBA tile DataFrame (``px, py, r, g, b, a`` — the
     output of :func:`compute_rgba_tile`) into PNG bytes.  Pixels not
     covered by any cell keep ``background`` (transparent), matching
-    the reference's NaN -> alpha-0 tiles.
+    the reference's NaN -> alpha-0 tiles.  Rows with ``px``/``py``
+    outside the tile (or NULL) are dropped; each channel is taken
+    modulo 256, a NULL channel as 0; where rows repeat a pixel the
+    last one wins.
 
     DRIVER-SIDE by construction: the collect is bounded by
     ``tile_size**2`` rows (a single response tile), not by cube size.
+    The rows arrive as one Arrow table and are scattered into the
+    image with numpy — no per-row Python objects.
     """
-    buf = bytearray(background * (tile_size * tile_size))
-    for row in rgba_df.select("px", "py", "r", "g", "b", "a").collect():
-        if 0 <= row.px < tile_size and 0 <= row.py < tile_size:
-            o = 4 * (row.py * tile_size + row.px)
-            buf[o:o + 4] = bytes(
-                (row.r & 255, row.g & 255, row.b & 255, row.a & 255))
-    return encode_rgba_png(bytes(buf), tile_size, tile_size)
+    import numpy as np
+    import pyarrow.compute as pc
+
+    tbl = rgba_df.select("px", "py", "r", "g", "b", "a").toArrow()
+
+    def col(name: str, null: int) -> np.ndarray:
+        return pc.fill_null(tbl.column(name), null).to_numpy().astype(
+            np.int64)
+
+    img = np.empty((tile_size * tile_size, 4), np.uint8)
+    img[:] = background
+    px, py = col("px", -1), col("py", -1)
+    inside = (px >= 0) & (px < tile_size) & (py >= 0) & (py < tile_size)
+    pos = (py * tile_size + px)[inside]
+    rgba = np.stack([col(c, 0)[inside] for c in "rgba"], axis=1) & 255
+    # numpy leaves the winner of a repeated index unspecified: keep the
+    # last row per pixel explicitly
+    _, last = np.unique(pos[::-1], return_index=True)
+    keep = len(pos) - 1 - last
+    img[pos[keep]] = rgba[keep]
+    return encode_rgba_png(img, tile_size, tile_size)

@@ -812,11 +812,11 @@ def linear_probe(
     """Train-and-apply a 2-feature + intercept ordinary-least-squares
     probe in ONE logical plan: accumulate the normal-equation moments
     (X'X, X'y) as a single aggregate pass, solve the 3x3 system in
-    closed form (Cramer) on the one-row moment table, and broadcast
-    the coefficients back for per-row prediction — the
-    "train a linear probe over the whole corpus in one scan" shape
-    (quality regressors, filter calibration) that never moves
-    model-sized state through a shuffle or the driver.
+    closed form (Cramer) on the driver from the one-row moment table,
+    and apply the coefficients as literals for per-row prediction —
+    the "train a linear probe over the whole corpus in one scan" shape
+    (quality regressors, filter calibration) that moves only nine
+    numbers, never corpus-sized state, through the driver.
 
     Features and label must be INTEGER columns: every moment is then
     an exact BIGINT sum (order-independent, bit-identical on any
@@ -827,9 +827,10 @@ def linear_probe(
     caller; Python round() is half-even, Spark/DuckDB ROUND is not).
 
     Scale shape: pass 1 is a map-side-combined aggregate to ONE row
-    (each task emits 9 numbers); the solve is Column math on that row
-    (no collect); pass 2 re-scans the input against the broadcast
-    coefficient row.  100 TB cost = two scans, zero corpus shuffles.
+    (each task emits 9 numbers); the driver collects that row and
+    solves it (``probe_fit_predict``); pass 2 re-scans the input with
+    the coefficients as literals.  100 TB cost = two scans, zero
+    corpus shuffles.
     """
     m = probe_moments(df, y_col, x1_col, x2_col)
     return probe_fit_predict(m, df, y_col, x1_col, x2_col, id_col)
@@ -886,11 +887,10 @@ def probe_fit_predict(state: DataFrame, df: DataFrame, y_col: str,
         return (a * (e * i - f * h) - b * (d * i - f * g)
                 + c * (d * h - e * g))
 
-    row = state.collect()[0]
-    vals = [row[c] for c in ("n", "s1", "s2", "s11", "s12", "s22",
-                             "sy", "s1y", "s2y")]
+    rows = state.collect()
+    vals = [rows[0][c] if rows else None for c in PROBE_MOMENT_COLS]
     if any(v is None for v in vals):
-        # empty state: the old Column solve yielded NULL coefficients
+        # empty input or zero-row state: NULL coefficients
         b0 = b1 = b2 = None
     else:
         n, s1, s2, s11, s12, s22, sy, s1y, s2y = map(float, vals)
@@ -1081,11 +1081,16 @@ def class_rebalance(
         # former one-row crossJoin's BroadcastNestedLoopJoin.  The cap
         # is an exact BIGINT either way; results are identical.
         counts = ranked.groupBy("label").agg(F.count("*").alias("__n"))
+        # the join is null-safe: NULL labels form their own class and
+        # their documents are returned like every other
         capped = counts.select(
-            "label",
+            F.col("label").alias("__label"),
             F.min("__n").over(W.partitionBy()).alias("__cap"),
         )
-        return ranked.join(F.broadcast(capped), "label").select(
+        return ranked.join(
+            F.broadcast(capped),
+            ranked["label"].eqNullSafe(capped["__label"]),
+        ).select(
             id_col, "label", (F.col("__rk") <= F.col("__cap")).alias("kept"))
     return ranked.select(
         id_col, "label", (F.col("__rk") <= per_class).alias("kept"))

@@ -480,10 +480,10 @@ def cube_zarr_ingest(spark, sf_dir):
     """Zarr v2 round-trip (ZarrDatasetIO, core/dsio.py:411): write the
     fixture cube to a self-implemented Zarr v2 store — A packed as
     int16 with scale_factor/add_offset/_FillValue CF attrs, flags as
-    int32 — then ingest it back (chunk-parallel mapInPandas decode +
-    broadcast axis joins) and aggregate.  Proves metadata, chunk
-    layout, compression, CF packing, and coordinate decode end to end
-    against the analytically recomputed oracle."""
+    int32 — then ingest it back (chunk-parallel mapInPandas decode
+    that also emits the coordinates, no joins) and aggregate.  Proves
+    metadata, chunk layout, compression, CF packing, and coordinate
+    decode end to end against the analytically recomputed oracle."""
     import tempfile
 
     from xcube_spark.sources.zarrio import open_zarr_cube, write_zarr_cube

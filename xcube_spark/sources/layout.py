@@ -69,6 +69,9 @@ def write_cube_layout(
     if layout not in ("bands", "zorder"):
         raise ValueError(f"layout must be bands|zorder, got {layout!r}")
     k = time_partition_size or grid.chunks[0]
+    # repartitionByRange takes the TOTAL file count: one range split
+    # per time partition x files_per_partition
+    n_files = max(1, files_per_partition) * -(-grid.time_periods // k)
     keyed = cube.withColumn(
         "t_part", (F.col("t_i") / F.lit(k)).cast("int")
     )
@@ -76,16 +79,13 @@ def write_cube_layout(
         zkey = z_order_key(F.col("x_i"), F.col("y_i"))
         arranged = (
             keyed.withColumn("__z", zkey)
-            .repartitionByRange(
-                max(1, files_per_partition), "t_part", F.col("__z"))
+            .repartitionByRange(n_files, "t_part", F.col("__z"))
             .sortWithinPartitions("t_part", "__z")
             .drop("__z")
         )
     else:
         arranged = (
-            keyed.repartitionByRange(
-                max(1, files_per_partition), "t_part", F.col("y_i")
-            )
+            keyed.repartitionByRange(n_files, "t_part", F.col("y_i"))
             .sortWithinPartitions("t_part", "y_i", "x_i")
         )
     arranged.write.mode(mode).partitionBy("t_part").parquet(path)

@@ -16,7 +16,8 @@ zlib-compressed — so we implement it directly:
   driver).  Filters on chunk coordinates prune before any chunk byte is
   read — the same IO-proportional-to-subset promise as the reference's
   lazy xarray open.  Coordinate axes are decoded driver-side (axis
-  arrays are metadata-sized) and joined back by index via broadcast.
+  arrays are metadata-sized) and emitted by the decoding task, indexed
+  by the cell indices — no axis tables, no joins.
 - **Writer** (``write_zarr_cube``): cells are shuffled once by chunk
   key, each chunk file written by the task that owns the group
   (``applyInPandas``); only the JSON metadata is written by the driver.
@@ -1041,7 +1042,7 @@ def write_zarr_cube(
     ct, cy, cx = shards if shards is not None else grid.chunks
     meta_payload = {v: m for v, m in metas.items()}
 
-    def write_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def write_group(key, pdf):
         tc, yc, xc = (int(k) for k in key)
         n = 0
         for v, meta in meta_payload.items():
@@ -1085,9 +1086,13 @@ def open_zarr_cube(
     (``t_i, y_i, x_i, time, y, x, <vars>``), the engine's equivalent of
     ``ZarrDatasetIO.read`` (/root/reference/xcube/core/dsio.py:445).
 
-    Plan shape: ``range(n_chunks) -> mapInPandas(decode)`` + three
-    broadcast axis joins.  Chunk decode is embarrassingly parallel and
-    executor-local.
+    Plan shape: ``range(n_chunks) -> mapInPandas(decode) -> project``,
+    with no join.  The ``time``/``y``/``x`` axis arrays are decoded
+    once on the driver and ship in the task closure; each task emits
+    the coordinates of its cells by indexing them, and the projection
+    applies the CF time decode as a Column.  Chunk decode is
+    embarrassingly parallel and executor-local.  An axis shorter than
+    the data raises ``ValueError``.
 
     **Chunk pushdown**: a predicate on ``t_i/y_i/x_i`` applied *after*
     the open cannot cross the Python decode stage, so pass
@@ -1198,6 +1203,16 @@ def _open_cells(
     nt, ny, nx = first.chunk_counts()
     metas = dict(data_vars)
     names = list(metas)
+    # axis name -> (cell index column, decoded values); time first
+    axes = {}
+    for name, icol, n in (("time", "t_i", tp), ("y", "y_i", h),
+                          ("x", "x_i", w)):
+        if name in arrays:
+            vals = _axis_values(name, arrays[name], fetch)
+            if len(vals) < n:
+                raise ValueError(f"axis {name!r} of {label} has {len(vals)} "
+                                 f"values, the data has {n}")
+            axes[name] = (icol, vals[:n])
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1214,6 +1229,8 @@ def _open_cells(
                 out = {"t_i": tt.ravel().astype("int32"),
                        "y_i": yy.ravel().astype("int32"),
                        "x_i": xx.ravel().astype("int32")}
+                for name, (icol, vals) in axes.items():
+                    out[name] = vals[out[icol]]
                 for v in names:
                     meta = metas[v]
                     raw = fetch(f"{v}/{metas[v].chunk_key(tc, yc, xc)}")
@@ -1222,7 +1239,7 @@ def _open_cells(
                 yield pd.DataFrame(out)
 
     schema = "t_i INT, y_i INT, x_i INT, " + ", ".join(
-        f"`{v}` DOUBLE" for v in names)
+        f"`{v}` DOUBLE" for v in [*axes, *names])
     rng = spark.range(nt * ny * nx)
     if cell_bounds:
         tc = (F.col("id") / (ny * nx)).cast("int")
@@ -1237,42 +1254,27 @@ def _open_cells(
     if cell_bounds:  # exact cell filter after the chunk-level prune
         for axis, (lo, hi) in cell_bounds.items():
             cells = cells.where(F.col(axis).between(lo, hi))
+    coords = [F.col(name) for name in axes]
+    if "time" in axes:
+        from xcube_spark.functions.cftime import decode_cf_time
+
+        t_attrs = arrays["time"].attrs
+        coords[0] = decode_cf_time(
+            F.col("time"), t_attrs.get("units", "seconds since 1970-01-01"),
+            t_attrs.get("calendar")).alias("time")
     # Arrow carries missing as NaN; the cells model uses SQL NULL
-    cells = cells.select(
-        "t_i", "y_i", "x_i",
+    return cells.select(
+        "t_i", "y_i", "x_i", *coords,
         *[F.when(~F.isnan(v), F.col(v)).alias(v) for v in names])
 
-    # axis decode (driver-side, metadata-sized) -> broadcast index joins
-    def axis_values(name: str) -> np.ndarray:
-        m = arrays[name]
-        return decode_values(
-            decode_chunk(fetch(f"{name}/{m.chunk_key(0)}"), m), m
-        )[: m.shape[0]]
 
-    def axis_df(name: str, idx_col: str):
-        vals = axis_values(name)
-        pdf = pd.DataFrame({idx_col: np.arange(len(vals), dtype="int32"),
-                            name: vals})
-        return spark.createDataFrame(pdf)
-
-    out, coords = cells, []
-    for name, idx in (("time", "t_i"), ("y", "y_i"), ("x", "x_i")):
-        if name not in arrays:
-            continue
-        adf = axis_df(name, idx)
-        if name == "time":
-            from xcube_spark.functions.cftime import decode_cf_time
-
-            adf = adf.select(
-                idx, decode_cf_time(
-                    F.col("time"),
-                    arrays["time"].attrs.get("units",
-                                             "seconds since 1970-01-01"),
-                    arrays["time"].attrs.get("calendar"),
-                ).alias("time"))
-        out = out.join(F.broadcast(adf), idx)
-        coords.append(name)
-    return out.select("t_i", "y_i", "x_i", *coords, *names)
+def _axis_values(name: str, meta: ZarrArray, fetch) -> np.ndarray:
+    """CF-decoded values of a 1-D coordinate array, all of its chunks
+    (a chunked axis is as valid as a single-chunk one)."""
+    return np.concatenate([
+        decode_values(decode_chunk(fetch(f"{name}/{meta.chunk_key(i)}"),
+                                   meta), meta)
+        for i in range(meta.chunk_counts()[0])])[: meta.shape[0]]
 
 
 # ---- kerchunk reference stores -----------------------------------------
