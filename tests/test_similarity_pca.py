@@ -173,6 +173,31 @@ def test_knn_bruteforce_rejects_unknown_metric(spark):
         knn_bruteforce(emb, q, metric="euclid")
 
 
+def test_knn_zero_norm_query_ranks_nan_by_id(spark):
+    """A zero-norm query scores NaN against every vector; Spark ranks
+    NaN above every number, so with more than k candidates the top k
+    are the k smallest ids (the local prune used to drop them all)."""
+    import math
+
+    from pyspark.sql import Row
+    from xcube_spark.pipeline.similarity import (knn_bruteforce, knn_ivf,
+                                                 train_ivf_centroids)
+
+    rows = [Row(vec_id=0, embedding=[0.0, 0.0])] + [
+        Row(vec_id=i, embedding=[float(i % 4) + 1.0, float(i % 3)])
+        for i in range(1, 12)]
+    emb = spark.createDataFrame(rows).coalesce(1)
+    q = emb.where("vec_id = 0").selectExpr("vec_id AS query_id",
+                                           "embedding")
+    cents = train_ivf_centroids(emb, k=2, iterations=2)
+    for out in (knn_bruteforce(emb, q, k=3),
+                knn_ivf(emb, q, cents, k=3, n_probe=2)):
+        got = sorted((r["rank"], r["vec_id"], r["cosine"])
+                     for r in out.collect())
+        assert [(r, v) for r, v, _ in got] == [(1, 1), (2, 2), (3, 3)]
+        assert all(math.isnan(c) for _, _, c in got)
+
+
 def test_knn_ivfpq_rerank_orders_by_exact_distance(spark):
     """The re-rank stage must return candidates ordered by EXACT
     squared L2 (coarse pq_d2 order may differ), and its result set

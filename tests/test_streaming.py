@@ -426,6 +426,35 @@ def test_near_dup_state_store_equals_one_shot(spark):
         store.drop()
 
 
+def test_near_dup_state_store_keeps_table_bucket_count(spark):
+    """Reopening a state with the default bucket count takes the count
+    from the existing sig table: merges and compact() keep its bucket
+    count, and an explicit count that disagrees is refused."""
+    import pytest
+
+    from xcube_spark.pipeline.dedup import NearDupStateStore
+
+    # a count the default (defaultParallelism) does not happen to equal
+    n = 3 if spark.sparkContext.defaultParallelism != 3 else 2
+    docs = _near_dup_corpus(spark)
+    store = NearDupStateStore(spark, "t_ndstore_reopen", n_buckets=n)
+    store.drop()
+    try:
+        store.merge_batch(docs.where("doc_id < 20"))
+        reopened = NearDupStateStore(spark, "t_ndstore_reopen")
+        assert reopened.n_buckets == n
+        reopened.merge_batch(docs.where("doc_id >= 20"))
+        reopened.compact()
+        assert reopened._table_buckets() == n
+        assert NearDupStateStore(
+            spark, "t_ndstore_reopen", n_buckets=n).n_buckets == n
+        assert spark.table(reopened.sig_table).count() == docs.count()
+        with pytest.raises(ValueError, match=f"has {n} buckets"):
+            NearDupStateStore(spark, "t_ndstore_reopen", n_buckets=n + 2)
+    finally:
+        store.drop()
+
+
 def test_near_dup_state_store_no_state_side_exchange(spark):
     """The LSH candidate join must scan the band state IN PLACE
     (bucketed scan, no exchange under it); only the batch side

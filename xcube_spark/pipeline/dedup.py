@@ -930,14 +930,27 @@ class NearDupStateStore:
         self.need = math.ceil(min_agree * num_hashes)
         self.text_col = text_col
         self.id_col = id_col
-        # bucket count follows the cluster width (r13; was a constant
-        # 32 tuned to neither rig): each bucketed write runs one task
-        # per bucket and each state-side join reads one bucket per
-        # task, so cores == buckets keeps both fully parallel without
-        # a fan-out of tiny files.  Callers with a known production
-        # layout pass it explicitly (the table pins it at creation).
-        self.n_buckets = (int(n_buckets) if n_buckets is not None
-                          else spark.sparkContext.defaultParallelism)
+        # an existing state pins the bucket count: appends and
+        # compact() must keep the table's layout whatever the core
+        # count of the session that reopens it.  A new state follows
+        # the cluster width (r13; was a constant 32 tuned to neither
+        # rig): each bucketed write runs one task per bucket and each
+        # state-side join reads one bucket per task, so cores ==
+        # buckets keeps both fully parallel without a fan-out of tiny
+        # files.  Callers with a known production layout pass it
+        # explicitly.
+        existing = self._table_buckets()
+        if (existing is not None and n_buckets is not None
+                and int(n_buckets) != existing):
+            raise ValueError(
+                f"{self.sig_table} has {existing} buckets, "
+                f"n_buckets={n_buckets} given")
+        if existing is not None:
+            self.n_buckets = existing
+        elif n_buckets is not None:
+            self.n_buckets = int(n_buckets)
+        else:
+            self.n_buckets = spark.sparkContext.defaultParallelism
         self.hcols = [f"h{j}" for j in range(num_hashes)]
         # replay guard: the FIRST batch_id-tagged merge in this
         # process may follow a crash that left a previous attempt
@@ -950,6 +963,17 @@ class NearDupStateStore:
 
     def exists(self) -> bool:
         return self.spark.catalog.tableExists(self.sig_table)
+
+    def _table_buckets(self) -> int | None:
+        """Bucket count of the existing ``{name}_sig`` table (catalog
+        metadata, no job), or None when there is no such table."""
+        if not self.exists():
+            return None
+        for r in self.spark.sql(
+                f"DESCRIBE TABLE EXTENDED {self.sig_table}").collect():
+            if r.col_name == "Num Buckets":
+                return int(r.data_type)
+        return None
 
     def flags(self) -> DataFrame:
         """The merged state: (doc_id, h0.., is_dup)."""

@@ -37,6 +37,30 @@ def _pa_type_for(spark_dtype: str):
     }.get(spark_dtype)
 
 
+def _local_top_k(score, ids, cand, k: int, descending: bool):
+    """Positions of the ``k`` best candidates in Spark's window order
+    ``score DESC|ASC, id ASC``, where NaN ranks above every number
+    (first when descending, last when ascending); candidate ``i`` has
+    score ``score[i]`` and id ``ids[cand[i]]``.
+
+    Past ``k`` candidates, only those that tie or beat the k-th best
+    key are sorted; NaN shares the key of an infinite score there, so
+    the prune keeps every row the exact sort could place in the top
+    ``k`` (a zero-norm query, whose cosines are all NaN, keeps all)."""
+    import numpy as np
+
+    nan = np.isnan(score)
+    key = np.where(nan, np.inf, score)
+    if descending:
+        key = -key
+    pos = np.arange(score.size)
+    if score.size > k:
+        pos = np.flatnonzero(key <= np.partition(key, k - 1)[k - 1])
+    nan_rank = nan[pos] != descending  # 0 sorts first
+    order = np.lexsort((ids[cand[pos]], key[pos], nan_rank))[:k]
+    return pos[order]
+
+
 def dot(a: Column, b: Column) -> Column:
     """JVM-side dot product of two array columns."""
     return F.aggregate(
@@ -120,11 +144,7 @@ def knn_bruteforce(
                 if not cand.size:
                     continue
                 cos = cos_all[cand, qi]
-                if cand.size > k:
-                    thr = -np.partition(-cos, k - 1)[k - 1]
-                    keep = cos >= thr  # boundary ties kept so the
-                    cand, cos = cand[keep], cos[keep]  # id tie-break
-                order = np.lexsort((ids[cand], -cos))[:k]  # is exact
+                order = _local_top_k(cos, ids, cand, k, descending=True)
                 out_q.append(np.full(order.size, qarr[qi]))
                 out_i.append(cand[order])
                 out_c.append(cos[order])
@@ -281,11 +301,7 @@ def knn_lsh(
                 if not cand.size:
                     continue
                 cos = (v[cand] @ qvecs[qi]) / (vnorm[cand] * qn[qi])
-                if cand.size > k:
-                    thr = -np.partition(-cos, k - 1)[k - 1]
-                    keep = cos >= thr  # boundary ties kept
-                    cand, cos = cand[keep], cos[keep]
-                order = np.lexsort((ids[cand], -cos))[:k]
+                order = _local_top_k(cos, ids, cand, k, descending=True)
                 out_q.append(np.full(order.size, qarr[qi]))
                 out_i.append(cand[order])
                 out_c.append(cos[order])
@@ -632,11 +648,7 @@ def knn_ivf(
                 if not cand.size:
                     continue
                 cos = (v[cand] @ qvecs[qi]) / (vnorm[cand] * qn[qi])
-                if cand.size > k:
-                    thr = -np.partition(-cos, k - 1)[k - 1]
-                    keep = cos >= thr  # boundary ties kept
-                    cand, cos = cand[keep], cos[keep]
-                order = np.lexsort((ids[cand], -cos))[:k]
+                order = _local_top_k(cos, ids, cand, k, descending=True)
                 out_q.append(np.full(order.size, qarr[qi]))
                 out_i.append(cand[order])
                 out_c.append(cos[order])
@@ -899,14 +911,8 @@ def knn_pq(
             for qi in range(len(qarr)):
                 d = acc[qi]
                 cand = np.nonzero(ids != qarr[qi])[0]  # self-exclusion
-                if cand.size > k:
-                    dc = d[cand]
-                    # k-th smallest by value; <= keeps boundary ties so
-                    # the (d2, id) tie-break below stays exact
-                    thr = np.partition(dc, k - 1)[k - 1]
-                    cand = cand[dc <= thr]
-                order = np.lexsort((ids[cand], d[cand]))[:k]
-                sel = cand[order]
+                sel = cand[_local_top_k(d[cand], ids, cand, k,
+                                        descending=False)]
                 out_q.append(np.full(sel.size, qarr[qi]))
                 out_i.append(sel)
                 out_d.append(d[sel])
@@ -1132,11 +1138,7 @@ def knn_ivfpq(
                     continue
                 cand = np.concatenate(cand_list)
                 d = np.concatenate(d_list)
-                if cand.size > k:
-                    thr = np.partition(d, k - 1)[k - 1]
-                    keep = d <= thr  # boundary ties kept
-                    cand, d = cand[keep], d[keep]
-                order = np.lexsort((ids[cand], d))[:k]
+                order = _local_top_k(d, ids, cand, k, descending=False)
                 out_q.append(np.full(order.size, qarr[qi]))
                 out_i.append(cand[order])
                 out_d.append(d[order])

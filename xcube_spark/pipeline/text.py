@@ -195,7 +195,14 @@ def tfidf_keywords(
     scored row — the driver fold is value-identical and drops the
     BNLJ) and the DF table joins back on the token key — at 100 TB
     the vocabulary table shards across the cluster instead of
-    assuming it fits one executor."""
+    assuming it fits one executor.
+
+    Snapshot semantics: building the DataFrame runs one Spark job
+    (``docs.count()``) and bakes ``N`` into the plan as a literal.
+    Re-executing the returned DataFrame after ``docs``' source gains
+    or loses rows scores with the corpus size as of the call, while
+    tf and df are recomputed; call ``tfidf_keywords`` again to
+    refresh ``N``."""
     from pyspark.sql.window import Window
 
     toks = docs.select(
@@ -205,7 +212,7 @@ def tfidf_keywords(
     tf = toks.groupBy(id_col, "token").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("token").agg(
         F.count("*").alias("df"))  # tf rows are (doc, token)-distinct
-    n_docs = docs.count()  # exact BIGINT; recomputed every invocation
+    n_docs = docs.count()  # exact BIGINT snapshot, one job per call
     scored = (
         tf.join(dfreq, "token")
         .withColumn(

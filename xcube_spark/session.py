@@ -7,7 +7,23 @@ but are the same knobs that matter on a 1000-executor cluster:
 - Arrow on (pandas_udf / mapInPandas hot paths are Arrow-batched),
 - shuffle partitions sized to the rig (overridable via env),
 - broadcast threshold raised so dimension tables (axis tables, nation,
-  region, features) always broadcast rather than shuffle.
+  region, features) always broadcast rather than shuffle,
+- Python daemon ``xcube_spark.util.pyworker``
+  (``spark.python.daemon.module``).
+
+The daemon default exists because ``pyspark.worker`` calls
+``importlib.invalidate_caches()`` before every task, and on CPython
+3.11/3.12 ``zipimport.zipimporter.invalidate_caches`` eagerly re-reads
+the central directory of ``pyspark.zip``, the py4j zip and the
+spark-core jar on the worker path, once per cached importer: 16
+directory reads per task in a warm worker, most of the fixed cost of a
+``mapInPandas``/pandas-UDF task.  CPython 3.13 made that method lazy
+and the daemon patches nothing there.  The daemon re-reads an archive
+only when its mtime or size changed, then runs ``pyspark.daemon``
+unchanged.  Precondition: worker processes must be able to import
+``xcube_spark``, which the package's UDF closures already require.
+Set ``spark.python.daemon.module`` to ``pyspark.daemon`` through
+``SPARK_GRAFT_CONF`` to use the stock daemon.
 """
 
 from __future__ import annotations
@@ -46,6 +62,10 @@ _DEFAULTS = {
     # 0.74->0.27 s, events_ema 0.78->0.15 s, rectify rows -0.17 s.
     # Re-enable for debugging via SPARK_GRAFT_CONF.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # fixed per-task Python cost: the daemon patches CPython < 3.13's
+    # eager zipimporter.invalidate_caches (see module docstring and
+    # xcube_spark/util/pyworker.py)
+    "spark.python.daemon.module": "xcube_spark.util.pyworker",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     "spark.sql.session.timeZone": "UTC",
