@@ -610,3 +610,27 @@ def test_zarr_point_statistics_job_count(spark, tmp_path):
         sc.setJobGroup("", "")
     assert row["count"] == ZGRID.time_periods
     assert len(jobs) <= 2, jobs
+
+
+def test_zarr_timeseries_request_job_count(spark, tmp_path):
+    """A /timeseries request on an opened zarr cube starts at most two
+    jobs: the aggregate's shuffle stage and its result stage — the
+    time order comes from a single-partition local sort, with no
+    range-sampling job and no sort shuffle."""
+    from xcube_spark.server import CubeServer
+    from xcube_spark.sources.zarrio import open_zarr_cube
+
+    path = _zarr_store(spark, str(tmp_path / "z"))
+    srv = CubeServer(spark)
+    srv.add_dataset("z", open_zarr_cube(spark, path), ZGRID)
+    sc = spark.sparkContext
+    sc.setJobGroup("zarr-timeseries", "time series request on a zarr cube")
+    try:
+        out = srv._timeseries("z", "v", {"aggMethods": "mean,max",
+                                         "bbox": "-180,-90,0,90"})
+        jobs = sc.statusTracker().getJobIdsForGroup("zarr-timeseries")
+    finally:
+        sc.setJobGroup("", "")
+    times = [r["time"] for r in out["result"]]
+    assert len(times) == ZGRID.time_periods and times == sorted(times)
+    assert len(jobs) <= 2, jobs

@@ -6,6 +6,7 @@ import json
 import urllib.request
 
 import pytest
+from pyspark.sql import functions as F
 
 from xcube_spark.cube.grid import CubeGrid
 from xcube_spark.cube.new import new_cube
@@ -529,3 +530,159 @@ def test_qualitative_colormaps_registered():
     assert COLORMAPS["tab20c"][4][1] == (230, 85, 13)  # orange family
     assert not is_qualitative("viridis")
     assert not is_qualitative("Greys")  # alias to sequential gray
+
+
+# ---- tile route: one cube scan + driver gather vs the pixel-grid join --
+
+_TILE_GRIDS = {
+    # coarse global grid: many pixels per cell at every zoom
+    "geo": (GRID, "CAST(t_i AS DOUBLE) + 0.1 * y + 0.01 * x"),
+    # decreasing-latitude partial grid with NULL cells and edges inside
+    # zoom >= 2 tiles
+    "inv": (CubeGrid(width=90, height=60, time_periods=2, x_start=-30.0,
+                     y_start=-20.0, x_res=0.75, y_res=0.75, inverse_y=True),
+            "CASE WHEN (x_i + 2 * y_i) % 7 = 0 THEN NULL"
+            " ELSE CAST(t_i AS DOUBLE) + 0.1 * y + 0.01 * x END"),
+    # web-mercator metres, strictly positive values (log norm)
+    "merc": (CubeGrid(width=200, height=150, time_periods=1,
+                      x_start=-2.0e7, y_start=-1.5e7, x_res=2.0e5,
+                      y_res=2.0e5, crs="EPSG:3857"),
+             "1.0 + 0.05 * x_i + 0.1 * y_i"),
+    # wider than a tile at zoom 0: several cells per pixel
+    "fine": (CubeGrid(width=720, height=360, time_periods=1, x_res=0.5,
+                      y_res=0.5),
+             "0.1 * y + 0.01 * x"),
+}
+
+
+@pytest.fixture(scope="module")
+def tile_server(spark):
+    srv = CubeServer(spark)
+    for name, (grid, expr) in _TILE_GRIDS.items():
+        srv.add_dataset(name, new_cube(spark, grid, {"v": expr}), grid)
+    return srv
+
+
+def _join_route_tile(spark, cube, g, var, z, y, x, params):
+    """The route this change replaced, kept as the byte reference:
+    a 256^2 ``spark.range`` pixel grid mapped to cell indices and
+    inner-joined to the bbox- and t_i-filtered cube."""
+    from xcube_spark.operators.tiles import (TilingScheme,
+                                             compute_rgba_tile,
+                                             compute_rgba_tile_auto,
+                                             render_tile_png)
+
+    scheme = TilingScheme.web_mercator() \
+        if params.get("crs", "").upper() == "EPSG:3857" \
+        else TilingScheme.geographic()
+    t_i = int(params.get("t_i", 0))
+    x1, y1, x2, y2 = scheme.tile_bbox(z, x, y)
+    res = scheme.resolution(z)
+    ts = scheme.tile_size
+    src = cube.where(
+        (F.col("x") >= x1) & (F.col("x") < x2)
+        & (F.col("y") >= y1) & (F.col("y") < y2)
+        & (F.col("t_i") == t_i)
+    ).select("x_i", "y_i", var)
+    px_grid = spark.range(ts * ts).select(
+        (F.col("id") % ts).cast("int").alias("px"),
+        (F.col("id") / ts).cast("int").alias("py"))
+    pxx = F.lit(x1) + (F.col("px") + F.lit(0.5)) * F.lit(res)
+    pyy = F.lit(y2) - (F.col("py") + F.lit(0.5)) * F.lit(res)
+    px_grid = px_grid.select(
+        "px", "py",
+        g.x_index_expr(pxx).alias("x_i"),
+        g.y_index_expr(pyy).alias("y_i"))
+    cells = px_grid.join(src, ["x_i", "y_i"], "inner")
+    if "vmin" in params or "vmax" in params:
+        rgba = compute_rgba_tile(
+            cells, var,
+            float(params.get("vmin", 0.0)),
+            float(params.get("vmax", 1.0)),
+            cmap_name=params.get("cmap", "default"),
+            cmap_norm=params.get("norm", "lin"))
+    else:
+        rgba = compute_rgba_tile_auto(cells, var)
+    return render_tile_png(rgba, scheme.tile_size)
+
+
+_VMM = {"vmin": "-10", "vmax": "12"}
+_MERC = {"crs": "EPSG:3857"}
+_TILE_CASES = [
+    ("geo", 0, 0, 0, _VMM),
+    ("geo", 0, 0, 1, {}),
+    ("geo", 1, 0, 1, {**_VMM, "cmap": "viridis_r", "t_i": "2"}),
+    ("geo", 2, 1, 2, {"vmin": "0.5", "vmax": "12", "norm": "log"}),
+    ("geo", 3, 2, 5, {"t_i": "1"}),
+    ("geo", 4, 5, 17, {**_VMM, "cmap": "tab10"}),
+    ("inv", 0, 0, 0, {}),
+    ("inv", 1, 0, 1, _VMM),
+    ("inv", 2, 1, 3, {}),  # the grid's west and north edges cross it
+    ("inv", 2, 1, 3, {**_VMM, "t_i": "1", "cmap": "tab10"}),
+    ("inv", 3, 2, 7, {"vmin": "0.5", "vmax": "5", "norm": "log"}),
+    ("inv", 4, 5, 16, {"t_i": "1"}),
+    ("inv", 2, 3, 0, _VMM),  # no covered pixel
+    ("inv", 2, 3, 0, {}),
+    ("merc", 0, 0, 0, {**_MERC, "vmin": "1", "vmax": "30"}),
+    ("merc", 1, 1, 0, _MERC),
+    ("merc", 2, 1, 2, {**_MERC, "vmin": "1", "vmax": "30", "norm": "log"}),
+    ("merc", 3, 3, 4, {**_MERC, "vmin": "1", "vmax": "30",
+                       "cmap": "Set1"}),
+    ("merc", 4, 7, 8, _MERC),
+    ("fine", 0, 0, 0, {}),
+    ("fine", 0, 0, 1, {"vmin": "-3", "vmax": "9", "cmap": "viridis"}),
+]
+
+
+@pytest.mark.parametrize("case", _TILE_CASES, ids=[
+    "-".join(map(str, c[:4])) + ("-vmm" if "vmin" in c[4] else "-auto")
+    for c in _TILE_CASES])
+def test_tile_route_matches_join_reference(spark, tile_server, case):
+    """The route's PNG bytes equal the pixel-grid join's over zoom
+    0-4, both tiling schemes, an inverse-y grid with NULL cells and
+    edges inside a tile, an uncovered tile, vmin/vmax and pixel-weighted
+    auto stretch, lin and log norms, reversed and qualitative maps."""
+    ds_id, z, y, x, params = case
+    d = tile_server._get(ds_id)
+    want = _join_route_tile(spark, d.cube, d.grid, "v", z, y, x, params)
+    assert tile_server._tile(ds_id, "v", z, y, x, params) == want
+
+
+def _tile_jobs(spark, srv, *args):
+    group = "tile-route-" + "-".join(map(str, args[:5]))
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "one tile request")
+    try:
+        srv._tile(*args)
+        return sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup("", "")
+
+
+def test_tile_route_job_counts(spark, tile_server):
+    """A vmin/vmax tile is one Spark job (the filtered scan and its
+    Arrow collect); a tile with no covered pixel runs none, with or
+    without auto stretch."""
+    assert len(_tile_jobs(spark, tile_server, "inv", "v", 3, 2, 7,
+                          _VMM)) == 1
+    for params in (_VMM, {}):
+        assert _tile_jobs(spark, tile_server, "inv", "v", 2, 3, 0,
+                          params) == []
+
+
+def test_tile_route_collect_bounded(tile_server, monkeypatch):
+    """A zoom-0 tile over a 720-cell-wide grid collects at most one row
+    per tile pixel (the needed cells), not the cells in its bbox."""
+    from xcube_spark.operators import tiles
+
+    seen = []
+    render = tiles.render_tile_png
+
+    def counting(rgba, *a, **kw):
+        seen.append(rgba.count())
+        return render(rgba, *a, **kw)
+
+    monkeypatch.setattr(tiles, "render_tile_png", counting)
+    tile_server._tile("fine", "v", 0, 0, 0, _VMM)
+    assert seen and 0 < seen[0] <= 256 * 256
+    assert seen[0] < 360 * 360  # the tile's bbox holds 129,600 cells

@@ -133,6 +133,28 @@ class CubeGrid:
             i = F.floor((y - F.lit(self.y_start)) / F.lit(self.y_res)).cast("int")
         return F.when((y >= self.y_start) & (y < self.y_end), i)
 
+    def x_index_np(self, x) -> "np.ndarray":
+        """``x_index_expr`` over a numpy array, for driver-side index
+        maps: the same literals in the same operation order, so the
+        IEEE doubles and the indices are identical; out-of-range -> -1."""
+        import numpy as np
+
+        x = np.asarray(x, np.float64)
+        i = np.floor((x - self.x_start) / self.x_res)
+        inside = (x >= self.x_start) & (x < self.x_end)
+        return np.where(inside, i, -1).astype(np.int64)
+
+    def y_index_np(self, y) -> "np.ndarray":
+        import numpy as np
+
+        y = np.asarray(y, np.float64)
+        if self.inverse_y:
+            i = np.floor((self.y_end - y) / self.y_res)
+        else:
+            i = np.floor((y - self.y_start) / self.y_res)
+        inside = (y >= self.y_start) & (y < self.y_end)
+        return np.where(inside, i, -1).astype(np.int64)
+
     def t_index_expr(self, t: Column) -> Column:
         days = (t.cast("double") - F.lit(self.t_start.timestamp())) / F.lit(86400.0)
         i = F.floor(days / F.lit(self.t_freq_days)).cast("int")

@@ -26,8 +26,9 @@ Spark mapping (SURVEY §2.6): the **target-driven gather join** —
    a gather — one partial-agg shuffle.
 
 The source side keeps its (t_i, y_i, x_i) layout, so with a cells table
-sorted on those keys the gather join sort-merges without extra exchange
-(or broadcasts the target index table when it is the small side).
+sorted on those keys the gather join sort-merges without extra exchange.
+The join is a LEFT OUTER join that preserves the target index table,
+so Spark can broadcast only the source side, never the target.
 """
 
 from __future__ import annotations
@@ -123,11 +124,6 @@ def affine_transform_dataset(
                     for o in (2, 4, 5) if any(orders[v] == o for v in vars_)}
     out = tgt
 
-    # the synthesized target index table is bounded by the requested
-    # output size (usually << source) and comes from spark.range with
-    # no stats, so the planner would sort-merge by default — hint the
-    # broadcast explicitly; the big source side then never shuffles
-    broadcast_tgt = target.size <= 4_000_000
     # with a single gather family the target's coords ride through the
     # gather join itself — no join-back onto the target table
     single_family = (sum(map(bool, (nearest_vars, linear_vars, cubic_vars)))
@@ -140,8 +136,6 @@ def affine_transform_dataset(
             F.round("__fy").cast("int").alias("__sy"),
             F.round("__fx").cast("int").alias("__sx"),
         )
-        if broadcast_tgt:
-            nearest = F.broadcast(nearest)
         # equi-join on computed indices (the extract.py:321 rewrite)
         joined = nearest.join(
             src_cells.select("__st", "__sy", "__sx", *nearest_vars),
@@ -175,8 +169,6 @@ def affine_transform_dataset(
             F.col("c.__sx").alias("__sx"),
             F.col("c.__w").alias("__w"),
         )
-        if broadcast_tgt:
-            expl = F.broadcast(expl)
         joined = expl.join(
             src_cells.select("__st", "__sy", "__sx", *family_vars),
             on=[

@@ -5529,10 +5529,6 @@ def reproject_dataset(
         # recompute instead of failing the job.  The table is one
         # bounded grid (output raster size), MEMORY_AND_DISK.
         tgt = tgt.persist()
-    # target table is bounded by the requested output size and has no
-    # stats (spark.range) — broadcast it so the source never shuffles
-    if target.size <= 4_000_000:
-        tgt = F.broadcast(tgt)
     joined = tgt.join(
         src_cells,
         on=[

@@ -14,9 +14,14 @@ tile.py:39-74 reduced to its Spark shape (SURVEY §2.11):
 
 ``compute_rgba_tile`` (tile.py:355-538): value -> RGBA via a linear
 4-stop colormap + vmin/vmax normalization, all Column expressions.
-``render_tile_png`` collects the 256x256 result as one Arrow table and
-encodes the PNG on the driver with numpy + zlib (the reference's
-``encode_image``).
+``render_tile_png`` collects the RGBA rows as one Arrow table, gathers
+them into the 256x256 image through two per-axis index maps (pixel
+column -> ``px`` key, pixel row -> ``py`` key; the identity by
+default) and encodes the PNG on the driver with numpy + zlib (the
+reference's ``encode_image``).  The server's tile route keys the rows
+by cell index (``CubeGrid.x_index_np``/``y_index_np`` over
+``TilingScheme.pixel_centers``), so it colormaps and collects each
+needed cell once instead of once per pixel.
 """
 
 from __future__ import annotations
@@ -84,6 +89,18 @@ class TilingScheme:
         y2 = self.y_max - ty * h
         return (x1, y2 - h, x1 + w, y2)
 
+    def pixel_centers(self, level: int, tx: int, ty: int):
+        """Map coordinates of the pixel centres of tile (level, tx, ty):
+        one x per pixel column, one y per pixel row (from the top).
+        Same operation order as the Column form
+        ``x1 + (px + 0.5) * res`` / ``y2 - (py + 0.5) * res``."""
+        import numpy as np
+
+        x1, _, _, y2 = self.tile_bbox(level, tx, ty)
+        res = self.resolution(level)
+        p = np.arange(self.tile_size) + 0.5
+        return x1 + p * res, y2 - p * res
+
 
 def select_tile_level(
     levels: list[tuple[CubeGrid, DataFrame]],
@@ -114,8 +131,9 @@ def compute_tiles(
     ``(px, py)`` (py from the top, image convention).  The bbox filter
     is a pure predicate on x/y -> partition-prunable; the pixel mapping
     is Column arithmetic at the *cube's* resolution (one cell may cover
-    several tile pixels at coarse zoom — the gather join of the full
-    renderer resamples; this operator returns the minimal cell set)."""
+    several tile pixels at coarse zoom — the server's tile route
+    gathers pixels from cells through index maps; this operator returns
+    the minimal cell set)."""
     from xcube_spark.cube.grid import var_names as cube_vars
 
     x1, y1, x2, y2 = scheme.tile_bbox(level, tx, ty)
@@ -623,42 +641,95 @@ def decode_rgba_png(data: bytes) -> tuple[int, int, bytes]:
     return width, height, b"".join(rows)
 
 
+def _slots(values, keys):
+    """Position of each of ``values`` in the sorted unique ``keys``;
+    -1 where a value is not a key."""
+    import numpy as np
+
+    if len(keys) == 0:
+        return np.full(len(values), -1, np.int64)
+    i = np.minimum(np.searchsorted(keys, values), len(keys) - 1)
+    return np.where(keys[i] == values, i, -1)
+
+
+def pixel_weighted_values(
+    cells: DataFrame, var: str, x_index, y_index,
+) -> DataFrame:
+    """The ``var`` value of each of ``cells`` (``px``/``py`` holding
+    cell indices, as :func:`render_tile_png` gathers them) repeated
+    once per tile pixel that shows the cell: ``count_x[px] *
+    count_y[py]`` times.  This is the value multiset of a per-pixel
+    join, so a stretch range computed over it (``stats_df`` of
+    :func:`compute_rgba_tile_auto`) stays pixel-weighted."""
+    import numpy as np
+
+    def coverage(index) -> Column:
+        index = np.asarray(index, np.int64)
+        keys, n = np.unique(index[index >= 0], return_counts=True)
+        # typed, so a map with no entries still resolves
+        return F.create_map(*[F.lit(int(v)) for kv in zip(keys, n)
+                              for v in kv]).cast("map<int,int>")
+
+    w = coverage(x_index)[F.col("px")] * coverage(y_index)[F.col("py")]
+    return cells.select(F.explode(F.array_repeat(F.col(var), w)).alias(var))
+
+
 def render_tile_png(
     rgba_df: DataFrame,
     tile_size: int = 256,
     background: tuple[int, int, int, int] = (0, 0, 0, 0),
+    x_index=None,
+    y_index=None,
 ) -> bytes:
-    """Collect an RGBA tile DataFrame (``px, py, r, g, b, a`` — the
-    output of :func:`compute_rgba_tile`) into PNG bytes.  Pixels not
-    covered by any cell keep ``background`` (transparent), matching
-    the reference's NaN -> alpha-0 tiles.  Rows with ``px``/``py``
-    outside the tile (or NULL) are dropped; each channel is taken
-    modulo 256, a NULL channel as 0; where rows repeat a pixel the
-    last one wins.
+    """Collect an RGBA DataFrame (``px, py, r, g, b, a`` — the output
+    of :func:`compute_rgba_tile`) into PNG bytes by a gather: pixel
+    column ``i``, row ``j`` (from the top) shows the row whose
+    ``(px, py) == (x_index[i], y_index[j])``.  The index maps default
+    to the identity, where ``px``/``py`` are pixel coordinates; the
+    server passes cell indices instead, so one row per cell covers
+    every pixel it maps to.
 
-    DRIVER-SIDE by construction: the collect is bounded by
-    ``tile_size**2`` rows (a single response tile), not by cube size.
-    The rows arrive as one Arrow table and are scattered into the
-    image with numpy — no per-row Python objects.
+    Pixels with a negative index, or whose key no row carries, keep
+    ``background`` (transparent), matching the reference's NaN ->
+    alpha-0 tiles.  Rows whose ``px``/``py`` is not in the index maps
+    (or NULL) are dropped; each channel is taken modulo 256, a NULL
+    channel as 0; where rows repeat a key the last one wins.
+
+    DRIVER-SIDE by construction: the rows arrive as one Arrow table,
+    and the caller bounds them by the index maps (at most
+    ``tile_size`` distinct keys per axis, so at most ``tile_size**2``
+    rows, whatever the cube size or zoom).  Numpy does the gather — no
+    per-row Python objects; with no valid index on an axis nothing is
+    collected.
     """
     import numpy as np
     import pyarrow.compute as pc
 
-    tbl = rgba_df.select("px", "py", "r", "g", "b", "a").toArrow()
+    ident = np.arange(tile_size)
+    x_index = ident if x_index is None else np.asarray(x_index, np.int64)
+    y_index = ident if y_index is None else np.asarray(y_index, np.int64)
+    keys_x = np.unique(x_index[x_index >= 0])
+    keys_y = np.unique(y_index[y_index >= 0])
+    # one colour slot per (py, px) key, plus a background slot last
+    lut = np.empty((len(keys_y) * len(keys_x) + 1, 4), np.uint8)
+    lut[:] = background
+    if len(lut) > 1:
+        tbl = rgba_df.select("px", "py", "r", "g", "b", "a").toArrow()
 
-    def col(name: str, null: int) -> np.ndarray:
-        return pc.fill_null(tbl.column(name), null).to_numpy().astype(
-            np.int64)
+        def col(name: str, null: int) -> np.ndarray:
+            return pc.fill_null(tbl.column(name), null).to_numpy().astype(
+                np.int64)
 
-    img = np.empty((tile_size * tile_size, 4), np.uint8)
-    img[:] = background
-    px, py = col("px", -1), col("py", -1)
-    inside = (px >= 0) & (px < tile_size) & (py >= 0) & (py < tile_size)
-    pos = (py * tile_size + px)[inside]
-    rgba = np.stack([col(c, 0)[inside] for c in "rgba"], axis=1) & 255
-    # numpy leaves the winner of a repeated index unspecified: keep the
-    # last row per pixel explicitly
-    _, last = np.unique(pos[::-1], return_index=True)
-    keep = len(pos) - 1 - last
-    img[pos[keep]] = rgba[keep]
-    return encode_rgba_png(img, tile_size, tile_size)
+        sx, sy = _slots(col("px", -1), keys_x), _slots(col("py", -1), keys_y)
+        ok = (sx >= 0) & (sy >= 0)
+        slot = (sy * len(keys_x) + sx)[ok]
+        rgba = np.stack([col(c, 0)[ok] for c in "rgba"], axis=1) & 255
+        # numpy leaves the winner of a repeated index unspecified: keep
+        # the last row per key explicitly
+        _, last = np.unique(slot[::-1], return_index=True)
+        keep = len(slot) - 1 - last
+        lut[slot[keep]] = rgba[keep]
+    sx, sy = _slots(x_index, keys_x), _slots(y_index, keys_y)
+    pix = np.where((sy >= 0)[:, None] & (sx >= 0)[None, :],
+                   sy[:, None] * len(keys_x) + sx[None, :], -1)
+    return encode_rgba_png(lut[pix.ravel()], tile_size, tile_size)

@@ -79,4 +79,7 @@ def get_time_series(
         if m not in AGG_METHODS:
             raise ValueError(f"unknown agg method {m!r}")
     aggs = [_agg_expr(v, m, exact_median) for v in vars_ for m in agg_methods]
-    return df.groupBy(time_name).agg(*aggs).orderBy(time_name)
+    # at most one row per time step: a single-partition local sort
+    # orders it without orderBy's range-sampling job and sort shuffle
+    return (df.groupBy(time_name).agg(*aggs)
+            .coalesce(1).sortWithinPartitions(time_name))

@@ -33,8 +33,12 @@ Routes (reference parity):
 
 Scale notes: the server holds DataFrames, not data — every request
 plans a Spark job whose filters (tile bbox, point cell, time range)
-push down to the scan, and only response-sized results (a 256x256
-tile, a per-timestep series, a single stats row) reach the driver.
+push down to the scan, and only response-sized results (the cells of
+a 256x256 tile, a per-timestep series, a single stats row) reach the
+driver.  A tile is one filtered cube scan: the driver computes which
+cell each pixel column and row shows (the pixel -> cell map is
+separable), collects at most one row per needed cell — at most
+``tile_size**2`` — and gathers the pixels from them with numpy.
 Stdlib ``ThreadingHTTPServer`` only — this container has no web
 framework, and the point is the dispatch surface, not the HTTP stack.
 """
@@ -338,56 +342,55 @@ class CubeServer:
 
     def _tile(self, ds_id: str, var: str, z: int, y: int, x: int,
               params: dict[str, str]) -> bytes:
-        from xcube_spark.operators.tiles import (TilingScheme,
-                                                 compute_rgba_tile,
-                                                 compute_rgba_tile_auto,
-                                                 render_tile_png)
+        # through the module, so wrappers installed on the tiles
+        # functions (profilers, tracers) see every call
+        from xcube_spark.operators import tiles
 
         d = self._get(ds_id)
-        scheme = TilingScheme.web_mercator() \
+        scheme = tiles.TilingScheme.web_mercator() \
             if params.get("crs", "").upper() == "EPSG:3857" \
-            else TilingScheme.geographic()
+            else tiles.TilingScheme.geographic()
         nx, ny = scheme.num_tiles(z)
         if not (0 <= x < nx and 0 <= y < ny):
             raise ApiError(404, f"tile ({z}/{y}/{x}) outside the scheme")
         t_i = int(params.get("t_i", 0))
         if "time" in params:
             t_i = _t_index(d.grid, _parse_time(params["time"]))
-        # dense nearest-gather render: every tile pixel looks up its
-        # source cell (extract.py:321 index math as an equi-join), so
-        # the PNG has no gaps at any zoom; the cube side is
-        # bbox-filtered first (partition-prunable), the pixel side is
-        # a bounded 256^2 range
+        # dense nearest-gather render: every tile pixel shows the cell
+        # its centre falls in (extract.py:321 index math), so the PNG
+        # has no gaps at any zoom.  The pixel -> cell map is separable,
+        # so the driver computes it as two per-axis index arrays; one
+        # scan collects the needed cells (bbox- and t_i-filtered,
+        # partition-prunable, at most tile_size per axis) and
+        # render_tile_png gathers them into pixels.  When no pixel
+        # shows a cell of the grid, it collects nothing: no Spark job.
         g = d.grid
+        xc, yc = scheme.pixel_centers(z, x, y)
+        x_index, y_index = g.x_index_np(xc), g.y_index_np(yc)
+        need_x = sorted(set(x_index[x_index >= 0].tolist()))
+        need_y = sorted(set(y_index[y_index >= 0].tolist()))
         x1, y1, x2, y2 = scheme.tile_bbox(z, x, y)
-        res = scheme.resolution(z)
-        ts = scheme.tile_size
-        src = d.cube.where(
+        cells = d.cube.where(
             (F.col("x") >= x1) & (F.col("x") < x2)
             & (F.col("y") >= y1) & (F.col("y") < y2)
             & (F.col("t_i") == t_i)
-        ).select("x_i", "y_i", var)
-        px_grid = self.spark.range(ts * ts).select(
-            (F.col("id") % ts).cast("int").alias("px"),
-            (F.col("id") / ts).cast("int").alias("py"))
-        pxx = F.lit(x1) + (F.col("px") + F.lit(0.5)) * F.lit(res)
-        pyy = F.lit(y2) - (F.col("py") + F.lit(0.5)) * F.lit(res)
-        px_grid = px_grid.select(
-            "px", "py",
-            g.x_index_expr(pxx).alias("x_i"),
-            g.y_index_expr(pyy).alias("y_i"))
-        cells = px_grid.join(src, ["x_i", "y_i"], "inner")
+            & F.col("x_i").isin(need_x) & F.col("y_i").isin(need_y)
+        ).select(F.col("x_i").alias("px"), F.col("y_i").alias("py"), var)
         # clamp-rendered like the reference
         if "vmin" in params or "vmax" in params:
-            rgba = compute_rgba_tile(
+            rgba = tiles.compute_rgba_tile(
                 cells, var,
                 float(params.get("vmin", 0.0)),
                 float(params.get("vmax", 1.0)),
                 cmap_name=params.get("cmap", "default"),
                 cmap_norm=params.get("norm", "lin"))
         else:
-            rgba = compute_rgba_tile_auto(cells, var)
-        return render_tile_png(rgba, scheme.tile_size)
+            # the stretch range weighs each cell by the pixels it covers
+            rgba = tiles.compute_rgba_tile_auto(
+                cells, var, stats_df=tiles.pixel_weighted_values(
+                    cells, var, x_index, y_index))
+        return tiles.render_tile_png(rgba, scheme.tile_size,
+                                     x_index=x_index, y_index=y_index)
 
     def _timeseries(self, ds_id: str, var: str,
                     params: dict[str, str],
