@@ -3,7 +3,6 @@
 Each test locks one fix so it cannot silently regress:
 - verdict #3: read_events_stream must not leak the legacy nanos conf
 - advice: knn_recall forwards column names to the approximate side
-- advice: igh (Goode) inverse clamps out-of-domain y instead of NaN-ing
 - advice: bm25/dsir release their persisted intermediates
 """
 
@@ -45,39 +44,6 @@ def test_knn_recall_forwards_column_names(spark):
     # approx == exact here, so recall is exactly 1.0 for the query
     assert len(rec) == 1
     assert rec[0].recall == pytest.approx(1.0)
-
-
-def test_goode_inverse_clamps_out_of_domain(spark):
-    """Advice r9: the interrupted-Goode inverse computed
-    asin((|y|/R + dy)/sqrt(2)) which NaNs for |y| beyond the native
-    range; out-of-domain pixels must now be explicitly NULL (both
-    engines), not silent NaN."""
-    from xcube_spark.operators.resampling.reproject import (
-        _igh_to_lonlat_fn, igh_inverse_sql)
-
-    inv = _igh_to_lonlat_fn("PROJ:IGH")
-    r = 6378137.0
-    pts = spark.createDataFrame(
-        [(0.0, 0.0),               # in-domain: origin
-         (0.0, r * 1.6),           # above the map (native |y| max ~1.36*R)
-         (0.0, -r * 1.6)],         # below the map
-        "x double, y double")
-    lon_c, lat_c = inv(F.col("x"), F.col("y"))
-    rows = pts.select(lon_c.alias("lon"), lat_c.alias("lat")).collect()
-    assert rows[0].lon == pytest.approx(0.0, abs=1e-6)
-    assert rows[0].lat == pytest.approx(0.0, abs=1e-6)
-    for row in rows[1:]:
-        # NULL, not NaN: deterministic on both Spark and DuckDB
-        assert row.lat is None, row
-        assert row.lon is None, row
-    # the SQL twin nulls the same rows (checked on Spark SQL here; the
-    # expression is engine-portable ANSI)
-    lon_s, lat_s = igh_inverse_sql("x", "y", "PROJ:IGH")
-    rows_sql = pts.selectExpr(f"{lon_s} AS lon", f"{lat_s} AS lat").collect()
-    for c_row, s_row in zip(rows, rows_sql):
-        assert (c_row.lat is None) == (s_row.lat is None)
-        if c_row.lat is not None:
-            assert c_row.lat == pytest.approx(s_row.lat, abs=1e-9)
 
 
 def test_bm25_and_dsir_release_persisted_intermediates(spark, sf_dir):

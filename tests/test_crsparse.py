@@ -530,8 +530,9 @@ def test_rotated_pole_eur11_control_point_and_roundtrip(spark):
     inv = get_transform(k, "EPSG:4326")
     df = spark.createDataFrame(
         [(rx, ry)], "x double, y double")
-    lon, lat = inv(F.col("x"), F.col("y"))
-    (blon, blat), = [(r[0], r[1]) for r in df.select(lon, lat).collect()]
+    (blon, blat), = [(r[0], r[1]) for r in apply_transform_df(
+        df, inv, F.col("x"), F.col("y"), "lon", "lat")
+        .select("lon", "lat").collect()]
     assert abs(blon - 10.0) < 1e-9 and abs(blat - 50.0) < 1e-9
 
 
@@ -2228,24 +2229,26 @@ def test_gnomonic_query_grid_edge_margins():
 
 def test_new_family_gate_grid_margins_via_oracle_sql():
     """Gate-grid floor-boundary guard for the round-8 batch-2 families
-    (3395/eqc/stereg/sinu/ortho/nsper), evaluated through the exact
-    inverse-SQL twin strings the oracles use (DuckDB), so this also
-    smoke-checks the twins themselves: finite everywhere on the grid,
+    (3395/eqc/stereg/sinu/ortho/nsper), evaluated through the inverse
+    SQL the oracles render (DuckDB): finite everywhere on the grid,
     every center clear of the 1-degree source-cell edges."""
     import duckdb
 
+    from xcube_spark.operators.resampling.reproject import inverse_sql
     from xcube_spark.queries import resampling_ops as q
 
     cases = [
-        ("3395", q._M3395, q._M3395_LON, q._M3395_LAT, 4e-4),
-        ("eqc", q._EQC, q._EQC_LON, q._EQC_LAT, 4e-3),
-        ("stereg", q._STEREG, q._STEREG_LON, q._STEREG_LAT, 1e-3),
-        ("sinu", q._SINU, q._SINU_LON, q._SINU_LAT, 4e-4),
-        ("ortho", q._ORTHO, q._ORTHO_LON, q._ORTHO_LAT, 4e-4),
-        ("nsper", q._NSPER, q._NSPER_LON, q._NSPER_LAT, 5e-4),
+        ("3395", q._M3395, 4e-4),
+        ("eqc", q._EQC, 4e-3),
+        ("stereg", q._STEREG, 1e-3),
+        ("sinu", q._SINU, 4e-4),
+        ("ortho", q._ORTHO, 4e-4),
+        ("nsper", q._NSPER, 5e-4),
     ]
     con = duckdb.connect()
-    for name, grid, lon_sql, lat_sql, floor in cases:
+    for name, grid, floor in cases:
+        lon_sql, lat_sql = inverse_sql(grid.crs, grid.x_center_sql(),
+                                       grid.y_center_sql())
         mx, my, bad = con.execute(f"""
             WITH tgt AS (
                 SELECT CAST(range // {grid.width} AS INT) AS y_i,
@@ -2275,8 +2278,7 @@ def test_eqdc_roundtrip_properties_and_cf(spark):
     boundaries via the exact oracle SQL."""
     import duckdb
 
-    from xcube_spark.operators.resampling.reproject import (
-        eqdc_inverse_sql, get_transform)
+    from xcube_spark.operators.resampling.reproject import inverse_sql
     from xcube_spark.queries.resampling_ops import _EQDC, _EQDC_CRS
     from xcube_spark.sources.zarrio import (cf_grid_mapping_attrs,
                                             crs_from_grid_mapping)
@@ -2292,9 +2294,8 @@ def test_eqdc_roundtrip_properties_and_cf(spark):
         df = spark.createDataFrame(pts, "lon double, lat double")
         x, y = fwd(F.col("lon"), F.col("lat"))
         st = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-        lon2, lat2 = inv(F.col("x"), F.col("y"))
-        for r in st.select("lon", "lat", lon2.alias("lon2"),
-                           lat2.alias("lat2")).collect():
+        for r in apply_transform_df(st, inv, F.col("x"), F.col("y"),
+                                    "lon2", "lat2").collect():
             assert abs(r.lon2 - r.lon) < 5e-8
             assert abs(r.lat2 - r.lat) < 5e-8
 
@@ -2319,11 +2320,9 @@ def test_eqdc_roundtrip_properties_and_cf(spark):
     attrs.pop("epsg_code")
     assert crs_from_grid_mapping(attrs) == _EQDC_CRS
 
-    # gate-grid margin via the exact oracle twin
-    lon_sql, lat_sql = eqdc_inverse_sql(
-        "CAST((-2724013.0 + (x_i + 0.5) * 140017.0) AS DOUBLE)",
-        "CAST((-2326011.0 + (y_i + 0.5) * 120013.0) AS DOUBLE)",
-        _EQDC_CRS)
+    # gate-grid margin via the oracle's inverse SQL
+    lon_sql, lat_sql = inverse_sql(_EQDC_CRS, _EQDC.x_center_sql(),
+                                   _EQDC.y_center_sql())
     mx, my = duckdb.connect().execute(f"""
         WITH tgt AS (SELECT CAST(range // {_EQDC.width} AS INT) AS y_i,
                             CAST(range % {_EQDC.width} AS INT) AS x_i
@@ -2355,7 +2354,7 @@ def test_robinson_roundtrip_anchors_cf_and_margins(spark):
     import duckdb
 
     from xcube_spark.operators.resampling.reproject import (
-        _ROBIN_X, _ROBIN_Y, get_transform, robin_inverse_sql_ctes)
+        _ROBIN_X, _ROBIN_Y, inverse_sql_ctes)
     from xcube_spark.queries.resampling_ops import _ROBIN
     from xcube_spark.sources.zarrio import (cf_grid_mapping_attrs,
                                             crs_from_grid_mapping)
@@ -2399,11 +2398,9 @@ def test_robinson_roundtrip_anchors_cf_and_margins(spark):
     assert crs_from_grid_mapping(attrs) == "ESRI:54030"
     assert resolve_proj4("+proj=robin +a=6378137") == "ESRI:54030"
 
-    # gate-grid margins via the exact oracle CTEs
-    ctes = robin_inverse_sql_ctes(
-        "CAST((-10866011.0 + (x_i + 0.5) * 540017.0) AS DOUBLE)",
-        "CAST((-7808013.0 + (y_i + 0.5) * 390013.0) AS DOUBLE)",
-        "ESRI:54030")
+    # gate-grid margins via the oracle's inverse CTEs
+    ctes = inverse_sql_ctes("ESRI:54030", _ROBIN.x_center_sql(),
+                            _ROBIN.y_center_sql())
     mx, my, bad = duckdb.connect().execute(f"""
         WITH tgt AS (SELECT CAST(range // {_ROBIN.width} AS INT) AS y_i,
                             CAST(range % {_ROBIN.width} AS INT) AS x_i
@@ -2412,7 +2409,7 @@ def test_robinson_roundtrip_anchors_cf_and_margins(spark):
         SELECT min(least((lon+180.0)%1.0, 1.0-(lon+180.0)%1.0)),
                min(least((lat+90.0)%1.0, 1.0-(lat+90.0)%1.0)),
                count(*) FILTER (lon < -180 OR lon > 180 OR isnan(lon))
-        FROM robin_ll
+        FROM ll
     """).fetchone()
     assert bad == 0
     assert mx > 1e-3 and my > 1e-3
@@ -2438,8 +2435,7 @@ def test_hammer_roundtrip_equal_area_cf_and_margins(spark):
     gate grid margins via the exact oracle SQL."""
     import duckdb
 
-    from xcube_spark.operators.resampling.reproject import (
-        get_transform, hammer_inverse_sql)
+    from xcube_spark.operators.resampling.reproject import inverse_sql
     from xcube_spark.queries.resampling_ops import _HAMMER
 
     r = 6378137.0
@@ -2450,9 +2446,8 @@ def test_hammer_roundtrip_equal_area_cf_and_margins(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     x, y = fwd(F.col("lon"), F.col("lat"))
     st = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-    lon2, lat2 = inv(F.col("x"), F.col("y"))
-    for r2 in st.select("lon", "lat", lon2.alias("lon2"),
-                        lat2.alias("lat2")).collect():
+    for r2 in apply_transform_df(st, inv, F.col("x"), F.col("y"),
+                                 "lon2", "lat2").collect():
         assert abs(r2.lon2 - r2.lon) < 1e-9
         assert abs(r2.lat2 - r2.lat) < 1e-9
 
@@ -2498,10 +2493,9 @@ def test_hammer_roundtrip_equal_area_cf_and_margins(spark):
     attrs.pop("epsg_code")
     assert crs_from_grid_mapping(attrs) == "PROJ:HAMMER"
 
-    # gate-grid margins via the exact oracle twin
-    lon_sql, lat_sql = hammer_inverse_sql(
-        "(-10500011.0 + (x_i + 0.5) * 540017.0)",
-        "(-7020013.0 + (y_i + 0.5) * 360013.0)", "PROJ:HAMMER")
+    # gate-grid margins via the oracle's inverse SQL
+    lon_sql, lat_sql = inverse_sql("PROJ:HAMMER", _HAMMER.x_center_sql(),
+                                   _HAMMER.y_center_sql())
     mx, my, bad = duckdb.connect().execute(f"""
         WITH tgt AS (SELECT CAST(range // {_HAMMER.width} AS INT) AS y_i,
                             CAST(range % {_HAMMER.width} AS INT) AS x_i
@@ -2528,8 +2522,7 @@ def test_wintri_roundtrip_anchors_cf_and_margins(spark):
     the exact oracle CTEs."""
     import duckdb
 
-    from xcube_spark.operators.resampling.reproject import (
-        get_transform, wintri_inverse_sql_ctes)
+    from xcube_spark.operators.resampling.reproject import inverse_sql_ctes
     from xcube_spark.queries.resampling_ops import _WINTRI
     from xcube_spark.sources.zarrio import (cf_grid_mapping_attrs,
                                             crs_from_grid_mapping)
@@ -2578,11 +2571,9 @@ def test_wintri_roundtrip_anchors_cf_and_margins(spark):
     assert crs_from_grid_mapping(attrs) == "ESRI:54042"
     assert resolve_proj4("+proj=wintri +a=6378137") == "ESRI:54042"
 
-    # gate-grid margins via the exact oracle CTEs
-    ctes = wintri_inverse_sql_ctes(
-        "CAST((-10869011.0 + (x_i + 0.5) * 540017.0) AS DOUBLE)",
-        "CAST((-7799013.0 + (y_i + 0.5) * 390313.0) AS DOUBLE)",
-        "ESRI:54042")
+    # gate-grid margins via the oracle's inverse CTEs
+    ctes = inverse_sql_ctes("ESRI:54042", _WINTRI.x_center_sql(),
+                            _WINTRI.y_center_sql())
     mx, my, bad = duckdb.connect().execute(f"""
         WITH tgt AS (SELECT CAST(range // {_WINTRI.width} AS INT) AS y_i,
                             CAST(range % {_WINTRI.width} AS INT) AS x_i
@@ -2591,10 +2582,43 @@ def test_wintri_roundtrip_anchors_cf_and_margins(spark):
         SELECT min(least((lon+180.0)%1.0, 1.0-(lon+180.0)%1.0)),
                min(least((lat+90.0)%1.0, 1.0-(lat+90.0)%1.0)),
                count(*) FILTER (lon < -180 OR lon > 180 OR isnan(lon))
-        FROM wintri_ll
+        FROM ll
     """).fetchone()
     assert bad == 0
     assert mx > 8e-4 and my > 1e-3
+
+
+def test_goode_inverse_clamps_out_of_domain(spark):
+    """The interrupted-Goode inverse computed
+    asin((|y|/R + dy)/sqrt(2)) which NaNs for |y| beyond the native
+    range; out-of-domain pixels must be explicitly NULL (both
+    engines), not silent NaN."""
+    import duckdb
+
+    from xcube_spark.operators.resampling.reproject import inverse_sql
+
+    inv = get_transform("PROJ:IGH", "EPSG:4326")
+    r = 6378137.0
+    xy = [(0.0, 0.0),               # in-domain: origin
+          (0.0, r * 1.6),           # above the map (native |y| max ~1.36*R)
+          (0.0, -r * 1.6)]          # below the map
+    pts = spark.createDataFrame(xy, "x double, y double")
+    rows = apply_transform_df(pts, inv, F.col("x"), F.col("y"),
+                              "lon", "lat").collect()
+    assert rows[0].lon == pytest.approx(0.0, abs=1e-6)
+    assert rows[0].lat == pytest.approx(0.0, abs=1e-6)
+    for row in rows[1:]:
+        # NULL, not NaN: deterministic on both Spark and DuckDB
+        assert row.lat is None, row
+        assert row.lon is None, row
+    lon_sql, lat_sql = inverse_sql("PROJ:IGH", "x", "y")
+    con = duckdb.connect()
+    for (x, y), row in zip(xy, rows):
+        lon, lat = con.execute(
+            f"SELECT {lon_sql}, {lat_sql} FROM (SELECT ? AS x, ? AS y)",
+            [x, y]).fetchone()
+        assert (lat is None) == (row.lat is None)
+        assert (lon is None) == (row.lon is None)
 
 
 def test_goode_homolosine_roundtrip_interruption_cf_and_margins(spark):
@@ -2611,8 +2635,7 @@ def test_goode_homolosine_roundtrip_interruption_cf_and_margins(spark):
     import duckdb
 
     from xcube_spark.operators.resampling.reproject import (
-        _IGH_DY, _IGH_PHIB, apply_transform_df, get_transform,
-        igh_inverse_sql)
+        _IGH_DY, _IGH_PHIB, inverse_sql)
     from xcube_spark.queries.resampling_ops import _IGH
     from xcube_spark.sources.zarrio import (cf_grid_mapping_attrs,
                                             crs_from_grid_mapping)
@@ -2673,17 +2696,17 @@ def test_goode_homolosine_roundtrip_interruption_cf_and_margins(spark):
     assert crs_from_grid_mapping(attrs) == "PROJ:IGH"
     assert resolve_proj4("+proj=igh +a=6378137") == "PROJ:IGH"
 
-    # gate-grid margins via the exact oracle SQL (the grid also stays
-    # inside the Mollweide asin domain and off the zone boundaries)
-    lon_sql, lat_sql = igh_inverse_sql(
-        "(-19947013.0 + (x_i + 0.5) * 997313.0)",
-        "(-8579013.0 + (y_i + 0.5) * 429313.0)", "PROJ:IGH")
+    # gate-grid margins via the oracle's inverse SQL (the grid also
+    # stays inside the Mollweide asin domain and off the zone
+    # boundaries)
+    lon_sql, lat_sql = inverse_sql("PROJ:IGH", _IGH.x_center_sql(),
+                                   _IGH.y_center_sql())
     mx, my, nn, zb = duckdb.connect().execute(f"""
         WITH tgt AS (SELECT CAST(range // {_IGH.width} AS INT) AS y_i,
                             CAST(range % {_IGH.width} AS INT) AS x_i
                      FROM range({_IGH.width * _IGH.height})),
         ll AS (SELECT y_i, x_i,
-                      (-8579013.0 + (y_i + 0.5) * 429313.0) / {r!r} AS yn,
+                      {_IGH.y_center_sql()} / {r!r} AS yn,
                       {lon_sql} AS lon, {lat_sql} AS lat FROM tgt)
         SELECT min(least((lon+180.0)%1.0, 1.0-(lon+180.0)%1.0))
                    FILTER (lon >= -180 AND lon <= 180),

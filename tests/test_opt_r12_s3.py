@@ -1,8 +1,8 @@
 """Round-12 optimization (session 3) pins: the SQL-string expression
 builders must be value-identical to the Column-API forms they replaced.
 
-The rewrites (ema/holt folds, UTM inverse, bloom build/probe, quality
-features, shingle/band chains) only change HOW the expression tree is
+The rewrites (ema/holt folds, bloom build/probe, quality features,
+shingle/band chains) only change HOW the expression tree is
 constructed (one server-side parse instead of hundreds of py4j
 round trips) — never WHAT it computes.  These tests pin the equality
 on data with the sharp edges (regex metacharacters, multi-space runs,
@@ -75,18 +75,3 @@ def test_shingles_positional_fields_join_correctly(spark):
         "doc_id long, text string")
     got = {(r["doc_id"], r["shingle"]) for r in shingles(docs, k=3).collect()}
     assert got == {(1, "a b c"), (1, "b c d"), (3, "p p p")}
-
-
-def test_utm_inverse_sql_fn_matches_column_transform(spark):
-    from xcube_spark.operators.resampling.reproject import (
-        _utm_to_lonlat_fn)
-
-    inv = _utm_to_lonlat_fn(33, False)
-    df = spark.range(50).selectExpr(
-        "CAST(200000 + id * 12345 AS DOUBLE) AS x",
-        "CAST(3800000 + id * 23456 AS DOUBLE) AS y")
-    lon_c, lat_c = inv(F.col("x"), F.col("y"))
-    a = df.select(lon_c.alias("lon"), lat_c.alias("lat")).collect()
-    lon_s, lat_s = inv.sql_fn("x", "y")
-    b = df.selectExpr(f"{lon_s} AS lon", f"{lat_s} AS lat").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]

@@ -453,7 +453,7 @@ def test_goode_homolosine_roundtrip_property(lon, lat):
         x = r * (lamc + (lam - lamc) * math.cos(phi))
         y = r * phi
 
-    # inverse (mirror of _igh_to_lonlat_fn)
+    # inverse (mirror of _igh_inverse)
     xn, yn = x / r, y / r
     if yn >= 0:
         lamc2 = math.radians(-100.0 if xn <= -_IGH_D40() else 30.0)

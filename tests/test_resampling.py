@@ -19,8 +19,10 @@ from xcube_spark.operators.resampling import (
     resample_in_space,
 )
 from xcube_spark.operators.resampling.reproject import (
+    _FAMILIES,
     _lonlat_to_mercator,
-    _mercator_to_lonlat,
+    apply_transform_df,
+    get_transform,
 )
 from xcube_spark.operators.resampling.spatial import _integer_factor
 
@@ -127,9 +129,8 @@ def test_mercator_roundtrip(spark):
         "lon double, lat double",
     )
     mx, my = _lonlat_to_mercator(F.col("lon"), F.col("lat"))
-    lon2, lat2 = _mercator_to_lonlat(mx, my)
-    rows = df.select(F.col("lon"), F.col("lat"),
-                     lon2.alias("lon2"), lat2.alias("lat2")).collect()
+    inv = get_transform("EPSG:3857", "EPSG:4326")
+    rows = apply_transform_df(df, inv, mx, my, "lon2", "lat2").collect()
     for r in rows:
         assert r["lon2"] == pytest.approx(r["lon"], abs=1e-9)
         assert r["lat2"] == pytest.approx(r["lat"], abs=1e-9)
@@ -254,23 +255,22 @@ def test_utm_roundtrip_and_anchors(spark):
     northing 0; northing at 45N equals k0 x meridian arc (published
     geodesy value 4982950.4 m)."""
     from xcube_spark.operators.resampling.reproject import (
-        _lonlat_to_utm_fn, _utm_to_lonlat_fn, get_transform, parse_utm_crs,
-        utm_crs)
+        _lonlat_to_utm_fn, parse_utm_crs, utm_crs)
 
     assert utm_crs(33) == "EPSG:32633" and utm_crs(19, south=True) == "EPSG:32719"
     assert parse_utm_crs("EPSG:32719") == (19, True)
     assert parse_utm_crs("EPSG:4326") is None
     assert get_transform("EPSG:32633", "EPSG:4326") is not None
 
-    fwd, inv = _lonlat_to_utm_fn(33, False), _utm_to_lonlat_fn(33, False)
+    fwd = _lonlat_to_utm_fn(33, False)
+    inv = get_transform("EPSG:32633", "EPSG:4326")
     pts = spark.createDataFrame(
         [(15.0, 0.0), (15.0, 45.0), (12.5, 41.9), (17.9, -36.1)],
         ["lon", "lat"])
     x, y = fwd(F.col("lon"), F.col("lat"))
     proj = pts.select("lon", "lat", x.alias("x"), y.alias("y"))
-    lon2, lat2 = inv(F.col("x"), F.col("y"))
-    rows = proj.select("lon", "lat", "x", "y", lon2.alias("lon2"),
-                       lat2.alias("lat2")).collect()
+    rows = apply_transform_df(proj, inv, F.col("x"), F.col("y"),
+                              "lon2", "lat2").collect()
     for r in rows:
         assert r["lon2"] == pytest.approx(r["lon"], abs=1e-7)
         assert r["lat2"] == pytest.approx(r["lat"], abs=1e-7)
@@ -292,9 +292,9 @@ def test_polar_stereographic_roundtrip_and_known_values(spark):
     fwd = get_transform("EPSG:4326", "EPSG:3413")
     inv = get_transform("EPSG:3413", "EPSG:4326")
     x, y = fwd(F.col("lon"), F.col("lat"))
-    lon2, lat2 = inv(x.alias("x"), y.alias("y"))
-    rows = pts.select("lon", "lat", x.alias("x"), y.alias("y"),
-                      lon2.alias("lon2"), lat2.alias("lat2")).collect()
+    rows = apply_transform_df(
+        pts.select("lon", "lat", x.alias("x"), y.alias("y")), inv,
+        F.col("x"), F.col("y"), "lon2", "lat2").collect()
     for r in rows:
         assert abs(r.lon2 - r.lon) < 1e-6 and abs(r.lat2 - r.lat) < 1e-6
     # published behavior: the standard parallel on the central meridian
@@ -322,11 +322,63 @@ def test_get_transform_chains_through_lonlat(spark):
     import math
     my = (F.log(F.tan(F.lit(math.pi / 4) + F.radians(F.col("lat")) / 2))
           * 6378137.0)
-    cx, cy = chain(mx, my)
     dx, dy = direct(F.col("lon"), F.col("lat"))
-    r = pts.select(cx.alias("cx"), cy.alias("cy"),
-                   dx.alias("dx"), dy.alias("dy")).collect()[0]
+    r = apply_transform_df(
+        pts.select("lon", "lat", dx.alias("dx"), dy.alias("dy")),
+        chain, mx, my, "cx", "cy").collect()[0]
     assert abs(r.cx - r.dx) < 1e-4 and abs(r.cy - r.dy) < 1e-4
+
+
+def _family_grids() -> dict:
+    """One oracle gate grid per CRS family: the target grids of the
+    cube_reproject_* queries, keyed by the family's inverse name."""
+    from xcube_spark.operators.resampling.crsparse import resolve_crs
+    from xcube_spark.operators.resampling.reproject import _family
+    from xcube_spark.queries import resampling_ops as q
+
+    grids = {}
+    for g in vars(q).values():
+        if isinstance(g, CubeGrid) and g.crs.upper() != "EPSG:4326":
+            grids.setdefault(_family(resolve_crs(g.crs))[1].__name__, g)
+    return grids
+
+
+@pytest.mark.parametrize(
+    "inverse", [row[1].__name__ for row in _FAMILIES])
+def test_inverse_text_same_in_spark_and_duckdb(spark, inverse):
+    """Each family's inverse is one stage list; Spark runs it as
+    parsed SQL and the oracle renders it for DuckDB (inline or CTEs,
+    with the hyperbolic functions rewritten).  On every center of the
+    family's gate grid both engines agree to 1e-9 deg."""
+    import duckdb
+
+    from xcube_spark.operators.resampling.reproject import inverse_sql_ctes
+
+    grid = _family_grids()[inverse]
+    x, y = grid.x_center_sql(), grid.y_center_sql()
+    cells = spark.range(grid.width * grid.height).select(
+        (F.col("id") / grid.width).cast("int").alias("y_i"),
+        (F.col("id") % grid.width).cast("int").alias("x_i"))
+    got = apply_transform_df(cells, get_transform(grid.crs, "EPSG:4326"),
+                             x, y, "lon", "lat").collect()
+    want = duckdb.connect().execute(f"""
+        WITH tgt AS (SELECT CAST(range // {grid.width} AS INT) AS y_i,
+                            CAST(range % {grid.width} AS INT) AS x_i
+                     FROM range({grid.width * grid.height})),
+        {inverse_sql_ctes(grid.crs, x, y)}
+        SELECT y_i, x_i, lon, lat FROM ll
+    """).fetchall()
+    want = {(r[0], r[1]): r[2:] for r in want}
+    assert len(want) == len(got) == grid.width * grid.height
+    finite = 0
+    for r in got:
+        lon, lat = want[(r.y_i, r.x_i)]
+        for a, b in ((r.lon, lon), (r.lat, lat)):
+            assert (a is None) == (b is None), (r, lon, lat)
+            if a is not None:
+                assert abs(a - b) <= 1e-9, (r, lon, lat)
+                finite += 1
+    assert finite > 0
 
 
 def test_laea_3035_known_points_and_roundtrip(spark):
@@ -342,9 +394,8 @@ def test_laea_3035_known_points_and_roundtrip(spark):
         "lon double, lat double")
     x, y = fwd(F.col("lon"), F.col("lat"))
     proj = pts.select("lon", "lat", x.alias("x"), y.alias("y"))
-    lon2, lat2 = inv(F.col("x"), F.col("y"))
-    rows = proj.select("lon", "lat", "x", "y",
-                       lon2.alias("lon2"), lat2.alias("lat2")).collect()
+    rows = apply_transform_df(proj, inv, F.col("x"), F.col("y"),
+                              "lon2", "lat2").collect()
     by_lon = {r.lon: r for r in rows}
     assert abs(by_lon[10.0].x - 4_321_000.0) < 1e-6
     assert abs(by_lon[10.0].y - 3_210_000.0) < 1e-6
@@ -353,28 +404,6 @@ def test_laea_3035_known_points_and_roundtrip(spark):
     assert abs(by_lon[5.0].y - 2_999_718.853) < 0.01
     for r in rows:
         assert abs(r.lon2 - r.lon) < 1e-7 and abs(r.lat2 - r.lat) < 1e-7
-
-
-def test_laea_inverse_sql_twin_matches_column_inverse(spark):
-    """laea_inverse_sql restates the Column inverse exactly (DuckDB)."""
-    import duckdb
-
-    from xcube_spark.operators.resampling.reproject import (
-        get_transform, laea_inverse_sql)
-
-    inv = get_transform("EPSG:3035", "EPSG:4326")
-    pts = [(4_000_000.0, 2_800_000.0), (4_500_000.0, 3_500_000.0),
-           (3_300_000.0, 2_300_000.0)]
-    df = spark.createDataFrame(pts, "x double, y double")
-    lon, lat = inv(F.col("x"), F.col("y"))
-    got = df.select(lon.alias("lon"), lat.alias("lat")).collect()
-    lon_sql, lat_sql = laea_inverse_sql("x", "y", "EPSG:3035")
-    con = duckdb.connect()
-    for (px, py), r in zip(pts, got):
-        o = con.execute(
-            f"SELECT {lon_sql}, {lat_sql} FROM (SELECT ? AS x, ? AS y)",
-            [px, py]).fetchone()
-        assert abs(o[0] - r.lon) < 1e-10 and abs(o[1] - r.lat) < 1e-10
 
 
 # ---- OSGB National Grid (EPSG:27700) ----------------------------------
@@ -485,44 +514,16 @@ def test_osgb_full_chain_vs_independent_redfearn(spark):
     back = spark.createDataFrame(
         [(r.E, r.N, r.lon, r.lat) for r in got],
         "E double, N double, lon double, lat double")
-    lon2, lat2 = inv(F.col("E"), F.col("N"))
-    for r in back.select("lon", "lat",
-                         lon2.alias("l2"), lat2.alias("p2")).collect():
+    for r in apply_transform_df(back, inv, F.col("E"), F.col("N"),
+                                "l2", "p2").collect():
         assert abs(r.l2 - r.lon) < 1e-6
         assert abs(r.p2 - r.lat) < 1e-6
 
 
-def test_osgb_inverse_sql_twin_matches_column_inverse(spark):
-    """osgb_inverse_sql restates the Column inverse exactly (DuckDB)."""
-    import duckdb
-
-    from xcube_spark.operators.resampling.reproject import (
-        get_transform, osgb_inverse_sql)
-
-    inv = get_transform("EPSG:27700", "EPSG:4326")
-    pts = [(400_000.0, 300_000.0), (137_500.0, 23_400.0),
-           (651_409.903, 313_177.270), (529_090.0, 181_680.0)]
-    df = spark.createDataFrame(pts, "x double, y double")
-    lon, lat = inv(F.col("x"), F.col("y"))
-    got = df.select(lon.alias("lon"), lat.alias("lat")).collect()
-    lon_sql, lat_sql = osgb_inverse_sql("x", "y")
-    con = duckdb.connect()
-    for (px, py), r in zip(pts, got):
-        o = con.execute(
-            f"SELECT {lon_sql}, {lat_sql} FROM (SELECT ? AS x, ? AS y)",
-            [px, py]).fetchone()
-        assert abs(o[0] - r.lon) < 1e-10 and abs(o[1] - r.lat) < 1e-10
-
-
-def test_tm_registry_roundtrip_and_sql_twin(spark):
+def test_tm_registry_roundtrip_and_ellipsoids(spark):
     """Generic national-TM registry (NZTM/TM35FIN/ETRS89-UTM): exact
-    round-trips, GRS80-vs-WGS84 distinction (EPSG:25832 differs from
-    EPSG:32632 by the ellipsoid, sub-mm but nonzero), and the DuckDB
-    SQL twin matches the Column inverse to 1e-10."""
-    import duckdb
-
-    from xcube_spark.operators.resampling.reproject import (get_transform,
-                                                            tm_inverse_sql)
+    round-trips and the GRS80-vs-WGS84 distinction (EPSG:25832 differs
+    from EPSG:32632 by the ellipsoid, sub-mm but nonzero)."""
 
     cases = {"EPSG:2193": [(173.0, -41.0), (168.5, -46.2), (178.2, -37.8)],
              "EPSG:3067": [(27.0, 64.0), (21.5, 60.2), (30.9, 69.5)],
@@ -533,19 +534,11 @@ def test_tm_registry_roundtrip_and_sql_twin(spark):
         df = spark.createDataFrame(pts, "lon double, lat double")
         x, y = fwd(F.col("lon"), F.col("lat"))
         proj = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-        lon2, lat2 = inv(F.col("x"), F.col("y"))
-        rows = proj.select("lon", "lat", "x", "y", lon2.alias("l2"),
-                           lat2.alias("p2")).collect()
+        rows = apply_transform_df(proj, inv, F.col("x"), F.col("y"),
+                                  "l2", "p2").collect()
         for r in rows:
             # 3rd-order Krueger truncation: ~1e-4 m, like the UTM path
             assert abs(r.l2 - r.lon) < 1e-8 and abs(r.p2 - r.lat) < 1e-8
-        lon_sql, lat_sql = tm_inverse_sql("x", "y", crs)
-        con = duckdb.connect()
-        for r in rows:
-            o = con.execute(
-                f"SELECT {lon_sql}, {lat_sql} FROM (SELECT ? AS x, "
-                "? AS y)", [r.x, r.y]).fetchone()
-            assert abs(o[0] - r.l2) < 1e-10 and abs(o[1] - r.p2) < 1e-10
 
     # NZTM natural origin: (173E, 0N) -> the false origin exactly
     fwd = get_transform("EPSG:4326", "EPSG:2193")
@@ -679,9 +672,8 @@ def test_lcc_2154_invariants_and_roundtrip(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     x, y = fwd(F.col("lon"), F.col("lat"))
     proj = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-    lon2, lat2 = inv(F.col("x"), F.col("y"))
-    rows = proj.select("lon", "lat", "x", "y", lon2.alias("lon2"),
-                       lat2.alias("lat2")).collect()
+    rows = apply_transform_df(proj, inv, F.col("x"), F.col("y"),
+                              "lon2", "lat2").collect()
     by = {(r.lon, r.lat): r for r in rows}
     c = by[(3.0, 46.5)]
     assert abs(c.x - 700_000.0) < 1e-6 and abs(c.y - 6_600_000.0) < 1e-6
@@ -716,9 +708,8 @@ def test_albers_5070_equal_area_and_roundtrip(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     x, y = fwd(F.col("lon"), F.col("lat"))
     proj = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-    lon2, lat2 = inv(F.col("x"), F.col("y"))
-    rows = proj.select("lon", "lat", "x", "y", lon2.alias("lon2"),
-                       lat2.alias("lat2")).collect()
+    rows = apply_transform_df(proj, inv, F.col("x"), F.col("y"),
+                              "lon2", "lat2").collect()
     by = {(r.lon, r.lat): r for r in rows}
     c = by[(-96.0, 23.0)]
     assert abs(c.x) < 1e-6 and abs(c.y) < 1e-6
@@ -749,41 +740,12 @@ def test_sinusoidal_modis_analytic(spark):
     df = spark.createDataFrame(pts, "lon double, lat double")
     x, y = fwd(F.col("lon"), F.col("lat"))
     proj = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-    lon2, lat2 = inv(F.col("x"), F.col("y"))
-    for r in proj.select("*", lon2.alias("lon2"),
-                         lat2.alias("lat2")).collect():
+    for r in apply_transform_df(proj, inv, F.col("x"), F.col("y"),
+                                "lon2", "lat2").collect():
         ex = R * math.radians(r.lon) * math.cos(math.radians(r.lat))
         ey = R * math.radians(r.lat)
         assert abs(r.x - ex) < 1e-6 and abs(r.y - ey) < 1e-6
         assert abs(r.lon2 - r.lon) < 1e-12 and abs(r.lat2 - r.lat) < 1e-12
-
-
-def test_lcc_aea_inverse_sql_twins_match_column_inverse(spark):
-    """lcc_inverse_sql / aea_inverse_sql restate the Column inverses
-    exactly (DuckDB vs Spark below 1e-10 degrees)."""
-    import duckdb
-
-    from xcube_spark.operators.resampling.reproject import (
-        aea_inverse_sql, get_transform, lcc_inverse_sql)
-
-    con = duckdb.connect()
-    for crs, sql_fn, pts in [
-            ("EPSG:2154", lcc_inverse_sql,
-             [(700_000.0, 6_600_000.0), (350_000.0, 6_300_000.0),
-              (1_050_000.0, 6_900_000.0)]),
-            ("EPSG:5070", aea_inverse_sql,
-             [(0.0, 1_000_000.0), (-1_500_000.0, 2_000_000.0),
-              (1_200_000.0, 400_000.0)])]:
-        inv = get_transform(crs, "EPSG:4326")
-        df = spark.createDataFrame(pts, "x double, y double")
-        lon, lat = inv(F.col("x"), F.col("y"))
-        got = df.select(lon.alias("lon"), lat.alias("lat")).collect()
-        lon_sql, lat_sql = sql_fn("x", "y", crs)
-        for (px, py), r in zip(pts, got):
-            o = con.execute(
-                f"SELECT {lon_sql}, {lat_sql} FROM (SELECT ? AS x, ? AS y)",
-                [px, py]).fetchone()
-            assert abs(o[0] - r.lon) < 1e-10 and abs(o[1] - r.lat) < 1e-10
 
 
 # ---- true B-spline orders 2/4/5 (resampling/bspline.py) ----------------
@@ -1066,18 +1028,17 @@ def test_mollweide_forward_inverse_roundtrip(spark):
     from pyspark.sql import functions as F
 
     from xcube_spark.operators.resampling.reproject import (
-        _MollForward, _moll_to_lonlat_fn, apply_transform_df)
+        _MollForward, apply_transform_df, get_transform)
 
     fwd = _MollForward("ESRI:54009")
-    inv = _moll_to_lonlat_fn("ESRI:54009")
+    inv = get_transform("ESRI:54009", "EPSG:4326")
     pts = [(float(lon), float(lat))
            for lon in range(-170, 171, 20) for lat in range(-85, 86, 10)]
     df = spark.createDataFrame(pts, "lon double, lat double")
     d = apply_transform_df(df, fwd, F.col("lon"), F.col("lat"),
                            "mx", "my")
-    lx, ly = inv(F.col("mx"), F.col("my"))
-    rows = d.select("lon", "lat", "mx", "my",
-                    lx.alias("rlon"), ly.alias("rlat")).collect()
+    rows = apply_transform_df(d, inv, F.col("mx"), F.col("my"),
+                              "rlon", "rlat").collect()
     for r in rows:
         assert abs(r.rlon - r.lon) < 1e-10
         assert abs(r.rlat - r.lat) < 1e-10

@@ -24,6 +24,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+def sql_double(v: float) -> str:
+    """A finite float as an SQL literal with an exponent (``0.5E0``),
+    which Spark and DuckDB both read as DOUBLE (a bare ``0.5`` is
+    DECIMAL in both)."""
+    r = repr(float(v)).upper()
+    return r if "E" in r else r + "E0"
+
+
 #: canonical cells-table dimension columns, in reference dim order
 #: (time, ..., y, x) — verify.py:131-141
 DIM_COLS = ("t_i", "y_i", "x_i")
@@ -84,15 +92,18 @@ class CubeGrid:
         return F.lit(self.y_start) + (y_i + F.lit(0.5)) * F.lit(self.y_res)
 
     def x_center_sql(self, x_i: str = "x_i") -> str:
-        """``x_center_expr`` as a Spark-SQL fragment (same literals,
-        same association — for string-built transform plans, r12)."""
-        return f"({self.x_start!r}D + (({x_i}) + 0.5D) * {self.x_res!r}D)"
+        """``x_center_expr`` as SQL text that Spark and DuckDB both
+        read as the same DOUBLE arithmetic (same literals, same
+        association)."""
+        return (f"({sql_double(self.x_start)} + (({x_i}) + 0.5E0) "
+                f"* {sql_double(self.x_res)})")
 
     def y_center_sql(self, y_i: str = "y_i") -> str:
         if self.inverse_y:
-            return (f"({self.y_end!r}D - (({y_i}) + 0.5D) "
-                    f"* {self.y_res!r}D)")
-        return f"({self.y_start!r}D + (({y_i}) + 0.5D) * {self.y_res!r}D)"
+            return (f"({sql_double(self.y_end)} - (({y_i}) + 0.5E0) "
+                    f"* {sql_double(self.y_res)})")
+        return (f"({sql_double(self.y_start)} + (({y_i}) + 0.5E0) "
+                f"* {sql_double(self.y_res)})")
 
     def x_index_sql(self, x: str) -> str:
         """``x_index_expr`` as a Spark-SQL fragment (same literals,

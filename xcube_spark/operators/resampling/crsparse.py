@@ -1,5 +1,5 @@
 """PROJ.4-string and CF-grid-mapping CRS resolution onto the
-closed-form Column-math projection families.
+closed-form projection families.
 
 The reference accepts *any* pyproj CRS — `pyproj.CRS.from_cf(attrs)`
 in `xcube/core/gridmapping/cfconv.py:211` decodes the CF grid-mapping
@@ -15,8 +15,8 @@ mercator with arbitrary ellipsoid/origin/scale, LCC-2SP, Albers,
 LAEA, polar stereographic, sinusoidal, Mollweide, spherical
 mercator, plain lat/lon).  Resolution *registers* the parsed
 parameters into the family tables under a canonical key, so the
-whole Column-math dispatch (`get_transform`, staged transforms, SQL
-twins) works unchanged — genuinely arbitrary parameters, not just
+whole dispatch (`get_transform`, the inverse stage text and its DuckDB
+rendering) works unchanged — genuinely arbitrary parameters, not just
 the pre-registered EPSG codes.
 
 Round 8 extended the family set (rotated pole, oblique/double

@@ -5,26 +5,40 @@ regular grid in CRS B.  The reference transforms, per target block, the
 target cell centers into the source CRS with pyproj, then gathers the
 nearest source pixel (reproject.py:360-430).
 
-Spark mapping: the same **target-driven gather join** as affine, with
-the coordinate transform factored out as a pluggable function:
+Spark mapping: the same **target-driven gather join** as affine:
 
 1. synthesize the target cell table (narrow ``spark.range`` projection);
-2. transform target (x, y) -> source CRS — either
-   - a *pure Column* transform (identity, lon/lat <-> scaled meters
-     approximations) that stays inside whole-stage codegen, or
-   - a **pandas_udf transform** (Arrow-batched) when real projection
-     math is needed.  ``pyproj`` is not installed in this container, so
-     the UDF path is gated behind an import-try and ships with
-     deterministic pure-numpy transforms for the common cases
-     (EPSG:4326 <-> EPSG:3857 Web-Mercator — closed-form math,
-     no library needed);
-3. compute source indices from the transformed coords (Column math) and
-   equi-join the source cells — identical physical shape to affine, so
-   the same layout/broadcast reasoning applies.
+2. move the target cell centers into the source CRS through a 4326 hop
+   of closed-form transforms (pyproj is not installed here; when it is,
+   CRS pairs without a closed form fall back to a pyproj pandas_udf);
+3. compute source indices from the moved coordinates and left-join the
+   source cells on them.
+
+Each CRS family is one row of ``_FAMILIES``: a matcher, an inverse
+(projected -> lon/lat) and a forward (lon/lat -> projected).
+
+- The inverse is written ONCE, as an ordered list of stages
+  ``{name: SQL text}`` written with the ``Q`` SQL-text functions (a stage may
+  use the ``x``/``y`` inputs and the names of earlier stages).  Spark
+  runs each stage as one ``withColumns({name: F.expr(text)})``; the
+  DuckDB oracles render the same text through ``inverse_sql`` (one
+  stage, inlined) or ``inverse_sql_ctes`` (a CTE per stage).  The
+  literals are written with an exponent, which both engines read as
+  DOUBLE; DuckDB lacks sinh/cosh/asinh/atanh and ``signum``, so
+  ``_duckdb`` rewrites those as exp/ln forms and ``sign``.
+  Multi-stage inverses (datum hops, fixed-count iterations) keep the
+  intermediates as columns, so the plan stays linear in the stage
+  count.
+- The forward is Column code with no SQL twin.
+
+Because engine and oracle now share the inverse text, an oracle match
+no longer checks the inverse arithmetic.  The independent checks are
+``tests/test_crs_control_points.py`` (published control points) and the
+forward-then-inverse round-trip tests, whose forward side is separate
+code.
 
 Scale: the transform is applied to the *target* table (bounded by the
-requested output size, usually << source); the join shuffles on source
-cell indices which are co-located with the cells-table layout.
+requested output size, usually << source).
 """
 
 from __future__ import annotations
@@ -36,10 +50,264 @@ from typing import Callable, Iterable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xcube_spark.cube.grid import CubeGrid
+from xcube_spark.cube.grid import CubeGrid, sql_double
 
 #: (x, y) -> (x', y') as Column expressions
 ColumnTransform = Callable[[Column, Column], tuple[Column, Column]]
+
+
+# ---- SQL text for the inverses -----------------------------------------
+#
+# ``_Sql`` composes like a pyspark Column and prints fully parenthesised
+# SQL, so an inverse written with ``Q.sin``/``Q.lit``/operators parses
+# (``F.expr``) to the expression tree the same Column code would build.
+# That includes pyspark's reflected operators: ``2.0 * c`` and
+# ``2.0 + c`` keep the column on the left, ``2.0 - c``/``2.0 / c`` do
+# not.  Floats print with an exponent (``grid.sql_double``), which
+# Spark and DuckDB both read as DOUBLE; ints print bare (INT).
+
+def _binop(sym: str, swap: bool = False):
+    def op(self, other) -> "_Sql":
+        a, b = (Q.lit(other), self) if swap else (self, Q.lit(other))
+        return _Sql(f"({a} {sym} {b})")
+    return op
+
+
+class _Sql:
+    __slots__ = ("t",)
+    __hash__ = None
+
+    def __init__(self, t: str):
+        self.t = t
+
+    def __str__(self) -> str:
+        return self.t
+
+    __add__ = __radd__ = _binop("+")
+    __mul__ = __rmul__ = _binop("*")
+    __sub__, __rsub__ = _binop("-"), _binop("-", swap=True)
+    __truediv__, __rtruediv__ = _binop("/"), _binop("/", swap=True)
+    __lt__, __le__, __gt__, __ge__, __eq__ = map(
+        _binop, ("<", "<=", ">", ">=", "="))
+    __and__, __or__ = _binop("AND"), _binop("OR")
+
+    def __neg__(self) -> "_Sql":
+        return _Sql(f"(- {self})")
+
+    def cast(self, t: str) -> "_Sql":
+        return _Sql(f"CAST({self} AS {t.upper()})")
+
+
+class _Case(_Sql):
+    """``Q.when(...).when(...).otherwise(...)`` -> CASE WHEN ... END."""
+    __slots__ = ("arms", "default")
+
+    def __init__(self, arms: tuple, default=None):
+        self.arms, self.default = arms, default
+        body = " ".join(f"WHEN {c} THEN {v}" for c, v in arms)
+        tail = "" if default is None else f" ELSE {default}"
+        super().__init__(f"CASE {body}{tail} END")
+
+    def when(self, cond, value) -> "_Case":
+        return _Case(self.arms + ((cond, Q.lit(value)),))
+
+    def otherwise(self, value) -> "_Sql":
+        return _Case(self.arms, Q.lit(value))
+
+
+def _fn(name: str) -> Callable[..., _Sql]:
+    return lambda *args: _Sql(f"{name}({', '.join(map(str, map(Q.lit, args)))})")
+
+
+class Q:
+    """The ``F`` subset the inverses use, producing ``_Sql`` text."""
+
+    @staticmethod
+    def lit(v) -> _Sql:
+        if isinstance(v, _Sql):
+            return v
+        if isinstance(v, bool):
+            return _Sql("true" if v else "false")
+        if isinstance(v, int):
+            return _Sql(str(v) if v >= 0 else f"({v})")
+        if math.isnan(v):
+            return _Sql("CAST('NaN' AS DOUBLE)")
+        if math.isinf(v):
+            return _Sql(f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)")
+        r = sql_double(v)
+        return _Sql(f"({r})" if r.startswith("-") else r)
+
+    sin, cos, tan = _fn("sin"), _fn("cos"), _fn("tan")
+    asin, acos, atan = _fn("asin"), _fn("acos"), _fn("atan")
+    atan2, sinh, cosh = _fn("atan2"), _fn("sinh"), _fn("cosh")
+    # Spark prints a function under the alias the text used: ``power``
+    # and ``signum`` print as the ``F.pow``/``F.signum`` expressions do
+    sqrt, exp, log, pow = _fn("sqrt"), _fn("exp"), _fn("ln"), _fn("power")
+    degrees, radians = _fn("degrees"), _fn("radians")
+    abs, signum = _fn("abs"), _fn("signum")
+    greatest, least = _fn("greatest"), _fn("least")
+
+    @staticmethod
+    def when(cond, value) -> _Case:
+        return _Case(((cond, Q.lit(value)),))
+
+
+def _cols(names: str) -> tuple[_Sql, ...]:
+    """Stage names as references: ``_cols("__a __b")``."""
+    return tuple(map(_Sql, names.split()))
+
+
+def _out(lon: _Sql, lat: _Sql) -> list[dict]:
+    """A single-stage inverse: one stage holding the two outputs."""
+    return [{"__out_x": lon, "__out_y": lat}]
+
+
+#: DuckDB spellings of the functions it lacks: the four hyperbolic
+#: ones as exp/ln forms, and Spark's ``signum`` (Spark also reads
+#: ``sign``, but prints it under that alias in plans)
+_DUCKDB_FUNCS = {
+    "sinh": "((exp({0}) - exp(-({0}))) / 2.0E0)",
+    "cosh": "((exp({0}) + exp(-({0}))) / 2.0E0)",
+    "asinh": "ln({0} + sqrt({0} * {0} + 1.0E0))",
+    "atanh": "(0.5E0 * ln((1.0E0 + {0}) / (1.0E0 - {0})))",
+    "signum": "sign({0})",
+}
+_DUCKDB_FUNCS_RE = re.compile(r"\b(sinh|cosh|asinh|atanh|signum)\(")
+
+
+def _duckdb(text) -> str:
+    """The DuckDB dialect of inverse text: only the functions of
+    ``_DUCKDB_FUNCS`` differ."""
+    text = str(text)
+    m = _DUCKDB_FUNCS_RE.search(text)
+    if m is None:
+        return text
+    depth, i = 1, m.end()
+    while depth:
+        depth += {"(": 1, ")": -1}.get(text[i], 0)
+        i += 1
+    arg = "(" + _duckdb(text[m.end():i - 1]) + ")"
+    return (text[:m.start()]
+            + _DUCKDB_FUNCS[m.group(1)].format(arg)
+            + _duckdb(text[i:]))
+
+
+def _as_col(e) -> Column:
+    return F.expr(e) if isinstance(e, str) else e
+
+
+class SqlInverse:
+    """An inverse transform as an ordered list of stages
+    ``{name: SQL text}``; ``build(x, y)`` makes the list from the input
+    texts.  The last stage (or an earlier one) defines ``__out_x`` /
+    ``__out_y`` (lon/lat degrees); a name may be redefined by a later
+    stage (one Newton iteration per stage)."""
+
+    def __init__(self, build: Callable[[_Sql, _Sql], list[dict]]):
+        self.build = build
+
+    @property
+    def staged(self) -> bool:
+        return len(self.build(_Sql("__in_x"), _Sql("__in_y"))) > 1
+
+    def apply_df(self, df, x, y, out_x: str, out_y: str):
+        """Spark: one ``withColumns`` per stage.  A single-stage
+        inverse over SQL-text inputs is inlined into one projection."""
+        if isinstance(x, str) and isinstance(y, str) and not self.staged:
+            (stage,) = self.build(_Sql(f"({x})"), _Sql(f"({y})"))
+            return df.withColumns({out_x: F.expr(str(stage["__out_x"])),
+                                   out_y: F.expr(str(stage["__out_y"]))})
+        names = ["__in_x", "__in_y"]
+        df = df.withColumns({"__in_x": _as_col(x), "__in_y": _as_col(y)})
+        for stage in self.build(_Sql("__in_x"), _Sql("__in_y")):
+            df = df.withColumns({n: F.expr(str(t)) for n, t in stage.items()})
+            names += list(stage)
+        df = df.withColumns({out_x: F.col("__out_x"),
+                             out_y: F.col("__out_y")})
+        return df.drop(*names)
+
+
+class StagedTransform:
+    """A forward CRS transform evaluated in NAMED stages.
+
+    Deeply-composed transforms (datum hop + Bowring + TM series) blow
+    up exponentially when written as one Column tree: every reuse of a
+    subexpression copies its whole subtree, and a 2-of-them-deep chain
+    reaches megabyte plans (tens of seconds of Catalyst/codegen per
+    query — measured on EPSG:27700).  Staging materializes each
+    intermediate as an aliased projection column instead; Catalyst's
+    CollapseProject keeps multiply-referenced non-trivial aliases as
+    separate projections, so the plan stays linear in the number of
+    stage expressions.
+
+    ``stages``: list of dicts ``name -> fn(env)`` where ``env`` maps
+    previously-defined names (plus ``__in_x``/``__in_y``) to Columns.
+    The last stage must define ``__out_x`` and ``__out_y``.
+
+    Calling the transform like a plain ``ColumnTransform`` still
+    composes the full inline tree (fine for a handful of rows in
+    tests); ``apply_df`` is the production path.
+    """
+
+    staged = True
+
+    def __init__(self, stages: list[dict]):
+        self.stages = stages
+
+    def __call__(self, x: Column, y: Column) -> tuple[Column, Column]:
+        env = {"__in_x": x, "__in_y": y}
+        for stage in self.stages:
+            env.update({n: fn(env) for n, fn in stage.items()})
+        return env["__out_x"], env["__out_y"]
+
+    def apply_df(self, df, x_expr: Column, y_expr: Column,
+                 out_x: str, out_y: str):
+        names = ["__in_x", "__in_y"]
+        df = df.withColumns({"__in_x": x_expr, "__in_y": y_expr})
+        for stage in self.stages:
+            env = {n: F.col(n) for n in names}
+            df = df.withColumns({n: fn(env) for n, fn in stage.items()})
+            names += list(stage)
+        df = df.withColumns({out_x: F.col("__out_x"),
+                             out_y: F.col("__out_y")})
+        return df.drop(*names)
+
+
+class _Chain:
+    """Source CRS -> lon/lat -> target CRS, the two legs applied one
+    after the other (a 4326 hop)."""
+
+    def __init__(self, to_ll, from_ll):
+        self.to_ll, self.from_ll = to_ll, from_ll
+        self.staged = _staged(to_ll) or _staged(from_ll)
+
+    def apply_df(self, df, x, y, out_x: str, out_y: str):
+        df = apply_transform_df(df, self.to_ll, x, y, "__mid_x", "__mid_y")
+        df = apply_transform_df(df, self.from_ll, F.col("__mid_x"),
+                                F.col("__mid_y"), out_x, out_y)
+        return df.drop("__mid_x", "__mid_y")
+
+
+def _staged(transform) -> bool:
+    """Whether ``transform`` materializes intermediate columns (so a
+    gather join over its output needs the ``persist`` barrier)."""
+    return getattr(transform, "staged", False)
+
+
+def apply_transform_df(df, transform, x_expr, y_expr,
+                       out_x: str, out_y: str):
+    """Apply a transform onto a DataFrame.  ``x_expr``/``y_expr`` are
+    Columns or Spark-SQL text; text lets a single-stage inverse inline
+    its input."""
+    if not isinstance(transform, (SqlInverse, _Chain)):
+        x_expr, y_expr = _as_col(x_expr), _as_col(y_expr)
+    if hasattr(transform, "apply_df"):
+        return transform.apply_df(df, x_expr, y_expr, out_x, out_y)
+    sx, sy = transform(x_expr, y_expr)
+    return df.withColumns({out_x: sx, out_y: sy})
+
+
+# ---- Web Mercator (EPSG:3857) -------------------------------------------
 
 _R = 6378137.0  # WGS84 spherical radius used by EPSG:3857
 
@@ -52,11 +320,11 @@ def _lonlat_to_mercator(x: Column, y: Column) -> tuple[Column, Column]:
     return mx, my
 
 
-def _mercator_to_lonlat(x: Column, y: Column) -> tuple[Column, Column]:
+def _mercator_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     """EPSG:3857 -> EPSG:4326, closed-form inverse."""
-    lon = x / F.lit(math.pi * _R / 180.0)
-    lat = F.degrees(F.atan(F.sinh(y / F.lit(_R))))
-    return lon, lat
+    lon = x / Q.lit(math.pi * _R / 180.0)
+    lat = Q.degrees(Q.atan(Q.sinh(y / Q.lit(_R))))
+    return _out(lon, lat)
 
 
 def _identity(x: Column, y: Column) -> tuple[Column, Column]:
@@ -70,9 +338,9 @@ def _identity(x: Column, y: Column) -> tuple[Column, Column]:
 # is not in this container, so the ellipsoidal transverse-Mercator
 # forward/inverse is implemented directly from the published
 # Krueger/Karney series (public math; 3rd order in n — truncation error
-# ~1e-4 m over the UTM domain, far below any satellite pixel).  Pure
-# Column expressions: the whole transform stays inside whole-stage
-# codegen, no UDF, no library.
+# ~1e-4 m over the UTM domain, far below any satellite pixel).  Column
+# forward, one-stage SQL-text inverse: the whole transform stays inside
+# whole-stage codegen, no UDF, no library.
 
 _F_WGS84 = 1.0 / 298.257223563
 _N3 = _F_WGS84 / (2.0 - _F_WGS84)  # third flattening n
@@ -145,94 +413,40 @@ def _lonlat_to_utm_fn(zone: int, south: bool) -> ColumnTransform:
     return fwd
 
 
-def _utm_inverse_spark_sql(x: str, y: str, zone: int,
-                           south: bool) -> tuple[str, str]:
-    """The inverse series as ONE Spark-SQL string per output — the
-    op-for-op twin of ``_utm_to_lonlat_fn``'s Column tree (same
-    sinh/cosh built-ins, same literal folds, same association), so the
-    parsed expression is IDENTICAL and so are the doubles.  One
-    server-side parse replaces ~400 Column-API py4j round trips per
-    plan build (r12 optimization round; ema_smooth precedent)."""
-    lon0 = _utm_lon0(zone)
-    fn = 10_000_000.0 if south else 0.0
-    k = f"{_K0 * _A_RECT!r}D"
-    xi = f"((({y}) - {fn!r}D) / {k})"
-    eta = f"((({x}) - 500000.0D) / {k})"
+def _krueger_inverse(x: _Sql, y: _Sql, k: float, fe: float, y0: float,
+                     lon0: float, beta: tuple, delta: tuple) -> list[dict]:
+    """Transverse-Mercator inverse (Krueger series; UTM, national TM
+    grids): ``k`` = k0 * rectifying radius, ``y0`` the northing of the
+    equator on the central meridian ``lon0``."""
+    xi = (y - Q.lit(y0)) / Q.lit(k)
+    eta = (x - Q.lit(fe)) / Q.lit(k)
     xip, etap = xi, eta
-    for j, b in enumerate(_BETA, start=1):
-        xip = (f"({xip} - {b!r}D * sin({2.0 * j!r}D * {xi}) "
-               f"* cosh({2.0 * j!r}D * {eta}))")
-        etap = (f"({etap} - {b!r}D * cos({2.0 * j!r}D * {xi}) "
-                f"* sinh({2.0 * j!r}D * {eta}))")
-    chi = f"asin(sin({xip}) / cosh({etap}))"
+    for j, b in enumerate(beta, start=1):
+        xip = xip - Q.lit(b) * Q.sin(Q.lit(2.0 * j) * xi) \
+            * Q.cosh(Q.lit(2.0 * j) * eta)
+        etap = etap - Q.lit(b) * Q.cos(Q.lit(2.0 * j) * xi) \
+            * Q.sinh(Q.lit(2.0 * j) * eta)
+    chi = Q.asin(Q.sin(xip) / Q.cosh(etap))
     phi = chi
-    for j, d in enumerate(_DELTA, start=1):
-        phi = f"({phi} + {d!r}D * sin({2.0 * j!r}D * {chi}))"
-    lam = f"atan2(sinh({etap}), cos({xip}))"
-    return f"({lon0!r}D + degrees({lam}))", f"degrees({phi})"
+    for j, d in enumerate(delta, start=1):
+        phi = phi + Q.lit(d) * Q.sin(Q.lit(2.0 * j) * chi)
+    lam = Q.atan2(Q.sinh(etap), Q.cos(xip))
+    return _out(Q.lit(lon0) + Q.degrees(lam), Q.degrees(phi))
 
 
-def _utm_to_lonlat_fn(zone: int, south: bool) -> ColumnTransform:
-    lon0 = _utm_lon0(zone)
-    fn = 10_000_000.0 if south else 0.0
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xi = (y - F.lit(fn)) / F.lit(_K0 * _A_RECT)
-        eta = (x - F.lit(500_000.0)) / F.lit(_K0 * _A_RECT)
-        xip, etap = xi, eta
-        for j, b in enumerate(_BETA, start=1):
-            xip = xip - F.lit(b) * F.sin(F.lit(2.0 * j) * xi) \
-                * F.cosh(F.lit(2.0 * j) * eta)
-            etap = etap - F.lit(b) * F.cos(F.lit(2.0 * j) * xi) \
-                * F.sinh(F.lit(2.0 * j) * eta)
-        chi = F.asin(F.sin(xip) / F.cosh(etap))
-        phi = chi
-        for j, d in enumerate(_DELTA, start=1):
-            phi = phi + F.lit(d) * F.sin(F.lit(2.0 * j) * chi)
-        lam = F.atan2(F.sinh(etap), F.cos(xip))
-        return F.lit(lon0) + F.degrees(lam), F.degrees(phi)
-
-    inv.sql_fn = lambda xs, ys: _utm_inverse_spark_sql(xs, ys, zone, south)
-    return inv
-
-
-def utm_inverse_sql(x_expr: str, y_expr: str, zone: int,
-                    south: bool = False) -> tuple[str, str]:
-    """The SAME inverse series as SQL strings (for DuckDB oracles):
-    sinh/cosh written as exp-halves, asin/atan2 as built-ins.  Returns
-    (lon_sql, lat_sql)."""
-    lon0 = _utm_lon0(zone)
-    fn = 10_000_000.0 if south else 0.0
-    k = repr(_K0 * _A_RECT)
-    xi = f"(({y_expr}) - {fn!r}) / {k}"
-    eta = f"(({x_expr}) - 500000.0) / {k}"
-
-    def sinh(z):
-        return f"((exp({z}) - exp(-({z}))) / 2)"
-
-    def cosh(z):
-        return f"((exp({z}) + exp(-({z}))) / 2)"
-
-    xip, etap = xi, eta
-    for j, b in enumerate(_BETA, start=1):
-        xip = f"({xip} - {b!r} * sin(2.0 * {j} * ({xi})) " \
-              f"* {cosh(f'2.0 * {j} * ({eta})')})"
-        etap = f"({etap} - {b!r} * cos(2.0 * {j} * ({xi})) " \
-               f"* {sinh(f'2.0 * {j} * ({eta})')})"
-    chi = f"asin(sin({xip}) / {cosh(etap)})"
-    phi = chi
-    for j, d in enumerate(_DELTA, start=1):
-        phi = f"({phi} + {d!r} * sin(2.0 * {j} * ({chi})))"
-    lam = f"atan2({sinh(etap)}, cos({xip}))"
-    return f"({lon0!r} + degrees({lam}))", f"degrees({phi})"
+def _utm_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
+    zone, south = parse_utm_crs(crs)
+    return _krueger_inverse(x, y, _K0 * _A_RECT, 500_000.0,
+                            10_000_000.0 if south else 0.0,
+                            _utm_lon0(zone), _BETA, _DELTA)
 
 
 # ---- OSGB National Grid (EPSG:27700) ----------------------------------
 #
 # The British national CRS the reference reaches through pyproj: a
 # transverse Mercator with false origin on the AIRY 1830 ellipsoid in
-# the OSGB36 datum.  Two public-math pieces compose it, both as pure
-# Column arithmetic:
+# the OSGB36 datum.  Two public-math pieces compose it, both staged
+# (one column per intermediate):
 #   * the same Krueger/Karney TM series as UTM above, re-derived for
 #     Airy's third flattening (the series coefficients are functions
 #     of n only — `_tm_series`), with the EPSG:27700 natural origin
@@ -333,107 +547,19 @@ def _osgb_tm_fwd(lam_a: Column, phi_a: Column) -> tuple[Column, Column]:
     return x, y
 
 
-def _geodetic_to_xyz(lam: Column, phi: Column, a: float,
-                     e2: float) -> tuple[Column, Column, Column]:
-    sp, cp = F.sin(phi), F.cos(phi)
-    nu = F.lit(a) / F.sqrt(F.lit(1.0) - F.lit(e2) * sp * sp)
-    return (nu * cp * F.cos(lam), nu * cp * F.sin(lam),
-            nu * F.lit(1.0 - e2) * sp)
-
-
-def _xyz_to_geodetic(x: Column, y: Column, z: Column, a: float, b: float,
-                     e2: float, ep2: float) -> tuple[Column, Column]:
-    """Bowring's closed-form (single-shot, mm-accurate near the
-    surface): returns (lam, phi) in radians."""
-    p = F.sqrt(x * x + y * y)
-    th = F.atan2(z * F.lit(a), p * F.lit(b))
-    phi = F.atan2(z + F.lit(ep2 * b) * F.pow(F.sin(th), F.lit(3.0)),
-                  p - F.lit(e2 * a) * F.pow(F.cos(th), F.lit(3.0)))
-    return F.atan2(y, x), phi
-
-
-def _helmert(x: Column, y: Column, z: Column,
-             params: tuple) -> tuple[Column, Column, Column]:
+def _helmert(x, y, z, params: tuple, f=F) -> tuple:
+    """Position-vector Helmert; ``f`` is ``F`` (Columns) or ``Q``
+    (inverse SQL text)."""
     tx, ty, tz, rx, ry, rz, s = params
     m = 1.0 + s
     return (
-        F.lit(tx) + F.lit(m) * x - F.lit(rz) * y + F.lit(ry) * z,
-        F.lit(ty) + F.lit(rz) * x + F.lit(m) * y - F.lit(rx) * z,
-        F.lit(tz) - F.lit(ry) * x + F.lit(rx) * y + F.lit(m) * z,
+        f.lit(tx) + f.lit(m) * x - f.lit(rz) * y + f.lit(ry) * z,
+        f.lit(ty) + f.lit(rz) * x + f.lit(m) * y - f.lit(rx) * z,
+        f.lit(tz) - f.lit(ry) * x + f.lit(rx) * y + f.lit(m) * z,
     )
 
 
 _OSGB_HELM_INV = tuple(-v for v in _OSGB_HELM)
-
-
-class StagedTransform:
-    """A CRS transform evaluated in NAMED stages.
-
-    Deeply-composed transforms (datum hop + Bowring + TM series) blow
-    up exponentially when written as one Column tree: every reuse of a
-    subexpression copies its whole subtree, and a 2-of-them-deep chain
-    reaches megabyte plans (tens of seconds of Catalyst/codegen per
-    query — measured on EPSG:27700).  Staging materializes each
-    intermediate as an aliased projection column instead; Catalyst's
-    CollapseProject keeps multiply-referenced non-trivial aliases as
-    separate projections, so the plan stays linear in the number of
-    stage expressions.
-
-    ``stages``: list of dicts ``name -> fn(env)`` where ``env`` maps
-    previously-defined names (plus ``__in_x``/``__in_y``) to Columns.
-    The last stage must define ``__out_x`` and ``__out_y``.
-
-    Calling the transform like a plain ``ColumnTransform`` still
-    composes the full inline tree (fine for a handful of rows in
-    tests); ``apply_df`` is the production path.
-    """
-
-    def __init__(self, stages: list[dict]):
-        self.stages = stages
-
-    def __call__(self, x: Column, y: Column) -> tuple[Column, Column]:
-        env = {"__in_x": x, "__in_y": y}
-        for stage in self.stages:
-            env.update({n: fn(env) for n, fn in stage.items()})
-        return env["__out_x"], env["__out_y"]
-
-    def apply_df(self, df, x_expr: Column, y_expr: Column,
-                 out_x: str, out_y: str):
-        names = ["__in_x", "__in_y"]
-        df = df.withColumns({"__in_x": x_expr, "__in_y": y_expr})
-        for stage in self.stages:
-            env = {n: F.col(n) for n in names}
-            df = df.withColumns({n: fn(env) for n, fn in stage.items()})
-            names += list(stage)
-        df = df.withColumns({out_x: F.col("__out_x"),
-                             out_y: F.col("__out_y")})
-        return df.drop(*names)
-
-
-def apply_transform_df(df, transform, x_expr: Column, y_expr: Column,
-                       out_x: str, out_y: str):
-    """Apply a transform onto a DataFrame, staged when it supports it."""
-    if hasattr(transform, "apply_df"):
-        return transform.apply_df(df, x_expr, y_expr, out_x, out_y)
-    sx, sy = transform(x_expr, y_expr)
-    return df.withColumns({out_x: sx, out_y: sy})
-
-
-class _ChainedTransform:
-    """4326-hop composition where at least one leg is staged."""
-
-    def __init__(self, to_ll, from_ll):
-        self.to_ll, self.from_ll = to_ll, from_ll
-
-    def __call__(self, x: Column, y: Column) -> tuple[Column, Column]:
-        return self.from_ll(*self.to_ll(x, y))
-
-    def apply_df(self, df, x_expr, y_expr, out_x: str, out_y: str):
-        df = apply_transform_df(df, self.to_ll, x_expr, y_expr,
-                                "__mid_x", "__mid_y")
-        df = apply_transform_df(df, self.from_ll, F.col("__mid_x"),
-                                F.col("__mid_y"), out_x, out_y)
-        return df.drop("__mid_x", "__mid_y")
 
 
 def _osgb_tm_fwd_stages() -> list[dict]:
@@ -517,196 +643,30 @@ def _lonlat_to_osgb_fn() -> "StagedTransform":
     return StagedTransform(stages)
 
 
-def _osgb_to_lonlat_fn() -> "StagedTransform":
+def _osgb_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
+    """EPSG:27700 -> lon/lat: TM-inverse series on Airy, then the
+    OSGB36 -> WGS84 hop (inverse Helmert, Bowring)."""
     k = _OSGB_K0 * _AIRY_AR
-    e2a = _AIRY_E ** 2
-    hinv = _OSGB_HELM_INV
-
-    def series_xip(env):
-        xip = env["__xi"]
-        for j, b in enumerate(_AIRY_BETA, start=1):
-            xip = xip - F.lit(b) * F.sin(F.lit(2.0 * j) * env["__xi"]) \
-                * F.cosh(F.lit(2.0 * j) * env["__eta"])
-        return xip
-
-    def series_etap(env):
-        etap = env["__eta"]
-        for j, b in enumerate(_AIRY_BETA, start=1):
-            etap = etap - F.lit(b) * F.cos(F.lit(2.0 * j) * env["__xi"]) \
-                * F.sinh(F.lit(2.0 * j) * env["__eta"])
-        return etap
-
-    def series_phi(env):
-        phi_a = env["__chi"]
-        for j, d in enumerate(_AIRY_DELTA, start=1):
-            phi_a = phi_a + F.lit(d) * F.sin(F.lit(2.0 * j) * env["__chi"])
-        return phi_a
-
-    stages = [
-        {"__xi": lambda env: (env["__in_y"] - F.lit(_OSGB_Y0)) / F.lit(k),
-         "__eta": lambda env: (env["__in_x"] - F.lit(_OSGB_FE))
-            / F.lit(k)},
-        {"__xip": series_xip, "__etap": series_etap},
-        {"__chi": lambda env: F.asin(
-            F.sin(env["__xip"]) / F.cosh(env["__etap"]))},
-        {"__phi_a": series_phi,
-         "__lam_a": lambda env: F.lit(math.radians(_OSGB_LON0))
-            + F.atan2(F.sinh(env["__etap"]), F.cos(env["__xip"]))},
-        {"__sp": lambda env: F.sin(env["__phi_a"]),
-         "__cp": lambda env: F.cos(env["__phi_a"])},
-        {"__nu": lambda env: F.lit(_AIRY_A) / F.sqrt(
-            F.lit(1.0) - F.lit(e2a) * env["__sp"] * env["__sp"])},
-        {"__X": lambda env: env["__nu"] * env["__cp"]
-            * F.cos(env["__lam_a"]),
-         "__Y": lambda env: env["__nu"] * env["__cp"]
-            * F.sin(env["__lam_a"]),
-         "__Z": lambda env: env["__nu"] * F.lit(1.0 - e2a)
-            * env["__sp"]},
-        {"__Xw": lambda env: _helmert(
-            env["__X"], env["__Y"], env["__Z"], hinv)[0],
-         "__Yw": lambda env: _helmert(
-            env["__X"], env["__Y"], env["__Z"], hinv)[1],
-         "__Zw": lambda env: _helmert(
-            env["__X"], env["__Y"], env["__Z"], hinv)[2]},
-        {"__p": lambda env: F.sqrt(
-            env["__Xw"] * env["__Xw"] + env["__Yw"] * env["__Yw"])},
-        {"__th": lambda env: F.atan2(env["__Zw"] * F.lit(_WGS_A),
-                                     env["__p"] * F.lit(_WGS_B))},
-        {"__out_x": lambda env: F.degrees(
-            F.atan2(env["__Yw"], env["__Xw"])),
-         "__out_y": lambda env: F.degrees(F.atan2(
-            env["__Zw"] + F.lit(_WGS_EP2 * _WGS_B)
-            * F.pow(F.sin(env["__th"]), F.lit(3.0)),
-            env["__p"] - F.lit(_WGS_E2 * _WGS_A)
-            * F.pow(F.cos(env["__th"]), F.lit(3.0))))},
-    ]
-    return StagedTransform(stages)
-
-
-def osgb_inverse_sql_ctes(x_expr: str, y_expr: str,
-                          src: str = "tgt") -> str:
-    """The EPSG:27700 inverse as a chain of CTEs over ``src`` —
-    identical arithmetic to the staged Column transform, one aliased
-    column per intermediate (the monolithic expression form is
-    megabytes of SQL and costs seconds of parse time per query).
-    Emits CTEs ``o1..o9`` and finally ``osgb_ll`` = ``src`` columns +
-    ``lon``/``lat``."""
-    k = repr(_OSGB_K0 * _AIRY_AR)
-
-    def sinh(z):
-        return f"((exp({z}) - exp(-({z}))) / 2)"
-
-    def cosh(z):
-        return f"((exp({z}) + exp(-({z}))) / 2)"
-
-    xip = "__xi"
-    etap = "__eta"
+    xi, eta, xip, etap, chi, phi_a, lam_a = _cols(
+        "__xi __eta __xip __etap __chi __phi_a __lam_a")
+    s_xip, s_etap, s_phi = xi, eta, chi
     for j, b in enumerate(_AIRY_BETA, start=1):
-        xip = f"({xip} - {b!r} * sin(2.0 * {j} * __xi) " \
-              f"* {cosh(f'2.0 * {j} * __eta')})"
-        etap = f"({etap} - {b!r} * cos(2.0 * {j} * __xi) " \
-               f"* {sinh(f'2.0 * {j} * __eta')})"
-    phia = "__chi"
+        s_xip = s_xip - Q.lit(b) * Q.sin(Q.lit(2.0 * j) * xi) \
+            * Q.cosh(Q.lit(2.0 * j) * eta)
+        s_etap = s_etap - Q.lit(b) * Q.cos(Q.lit(2.0 * j) * xi) \
+            * Q.sinh(Q.lit(2.0 * j) * eta)
     for j, d in enumerate(_AIRY_DELTA, start=1):
-        phia = f"({phia} + {d!r} * sin(2.0 * {j} * (__chi)))"
-    e2a = _AIRY_E ** 2
-    tx, ty, tz, rx, ry, rz, s = _OSGB_HELM_INV
-    m = repr(1.0 + s)
-    return f"""o1 AS (
-            SELECT *, ((({y_expr}) - {_OSGB_Y0!r}) / {k}) AS __xi,
-                      ((({x_expr}) - {_OSGB_FE!r}) / {k}) AS __eta
-            FROM {src}
-        ), o2 AS (
-            SELECT *, {xip} AS __xip, {etap} AS __etap FROM o1
-        ), o3 AS (
-            SELECT *, asin(sin(__xip) / {cosh('__etap')}) AS __chi
-            FROM o2
-        ), o4 AS (
-            SELECT *, {phia} AS __phia,
-                   ({math.radians(_OSGB_LON0)!r}
-                    + atan2({sinh('__etap')}, cos(__xip))) AS __lama
-            FROM o3
-        ), o5 AS (
-            SELECT *, sin(__phia) AS __sp, cos(__phia) AS __cp FROM o4
-        ), o6 AS (
-            SELECT *, ({_AIRY_A!r} / sqrt(1.0 - {e2a!r} * __sp * __sp))
-                      AS __nu
-            FROM o5
-        ), o7 AS (
-            SELECT *, (__nu * __cp * cos(__lama)) AS __X,
-                      (__nu * __cp * sin(__lama)) AS __Y,
-                      (__nu * {1.0 - e2a!r} * __sp) AS __Z
-            FROM o6
-        ), o8 AS (
-            SELECT *, ({tx!r} + {m} * __X - {rz!r} * __Y + {ry!r} * __Z)
-                      AS __Xw,
-                      ({ty!r} + {rz!r} * __X + {m} * __Y - {rx!r} * __Z)
-                      AS __Yw,
-                      ({tz!r} - {ry!r} * __X + {rx!r} * __Y + {m} * __Z)
-                      AS __Zw
-            FROM o7
-        ), o9 AS (
-            SELECT *, sqrt(__Xw * __Xw + __Yw * __Yw) AS __p FROM o8
-        ), o10 AS (
-            SELECT *, atan2(__Zw * {_WGS_A!r}, __p * {_WGS_B!r}) AS __th
-            FROM o9
-        ), osgb_ll AS (
-            SELECT * EXCLUDE (__xi, __eta, __xip, __etap, __chi,
-                              __phia, __lama, __sp, __cp, __nu,
-                              __X, __Y, __Z, __Xw, __Yw, __Zw,
-                              __p, __th),
-                   degrees(atan2(__Yw, __Xw)) AS lon,
-                   degrees(atan2(
-                       __Zw + {_WGS_EP2 * _WGS_B!r} * pow(sin(__th), 3),
-                       __p - {_WGS_E2 * _WGS_A!r} * pow(cos(__th), 3)))
-                   AS lat
-            FROM o10
-        )"""
-
-
-def osgb_inverse_sql(x_expr: str, y_expr: str) -> tuple[str, str]:
-    """The SAME EPSG:27700 inverse as SQL strings (for DuckDB
-    oracles): TM-inverse series on Airy, geodetic -> XYZ, inverse
-    Helmert, Bowring back to WGS84.  Returns (lon_sql, lat_sql)."""
-    k = repr(_OSGB_K0 * _AIRY_AR)
-    xi = f"((({y_expr}) - {_OSGB_Y0!r}) / {k})"
-    eta = f"((({x_expr}) - {_OSGB_FE!r}) / {k})"
-
-    def sinh(z):
-        return f"((exp({z}) - exp(-({z}))) / 2)"
-
-    def cosh(z):
-        return f"((exp({z}) + exp(-({z}))) / 2)"
-
-    xip, etap = xi, eta
-    for j, b in enumerate(_AIRY_BETA, start=1):
-        xip = f"({xip} - {b!r} * sin(2.0 * {j} * {xi}) " \
-              f"* {cosh(f'2.0 * {j} * {eta}')})"
-        etap = f"({etap} - {b!r} * cos(2.0 * {j} * {xi}) " \
-               f"* {sinh(f'2.0 * {j} * {eta}')})"
-    chi = f"asin(sin({xip}) / {cosh(etap)})"
-    phi_a = chi
-    for j, d in enumerate(_AIRY_DELTA, start=1):
-        phi_a = f"({phi_a} + {d!r} * sin(2.0 * {j} * ({chi})))"
-    lam_a = f"({math.radians(_OSGB_LON0)!r} " \
-            f"+ atan2({sinh(etap)}, cos({xip})))"
-    # Airy geodetic -> XYZ
-    e2a = _AIRY_E ** 2
-    nu = f"({_AIRY_A!r} / sqrt(1.0 - {e2a!r} * sin({phi_a}) " \
-         f"* sin({phi_a})))"
-    X = f"({nu} * cos({phi_a}) * cos({lam_a}))"
-    Y = f"({nu} * cos({phi_a}) * sin({lam_a}))"
-    Z = f"({nu} * {1.0 - e2a!r} * sin({phi_a}))"
-    tx, ty, tz, rx, ry, rz, s = _OSGB_HELM_INV
-    m = repr(1.0 + s)
-    Xw = f"({tx!r} + {m} * {X} - {rz!r} * {Y} + {ry!r} * {Z})"
-    Yw = f"({ty!r} + {rz!r} * {X} + {m} * {Y} - {rx!r} * {Z})"
-    Zw = f"({tz!r} + (-({ry!r})) * {X} + {rx!r} * {Y} + {m} * {Z})"
-    p = f"sqrt({Xw} * {Xw} + {Yw} * {Yw})"
-    th = f"atan2({Zw} * {_WGS_A!r}, {p} * {_WGS_B!r})"
-    phi = f"atan2({Zw} + {_WGS_EP2 * _WGS_B!r} * pow(sin({th}), 3), " \
-          f"{p} - {_WGS_E2 * _WGS_A!r} * pow(cos({th}), 3))"
-    return f"degrees(atan2({Yw}, {Xw}))", f"degrees({phi})"
+        s_phi = s_phi + Q.lit(d) * Q.sin(Q.lit(2.0 * j) * chi)
+    return [
+        {"__xi": (y - Q.lit(_OSGB_Y0)) / Q.lit(k),
+         "__eta": (x - Q.lit(_OSGB_FE)) / Q.lit(k)},
+        {"__xip": s_xip, "__etap": s_etap},
+        {"__chi": Q.asin(Q.sin(xip) / Q.cosh(etap))},
+        {"__phi_a": s_phi,
+         "__lam_a": Q.lit(math.radians(_OSGB_LON0))
+            + Q.atan2(Q.sinh(etap), Q.cos(xip))},
+    ] + _to_wgs84_stages(lam_a, phi_a, _AIRY_A, _AIRY_E ** 2,
+                         _OSGB_HELM_INV, "__X __Y __Z")
 
 
 # ---- generic national transverse-Mercator grids -----------------------
@@ -770,62 +730,17 @@ def _lonlat_to_tm_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _tm_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _tm_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     c = _tm_consts(crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xi = (y - F.lit(c["y0"])) / F.lit(c["k"])
-        eta = (x - F.lit(c["fe"])) / F.lit(c["k"])
-        xip, etap = xi, eta
-        for j, b in enumerate(c["beta"], start=1):
-            xip = xip - F.lit(b) * F.sin(F.lit(2.0 * j) * xi) \
-                * F.cosh(F.lit(2.0 * j) * eta)
-            etap = etap - F.lit(b) * F.cos(F.lit(2.0 * j) * xi) \
-                * F.sinh(F.lit(2.0 * j) * eta)
-        chi = F.asin(F.sin(xip) / F.cosh(etap))
-        phi = chi
-        for j, d in enumerate(c["delta"], start=1):
-            phi = phi + F.lit(d) * F.sin(F.lit(2.0 * j) * chi)
-        lam = F.atan2(F.sinh(etap), F.cos(xip))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
-
-    return inv
-
-
-def tm_inverse_sql(x_expr: str, y_expr: str,
-                   crs: str) -> tuple[str, str]:
-    """The SAME generic-TM inverse as SQL strings (DuckDB oracles)."""
-    c = _tm_consts(crs)
-    k = repr(c["k"])
-    xi = f"((({y_expr}) - {c['y0']!r}) / {k})"
-    eta = f"((({x_expr}) - {c['fe']!r}) / {k})"
-
-    def sinh(z):
-        return f"((exp({z}) - exp(-({z}))) / 2)"
-
-    def cosh(z):
-        return f"((exp({z}) + exp(-({z}))) / 2)"
-
-    xip, etap = xi, eta
-    for j, b in enumerate(c["beta"], start=1):
-        xip = f"({xip} - {b!r} * sin(2.0 * {j} * {xi}) " \
-              f"* {cosh(f'2.0 * {j} * {eta}')})"
-        etap = f"({etap} - {b!r} * cos(2.0 * {j} * {xi}) " \
-               f"* {sinh(f'2.0 * {j} * {eta}')})"
-    chi = f"asin(sin({xip}) / {cosh(etap)})"
-    phi = chi
-    for j, d in enumerate(c["delta"], start=1):
-        phi = f"({phi} + {d!r} * sin(2.0 * {j} * ({chi})))"
-    lam = f"atan2({sinh(etap)}, cos({xip}))"
-    return f"({c['lon0']!r} + degrees({lam}))", f"degrees({phi})"
+    return _krueger_inverse(x, y, c["k"], c["fe"], c["y0"], c["lon0"],
+                            c["beta"], c["delta"])
 
 
 # ---- polar stereographic (EPSG:3413 / EPSG:3031) ----------------------
 #
 # The polar satellite CRSs (NSIDC Sea Ice stereographics) — ellipsoidal
 # polar stereographic from Snyder 1987 (public math, eqs. 21-33..41 and
-# the 3-5 chi->phi series).  Same design as UTM above: pure Column
-# forward/inverse plus an identical-arithmetic SQL twin for oracles.
+# the 3-5 chi->phi series).  Same design as UTM above.
 
 _E2 = _E_WGS84 ** 2
 #: chi -> phi series coefficients (Snyder eq. 3-5, 4th order in e^2)
@@ -946,8 +861,7 @@ def _lonlat_to_geos_fn(crs: str) -> ColumnTransform:
         lam = F.radians(lon - F.lit(c["lon0"]))
         # geodetic -> geocentric latitude on the normalized ellipsoid
         phi = F.atan(F.lit(c["radius_p2"]) * F.tan(F.radians(lat)))
-        # explicit sqrt(u*u + v*v), not hypot: the SQL oracle twin
-        # states the same ops so both engines round identically
+        # explicit sqrt(u*u + v*v), not hypot
         u = F.lit(c["radius_p"]) * F.cos(phi)
         v = F.sin(phi)
         r = F.lit(c["radius_p"]) / F.sqrt(u * u + v * v)
@@ -972,63 +886,30 @@ def _lonlat_to_geos_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _geos_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _geos_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     c = _geos_consts(crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xn = x / F.lit(c["a"] * c["radius_g_1"])
-        yn = y / F.lit(c["a"] * c["radius_g_1"])
-        if c["sweep_x"]:
-            vz = F.tan(yn)
-            vy = F.tan(xn) * F.sqrt(F.lit(1.0) + vz * vz)
-        else:
-            vy = F.tan(xn)
-            vz = F.tan(yn) * F.sqrt(F.lit(1.0) + vy * vy)
-        # view line p = (radius_g,0,0) + k*(-1, vy, vz); intersect the
-        # normalized ellipsoid: quadratic in k (off-disk -> sqrt(neg)
-        # -> NaN, the documented not-visible signal)
-        vzp = vz / F.lit(c["radius_p"])
-        qa = vy * vy + vzp * vzp + F.lit(1.0)
-        qb = F.lit(2.0 * c["radius_g"]) * F.lit(-1.0)
-        k = (-qb - F.sqrt(qb * qb - 4.0 * qa * F.lit(c["C"]))) / (2.0 * qa)
-        px = F.lit(c["radius_g"]) - k
-        py = vy * k
-        pz = vz * k
-        lam = F.atan2(py, px)
-        phi = F.atan(pz * F.cos(lam) / px)
-        phi = F.atan(F.lit(c["radius_p_inv2"]) * F.tan(phi))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
-
-    return inv
-
-
-def geos_inverse_sql(x_expr: str, y_expr: str,
-                     crs: str) -> tuple[str, str]:
-    """The SAME geostationary inverse as SQL strings (for DuckDB
-    oracles) — identical op order to :func:`_geos_to_lonlat_fn`, so
-    both engines produce bit-identical doubles.  Returns
-    (lon_sql, lat_sql)."""
-    c = _geos_consts(crs)
-    xn = f"(({x_expr}) / {c['a'] * c['radius_g_1']!r})"
-    yn = f"(({y_expr}) / {c['a'] * c['radius_g_1']!r})"
+    xn = x / Q.lit(c["a"] * c["radius_g_1"])
+    yn = y / Q.lit(c["a"] * c["radius_g_1"])
     if c["sweep_x"]:
-        vz = f"TAN({yn})"
-        vy = f"(TAN({xn}) * SQRT(1.0 + {vz} * {vz}))"
+        vz = Q.tan(yn)
+        vy = Q.tan(xn) * Q.sqrt(Q.lit(1.0) + vz * vz)
     else:
-        vy = f"TAN({xn})"
-        vz = f"(TAN({yn}) * SQRT(1.0 + {vy} * {vy}))"
-    vzp = f"({vz} / {c['radius_p']!r})"
-    qa = f"({vy} * {vy} + {vzp} * {vzp} + 1.0)"
-    qb = repr(2.0 * c["radius_g"] * -1.0)
-    k = f"((-({qb}) - SQRT({qb} * {qb} - 4.0 * {qa} * {c['C']!r}))" \
-        f" / (2.0 * {qa}))"
-    px = f"({c['radius_g']!r} - {k})"
-    py = f"({vy} * {k})"
-    pz = f"({vz} * {k})"
-    lam = f"ATAN2({py}, {px})"
-    phi = f"ATAN({c['radius_p_inv2']!r} * TAN(ATAN({pz} * COS({lam})" \
-          f" / {px})))"
-    return (f"({c['lon0']!r} + DEGREES({lam}))", f"DEGREES({phi})")
+        vy = Q.tan(xn)
+        vz = Q.tan(yn) * Q.sqrt(Q.lit(1.0) + vy * vy)
+    # view line p = (radius_g,0,0) + k*(-1, vy, vz); intersect the
+    # normalized ellipsoid: quadratic in k (off-disk -> sqrt(neg)
+    # -> NaN, the documented not-visible signal)
+    vzp = vz / Q.lit(c["radius_p"])
+    qa = vy * vy + vzp * vzp + Q.lit(1.0)
+    qb = Q.lit(2.0 * c["radius_g"]) * Q.lit(-1.0)
+    k = (-qb - Q.sqrt(qb * qb - 4.0 * qa * Q.lit(c["C"]))) / (2.0 * qa)
+    px = Q.lit(c["radius_g"]) - k
+    py = vy * k
+    pz = vz * k
+    lam = Q.atan2(py, px)
+    phi = Q.atan(pz * Q.cos(lam) / px)
+    phi = Q.atan(Q.lit(c["radius_p_inv2"]) * Q.tan(phi))
+    return _out(Q.lit(c["lon0"]) + Q.degrees(lam), Q.degrees(phi))
 
 
 #: CF `rotated_latitude_longitude` / PROJ `+proj=ob_tran
@@ -1080,48 +961,24 @@ def _lonlat_to_rotpole_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _rotpole_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _rotpole_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     """Rotated lon/lat (deg) -> true lon/lat (deg): the transpose
     rotation of :func:`_lonlat_to_rotpole_fn`."""
     c = _rotpole_consts(crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        lam0 = F.radians(x - F.lit(c["phi0"]) + F.lit(180.0))
-        phi = F.radians(y)
-        cphi = F.cos(phi)
-        x2 = cphi * F.cos(lam0)
-        y2 = cphi * F.sin(lam0)
-        z2 = F.sin(phi)
-        lat = F.degrees(F.asin(
-            z2 * F.lit(c["sp"]) - x2 * F.lit(c["cp"])))
-        x1 = x2 * F.lit(c["sp"]) + z2 * F.lit(c["cp"])
-        lon = F.lit(c["lambda_p"]) + F.degrees(F.atan2(y2, x1))
-        lon = (F.when(lon < -180.0, lon + F.lit(360.0))
-               .when(lon > 180.0, lon - F.lit(360.0))
-               .otherwise(lon))
-        return lon, lat
-
-    return inv
-
-
-def rotpole_inverse_sql(x_expr: str, y_expr: str,
-                        crs: str) -> tuple[str, str]:
-    """The SAME rotated-pole inverse as SQL strings (for DuckDB
-    oracles) — identical op order to :func:`_rotpole_to_lonlat_fn`.
-    Returns (lon_sql, lat_sql)."""
-    c = _rotpole_consts(crs)
-    lam0 = f"RADIANS(({x_expr}) - {c['phi0']!r} + 180.0)"
-    phi = f"RADIANS({y_expr})"
-    cphi = f"COS({phi})"
-    x2 = f"({cphi} * COS({lam0}))"
-    y2 = f"({cphi} * SIN({lam0}))"
-    z2 = f"SIN({phi})"
-    lat = f"DEGREES(ASIN({z2} * {c['sp']!r} - {x2} * {c['cp']!r}))"
-    x1 = f"({x2} * {c['sp']!r} + {z2} * {c['cp']!r})"
-    lon = f"({c['lambda_p']!r} + DEGREES(ATAN2({y2}, {x1})))"
-    lon = (f"(CASE WHEN {lon} < -180.0 THEN {lon} + 360.0 "
-           f"WHEN {lon} > 180.0 THEN {lon} - 360.0 ELSE {lon} END)")
-    return lon, lat
+    lam0 = Q.radians(x - Q.lit(c["phi0"]) + Q.lit(180.0))
+    phi = Q.radians(y)
+    cphi = Q.cos(phi)
+    x2 = cphi * Q.cos(lam0)
+    y2 = cphi * Q.sin(lam0)
+    z2 = Q.sin(phi)
+    lat = Q.degrees(Q.asin(
+        z2 * Q.lit(c["sp"]) - x2 * Q.lit(c["cp"])))
+    x1 = x2 * Q.lit(c["sp"]) + z2 * Q.lit(c["cp"])
+    lon = Q.lit(c["lambda_p"]) + Q.degrees(Q.atan2(y2, x1))
+    lon = (Q.when(lon < -180.0, lon + Q.lit(360.0))
+           .when(lon > 180.0, lon - Q.lit(360.0))
+           .otherwise(lon))
+    return _out(lon, lat)
 
 
 # ---- oblique (double) stereographic — EPSG method 9809 ------------------
@@ -1229,149 +1086,49 @@ def _lonlat_to_sterea_fn(crs: str) -> "StagedTransform":
     ])
 
 
-def _sterea_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _sterea_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     """E/N -> lon/lat (EPSG 9809 inverse): stereographic un-projection
     on the conformal sphere, then the fixed-count iterative
     conformal->geodetic latitude solve, one stage per iteration."""
     c = _sterea_consts(crs)
     e, es, n = c["e"], c["es"], c["n"]
-
-    def sub(env):
-        return env["__in_x"] - F.lit(c["fe"])
-
-    def subn(env):
-        return env["__in_y"] - F.lit(c["fn"])
-
-    def c_i(env):
-        return F.atan2(env["__ep"], F.lit(c["h"]) + env["__np"])
-
-    def c_j(env):
-        return F.atan2(env["__ep"],
-                       F.lit(c["g"]) - env["__np"]) - env["__i"]
-
-    def c_chi(env):
-        return F.lit(c["chi0"]) + F.lit(2.0) * F.atan(
-            (env["__np"] - env["__ep"] * F.tan(env["__j"] / F.lit(2.0)))
-            / F.lit(c["rk2"]))
-
-    def c_lon(env):
-        lam = env["__j"] + F.lit(2.0) * env["__i"] + F.lit(c["lam0"])
-        return (F.degrees((lam - F.lit(c["lam0"])) / F.lit(n))
-                + F.lit(c["lon0"]))
-
-    def c_psi(env):
-        schi = F.sin(env["__chi"])
-        return F.log((F.lit(1.0) + schi)
-                     / (F.lit(c["c"]) * (F.lit(1.0) - schi))) \
-            / F.lit(2.0 * n)
-
-    def c_phi0(env):
-        return (F.lit(2.0) * F.atan(F.exp(env["__psi"]))
-                - F.lit(math.pi / 2.0))
-
-    def step(env):
-        phi = env["__phi"]
-        sphi = F.sin(phi)
-        psii = F.log(
-            F.tan(phi / F.lit(2.0) + F.lit(math.pi / 4.0))
-            * F.pow((F.lit(1.0) - F.lit(e) * sphi)
-                    / (F.lit(1.0) + F.lit(e) * sphi),
-                    F.lit(e / 2.0)))
-        return phi - (psii - env["__psi"]) * F.cos(phi) \
-            * (F.lit(1.0) - F.lit(es) * sphi * sphi) / F.lit(1.0 - es)
-
-    stages = [
-        {"__ep": sub, "__np": subn},
-        {"__i": c_i},
-        {"__j": c_j},
-        {"__chi": c_chi, "__out_x": c_lon},
-        {"__psi": c_psi},
-        {"__phi": c_phi0},
+    ep, np_, i, j, chi, psi, phi = _cols("__ep __np __i __j __chi __psi __phi")
+    lam = j + Q.lit(2.0) * i + Q.lit(c["lam0"])
+    schi, sphi = Q.sin(chi), Q.sin(phi)
+    psii = Q.log(
+        Q.tan(phi / Q.lit(2.0) + Q.lit(math.pi / 4.0))
+        * Q.pow((Q.lit(1.0) - Q.lit(e) * sphi)
+                / (Q.lit(1.0) + Q.lit(e) * sphi),
+                Q.lit(e / 2.0)))
+    step = phi - (psii - psi) * Q.cos(phi) \
+        * (Q.lit(1.0) - Q.lit(es) * sphi * sphi) / Q.lit(1.0 - es)
+    return [
+        {"__ep": x - Q.lit(c["fe"]), "__np": y - Q.lit(c["fn"])},
+        {"__i": Q.atan2(ep, Q.lit(c["h"]) + np_)},
+        {"__j": Q.atan2(ep, Q.lit(c["g"]) - np_) - i},
+        {"__chi": Q.lit(c["chi0"]) + Q.lit(2.0) * Q.atan(
+            (np_ - ep * Q.tan(j / Q.lit(2.0))) / Q.lit(c["rk2"])),
+         "__out_x": Q.degrees((lam - Q.lit(c["lam0"])) / Q.lit(n))
+            + Q.lit(c["lon0"])},
+        {"__psi": Q.log((Q.lit(1.0) + schi)
+                        / (Q.lit(c["c"]) * (Q.lit(1.0) - schi)))
+            / Q.lit(2.0 * n)},
+        {"__phi": Q.lit(2.0) * Q.atan(Q.exp(psi)) - Q.lit(math.pi / 2.0)},
+        *[{"__phi": step}] * _STEREA_ITERS,
+        {"__out_y": Q.degrees(phi)},
     ]
-    stages += [{"__phi": step} for _ in range(_STEREA_ITERS)]
-    stages.append({"__out_y": lambda env: F.degrees(env["__phi"])})
-    return StagedTransform(stages)
 
 
-def sterea_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                            src: str = "tgt") -> str:
-    """The SAME oblique-stereographic inverse as a chain of CTEs over
-    ``src`` (for DuckDB oracles) — identical arithmetic and iteration
-    count to :func:`_sterea_to_lonlat_fn`.  Emits CTEs ``st1..`` and
-    finally ``sterea_ll`` = ``src`` columns + ``lon``/``lat``."""
-    c = _sterea_consts(crs)
-    e, es, n = c["e"], c["es"], c["n"]
-    iters = "".join(f"""), st{7 + k} AS (
-            SELECT * EXCLUDE (__phi), (__phi - (ln(tan(__phi / 2.0
-                + {math.pi / 4.0!r}) * pow((1.0 - {e!r} * sin(__phi))
-                / (1.0 + {e!r} * sin(__phi)), {e / 2.0!r})) - __psi)
-                * cos(__phi) * (1.0 - {es!r} * sin(__phi) * sin(__phi))
-                / {1.0 - es!r}) AS __phi
-            FROM st{6 + k}""" for k in range(_STEREA_ITERS))
-    return f"""st1 AS (
-            SELECT *, (({x_expr}) - {c['fe']!r}) AS __ep,
-                      (({y_expr}) - {c['fn']!r}) AS __np
-            FROM {src}
-        ), st2 AS (
-            SELECT *, atan2(__ep, {c['h']!r} + __np) AS __i FROM st1
-        ), st3 AS (
-            SELECT *, (atan2(__ep, {c['g']!r} - __np) - __i) AS __j
-            FROM st2
-        ), st4 AS (
-            SELECT *, ({c['chi0']!r} + 2.0 * atan((__np - __ep
-                       * tan(__j / 2.0)) / {c['rk2']!r})) AS __chi,
-                   (degrees(((__j + 2.0 * __i + {c['lam0']!r})
-                             - {c['lam0']!r}) / {n!r})
-                    + {c['lon0']!r}) AS lon
-            FROM st3
-        ), st5 AS (
-            SELECT *, (ln((1.0 + sin(__chi))
-                          / ({c['c']!r} * (1.0 - sin(__chi))))
-                       / {2.0 * n!r}) AS __psi
-            FROM st4
-        ), st6 AS (
-            SELECT *, (2.0 * atan(exp(__psi)) - {math.pi / 2.0!r})
-                      AS __phi
-            FROM st5
-        {iters}), sterea_ll AS (
-            SELECT * EXCLUDE (__ep, __np, __i, __j, __chi, __psi,
-                              __phi),
-                   degrees(__phi) AS lat
-            FROM st{6 + _STEREA_ITERS}
-        )"""
-
-
-def _merc_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _merc_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     lat_ts, lon0, fe, fn = MERC_PARAMS[crs.upper()]
     ak = _merc_ak(lat_ts)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        lam = (x - F.lit(fe)) / F.lit(ak)
-        t = F.exp((F.lit(fn) - y) / F.lit(ak))  # Snyder 7-10
-        chi = F.lit(math.pi / 2.0) - 2 * F.atan(t)
-        phi = chi
-        for j, c in enumerate(_PS_SERIES, start=1):
-            phi = phi + F.lit(c) * F.sin(F.lit(2.0 * j) * chi)
-        return F.lit(lon0) + F.degrees(lam), F.degrees(phi)
-
-    return inv
-
-
-def merc_inverse_sql(x_expr: str, y_expr: str,
-                     crs: str) -> tuple[str, str]:
-    """The SAME ellipsoidal-Mercator inverse as SQL strings (for
-    DuckDB oracles) — identical op order to
-    :func:`_merc_to_lonlat_fn` (Snyder 7-10 + the chi->phi series).
-    Returns (lon_sql, lat_sql)."""
-    lat_ts, lon0, fe, fn = MERC_PARAMS[crs.upper()]
-    ak = _merc_ak(lat_ts)
-    lam = f"((({x_expr}) - {fe!r}) / {ak!r})"
-    t = f"exp(({fn!r} - ({y_expr})) / {ak!r})"
-    chi = f"({math.pi / 2.0!r} - 2 * atan({t}))"
+    lam = (x - Q.lit(fe)) / Q.lit(ak)
+    t = Q.exp((Q.lit(fn) - y) / Q.lit(ak))  # Snyder 7-10
+    chi = Q.lit(math.pi / 2.0) - 2 * Q.atan(t)
     phi = chi
-    for j, cj in enumerate(_PS_SERIES, start=1):
-        phi = f"({phi} + {cj!r} * sin(2.0 * {j} * ({chi})))"
-    return f"({lon0!r} + degrees({lam}))", f"degrees({phi})"
+    for j, c in enumerate(_PS_SERIES, start=1):
+        phi = phi + Q.lit(c) * Q.sin(Q.lit(2.0 * j) * chi)
+    return _out(Q.lit(lon0) + Q.degrees(lam), Q.degrees(phi))
 
 
 def _ps_consts(lat_ts: float) -> tuple[float, float]:
@@ -1413,53 +1170,24 @@ def _lonlat_to_ps_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _ps_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _ps_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     c = _ps_unpack(crs)
     south, lon0 = c["south"], c["lon0"]
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        if c["fe"]:
-            x = x - F.lit(c["fe"])
-        if c["fn"]:
-            y = y - F.lit(c["fn"])
-        rho = F.sqrt(x * x + y * y)
-        t = rho * F.lit(c["Kinv"])
-        chi = F.lit(math.pi / 2.0) - 2 * F.atan(t)
-        phi = chi
-        for j, cj in enumerate(_PS_SERIES, start=1):
-            phi = phi + F.lit(cj) * F.sin(F.lit(2.0 * j) * chi)
-        lam = F.atan2(x, y if south else y * F.lit(-1.0))
-        lat = F.degrees(phi)
-        return (
-            F.lit(lon0) + F.degrees(lam),
-            lat * F.lit(-1.0) if south else lat,
-        )
-
-    return inv
-
-
-def ps_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME polar-stereographic inverse as SQL strings (for DuckDB
-    oracles).  Returns (lon_sql, lat_sql)."""
-    c = _ps_unpack(crs)
-    south, lon0 = c["south"], c["lon0"]
-    x = f"({x_expr})"
-    y = f"({y_expr})"
     if c["fe"]:
-        x = f"({x} - {c['fe']!r})"
+        x = x - Q.lit(c["fe"])
     if c["fn"]:
-        y = f"({y} - {c['fn']!r})"
-    rho = f"sqrt({x} * {x} + {y} * {y})"
-    t = f"({rho} * {c['Kinv']!r})"
-    chi = f"({math.pi / 2.0!r} - 2 * atan({t}))"
+        y = y - Q.lit(c["fn"])
+    rho = Q.sqrt(x * x + y * y)
+    t = rho * Q.lit(c["Kinv"])
+    chi = Q.lit(math.pi / 2.0) - 2 * Q.atan(t)
     phi = chi
     for j, cj in enumerate(_PS_SERIES, start=1):
-        phi = f"({phi} + {cj!r} * sin(2.0 * {j} * ({chi})))"
-    lam = f"atan2({x}, {y if south else f'({y} * -1.0)'})"
-    lat = f"degrees({phi})"
-    return (
-        f"({lon0!r} + degrees({lam}))",
-        f"({lat} * -1.0)" if south else lat,
+        phi = phi + Q.lit(cj) * Q.sin(Q.lit(2.0 * j) * chi)
+    lam = Q.atan2(x, y if south else y * Q.lit(-1.0))
+    lat = Q.degrees(phi)
+    return _out(
+        Q.lit(lon0) + Q.degrees(lam),
+        lat * Q.lit(-1.0) if south else lat,
     )
 
 
@@ -1498,6 +1226,24 @@ def _azi_consts(table: dict, crs: str) -> dict:
                 sp0=math.sin(phi0), cp0=math.cos(phi0))
 
 
+def _azi_inverse(x: _Sql, y: _Sql, c: dict, cang) -> list[dict]:
+    """Spherical azimuthal inverse (Snyder 20-14/20-15) shared by
+    aeqd, ortho, gnom, nsper and stereg; ``cang(rho)`` is the family's
+    angular distance from the center."""
+    xe = x - Q.lit(c["fe"])
+    yn = y - Q.lit(c["fn"])
+    rho = Q.sqrt(xe * xe + yn * yn)
+    cang = cang(rho)
+    phi = Q.when(rho == 0.0, Q.asin(Q.lit(c["sp0"]))).otherwise(
+        Q.asin(Q.cos(cang) * Q.lit(c["sp0"])
+               + yn * Q.sin(cang) * Q.lit(c["cp0"]) / rho))
+    lam = Q.when(rho == 0.0, Q.lit(0.0)).otherwise(
+        Q.atan2(xe * Q.sin(cang),
+                rho * Q.lit(c["cp0"]) * Q.cos(cang)
+                - yn * Q.lit(c["sp0"]) * Q.sin(cang)))
+    return _out(Q.lit(c["lon0"]) + Q.degrees(lam), Q.degrees(phi))
+
+
 def _lonlat_to_aeqd_fn(crs: str) -> ColumnTransform:
     c = _azi_consts(AEQD_PARAMS, crs)
 
@@ -1519,43 +1265,9 @@ def _lonlat_to_aeqd_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _aeqd_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _aeqd_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     c = _azi_consts(AEQD_PARAMS, crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xe = x - F.lit(c["fe"])
-        yn = y - F.lit(c["fn"])
-        rho = F.sqrt(xe * xe + yn * yn)
-        cang = rho / F.lit(c["r"])
-        phi = F.when(rho == 0.0, F.asin(F.lit(c["sp0"]))).otherwise(
-            F.asin(F.cos(cang) * F.lit(c["sp0"])
-                   + yn * F.sin(cang) * F.lit(c["cp0"]) / rho))
-        lam = F.when(rho == 0.0, F.lit(0.0)).otherwise(
-            F.atan2(xe * F.sin(cang),
-                    rho * F.lit(c["cp0"]) * F.cos(cang)
-                    - yn * F.lit(c["sp0"]) * F.sin(cang)))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
-
-    return inv
-
-
-def aeqd_inverse_sql(x_expr: str, y_expr: str,
-                     crs: str) -> tuple[str, str]:
-    """The SAME spherical azimuthal-equidistant inverse as SQL strings
-    (for DuckDB oracles) — identical op order to
-    :func:`_aeqd_to_lonlat_fn`.  Returns (lon_sql, lat_sql)."""
-    c = _azi_consts(AEQD_PARAMS, crs)
-    xe = f"(({x_expr}) - {c['fe']!r})"
-    yn = f"(({y_expr}) - {c['fn']!r})"
-    rho = f"sqrt({xe} * {xe} + {yn} * {yn})"
-    cang = f"({rho} / {c['r']!r})"
-    phi = (f"(CASE WHEN {rho} = 0.0 THEN asin({c['sp0']!r}) ELSE "
-           f"asin(cos({cang}) * {c['sp0']!r} + {yn} * sin({cang})"
-           f" * {c['cp0']!r} / {rho}) END)")
-    lam = (f"(CASE WHEN {rho} = 0.0 THEN 0.0 ELSE "
-           f"atan2({xe} * sin({cang}), {rho} * {c['cp0']!r}"
-           f" * cos({cang}) - {yn} * {c['sp0']!r} * sin({cang})) END)")
-    return (f"({c['lon0']!r} + degrees({lam}))", f"degrees({phi})")
+    return _azi_inverse(x, y, c, lambda rho: rho / Q.lit(c["r"]))
 
 
 def _lonlat_to_ortho_fn(crs: str) -> ColumnTransform:
@@ -1578,44 +1290,10 @@ def _lonlat_to_ortho_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _ortho_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _ortho_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     c = _azi_consts(ORTHO_PARAMS, crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xe = x - F.lit(c["fe"])
-        yn = y - F.lit(c["fn"])
-        rho = F.sqrt(xe * xe + yn * yn)
-        # off-disk: asin(>1) -> NaN, the documented not-visible signal
-        cang = F.asin(rho / F.lit(c["r"]))
-        phi = F.when(rho == 0.0, F.asin(F.lit(c["sp0"]))).otherwise(
-            F.asin(F.cos(cang) * F.lit(c["sp0"])
-                   + yn * F.sin(cang) * F.lit(c["cp0"]) / rho))
-        lam = F.when(rho == 0.0, F.lit(0.0)).otherwise(
-            F.atan2(xe * F.sin(cang),
-                    rho * F.lit(c["cp0"]) * F.cos(cang)
-                    - yn * F.lit(c["sp0"]) * F.sin(cang)))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
-
-    return inv
-
-
-def ortho_inverse_sql(x_expr: str, y_expr: str,
-                      crs: str) -> tuple[str, str]:
-    """The SAME spherical orthographic inverse as SQL strings (for
-    DuckDB oracles) — identical op order to
-    :func:`_ortho_to_lonlat_fn` (Snyder ch. 20: c = asin(rho/R))."""
-    c = _azi_consts(ORTHO_PARAMS, crs)
-    xe = f"(({x_expr}) - {c['fe']!r})"
-    yn = f"(({y_expr}) - {c['fn']!r})"
-    rho = f"sqrt({xe} * {xe} + {yn} * {yn})"
-    cang = f"asin({rho} / {c['r']!r})"
-    phi = (f"(CASE WHEN {rho} = 0.0 THEN asin({c['sp0']!r}) ELSE "
-           f"asin(cos({cang}) * {c['sp0']!r} + {yn} * sin({cang})"
-           f" * {c['cp0']!r} / {rho}) END)")
-    lam = (f"(CASE WHEN {rho} = 0.0 THEN 0.0 ELSE "
-           f"atan2({xe} * sin({cang}), {rho} * {c['cp0']!r}"
-           f" * cos({cang}) - {yn} * {c['sp0']!r} * sin({cang})) END)")
-    return (f"({c['lon0']!r} + degrees({lam}))", f"degrees({phi})")
+    # off-disk: asin(>1) -> NaN, the documented not-visible signal
+    return _azi_inverse(x, y, c, lambda rho: Q.asin(rho / Q.lit(c["r"])))
 
 
 #: crs -> (R, lat0, lon0, false easting, false northing)
@@ -1646,42 +1324,10 @@ def _lonlat_to_gnom_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _gnom_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _gnom_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     c = _azi_consts(GNOM_PARAMS, crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xe = x - F.lit(c["fe"])
-        yn = y - F.lit(c["fn"])
-        rho = F.sqrt(xe * xe + yn * yn)
-        cang = F.atan(rho / F.lit(c["r"]))  # c = atan(rho/R), 22-16
-        phi = F.when(rho == 0.0, F.asin(F.lit(c["sp0"]))).otherwise(
-            F.asin(F.cos(cang) * F.lit(c["sp0"])
-                   + yn * F.sin(cang) * F.lit(c["cp0"]) / rho))
-        lam = F.when(rho == 0.0, F.lit(0.0)).otherwise(
-            F.atan2(xe * F.sin(cang),
-                    rho * F.lit(c["cp0"]) * F.cos(cang)
-                    - yn * F.lit(c["sp0"]) * F.sin(cang)))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
-
-    return inv
-
-
-def gnom_inverse_sql(x_expr: str, y_expr: str,
-                     crs: str) -> tuple[str, str]:
-    """The SAME spherical gnomonic inverse as SQL strings (for DuckDB
-    oracles) — identical op order to :func:`_gnom_to_lonlat_fn`."""
-    c = _azi_consts(GNOM_PARAMS, crs)
-    xe = f"(({x_expr}) - {c['fe']!r})"
-    yn = f"(({y_expr}) - {c['fn']!r})"
-    rho = f"sqrt({xe} * {xe} + {yn} * {yn})"
-    cang = f"atan({rho} / {c['r']!r})"
-    phi = (f"(CASE WHEN {rho} = 0.0 THEN asin({c['sp0']!r}) ELSE "
-           f"asin(cos({cang}) * {c['sp0']!r} + {yn} * sin({cang})"
-           f" * {c['cp0']!r} / {rho}) END)")
-    lam = (f"(CASE WHEN {rho} = 0.0 THEN 0.0 ELSE "
-           f"atan2({xe} * sin({cang}), {rho} * {c['cp0']!r}"
-           f" * cos({cang}) - {yn} * {c['sp0']!r} * sin({cang})) END)")
-    return (f"({c['lon0']!r} + degrees({lam}))", f"degrees({phi})")
+    # c = atan(rho/R), 22-16
+    return _azi_inverse(x, y, c, lambda rho: Q.atan(rho / Q.lit(c["r"])))
 
 
 def _eqc_consts(crs: str) -> dict:
@@ -1811,120 +1457,35 @@ def _lonlat_to_omerc_fn(crs: str) -> "StagedTransform":
     ])
 
 
-def _omerc_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _omerc_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     """Hotine E/N -> lon/lat (EPSG 9815 reverse, staged)."""
     c = _omerc_consts(crs)
     b, big_a = c["b"], c["big_a"]
-
-    def s_v(env):
-        return ((env["__in_x"] - F.lit(c["ec"])) * F.lit(c["cg"])
-                - (env["__in_y"] - F.lit(c["nc"])) * F.lit(c["sg"]))
-
-    def s_u(env):
-        return ((env["__in_y"] - F.lit(c["nc"])) * F.lit(c["cg"])
-                + (env["__in_x"] - F.lit(c["ec"])) * F.lit(c["sg"])
-                + F.lit(c["uoff"]))
-
-    def s_q(env):
-        return F.exp(F.lit(-b) * env["__v"] / F.lit(big_a))
-
-    def s_sv(env):
-        q = env["__q"]
-        return (q - F.lit(1.0) / q) / F.lit(2.0)
-
-    def s_tv(env):
-        q = env["__q"]
-        return (q + F.lit(1.0) / q) / F.lit(2.0)
-
-    def s_bu(env):
-        return F.lit(b) * env["__u"] / F.lit(big_a)
-
-    def s_uu(env):
-        return (F.sin(env["__bu"]) * F.lit(c["cg0"])
-                + env["__s"] * F.lit(c["sg0"])) / env["__tv"]
-
-    def s_chi(env):
-        t = F.pow(
-            F.lit(c["h"]) / F.sqrt((F.lit(1.0) + env["__uu"])
-                                   / (F.lit(1.0) - env["__uu"])),
-            F.lit(1.0 / b))
-        return F.lit(math.pi / 2.0) - F.lit(2.0) * F.atan(t)
-
-    def out_y(env):
-        chi = env["__chi"]
-        phi = chi
-        for j, cf in enumerate(c["series"], start=1):
-            phi = phi + F.lit(cf) * F.sin(F.lit(2.0 * j) * chi)
-        return F.degrees(phi)
-
-    def out_x(env):
-        lam = F.lit(c["lam0"]) - F.atan2(
-            env["__s"] * F.lit(c["cg0"])
-            - F.sin(env["__bu"]) * F.lit(c["sg0"]),
-            F.cos(env["__bu"])) / F.lit(b)
-        return F.degrees(lam)
-
-    return StagedTransform([
-        {"__v": s_v, "__u": s_u},
-        {"__q": s_q, "__bu": s_bu},
-        {"__s": s_sv, "__tv": s_tv},
-        {"__uu": s_uu},
-        {"__chi": s_chi},
-        {"__out_x": out_x, "__out_y": out_y},
-    ])
-
-
-def omerc_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                           src: str = "tgt") -> str:
-    """The SAME Hotine inverse as a chain of CTEs over ``src`` (for
-    DuckDB oracles) — identical arithmetic to
-    :func:`_omerc_to_lonlat_fn`.  Emits CTEs ``om1..om6`` and finally
-    ``omerc_ll`` = ``src`` columns + ``lon``/``lat``."""
-    c = _omerc_consts(crs)
-    b, big_a = c["b"], c["big_a"]
-    chi = "__chi"
+    v, u, q, bu, s, tv, uu, chi = _cols("__v __u __q __bu __s __tv __uu __chi")
+    t = Q.pow(
+        Q.lit(c["h"]) / Q.sqrt((Q.lit(1.0) + uu) / (Q.lit(1.0) - uu)),
+        Q.lit(1.0 / b))
     phi = chi
     for j, cf in enumerate(c["series"], start=1):
-        phi = f"({phi} + {cf!r} * sin(2.0 * {j} * (__chi)))"
-    # CAST the inputs to DOUBLE up front: DuckDB types numeric
-    # literals as DECIMAL, and the skew-rotation's long constant
-    # literals overflow DECIMAL(18) multiplication otherwise
-    x_expr = f"CAST(({x_expr}) AS DOUBLE)"
-    y_expr = f"CAST(({y_expr}) AS DOUBLE)"
-    return f"""om1 AS (
-            SELECT *, ((({x_expr}) - {c['ec']!r}) * {c['cg']!r}
-                       - (({y_expr}) - {c['nc']!r}) * {c['sg']!r})
-                      AS __v,
-                      ((({y_expr}) - {c['nc']!r}) * {c['cg']!r}
-                       + (({x_expr}) - {c['ec']!r}) * {c['sg']!r}
-                       + {c['uoff']!r}) AS __u
-            FROM {src}
-        ), om2 AS (
-            SELECT *, exp({-b!r} * __v / {big_a!r}) AS __q,
-                      ({b!r} * __u / {big_a!r}) AS __bu
-            FROM om1
-        ), om3 AS (
-            SELECT *, ((__q - 1.0 / __q) / 2.0) AS __s,
-                      ((__q + 1.0 / __q) / 2.0) AS __tv
-            FROM om2
-        ), om4 AS (
-            SELECT *, ((sin(__bu) * {c['cg0']!r}
-                        + __s * {c['sg0']!r}) / __tv) AS __uu
-            FROM om3
-        ), om5 AS (
-            SELECT *, ({math.pi / 2.0!r} - 2.0 * atan(pow({c['h']!r}
-                       / sqrt((1.0 + __uu) / (1.0 - __uu)),
-                       {1.0 / b!r}))) AS __chi
-            FROM om4
-        ), omerc_ll AS (
-            SELECT * EXCLUDE (__v, __u, __q, __bu, __s, __tv, __uu,
-                              __chi),
-                   degrees({c['lam0']!r} - atan2(__s * {c['cg0']!r}
-                       - sin(__bu) * {c['sg0']!r}, cos(__bu))
-                       / {b!r}) AS lon,
-                   degrees({phi}) AS lat
-            FROM om5
-        )"""
+        phi = phi + Q.lit(cf) * Q.sin(Q.lit(2.0 * j) * chi)
+    lam = Q.lit(c["lam0"]) - Q.atan2(
+        s * Q.lit(c["cg0"]) - Q.sin(bu) * Q.lit(c["sg0"]),
+        Q.cos(bu)) / Q.lit(b)
+    return [
+        {"__v": ((x - Q.lit(c["ec"])) * Q.lit(c["cg"])
+                 - (y - Q.lit(c["nc"])) * Q.lit(c["sg"])),
+         "__u": ((y - Q.lit(c["nc"])) * Q.lit(c["cg"])
+                 + (x - Q.lit(c["ec"])) * Q.lit(c["sg"])
+                 + Q.lit(c["uoff"]))},
+        {"__q": Q.exp(Q.lit(-b) * v / Q.lit(big_a)),
+         "__bu": Q.lit(b) * u / Q.lit(big_a)},
+        {"__s": (q - Q.lit(1.0) / q) / Q.lit(2.0),
+         "__tv": (q + Q.lit(1.0) / q) / Q.lit(2.0)},
+        {"__uu": (Q.sin(bu) * Q.lit(c["cg0"])
+                  + s * Q.lit(c["sg0"])) / tv},
+        {"__chi": Q.lit(math.pi / 2.0) - Q.lit(2.0) * Q.atan(t)},
+        {"__out_x": Q.degrees(lam), "__out_y": Q.degrees(phi)},
+    ]
 
 
 #: spherical near-sided (vertical) perspective — Snyder ch. 23 /
@@ -1963,54 +1524,19 @@ def _lonlat_to_nsper_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _nsper_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _nsper_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     c = _nsper_consts(crs)
     p, r = c["p"], c["r"]
 
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xe = x - F.lit(c["fe"])
-        yn = y - F.lit(c["fn"])
-        rho = F.sqrt(xe * xe + yn * yn)
+    def cang(rho):
         # Snyder 23-19/20: off-disk -> sqrt(negative) -> NaN
-        root = F.sqrt(F.lit(1.0) - rho * rho * F.lit(
+        root = Q.sqrt(Q.lit(1.0) - rho * rho * Q.lit(
             (p + 1.0) / (r * r * (p - 1.0))))
-        cang = F.asin((F.lit(p) - root)
-                      / (F.lit(r * (p - 1.0)) / rho
-                         + rho / F.lit(r * (p - 1.0))))
-        phi = F.when(rho == 0.0, F.asin(F.lit(c["sp0"]))).otherwise(
-            F.asin(F.cos(cang) * F.lit(c["sp0"])
-                   + yn * F.sin(cang) * F.lit(c["cp0"]) / rho))
-        lam = F.when(rho == 0.0, F.lit(0.0)).otherwise(
-            F.atan2(xe * F.sin(cang),
-                    rho * F.lit(c["cp0"]) * F.cos(cang)
-                    - yn * F.lit(c["sp0"]) * F.sin(cang)))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
+        return Q.asin((Q.lit(p) - root)
+                      / (Q.lit(r * (p - 1.0)) / rho
+                         + rho / Q.lit(r * (p - 1.0))))
 
-    return inv
-
-
-def nsper_inverse_sql(x_expr: str, y_expr: str,
-                      crs: str) -> tuple[str, str]:
-    """The SAME near-sided-vertical-perspective inverse as SQL
-    strings (for DuckDB oracles) — identical op order to
-    :func:`_nsper_to_lonlat_fn` (Snyder 23-19/20)."""
-    c = _nsper_consts(crs)
-    p, r = c["p"], c["r"]
-    rp1 = r * (p - 1.0)
-    xe = f"(({x_expr}) - {c['fe']!r})"
-    yn = f"(({y_expr}) - {c['fn']!r})"
-    rho = f"sqrt({xe} * {xe} + {yn} * {yn})"
-    root = (f"sqrt(1.0 - {rho} * {rho}"
-            f" * {(p + 1.0) / (r * r * (p - 1.0))!r})")
-    cang = (f"asin(({p!r} - {root}) / ({rp1!r} / {rho}"
-            f" + {rho} / {rp1!r}))")
-    phi = (f"(CASE WHEN {rho} = 0.0 THEN asin({c['sp0']!r}) ELSE "
-           f"asin(cos({cang}) * {c['sp0']!r} + {yn} * sin({cang})"
-           f" * {c['cp0']!r} / {rho}) END)")
-    lam = (f"(CASE WHEN {rho} = 0.0 THEN 0.0 ELSE "
-           f"atan2({xe} * sin({cang}), {rho} * {c['cp0']!r}"
-           f" * cos({cang}) - {yn} * {c['sp0']!r} * sin({cang})) END)")
-    return (f"({c['lon0']!r} + degrees({lam}))", f"degrees({phi})")
+    return _azi_inverse(x, y, c, cang)
 
 
 #: spherical stereographic, ANY aspect (Snyder 21-2..21-4 / 20-14..
@@ -2046,45 +1572,11 @@ def _lonlat_to_stereg_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _stereg_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _stereg_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     c = _stereg_azi_consts(crs)
     k0 = STEREG_PARAMS[crs.upper()][1]
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xe = x - F.lit(c["fe"])
-        yn = y - F.lit(c["fn"])
-        rho = F.sqrt(xe * xe + yn * yn)
-        cang = F.lit(2.0) * F.atan(rho / F.lit(2.0 * c["r"] * k0))
-        phi = F.when(rho == 0.0, F.asin(F.lit(c["sp0"]))).otherwise(
-            F.asin(F.cos(cang) * F.lit(c["sp0"])
-                   + yn * F.sin(cang) * F.lit(c["cp0"]) / rho))
-        lam = F.when(rho == 0.0, F.lit(0.0)).otherwise(
-            F.atan2(xe * F.sin(cang),
-                    rho * F.lit(c["cp0"]) * F.cos(cang)
-                    - yn * F.lit(c["sp0"]) * F.sin(cang)))
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
-
-    return inv
-
-
-def stereg_inverse_sql(x_expr: str, y_expr: str,
-                       crs: str) -> tuple[str, str]:
-    """The SAME spherical-stereographic inverse as SQL strings (for
-    DuckDB oracles).  Returns (lon_sql, lat_sql)."""
-    r0, k0, lat0, lon0, fe, fn = STEREG_PARAMS[crs.upper()]
-    sp0 = math.sin(math.radians(lat0))
-    cp0 = math.cos(math.radians(lat0))
-    xe = f"(({x_expr}) - {fe!r})"
-    yn = f"(({y_expr}) - {fn!r})"
-    rho = f"sqrt({xe} * {xe} + {yn} * {yn})"
-    cang = f"(2.0 * atan({rho} / {2.0 * r0 * k0!r}))"
-    phi = (f"(CASE WHEN {rho} = 0.0 THEN asin({sp0!r}) ELSE "
-           f"asin(cos({cang}) * {sp0!r} + {yn} * sin({cang})"
-           f" * {cp0!r} / {rho}) END)")
-    lam = (f"(CASE WHEN {rho} = 0.0 THEN 0.0 ELSE "
-           f"atan2({xe} * sin({cang}), {rho} * {cp0!r}"
-           f" * cos({cang}) - {yn} * {sp0!r} * sin({cang})) END)")
-    return (f"({lon0!r} + degrees({lam}))", f"degrees({phi})")
+    return _azi_inverse(x, y, c, lambda rho: Q.lit(2.0) * Q.atan(
+        rho / Q.lit(2.0 * c["r"] * k0)))
 
 
 def _lonlat_to_eqc_fn(crs: str) -> ColumnTransform:
@@ -2110,44 +1602,20 @@ def _lonlat_to_eqc_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _eqc_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _eqc_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     c = _eqc_consts(crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        lon = (F.lit(c["lon0"])
-               + F.degrees((x - F.lit(c["fe"])) / F.lit(c["rc"])))
-        if c["sphere"]:
-            return lon, F.degrees((y - F.lit(c["fn"])) / F.lit(c["ry"]))
-        mu = (y - F.lit(c["fn"])) / F.lit(c["ary"])
-        chi = mu
-        for j, bj in enumerate(c["beta"], start=1):
-            chi = chi - F.lit(bj) * F.sin(F.lit(2.0 * j) * mu)
-        phi = chi
-        for j, dj in enumerate(c["delta"], start=1):
-            phi = phi + F.lit(dj) * F.sin(F.lit(2.0 * j) * chi)
-        return lon, F.degrees(phi)
-
-    return inv
-
-
-def eqc_inverse_sql(x_expr: str, y_expr: str,
-                    crs: str) -> tuple[str, str]:
-    """The SAME equidistant-cylindrical inverse as SQL strings (for
-    DuckDB oracles) — identical op order to :func:`_eqc_to_lonlat_fn`.
-    Returns (lon_sql, lat_sql)."""
-    c = _eqc_consts(crs)
-    lon = (f"({c['lon0']!r} + degrees((({x_expr}) - {c['fe']!r})"
-           f" / {c['rc']!r}))")
+    lon = (Q.lit(c["lon0"])
+           + Q.degrees((x - Q.lit(c["fe"])) / Q.lit(c["rc"])))
     if c["sphere"]:
-        return lon, f"degrees((({y_expr}) - {c['fn']!r}) / {c['ry']!r})"
-    mu = f"((({y_expr}) - {c['fn']!r}) / {c['ary']!r})"
+        return _out(lon, Q.degrees((y - Q.lit(c["fn"])) / Q.lit(c["ry"])))
+    mu = (y - Q.lit(c["fn"])) / Q.lit(c["ary"])
     chi = mu
     for j, bj in enumerate(c["beta"], start=1):
-        chi = f"({chi} - {bj!r} * sin(2.0 * {j} * {mu}))"
+        chi = chi - Q.lit(bj) * Q.sin(Q.lit(2.0 * j) * mu)
     phi = chi
     for j, dj in enumerate(c["delta"], start=1):
-        phi = f"({phi} + {dj!r} * sin(2.0 * {j} * ({chi})))"
-    return lon, f"degrees({phi})"
+        phi = phi + Q.lit(dj) * Q.sin(Q.lit(2.0 * j) * chi)
+    return _out(lon, Q.degrees(phi))
 
 
 # ---- equidistant conic (+proj=eqdc; Snyder ch. 16) ----------------------
@@ -2220,53 +1688,25 @@ def _lonlat_to_eqdc_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _eqdc_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _eqdc_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     c = _eqdc_consts(crs)
     sgn = 1.0 if c["n"] >= 0.0 else -1.0
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xe = x - F.lit(c["fe"])
-        yr = F.lit(c["rho0"]) - (y - F.lit(c["fn"]))
-        rho = F.lit(sgn) * F.sqrt(xe * xe + yr * yr)
-        th = F.atan2(F.lit(sgn) * xe, F.lit(sgn) * yr)
-        lam = th / F.lit(c["n"])
-        if c["sphere"]:
-            phi = (F.lit(c["ag"]) - rho) / F.lit(c["a"])
-        else:
-            mu = (F.lit(c["ag"]) - rho) / F.lit(c["ary"])
-            chi = mu
-            for j, bj in enumerate(c["beta"], start=1):
-                chi = chi - F.lit(bj) * F.sin(F.lit(2.0 * j) * mu)
-            phi = chi
-            for j, dj in enumerate(c["delta"], start=1):
-                phi = phi + F.lit(dj) * F.sin(F.lit(2.0 * j) * chi)
-        return F.lit(c["lon0"]) + F.degrees(lam), F.degrees(phi)
-
-    return inv
-
-
-def eqdc_inverse_sql(x_expr: str, y_expr: str,
-                     crs: str) -> tuple[str, str]:
-    """The SAME equidistant-conic inverse as SQL strings (for DuckDB
-    oracles) — identical op order to :func:`_eqdc_to_lonlat_fn`.
-    Returns (lon_sql, lat_sql)."""
-    c = _eqdc_consts(crs)
-    sgn = 1.0 if c["n"] >= 0.0 else -1.0
-    xe = f"(({x_expr}) - {c['fe']!r})"
-    yr = f"({c['rho0']!r} - (({y_expr}) - {c['fn']!r}))"
-    rho = f"({sgn!r} * sqrt({xe} * {xe} + {yr} * {yr}))"
-    lam = f"(atan2({sgn!r} * {xe}, {sgn!r} * {yr}) / {c['n']!r})"
+    xe = x - Q.lit(c["fe"])
+    yr = Q.lit(c["rho0"]) - (y - Q.lit(c["fn"]))
+    rho = Q.lit(sgn) * Q.sqrt(xe * xe + yr * yr)
+    th = Q.atan2(Q.lit(sgn) * xe, Q.lit(sgn) * yr)
+    lam = th / Q.lit(c["n"])
     if c["sphere"]:
-        phi = f"(({c['ag']!r} - {rho}) / {c['a']!r})"
+        phi = (Q.lit(c["ag"]) - rho) / Q.lit(c["a"])
     else:
-        mu = f"(({c['ag']!r} - {rho}) / {c['ary']!r})"
+        mu = (Q.lit(c["ag"]) - rho) / Q.lit(c["ary"])
         chi = mu
         for j, bj in enumerate(c["beta"], start=1):
-            chi = f"({chi} - {bj!r} * sin(2.0 * {j} * {mu}))"
+            chi = chi - Q.lit(bj) * Q.sin(Q.lit(2.0 * j) * mu)
         phi = chi
         for j, dj in enumerate(c["delta"], start=1):
-            phi = f"({phi} + {dj!r} * sin(2.0 * {j} * ({chi})))"
-    return (f"({c['lon0']!r} + degrees({lam}))", f"degrees({phi})")
+            phi = phi + Q.lit(dj) * Q.sin(Q.lit(2.0 * j) * chi)
+    return _out(Q.lit(c["lon0"]) + Q.degrees(lam), Q.degrees(phi))
 
 
 # ---- Swiss oblique Mercator (+proj=somerc) ----------------------------
@@ -2367,85 +1807,38 @@ def _datum_hop_fwd_stages(helm_fwd: tuple, a_l: float, es_l: float,
     ]
 
 
-def _datum_hop_inv_stages(towgs84: tuple, a_l: float,
-                          es_l: float) -> list[dict]:
-    """Local-datum geodetic radians (``__lam``/``__phi``) -> WGS84
-    degrees (``__out_x``/``__out_y``), same fine staging."""
+def _to_wgs84_stages(lam: _Sql, phi: _Sql, a_l: float, es_l: float,
+                     helm: tuple, xyz: str) -> list[dict]:
+    """Local-datum geodetic radians -> WGS84 degrees
+    (``__out_x``/``__out_y``) as FINE stages: geodetic -> XYZ (named
+    ``xyz``), the Helmert ``helm``, Bowring back to geodetic."""
+    sp, cp, nu = _cols("__sp __cp __nu")
+    xw, yw, zw, p, th = _cols("__Xw __Yw __Zw __p __th")
     return [
-        {"__sp": lambda env: F.sin(env["__phi"]),
-         "__cp": lambda env: F.cos(env["__phi"])},
-        {"__nu": lambda env: F.lit(a_l) / F.sqrt(
-            F.lit(1.0) - F.lit(es_l) * env["__sp"] * env["__sp"])},
-        {"__Xl": lambda env: env["__nu"] * env["__cp"]
-            * F.cos(env["__lam"]),
-         "__Yl": lambda env: env["__nu"] * env["__cp"]
-            * F.sin(env["__lam"]),
-         "__Zl": lambda env: env["__nu"] * F.lit(1.0 - es_l)
-            * env["__sp"]},
-        {"__Xw": lambda env: _helmert(
-            env["__Xl"], env["__Yl"], env["__Zl"], towgs84)[0],
-         "__Yw": lambda env: _helmert(
-            env["__Xl"], env["__Yl"], env["__Zl"], towgs84)[1],
-         "__Zw": lambda env: _helmert(
-            env["__Xl"], env["__Yl"], env["__Zl"], towgs84)[2]},
-        {"__p": lambda env: F.sqrt(env["__Xw"] * env["__Xw"]
-                                   + env["__Yw"] * env["__Yw"])},
-        {"__th": lambda env: F.atan2(env["__Zw"] * F.lit(_WGS_A),
-                                     env["__p"] * F.lit(_WGS_B))},
-        {"__out_x": lambda env: F.degrees(
-            F.atan2(env["__Yw"], env["__Xw"])),
-         "__out_y": lambda env: F.degrees(F.atan2(
-            env["__Zw"] + F.lit(_WGS_EP2 * _WGS_B)
-            * F.pow(F.sin(env["__th"]), F.lit(3.0)),
-            env["__p"] - F.lit(_WGS_E2 * _WGS_A)
-            * F.pow(F.cos(env["__th"]), F.lit(3.0))))},
+        {"__sp": Q.sin(phi), "__cp": Q.cos(phi)},
+        {"__nu": Q.lit(a_l) / Q.sqrt(
+            Q.lit(1.0) - Q.lit(es_l) * sp * sp)},
+        dict(zip(xyz.split(), (nu * cp * Q.cos(lam), nu * cp * Q.sin(lam),
+                               nu * Q.lit(1.0 - es_l) * sp))),
+        dict(zip(("__Xw", "__Yw", "__Zw"),
+                 _helmert(*_cols(xyz), helm, Q))),
+        {"__p": Q.sqrt(xw * xw + yw * yw)},
+        {"__th": Q.atan2(zw * Q.lit(_WGS_A), p * Q.lit(_WGS_B))},
+        {"__out_x": Q.degrees(Q.atan2(yw, xw)),
+         "__out_y": Q.degrees(Q.atan2(
+             zw + Q.lit(_WGS_EP2 * _WGS_B) * Q.pow(Q.sin(th), Q.lit(3.0)),
+             p - Q.lit(_WGS_E2 * _WGS_A) * Q.pow(Q.cos(th), Q.lit(3.0))))},
     ]
 
 
-def datum_hop_inv_sql_ctes(prefix: str, n_start: int, towgs84: tuple,
-                           a_l: float, es_l: float,
-                           final_name: str, exclude: str) -> str:
-    """The SAME local->WGS84 hop as SQL CTEs (for DuckDB oracles),
-    identical op order to :func:`_datum_hop_inv_stages`.  Continues a
-    chain whose CTE ``{prefix}{n_start}`` holds ``__lam``/``__phi``;
-    emits ``{prefix}{n_start+1}..`` and finally ``{final_name}`` =
-    source columns (minus ``exclude``) + ``lon``/``lat``."""
-    tx, ty, tz, rx, ry, rz, s = towgs84
-    m = repr(1.0 + s)
-    return f""", {prefix}{n_start + 1} AS (
-            SELECT *, ({a_l!r} / sqrt(1.0 - {es_l!r} * sin(__phi)
-                       * sin(__phi))) AS __nu
-            FROM {prefix}{n_start}
-        ), {prefix}{n_start + 2} AS (
-            SELECT *, (__nu * cos(__phi) * cos(__lam)) AS __Xl,
-                      (__nu * cos(__phi) * sin(__lam)) AS __Yl,
-                      (__nu * {1.0 - es_l!r} * sin(__phi)) AS __Zl
-            FROM {prefix}{n_start + 1}
-        ), {prefix}{n_start + 3} AS (
-            SELECT *, ({tx!r} + {m} * __Xl - {rz!r} * __Yl
-                       + {ry!r} * __Zl) AS __Xw,
-                      ({ty!r} + {rz!r} * __Xl + {m} * __Yl
-                       - {rx!r} * __Zl) AS __Yw,
-                      ({tz!r} - {ry!r} * __Xl + {rx!r} * __Yl
-                       + {m} * __Zl) AS __Zw
-            FROM {prefix}{n_start + 2}
-        ), {prefix}{n_start + 4} AS (
-            SELECT *, sqrt(__Xw * __Xw + __Yw * __Yw) AS __p
-            FROM {prefix}{n_start + 3}
-        ), {prefix}{n_start + 5} AS (
-            SELECT *, atan2(__Zw * {_WGS_A!r}, __p * {_WGS_B!r})
-                      AS __th
-            FROM {prefix}{n_start + 4}
-        ), {final_name} AS (
-            SELECT * EXCLUDE ({exclude}, __nu, __Xl, __Yl, __Zl,
-                              __Xw, __Yw, __Zw, __p, __th),
-                   degrees(atan2(__Yw, __Xw)) AS lon,
-                   degrees(atan2(
-                       __Zw + {_WGS_EP2 * _WGS_B!r} * pow(sin(__th), 3),
-                       __p - {_WGS_E2 * _WGS_A!r} * pow(cos(__th), 3)))
-                   AS lat
-            FROM {prefix}{n_start + 5}
-        )"""
+def _datum_hop_inv_stages(towgs84: tuple | None, a_l: float,
+                          es_l: float) -> list[dict]:
+    """Local-datum geodetic radians (``__lam``/``__phi``) -> WGS84
+    degrees (``__out_x``/``__out_y``); no hop without a towgs84."""
+    lam, phi = _cols("__lam __phi")
+    if towgs84 is None:
+        return [{"__out_x": Q.degrees(lam), "__out_y": Q.degrees(phi)}]
+    return _to_wgs84_stages(lam, phi, a_l, es_l, towgs84, "__Xl __Yl __Zl")
 
 
 def _lonlat_to_somerc_fn(crs: str) -> "StagedTransform":
@@ -2505,117 +1898,37 @@ def _lonlat_to_somerc_fn(crs: str) -> "StagedTransform":
     return StagedTransform(stages)
 
 
-def _somerc_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _somerc_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     """E/N -> lon/lat: spherical Mercator inverse, un-rotate, then the
     fixed-count isometric->geodetic solve; a Bessel->WGS84 datum hop
     when the CRS carries a towgs84."""
     c = _somerc_consts(crs)
     e, es, alpha = c["e"], c["es"], c["alpha"]
-
-    def s_lbar(env):
-        return (env["__in_x"] - F.lit(c["fe"])) / F.lit(c["big_r"])
-
-    def s_bbar(env):
-        return (F.lit(2.0) * F.atan(F.exp(
-            (env["__in_y"] - F.lit(c["fn"])) / F.lit(c["big_r"])))
-            - F.lit(math.pi / 2.0))
-
-    def s_b(env):
-        return F.asin(F.lit(c["cb0"]) * F.sin(env["__bb"])
-                      + F.lit(c["sb0"]) * F.cos(env["__bb"])
-                      * F.cos(env["__lb"]))
-
-    def s_lam(env):
-        return F.lit(c["lam0"]) + F.atan2(
-            F.cos(env["__bb"]) * F.sin(env["__lb"]),
-            F.lit(c["cb0"]) * F.cos(env["__bb"]) * F.cos(env["__lb"])
-            - F.lit(c["sb0"]) * F.sin(env["__bb"])) / F.lit(alpha)
-
-    def s_psit(env):
-        return (F.log(F.tan(F.lit(math.pi / 4.0) + env["__b"]
-                            / F.lit(2.0)))
-                - F.lit(c["k"])) / F.lit(alpha)
-
-    def s_phi0(env):
-        return (F.lit(2.0) * F.atan(F.exp(env["__psit"]))
-                - F.lit(math.pi / 2.0))
-
-    def step(env):
-        phi = env["__phi"]
-        sphi = F.sin(phi)
-        psii = (F.log(F.tan(phi / F.lit(2.0) + F.lit(math.pi / 4.0)))
-                - F.lit(e / 2.0)
-                * F.log((F.lit(1.0) + F.lit(e) * sphi)
-                        / (F.lit(1.0) - F.lit(e) * sphi)))
-        return phi - (psii - env["__psit"]) * F.cos(phi) \
-            * (F.lit(1.0) - F.lit(es) * sphi * sphi) / F.lit(1.0 - es)
-
-    stages: list[dict] = [
-        {"__lb": s_lbar, "__bb": s_bbar},
-        {"__b": s_b},
-        {"__lam": s_lam, "__psit": s_psit},
-        {"__phi": s_phi0},
-    ]
-    stages += [{"__phi": step} for _ in range(_SOMERC_ITERS)]
-    if c["towgs84"] is None:
-        stages.append({"__out_x": lambda env: F.degrees(env["__lam"]),
-                       "__out_y": lambda env: F.degrees(env["__phi"])})
-        return StagedTransform(stages)
-    stages += _datum_hop_inv_stages(c["towgs84"], c["a"], es)
-    return StagedTransform(stages)
-
-
-def somerc_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                            src: str = "tgt") -> str:
-    """The SAME Swiss-Mercator inverse as a chain of CTEs over ``src``
-    (for DuckDB oracles) — identical arithmetic and iteration count to
-    :func:`_somerc_to_lonlat_fn`, incl. the Bessel->WGS84 Helmert hop
-    for the EPSG codes.  Emits CTEs ``sw1..`` and finally
-    ``somerc_ll`` = ``src`` columns + ``lon``/``lat``."""
-    c = _somerc_consts(crs)
-    e, es, alpha = c["e"], c["es"], c["alpha"]
-    iters = "".join(f"""), sw{5 + k} AS (
-            SELECT * EXCLUDE (__phi), (__phi - ((ln(tan(__phi / 2.0
-                + {math.pi / 4.0!r})) - {e / 2.0!r}
-                * ln((1.0 + {e!r} * sin(__phi))
-                     / (1.0 - {e!r} * sin(__phi)))) - __psit)
-                * cos(__phi) * (1.0 - {es!r} * sin(__phi) * sin(__phi))
-                / {1.0 - es!r}) AS __phi
-            FROM sw{4 + k}""" for k in range(_SOMERC_ITERS))
-    n_last = 4 + _SOMERC_ITERS
-    head = f"""sw1 AS (
-            SELECT *, ((({x_expr}) - {c['fe']!r}) / {c['big_r']!r})
-                      AS __lb,
-                   (2.0 * atan(exp(((({y_expr}) - {c['fn']!r})
-                       / {c['big_r']!r}))) - {math.pi / 2.0!r}) AS __bb
-            FROM {src}
-        ), sw2 AS (
-            SELECT *, asin({c['cb0']!r} * sin(__bb)
-                           + {c['sb0']!r} * cos(__bb) * cos(__lb))
-                      AS __b
-            FROM sw1
-        ), sw3 AS (
-            SELECT *, ({c['lam0']!r} + atan2(cos(__bb) * sin(__lb),
-                           {c['cb0']!r} * cos(__bb) * cos(__lb)
-                           - {c['sb0']!r} * sin(__bb)) / {alpha!r})
-                      AS __lam,
-                   ((ln(tan({math.pi / 4.0!r} + __b / 2.0))
-                     - {c['k']!r}) / {alpha!r}) AS __psit
-            FROM sw2
-        ), sw4 AS (
-            SELECT *, (2.0 * atan(exp(__psit)) - {math.pi / 2.0!r})
-                      AS __phi
-            FROM sw3
-        {iters})"""
-    if c["towgs84"] is None:
-        return head + f""", somerc_ll AS (
-            SELECT * EXCLUDE (__lb, __bb, __b, __lam, __psit, __phi),
-                   degrees(__lam) AS lon, degrees(__phi) AS lat
-            FROM sw{n_last}
-        )"""
-    return head + datum_hop_inv_sql_ctes(
-        "sw", n_last, c["towgs84"], c["a"], es, "somerc_ll",
-        "__lb, __bb, __b, __lam, __psit, __phi")
+    lb, bb, b, psit, phi = _cols("__lb __bb __b __psit __phi")
+    sphi = Q.sin(phi)
+    psii = (Q.log(Q.tan(phi / Q.lit(2.0) + Q.lit(math.pi / 4.0)))
+            - Q.lit(e / 2.0)
+            * Q.log((Q.lit(1.0) + Q.lit(e) * sphi)
+                    / (Q.lit(1.0) - Q.lit(e) * sphi)))
+    step = phi - (psii - psit) * Q.cos(phi) \
+        * (Q.lit(1.0) - Q.lit(es) * sphi * sphi) / Q.lit(1.0 - es)
+    return [
+        {"__lb": (x - Q.lit(c["fe"])) / Q.lit(c["big_r"]),
+         "__bb": (Q.lit(2.0) * Q.atan(Q.exp(
+             (y - Q.lit(c["fn"])) / Q.lit(c["big_r"])))
+             - Q.lit(math.pi / 2.0))},
+        {"__b": Q.asin(Q.lit(c["cb0"]) * Q.sin(bb)
+                       + Q.lit(c["sb0"]) * Q.cos(bb) * Q.cos(lb))},
+        {"__lam": Q.lit(c["lam0"]) + Q.atan2(
+            Q.cos(bb) * Q.sin(lb),
+            Q.lit(c["cb0"]) * Q.cos(bb) * Q.cos(lb)
+            - Q.lit(c["sb0"]) * Q.sin(bb)) / Q.lit(alpha),
+         "__psit": (Q.log(Q.tan(Q.lit(math.pi / 4.0) + b / Q.lit(2.0)))
+                    - Q.lit(c["k"])) / Q.lit(alpha)},
+        {"__phi": (Q.lit(2.0) * Q.atan(Q.exp(psit))
+                   - Q.lit(math.pi / 2.0))},
+        *[{"__phi": step}] * _SOMERC_ITERS,
+    ] + _datum_hop_inv_stages(c["towgs84"], c["a"], es)
 
 
 # ---- Krovak (+proj=krovak, S-JTSK) ------------------------------------
@@ -2738,122 +2051,36 @@ def _lonlat_to_krovak_fn(crs: str) -> "StagedTransform":
     return StagedTransform(stages)
 
 
-def _krovak_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _krovak_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     """Krovak E/N -> lon/lat (EPSG 9819 inverse): un-cone, un-rotate,
     then the fixed-count conformal->geodetic solve; a Bessel->WGS84
     hop when the CRS carries a towgs84."""
     c = _krovak_consts(crs)
     e, es, b = c["e"], c["es"], c["b"]
-
-    def s_xs(env):  # southing
-        return F.lit(c["sgn"]) * (env["__in_y"] - F.lit(c["y0"]))
-
-    def s_yw(env):  # westing
-        return F.lit(c["sgn"]) * (env["__in_x"] - F.lit(c["x0"]))
-
-    def s_r(env):
-        return F.sqrt(env["__sth"] * env["__sth"]
-                      + env["__wst"] * env["__wst"])
-
-    def s_d(env):
-        return F.atan2(env["__wst"], env["__sth"]) / F.lit(c["n"])
-
-    def s_t(env):
-        return F.lit(2.0) * (F.atan(
-            F.pow(F.lit(c["r0"]) / env["__r"], F.lit(1.0 / c["n"]))
-            * F.lit(c["tp"])) - F.lit(math.pi / 4.0))
-
-    def s_u(env):
-        return F.asin(F.lit(c["ca"]) * F.sin(env["__T"])
-                      - F.lit(c["sa"]) * F.cos(env["__T"])
-                      * F.cos(env["__D"]))
-
-    def s_lam(env):
-        return F.lit(c["lam0"]) - F.asin(
-            F.cos(env["__T"]) * F.sin(env["__D"])
-            / F.cos(env["__U"])) / F.lit(b)
-
-    def s_phi0(env):
-        return env["__U"]
-
-    def step(env):
-        s = F.sin(env["__phi"])
-        return F.lit(2.0) * (F.atan(
-            F.lit(c["t0"] ** (-1.0 / b))
-            * F.pow(F.tan(env["__U"] / F.lit(2.0)
-                          + F.lit(math.pi / 4.0)), F.lit(1.0 / b))
-            * F.pow((F.lit(1.0) + F.lit(e) * s)
-                    / (F.lit(1.0) - F.lit(e) * s), F.lit(e / 2.0)))
-            - F.lit(math.pi / 4.0))
-
-    stages: list[dict] = [
-        {"__sth": s_xs, "__wst": s_yw},
-        {"__r": s_r},
-        {"__D": s_d, "__T": s_t},
-        {"__U": s_u},
-        {"__lam": s_lam, "__phi": s_phi0},
-    ]
-    stages += [{"__phi": step} for _ in range(_KROVAK_ITERS)]
-    if c["towgs84"] is None:
-        stages.append({"__out_x": lambda env: F.degrees(env["__lam"]),
-                       "__out_y": lambda env: F.degrees(env["__phi"])})
-        return StagedTransform(stages)
-    stages += _datum_hop_inv_stages(c["towgs84"], c["a"], es)
-    return StagedTransform(stages)
-
-
-def krovak_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                            src: str = "tgt") -> str:
-    """The SAME Krovak inverse as a chain of CTEs over ``src`` (for
-    DuckDB oracles) — identical arithmetic and iteration count to
-    :func:`_krovak_to_lonlat_fn`, incl. the datum hop.  Emits CTEs
-    ``kv1..`` and finally ``krovak_ll`` = ``src`` columns +
-    ``lon``/``lat``."""
-    c = _krovak_consts(crs)
-    e, es, b = c["e"], c["es"], c["b"]
-    iters = "".join(f"""), kv{6 + k} AS (
-            SELECT * EXCLUDE (__phi), (2.0 * (atan({c['t0'] ** (-1.0 / b)!r}
-                * pow(tan(__U / 2.0 + {math.pi / 4.0!r}), {1.0 / b!r})
-                * pow((1.0 + {e!r} * sin(__phi))
-                      / (1.0 - {e!r} * sin(__phi)), {e / 2.0!r}))
-                - {math.pi / 4.0!r})) AS __phi
-            FROM kv{5 + k}""" for k in range(_KROVAK_ITERS))
-    n_last = 5 + _KROVAK_ITERS
-    head = f"""kv1 AS (
-            SELECT *, ({c['sgn']!r} * (({y_expr}) - {c['y0']!r}))
-                      AS __sth,
-                      ({c['sgn']!r} * (({x_expr}) - {c['x0']!r}))
-                      AS __wst
-            FROM {src}
-        ), kv2 AS (
-            SELECT *, sqrt(__sth * __sth + __wst * __wst) AS __r FROM kv1
-        ), kv3 AS (
-            SELECT *, (atan2(__wst, __sth) / {c['n']!r}) AS __D,
-                   (2.0 * (atan(pow({c['r0']!r} / __r, {1.0 / c['n']!r})
-                                * {c['tp']!r}) - {math.pi / 4.0!r}))
-                   AS __T
-            FROM kv2
-        ), kv4 AS (
-            SELECT *, asin({c['ca']!r} * sin(__T)
-                           - {c['sa']!r} * cos(__T) * cos(__D)) AS __U
-            FROM kv3
-        ), kv5 AS (
-            SELECT *, ({c['lam0']!r} - asin(cos(__T) * sin(__D)
-                                            / cos(__U)) / {b!r})
-                      AS __lam,
-                   __U AS __phi
-            FROM kv4
-        {iters})"""
-    if c["towgs84"] is None:
-        return head + f""", krovak_ll AS (
-            SELECT * EXCLUDE (__sth, __wst, __r, __D, __T, __U, __lam,
-                              __phi),
-                   degrees(__lam) AS lon, degrees(__phi) AS lat
-            FROM kv{n_last}
-        )"""
-    return head + datum_hop_inv_sql_ctes(
-        "kv", n_last, c["towgs84"], c["a"], es, "krovak_ll",
-        "__sth, __wst, __r, __D, __T, __U, __lam, __phi")
+    sth, wst, r, d, t, u, phi = _cols("__sth __wst __r __D __T __U __phi")
+    s = Q.sin(phi)
+    step = Q.lit(2.0) * (Q.atan(
+        Q.lit(c["t0"] ** (-1.0 / b))
+        * Q.pow(Q.tan(u / Q.lit(2.0)
+                      + Q.lit(math.pi / 4.0)), Q.lit(1.0 / b))
+        * Q.pow((Q.lit(1.0) + Q.lit(e) * s)
+                / (Q.lit(1.0) - Q.lit(e) * s), Q.lit(e / 2.0)))
+        - Q.lit(math.pi / 4.0))
+    return [
+        {"__sth": Q.lit(c["sgn"]) * (y - Q.lit(c["y0"])),  # southing
+         "__wst": Q.lit(c["sgn"]) * (x - Q.lit(c["x0"]))},  # westing
+        {"__r": Q.sqrt(sth * sth + wst * wst)},
+        {"__D": Q.atan2(wst, sth) / Q.lit(c["n"]),
+         "__T": Q.lit(2.0) * (Q.atan(
+             Q.pow(Q.lit(c["r0"]) / r, Q.lit(1.0 / c["n"]))
+             * Q.lit(c["tp"])) - Q.lit(math.pi / 4.0))},
+        {"__U": Q.asin(Q.lit(c["ca"]) * Q.sin(t)
+                       - Q.lit(c["sa"]) * Q.cos(t) * Q.cos(d))},
+        {"__lam": Q.lit(c["lam0"]) - Q.asin(
+            Q.cos(t) * Q.sin(d) / Q.cos(u)) / Q.lit(b),
+         "__phi": u},
+        *[{"__phi": step}] * _KROVAK_ITERS,
+    ] + _datum_hop_inv_stages(c["towgs84"], c["a"], es)
 
 
 # ---- Equal Earth (+proj=eqearth, EPSG:8857) ---------------------------
@@ -2902,18 +2129,18 @@ def _eqearth_consts(crs: str) -> dict:
     )
 
 
-def _eqe_h(t):
-    """h(theta) as a Column expression (op order shared with the SQL
-    twin)."""
-    return (t * (F.lit(_EQE_A1) + F.lit(_EQE_A2) * t * t)
-            + F.pow(t, F.lit(7.0)) * (F.lit(_EQE_A3)
-                                      + F.lit(_EQE_A4) * t * t))
+def _eqe_h(t, f=F):
+    """h(theta); ``f`` is ``F`` (forward Columns) or ``Q`` (inverse
+    SQL text)."""
+    return (t * (f.lit(_EQE_A1) + f.lit(_EQE_A2) * t * t)
+            + f.pow(t, f.lit(7.0)) * (f.lit(_EQE_A3)
+                                      + f.lit(_EQE_A4) * t * t))
 
 
-def _eqe_hp(t):
-    return (F.lit(_EQE_A1) + F.lit(3.0 * _EQE_A2) * t * t
-            + F.pow(t, F.lit(6.0)) * (F.lit(7.0 * _EQE_A3)
-                                      + F.lit(9.0 * _EQE_A4) * t * t))
+def _eqe_hp(t, f=F):
+    return (f.lit(_EQE_A1) + f.lit(3.0 * _EQE_A2) * t * t
+            + f.pow(t, f.lit(6.0)) * (f.lit(7.0 * _EQE_A3)
+                                      + f.lit(9.0 * _EQE_A4) * t * t))
 
 
 def _lonlat_to_eqearth_fn(crs: str) -> "StagedTransform":
@@ -2952,91 +2179,25 @@ def _lonlat_to_eqearth_fn(crs: str) -> "StagedTransform":
     ])
 
 
-def _eqearth_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _eqearth_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     """Equal Earth E/N -> lon/lat: fixed-count Newton theta solve,
     then the authalic->geodetic series."""
     c = _eqearth_consts(crs)
-
-    def s_yn(env):
-        return (env["__in_y"] - F.lit(c["fn"])) / F.lit(c["rq"])
-
-    def s_th0(env):
-        return env["__yn"] / F.lit(_EQE_A1)
-
-    def step(env):
-        th = env["__th"]
-        return th - (_eqe_h(th) - env["__yn"]) / _eqe_hp(th)
-
-    def s_beta(env):
-        return F.asin(F.sin(env["__th"]) / F.lit(_EQE_M))
-
-    def out_x(env):
-        th = env["__th"]
-        return F.lit(c["lon0"]) + F.degrees(
-            (env["__in_x"] - F.lit(c["fe"])) * _eqe_hp(th)
-            * F.lit(_EQE_M) / (F.lit(c["rq"]) * F.cos(th)))
-
-    def out_y(env):
-        b = env["__beta"]
-        if c["sphere"]:
-            return F.degrees(b)
-        return F.degrees(
-            b + F.lit(c["c2"]) * F.sin(F.lit(2.0) * b)
-            + F.lit(c["c4"]) * F.sin(F.lit(4.0) * b)
-            + F.lit(c["c6"]) * F.sin(F.lit(6.0) * b))
-
-    stages: list[dict] = [{"__yn": s_yn}, {"__th": s_th0}]
-    stages += [{"__th": step} for _ in range(_EQE_ITERS)]
-    stages += [{"__beta": s_beta},
-               {"__out_x": out_x, "__out_y": out_y}]
-    return StagedTransform(stages)
-
-
-def eqearth_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                             src: str = "tgt") -> str:
-    """The SAME Equal Earth inverse as a chain of CTEs over ``src``
-    (for DuckDB oracles) — identical arithmetic and iteration count
-    to :func:`_eqearth_to_lonlat_fn`.  Emits CTEs ``ee1..`` and
-    finally ``eqearth_ll`` = ``src`` columns + ``lon``/``lat``."""
-    c = _eqearth_consts(crs)
-
-    def h(t):
-        return (f"({t} * ({_EQE_A1!r} + {_EQE_A2!r} * {t} * {t}) "
-                f"+ pow({t}, 7.0) * ({_EQE_A3!r} + {_EQE_A4!r} "
-                f"* {t} * {t}))")
-
-    def hp(t):
-        return (f"({_EQE_A1!r} + {3.0 * _EQE_A2!r} * {t} * {t} "
-                f"+ pow({t}, 6.0) * ({7.0 * _EQE_A3!r} "
-                f"+ {9.0 * _EQE_A4!r} * {t} * {t}))")
-
-    iters = "".join(f"""), ee{3 + k} AS (
-            SELECT * EXCLUDE (__th),
-                   (__th - ({h('__th')} - __yn) / {hp('__th')}) AS __th
-            FROM ee{2 + k}""" for k in range(_EQE_ITERS))
-    n_last = 2 + _EQE_ITERS
-    lat_sql = ("degrees(__beta)" if c["sphere"] else
-               f"""degrees(__beta + {c['c2']!r} * sin(2.0 * __beta)
-                   + {c['c4']!r} * sin(4.0 * __beta)
-                   + {c['c6']!r} * sin(6.0 * __beta))""")
-    return f"""ee1 AS (
-            SELECT *, ((({y_expr}) - {c['fn']!r}) / {c['rq']!r})
-                      AS __yn,
-                   (({x_expr}) - {c['fe']!r}) AS __xe
-            FROM {src}
-        ), ee2 AS (
-            SELECT *, (__yn / {_EQE_A1!r}) AS __th FROM ee1
-        {iters}), ee{n_last + 1} AS (
-            SELECT *, asin(sin(__th) / {_EQE_M!r}) AS __beta
-            FROM ee{n_last}
-        ), eqearth_ll AS (
-            SELECT * EXCLUDE (__yn, __xe, __th, __beta),
-                   ({c['lon0']!r} + degrees(__xe * {hp('__th')}
-                       * {_EQE_M!r} / ({c['rq']!r} * cos(__th))))
-                   AS lon,
-                   {lat_sql} AS lat
-            FROM ee{n_last + 1}
-        )"""
+    yn, th, b = _cols("__yn __th __beta")
+    lat = b if c["sphere"] else (
+        b + Q.lit(c["c2"]) * Q.sin(Q.lit(2.0) * b)
+        + Q.lit(c["c4"]) * Q.sin(Q.lit(4.0) * b)
+        + Q.lit(c["c6"]) * Q.sin(Q.lit(6.0) * b))
+    return [
+        {"__yn": (y - Q.lit(c["fn"])) / Q.lit(c["rq"])},
+        {"__th": yn / Q.lit(_EQE_A1)},
+        *[{"__th": th - (_eqe_h(th, Q) - yn) / _eqe_hp(th, Q)}] * _EQE_ITERS,
+        {"__beta": Q.asin(Q.sin(th) / Q.lit(_EQE_M))},
+        {"__out_x": Q.lit(c["lon0"]) + Q.degrees(
+            (x - Q.lit(c["fe"])) * _eqe_hp(th, Q)
+            * Q.lit(_EQE_M) / (Q.lit(c["rq"]) * Q.cos(th))),
+         "__out_y": Q.degrees(lat)},
+    ]
 
 
 # ---- Cassini-Soldner (+proj=cass) -------------------------------------
@@ -3134,88 +2295,35 @@ def _lonlat_to_cass_fn(crs: str) -> "StagedTransform":
     ])
 
 
-def _cass_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _cass_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     """Cassini-Soldner E/N -> lon/lat (EPSG 9806 inverse: rectifying
     latitude series, then the transverse D-expansion)."""
     c = _cass_consts(crs)
     a, es = c["a"], c["es"]
-
-    def s_mu(env):
-        return ((F.lit(c["m0"]) + (env["__in_y"] - F.lit(c["fn"])))
-                / F.lit(a * c["m_c0"]))
-
-    def s_phi1(env):
-        mu = env["__mu"]
-        return (mu + F.lit(c["f1_2"]) * F.sin(F.lit(2.0) * mu)
-                + F.lit(c["f1_4"]) * F.sin(F.lit(4.0) * mu)
-                + F.lit(c["f1_6"]) * F.sin(F.lit(6.0) * mu))
-
-    def s_t1(env):
-        t = F.tan(env["__phi1"])
-        return t * t
-
-    def s_nu1(env):
-        s = F.sin(env["__phi1"])
-        return F.lit(a) / F.sqrt(F.lit(1.0) - F.lit(es) * s * s)
-
-    def s_rho1(env):
-        s = F.sin(env["__phi1"])
-        return (F.lit(a * (1.0 - es))
-                / F.pow(F.lit(1.0) - F.lit(es) * s * s, F.lit(1.5)))
-
-    def s_d(env):
-        return (env["__in_x"] - F.lit(c["fe"])) / env["__nu1"]
-
-    def out_y(env):
-        d, t1 = env["__D"], env["__T1"]
-        return F.degrees(
-            env["__phi1"] - (env["__nu1"] * F.tan(env["__phi1"])
-                             / env["__rho1"])
-            * (d * d / F.lit(2.0) - (F.lit(1.0) + F.lit(3.0) * t1)
-               * F.pow(d, F.lit(4.0)) / F.lit(24.0)))
-
-    def out_x(env):
-        d, t1 = env["__D"], env["__T1"]
-        return F.degrees(
-            F.lit(c["lam0"])
-            + (d - t1 * F.pow(d, F.lit(3.0)) / F.lit(3.0)
-               + (F.lit(1.0) + F.lit(3.0) * t1) * t1
-               * F.pow(d, F.lit(5.0)) / F.lit(15.0))
-            / F.cos(env["__phi1"]))
-
-    return StagedTransform([
-        {"__mu": s_mu},
-        {"__phi1": s_phi1},
-        {"__T1": s_t1, "__nu1": s_nu1, "__rho1": s_rho1},
-        {"__D": s_d},
-        {"__out_x": out_x, "__out_y": out_y},
-    ])
-
-
-def cass_inverse_sql(x_expr: str, y_expr: str,
-                     crs: str) -> tuple[str, str]:
-    """The SAME Cassini-Soldner inverse as SQL strings (for DuckDB
-    oracles) — identical op order to :func:`_cass_to_lonlat_fn`.
-    Returns (lon_sql, lat_sql)."""
-    c = _cass_consts(crs)
-    a, es = c["a"], c["es"]
-    mu = f"(({c['m0']!r} + (({y_expr}) - {c['fn']!r})) " \
-         f"/ {a * c['m_c0']!r})"
-    phi1 = f"({mu} + {c['f1_2']!r} * sin(2.0 * {mu}) " \
-           f"+ {c['f1_4']!r} * sin(4.0 * {mu}) " \
-           f"+ {c['f1_6']!r} * sin(6.0 * {mu}))"
-    t1 = f"(tan({phi1}) * tan({phi1}))"
-    nu1 = f"({a!r} / sqrt(1.0 - {es!r} * sin({phi1}) * sin({phi1})))"
-    rho1 = f"({a * (1.0 - es)!r} / pow(1.0 - {es!r} * sin({phi1}) " \
-           f"* sin({phi1}), 1.5))"
-    d = f"((({x_expr}) - {c['fe']!r}) / {nu1})"
-    lat = f"degrees({phi1} - ({nu1} * tan({phi1}) / {rho1}) " \
-          f"* ({d} * {d} / 2.0 - (1.0 + 3.0 * {t1}) " \
-          f"* pow({d}, 4.0) / 24.0))"
-    lon = f"degrees({c['lam0']!r} + ({d} - {t1} * pow({d}, 3.0) " \
-          f"/ 3.0 + (1.0 + 3.0 * {t1}) * {t1} * pow({d}, 5.0) " \
-          f"/ 15.0) / cos({phi1}))"
-    return lon, lat
+    mu, phi1, t1, nu1, rho1, d = _cols("__mu __phi1 __T1 __nu1 __rho1 __D")
+    s = Q.sin(phi1)
+    return [
+        {"__mu": ((Q.lit(c["m0"]) + (y - Q.lit(c["fn"])))
+                  / Q.lit(a * c["m_c0"]))},
+        {"__phi1": (mu + Q.lit(c["f1_2"]) * Q.sin(Q.lit(2.0) * mu)
+                    + Q.lit(c["f1_4"]) * Q.sin(Q.lit(4.0) * mu)
+                    + Q.lit(c["f1_6"]) * Q.sin(Q.lit(6.0) * mu))},
+        {"__T1": Q.tan(phi1) * Q.tan(phi1),
+         "__nu1": Q.lit(a) / Q.sqrt(Q.lit(1.0) - Q.lit(es) * s * s),
+         "__rho1": (Q.lit(a * (1.0 - es))
+                    / Q.pow(Q.lit(1.0) - Q.lit(es) * s * s, Q.lit(1.5)))},
+        {"__D": (x - Q.lit(c["fe"])) / nu1},
+        {"__out_x": Q.degrees(
+            Q.lit(c["lam0"])
+            + (d - t1 * Q.pow(d, Q.lit(3.0)) / Q.lit(3.0)
+               + (Q.lit(1.0) + Q.lit(3.0) * t1) * t1
+               * Q.pow(d, Q.lit(5.0)) / Q.lit(15.0))
+            / Q.cos(phi1)),
+         "__out_y": Q.degrees(
+            phi1 - (nu1 * Q.tan(phi1) / rho1)
+            * (d * d / Q.lit(2.0) - (Q.lit(1.0) + Q.lit(3.0) * t1)
+               * Q.pow(d, Q.lit(4.0)) / Q.lit(24.0)))},
+    ]
 
 
 # ---- American Polyconic (+proj=poly) ----------------------------------
@@ -3262,12 +2370,12 @@ def _poly_consts(crs: str) -> dict:
     )
 
 
-def _poly_m_col(phi, c):
-    return F.lit(c["a"]) * (
-        F.lit(c["c0"]) * phi
-        - F.lit(c["c2"]) * F.sin(F.lit(2.0) * phi)
-        + F.lit(c["c4"]) * F.sin(F.lit(4.0) * phi)
-        - F.lit(c["c6"]) * F.sin(F.lit(6.0) * phi))
+def _poly_m_col(phi, c, f=F):
+    return f.lit(c["a"]) * (
+        f.lit(c["c0"]) * phi
+        - f.lit(c["c2"]) * f.sin(f.lit(2.0) * phi)
+        + f.lit(c["c4"]) * f.sin(f.lit(4.0) * phi)
+        - f.lit(c["c6"]) * f.sin(f.lit(6.0) * phi))
 
 
 def _lonlat_to_poly_fn(crs: str) -> "StagedTransform":
@@ -3316,140 +2424,45 @@ def _lonlat_to_poly_fn(crs: str) -> "StagedTransform":
     return StagedTransform(stages)
 
 
-def _poly_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _poly_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     """Polyconic E/N -> lon/lat (Snyder 18-18 fixed-count Newton on
     the meridian-arc identity)."""
     c = _poly_consts(crs)
     a, es = c["a"], c["es"]
-
-    def s_ab(env):
-        return (F.lit(c["m0"]) + (env["__in_y"] - F.lit(c["fn"]))) \
-            / F.lit(a)
-
-    def s_xa(env):
-        return (env["__in_x"] - F.lit(c["fe"])) / F.lit(a)
-
-    def s_b(env):
-        return env["__A"] * env["__A"] + env["__xa"] * env["__xa"]
-
-    def s_phi0(env):
-        return env["__A"]
-
-    def s_s2(env):
-        return F.sin(F.lit(2.0) * env["__phi"])
-
-    def s_c(env):
-        s = F.sin(env["__phi"])
-        return (F.sqrt(F.lit(1.0) - F.lit(es) * s * s)
-                * F.tan(env["__phi"]))
-
-    def s_ma(env):
-        return _poly_m_col(env["__phi"], c) / F.lit(a)
-
-    def s_mp(env):
-        phi = env["__phi"]
-        return (F.lit(c["c0"])
-                - F.lit(2.0 * c["c2"]) * F.cos(F.lit(2.0) * phi)
-                + F.lit(4.0 * c["c4"]) * F.cos(F.lit(4.0) * phi)
-                - F.lit(6.0 * c["c6"]) * F.cos(F.lit(6.0) * phi))
-
-    def s_step(env):
-        aa, bb = env["__A"], env["__B"]
-        cc, ma, mp = env["__C"], env["__Ma"], env["__Mp"]
-        num = (aa * (cc * ma + F.lit(1.0)) - ma
-               - F.lit(0.5) * cc * (ma * ma + bb))
-        den = (F.lit(es) * env["__s2"] * (ma * ma + bb
-                                          - F.lit(2.0) * aa * ma)
-               / (F.lit(4.0) * cc)
-               + (aa - ma) * (cc * mp - F.lit(2.0) / env["__s2"])
-               - mp)
-        return env["__phi"] - num / den
-
-    def out_y(env):
-        return F.when(F.abs(env["__A"]) < F.lit(1e-12), F.lit(0.0)) \
-            .otherwise(F.degrees(env["__phi"]))
-
-    def out_x(env):
-        s = F.sin(env["__phi"])
-        lam = F.when(
-            F.abs(env["__A"]) < F.lit(1e-12),
-            F.lit(c["lam0"]) + env["__xa"]
-        ).otherwise(
-            F.lit(c["lam0"]) + F.asin(
-                env["__xa"] * F.sqrt(F.lit(1.0) - F.lit(es) * s * s)
-                * F.tan(env["__phi"])) / s)
-        return F.degrees(lam)
-
-    stages: list[dict] = [
-        {"__A": s_ab, "__xa": s_xa},
-        {"__B": s_b},
-        {"__phi": s_phi0},
+    aa, xa, bb, phi, s2, cc, ma, mp = _cols(
+        "__A __xa __B __phi __s2 __C __Ma __Mp")
+    s = Q.sin(phi)
+    num = (aa * (cc * ma + Q.lit(1.0)) - ma
+           - Q.lit(0.5) * cc * (ma * ma + bb))
+    den = (Q.lit(es) * s2 * (ma * ma + bb - Q.lit(2.0) * aa * ma)
+           / (Q.lit(4.0) * cc)
+           + (aa - ma) * (cc * mp - Q.lit(2.0) / s2)
+           - mp)
+    newton = [
+        {"__s2": Q.sin(Q.lit(2.0) * phi),
+         "__C": Q.sqrt(Q.lit(1.0) - Q.lit(es) * s * s) * Q.tan(phi),
+         "__Ma": _poly_m_col(phi, c, Q) / Q.lit(a),
+         "__Mp": (Q.lit(c["c0"])
+                  - Q.lit(2.0 * c["c2"]) * Q.cos(Q.lit(2.0) * phi)
+                  + Q.lit(4.0 * c["c4"]) * Q.cos(Q.lit(4.0) * phi)
+                  - Q.lit(6.0 * c["c6"]) * Q.cos(Q.lit(6.0) * phi))},
+        {"__phi": phi - num / den},
     ]
-    for _ in range(_POLY_ITERS):
-        stages.append({"__s2": s_s2, "__C": s_c, "__Ma": s_ma,
-                       "__Mp": s_mp})
-        stages.append({"__phi": s_step})
-    stages.append({"__out_x": out_x, "__out_y": out_y})
-    return StagedTransform(stages)
-
-
-def poly_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                          src: str = "tgt") -> str:
-    """The SAME polyconic inverse as a chain of CTEs over ``src``
-    (for DuckDB oracles) — identical arithmetic and iteration count
-    to :func:`_poly_to_lonlat_fn`.  Emits CTEs ``py1..`` and finally
-    ``poly_ll`` = ``src`` columns + ``lon``/``lat``."""
-    c = _poly_consts(crs)
-    a, es = c["a"], c["es"]
-    m_sql = (f"({a!r} * ({c['c0']!r} * __phi "
-             f"- {c['c2']!r} * sin(2.0 * __phi) "
-             f"+ {c['c4']!r} * sin(4.0 * __phi) "
-             f"- {c['c6']!r} * sin(6.0 * __phi)))")
-    mp_sql = (f"({c['c0']!r} - {2.0 * c['c2']!r} * cos(2.0 * __phi) "
-              f"+ {4.0 * c['c4']!r} * cos(4.0 * __phi) "
-              f"- {6.0 * c['c6']!r} * cos(6.0 * __phi))")
-    iters = "".join(f"""), py{3 + 2 * k} AS (
-            SELECT *, sin(2.0 * __phi) AS __s2,
-                   (sqrt(1.0 - {es!r} * sin(__phi) * sin(__phi))
-                    * tan(__phi)) AS __C,
-                   ({m_sql} / {a!r}) AS __Ma,
-                   {mp_sql} AS __Mp
-            FROM py{2 + 2 * k}
-        ), py{4 + 2 * k} AS (
-            SELECT * EXCLUDE (__phi, __s2, __C, __Ma, __Mp),
-                   (__phi - ((__A * (__C * __Ma + 1.0) - __Ma
-                              - 0.5 * __C * (__Ma * __Ma + __B))
-                             / ({es!r} * __s2 * (__Ma * __Ma + __B
-                                                 - 2.0 * __A * __Ma)
-                                / (4.0 * __C)
-                                + (__A - __Ma) * (__C * __Mp
-                                                  - 2.0 / __s2)
-                                - __Mp))) AS __phi
-            FROM py{3 + 2 * k}""" for k in range(_POLY_ITERS))
-    n_last = 2 + 2 * _POLY_ITERS
-    return f"""py1 AS (
-            SELECT *, (({c['m0']!r} + (({y_expr}) - {c['fn']!r}))
-                       / {a!r}) AS __A,
-                   ((({x_expr}) - {c['fe']!r}) / {a!r}) AS __xa
-            FROM {src}
-        ), py2 AS (
-            SELECT *, (__A * __A + __xa * __xa) AS __B,
-                   __A AS __phi
-            FROM py1
-        {iters}), poly_ll AS (
-            SELECT * EXCLUDE (__A, __xa, __B, __phi),
-                   CASE WHEN abs(__A) < 1e-12
-                        THEN degrees({c['lam0']!r} + __xa)
-                        ELSE degrees({c['lam0']!r}
-                            + asin(__xa * sqrt(1.0 - {es!r}
-                                   * sin(__phi) * sin(__phi))
-                                   * tan(__phi)) / sin(__phi))
-                   END AS lon,
-                   CASE WHEN abs(__A) < 1e-12 THEN 0.0
-                        ELSE degrees(__phi)
-                   END AS lat
-            FROM py{n_last}
-        )"""
+    equator = Q.abs(aa) < Q.lit(1e-12)
+    lam = Q.when(equator, Q.lit(c["lam0"]) + xa).otherwise(
+        Q.lit(c["lam0"]) + Q.asin(
+            xa * Q.sqrt(Q.lit(1.0) - Q.lit(es) * s * s)
+            * Q.tan(phi)) / s)
+    return [
+        {"__A": (Q.lit(c["m0"]) + (y - Q.lit(c["fn"]))) / Q.lit(a),
+         "__xa": (x - Q.lit(c["fe"])) / Q.lit(a)},
+        {"__B": aa * aa + xa * xa},
+        {"__phi": aa},
+        *newton * _POLY_ITERS,
+        {"__out_x": Q.degrees(lam),
+         "__out_y": Q.when(equator, Q.lit(0.0))
+            .otherwise(Q.degrees(phi))},
+    ]
 
 
 # ---- Lambert cylindrical equal-area (EASE-Grid 2.0 and kin) -----------
@@ -3515,35 +2528,16 @@ def _lonlat_to_cea_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _cea_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _cea_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     c = _cea_consts(crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        lon = (F.lit(c["lon0"])
-               + F.degrees((x - F.lit(c["fe"])) / F.lit(c["a"] * c["k0"])))
-        beta = F.asin((y - F.lit(c["fn"]))
-                      * F.lit(2.0 * c["k0"] / c["a"]) / F.lit(c["qp"]))
-        phi = beta
-        for j, cf in enumerate(c["series"], start=1):
-            phi = phi + F.lit(cf) * F.sin(F.lit(2.0 * j) * beta)
-        return lon, F.degrees(phi)
-
-    return inv
-
-
-def cea_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME cylindrical-equal-area inverse as SQL strings (for
-    DuckDB oracles) — identical op order to :func:`_cea_to_lonlat_fn`.
-    Returns (lon_sql, lat_sql)."""
-    c = _cea_consts(crs)
-    lon = (f"({c['lon0']!r} + degrees((({x_expr}) - {c['fe']!r})"
-           f" / {c['a'] * c['k0']!r}))")
-    beta = (f"asin((({y_expr}) - {c['fn']!r})"
-            f" * {2.0 * c['k0'] / c['a']!r} / {c['qp']!r})")
+    lon = (Q.lit(c["lon0"])
+           + Q.degrees((x - Q.lit(c["fe"])) / Q.lit(c["a"] * c["k0"])))
+    beta = Q.asin((y - Q.lit(c["fn"]))
+                  * Q.lit(2.0 * c["k0"] / c["a"]) / Q.lit(c["qp"]))
     phi = beta
     for j, cf in enumerate(c["series"], start=1):
-        phi = f"({phi} + {cf!r} * sin(2.0 * {j} * {beta}))"
-    return lon, f"degrees({phi})"
+        phi = phi + Q.lit(cf) * Q.sin(Q.lit(2.0 * j) * beta)
+    return _out(lon, Q.degrees(phi))
 
 
 # ---- Lambert azimuthal equal-area (EPSG:3035 and kin) -----------------
@@ -3552,8 +2546,7 @@ def cea_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
 # through pyproj (core/gridmapping/transform.py).  Ellipsoidal LAEA from
 # Snyder 1987 (public math: eqs. 3-12 authalic latitude, 24-2..24-31 for
 # the oblique aspect, 3-18 for the beta -> phi series).  Same design as
-# UTM/polar above: pure Column forward/inverse + identical-arithmetic
-# SQL twin for oracles.
+# UTM/polar above.
 
 #: GRS80 ellipsoid (ETRS89 datum): negligibly different from WGS84, but
 #: stated precisely so both engines run the same constants
@@ -3627,69 +2620,37 @@ def _lonlat_to_laea_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _laea_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _laea_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     lat0, lon0, fe, fn = LAEA_PARAMS[crs.upper()][:4]
     k = _laea_consts(crs)
     q_p, beta1, r_q, d = k["q_p"], k["beta1"], k["r_q"], k["d"]
     sb1, cb1 = math.sin(beta1), math.cos(beta1)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xd = (x - F.lit(fe)) / F.lit(d)
-        yd = F.lit(d) * (y - F.lit(fn))
-        rho = F.sqrt(xd * xd + yd * yd)
-        ce = F.lit(2.0) * F.asin(
-            F.least(rho / F.lit(2.0 * r_q), F.lit(1.0)))
-        # rho == 0 -> projection center (guarded: sin(ce)/rho is 0/0)
-        qv = F.lit(q_p) * (
-            F.cos(ce) * F.lit(sb1)
-            + F.when(rho == 0.0, F.lit(0.0))
-            .otherwise(yd * F.sin(ce) * F.lit(cb1) / rho)
-        )
-        beta = F.asin(F.least(F.greatest(qv / F.lit(q_p), F.lit(-1.0)),
-                              F.lit(1.0)))
-        phi = beta
-        for j, c in enumerate(k["series"], start=1):
-            phi = phi + F.lit(c) * F.sin(F.lit(2.0 * j) * beta)
-        lam = F.atan2(
-            (x - F.lit(fe)) * F.sin(ce),
-            F.lit(d) * rho * F.cos(ce) * F.lit(cb1)
-            - F.lit(d) * yd * F.sin(ce) * F.lit(sb1),
-        )
-        lon = F.lit(lon0) + F.degrees(
-            F.when(rho == 0.0, F.lit(0.0)).otherwise(lam))
-        lat = F.degrees(
-            F.when(rho == 0.0, F.lit(math.radians(lat0))).otherwise(phi))
-        return lon, lat
-
-    return inv
-
-
-def laea_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME LAEA inverse as SQL strings (for DuckDB oracles).
-    Returns (lon_sql, lat_sql).  No rho == 0 guard: oracle grids never
-    place a cell center exactly on the projection center."""
-    lat0, lon0, fe, fn = LAEA_PARAMS[crs.upper()][:4]
-    k = _laea_consts(crs)
-    q_p, beta1, r_q, d = k["q_p"], k["beta1"], k["r_q"], k["d"]
-    sb1, cb1 = math.sin(beta1), math.cos(beta1)
-    # DOUBLE casts: DuckDB types numeric literals as DECIMAL, and the
-    # rho**2 products overflow DECIMAL(38) without them
-    x_expr = f"CAST({x_expr} AS DOUBLE)"
-    y_expr = f"CAST({y_expr} AS DOUBLE)"
-    xd = f"((({x_expr}) - {fe!r}) / {d!r})"
-    yd = f"({d!r} * (({y_expr}) - {fn!r}))"
-    rho = f"sqrt({xd} * {xd} + {yd} * {yd})"
-    ce = f"(2.0 * asin(least({rho} / {2.0 * r_q!r}, 1.0)))"
-    qv = f"({q_p!r} * (cos({ce}) * {sb1!r} " \
-         f"+ {yd} * sin({ce}) * {cb1!r} / {rho}))"
-    beta = f"asin(least(greatest({qv} / {q_p!r}, -1.0), 1.0))"
+    xd = (x - Q.lit(fe)) / Q.lit(d)
+    yd = Q.lit(d) * (y - Q.lit(fn))
+    rho = Q.sqrt(xd * xd + yd * yd)
+    ce = Q.lit(2.0) * Q.asin(
+        Q.least(rho / Q.lit(2.0 * r_q), Q.lit(1.0)))
+    # rho == 0 -> projection center (guarded: sin(ce)/rho is 0/0)
+    qv = Q.lit(q_p) * (
+        Q.cos(ce) * Q.lit(sb1)
+        + Q.when(rho == 0.0, Q.lit(0.0))
+        .otherwise(yd * Q.sin(ce) * Q.lit(cb1) / rho)
+    )
+    beta = Q.asin(Q.least(Q.greatest(qv / Q.lit(q_p), Q.lit(-1.0)),
+                          Q.lit(1.0)))
     phi = beta
     for j, c in enumerate(k["series"], start=1):
-        phi = f"({phi} + {c!r} * sin(2.0 * {j} * ({beta})))"
-    lam = f"atan2((({x_expr}) - {fe!r}) * sin({ce}), " \
-          f"{d!r} * {rho} * cos({ce}) * {cb1!r} " \
-          f"- {d!r} * {yd} * sin({ce}) * {sb1!r})"
-    return f"({lon0!r} + degrees({lam}))", f"degrees({phi})"
+        phi = phi + Q.lit(c) * Q.sin(Q.lit(2.0 * j) * beta)
+    lam = Q.atan2(
+        (x - Q.lit(fe)) * Q.sin(ce),
+        Q.lit(d) * rho * Q.cos(ce) * Q.lit(cb1)
+        - Q.lit(d) * yd * Q.sin(ce) * Q.lit(sb1),
+    )
+    lon = Q.lit(lon0) + Q.degrees(
+        Q.when(rho == 0.0, Q.lit(0.0)).otherwise(lam))
+    lat = Q.degrees(
+        Q.when(rho == 0.0, Q.lit(math.radians(lat0))).otherwise(phi))
+    return _out(lon, lat)
 
 
 # ---- Lambert conformal conic 2SP (EPSG:2154 / 3034 and kin) -----------
@@ -3697,7 +2658,7 @@ def laea_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
 # National grids (France RGF93-LCC, ETRS89-LCC Europe) the reference
 # reaches through pyproj.  Ellipsoidal LCC-2SP from Snyder 1987
 # (public math: eqs. 14-15 m, 15-9 t, 15-1..15-11 forward/inverse, 3-5
-# chi -> phi series).  Pure Column + identical-arithmetic SQL twin.
+# chi -> phi series).
 
 #: crs -> (lat1, lat2, lat0, lon0, false easting, false northing)
 #: [6-tuple: GRS80] or + (a, rf) [8-tuple: any ellipsoid, round 8]
@@ -3790,39 +2751,20 @@ def _lonlat_to_lcc_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _lcc_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _lcc_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     n, af, rho0, lon0, fe, fn, e, series = _lcc_consts(crs)
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xd = x - F.lit(fe)
-        yd = F.lit(rho0) - (y - F.lit(fn))
-        # northern-cone registrations have n > 0: rho' carries n's
-        # sign directly
-        rho = F.sqrt(xd * xd + yd * yd)
-        t = F.pow(rho / F.lit(af), F.lit(1.0 / n))
-        chi = F.lit(math.pi / 2.0) - 2 * F.atan(t)
-        phi = chi
-        for j, c in enumerate(series, start=1):
-            phi = phi + F.lit(c) * F.sin(F.lit(2.0 * j) * chi)
-        lam = F.atan2(xd, yd) / F.lit(n)
-        return F.lit(lon0) + F.degrees(lam), F.degrees(phi)
-
-    return inv
-
-
-def lcc_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME LCC inverse as SQL strings (for DuckDB oracles)."""
-    n, af, rho0, lon0, fe, fn, e, series = _lcc_consts(crs)
-    xd = f"(CAST({x_expr} AS DOUBLE) - {fe!r})"
-    yd = f"({rho0!r} - (CAST({y_expr} AS DOUBLE) - {fn!r}))"
-    rho = f"sqrt({xd} * {xd} + {yd} * {yd})"
-    t = f"pow({rho} / {af!r}, {1.0 / n!r})"
-    chi = f"({math.pi / 2.0!r} - 2 * atan({t}))"
+    xd = x - Q.lit(fe)
+    yd = Q.lit(rho0) - (y - Q.lit(fn))
+    # northern-cone registrations have n > 0: rho' carries n's
+    # sign directly
+    rho = Q.sqrt(xd * xd + yd * yd)
+    t = Q.pow(rho / Q.lit(af), Q.lit(1.0 / n))
+    chi = Q.lit(math.pi / 2.0) - 2 * Q.atan(t)
     phi = chi
     for j, c in enumerate(series, start=1):
-        phi = f"({phi} + {c!r} * sin(2.0 * {j} * ({chi})))"
-    lam = f"(atan2({xd}, {yd}) / {n!r})"
-    return f"({lon0!r} + degrees({lam}))", f"degrees({phi})"
+        phi = phi + Q.lit(c) * Q.sin(Q.lit(2.0 * j) * chi)
+    lam = Q.atan2(xd, yd) / Q.lit(n)
+    return _out(Q.lit(lon0) + Q.degrees(lam), Q.degrees(phi))
 
 
 # ---- Albers equal-area conic (EPSG:5070 CONUS) ------------------------
@@ -3875,44 +2817,23 @@ def _lonlat_to_aea_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _aea_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _aea_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     k = _aea_consts(crs)
     n, c, rho0, lon0, fe, fn = (k["n"], k["c"], k["rho0"], k["lon0"],
                                 k["fe"], k["fn"])
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xd = x - F.lit(fe)
-        yd = F.lit(rho0) - (y - F.lit(fn))
-        rho = F.sqrt(xd * xd + yd * yd)
-        q = (F.lit(c) - rho * rho
-             * F.lit(n * n / (k["a"] * k["a"]))) / F.lit(n)
-        beta = F.asin(F.least(F.greatest(q / F.lit(k["q_p"]),
-                                         F.lit(-1.0)),
-                              F.lit(1.0)))
-        phi = beta
-        for j, cc in enumerate(k["series"], start=1):
-            phi = phi + F.lit(cc) * F.sin(F.lit(2.0 * j) * beta)
-        lam = F.atan2(xd, yd) / F.lit(n)
-        return F.lit(lon0) + F.degrees(lam), F.degrees(phi)
-
-    return inv
-
-
-def aea_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME Albers inverse as SQL strings (for DuckDB oracles)."""
-    k = _aea_consts(crs)
-    n, c, rho0, lon0, fe, fn = (k["n"], k["c"], k["rho0"], k["lon0"],
-                                k["fe"], k["fn"])
-    xd = f"(CAST({x_expr} AS DOUBLE) - {fe!r})"
-    yd = f"({rho0!r} - (CAST({y_expr} AS DOUBLE) - {fn!r}))"
-    rho2 = f"({xd} * {xd} + {yd} * {yd})"
-    q = f"(({c!r} - {rho2} * {n * n / (k['a'] * k['a'])!r}) / {n!r})"
-    beta = f"asin(least(greatest({q} / {k['q_p']!r}, -1.0), 1.0))"
+    xd = x - Q.lit(fe)
+    yd = Q.lit(rho0) - (y - Q.lit(fn))
+    rho = Q.sqrt(xd * xd + yd * yd)
+    q = (Q.lit(c) - rho * rho
+         * Q.lit(n * n / (k["a"] * k["a"]))) / Q.lit(n)
+    beta = Q.asin(Q.least(Q.greatest(q / Q.lit(k["q_p"]),
+                                     Q.lit(-1.0)),
+                          Q.lit(1.0)))
     phi = beta
     for j, cc in enumerate(k["series"], start=1):
-        phi = f"({phi} + {cc!r} * sin(2.0 * {j} * ({beta})))"
-    lam = f"(atan2({xd}, {yd}) / {n!r})"
-    return f"({lon0!r} + degrees({lam}))", f"degrees({phi})"
+        phi = phi + Q.lit(cc) * Q.sin(Q.lit(2.0 * j) * beta)
+    lam = Q.atan2(xd, yd) / Q.lit(n)
+    return _out(Q.lit(lon0) + Q.degrees(lam), Q.degrees(phi))
 
 
 # ---- Mollweide (World_Mollweide, ESRI:54009) --------------------------
@@ -3976,29 +2897,14 @@ class _MollForward:
             .drop("__mo_lam", "__mo_sph", "__mo_t")
 
 
-def _moll_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _moll_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     r = MOLL_PARAMS[crs.upper()]
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        t = F.asin(y / F.lit(_SQRT2 * r))
-        phi = F.asin(
-            (F.lit(2.0) * t + F.sin(F.lit(2.0) * t)) / F.lit(math.pi))
-        lon = F.degrees(
-            x * F.lit(math.pi) / (F.lit(2.0 * _SQRT2 * r) * F.cos(t)))
-        return lon, F.degrees(phi)
-
-    return inv
-
-
-def moll_inverse_sql(x_expr: str, y_expr: str, crs: str) \
-        -> tuple[str, str]:
-    """The SAME Mollweide inverse as SQL strings (for DuckDB oracles)."""
-    r = MOLL_PARAMS[crs.upper()]
-    t = f"asin(CAST({y_expr} AS DOUBLE) / {_SQRT2 * r!r})"
-    phi = f"degrees(asin((2.0 * {t} + sin(2.0 * {t})) / pi()))"
-    lon = (f"degrees(CAST({x_expr} AS DOUBLE) * pi() / "
-           f"({2.0 * _SQRT2 * r!r} * cos({t})))")
-    return lon, phi
+    t = Q.asin(y / Q.lit(_SQRT2 * r))
+    phi = Q.asin(
+        (Q.lit(2.0) * t + Q.sin(Q.lit(2.0) * t)) / Q.lit(math.pi))
+    lon = Q.degrees(
+        x * Q.lit(math.pi) / (Q.lit(2.0 * _SQRT2 * r) * Q.cos(t)))
+    return _out(lon, Q.degrees(phi))
 
 
 # ---- Hammer (-Aitoff) (+proj=hammer) -----------------------------------
@@ -4032,35 +2938,16 @@ def _lonlat_to_hammer_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _hammer_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _hammer_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     r = HAMMER_PARAMS[crs.upper()]
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xn = x / F.lit(r)
-        yn = y / F.lit(r)
-        z = F.sqrt(F.lit(1.0) - (xn / 4.0) * (xn / 4.0)
-                   - (yn / 2.0) * (yn / 2.0))
-        lon = F.degrees(F.lit(2.0) * F.atan2(
-            z * xn, F.lit(2.0) * (F.lit(2.0) * z * z - F.lit(1.0))))
-        lat = F.degrees(F.asin(z * yn))
-        return lon, lat
-
-    return inv
-
-
-def hammer_inverse_sql(x_expr: str, y_expr: str,
-                       crs: str) -> tuple[str, str]:
-    """The SAME Hammer inverse as SQL strings (for DuckDB oracles) —
-    identical op order to :func:`_hammer_to_lonlat_fn`."""
-    r = HAMMER_PARAMS[crs.upper()]
-    xn = f"(CAST({x_expr} AS DOUBLE) / {r!r})"
-    yn = f"(CAST({y_expr} AS DOUBLE) / {r!r})"
-    z = (f"sqrt(1.0 - ({xn} / 4.0) * ({xn} / 4.0)"
-         f" - ({yn} / 2.0) * ({yn} / 2.0))")
-    lon = (f"degrees(2.0 * atan2({z} * {xn},"
-           f" 2.0 * (2.0 * {z} * {z} - 1.0)))")
-    lat = f"degrees(asin({z} * {yn}))"
-    return lon, lat
+    xn = x / Q.lit(r)
+    yn = y / Q.lit(r)
+    z = Q.sqrt(Q.lit(1.0) - (xn / 4.0) * (xn / 4.0)
+               - (yn / 2.0) * (yn / 2.0))
+    lon = Q.degrees(Q.lit(2.0) * Q.atan2(
+        z * xn, Q.lit(2.0) * (Q.lit(2.0) * z * z - Q.lit(1.0))))
+    lat = Q.degrees(Q.asin(z * yn))
+    return _out(lon, lat)
 
 
 # ---- Goode homolosine (interrupted; +proj=igh) --------------------------
@@ -4109,7 +2996,7 @@ _IGH_D80, _IGH_D100 = math.radians(80.0), math.radians(100.0)
 _IGH_D30, _IGH_D140, _IGH_D160 = (math.radians(d) for d in (30, 140, 160))
 
 
-def _igh_lamc(lam: Column, phi_or_y: Column) -> Column:
+def _igh_lamc(lam, phi_or_y, f=F):
     """Per-lobe central meridian (radians) from the signed latitude
     proxy (phi forward / yn inverse) and the longitude proxy (lam
     forward / xn inverse) — the GCTP/PROJ zone table: north splits at
@@ -4117,15 +3004,15 @@ def _igh_lamc(lam: Column, phi_or_y: Column) -> Column:
     80E into lobes centered 160W / 60W / 20E / 140E.  Both directions
     use the SAME selector (the inverse classifies by projected x
     against the interruption meridians, exact for in-lobe points and
-    deterministic for gap points — mirrored verbatim in the SQL
-    twin)."""
-    north = F.when(lam <= F.lit(-_IGH_D40), F.lit(-_IGH_D100)) \
-        .otherwise(F.lit(_IGH_D30))
-    south = F.when(lam <= F.lit(-_IGH_D100), F.lit(-_IGH_D160)) \
-        .when(lam <= F.lit(-_IGH_D20), F.lit(-_IGH_D60)) \
-        .when(lam <= F.lit(_IGH_D80), F.lit(_IGH_D20)) \
-        .otherwise(F.lit(_IGH_D140))
-    return F.when(phi_or_y >= F.lit(0.0), north).otherwise(south)
+    deterministic for gap points).  ``f`` is ``F`` for the forward's
+    Columns and ``Q`` for the inverse's SQL text."""
+    north = f.when(lam <= f.lit(-_IGH_D40), f.lit(-_IGH_D100)) \
+        .otherwise(f.lit(_IGH_D30))
+    south = f.when(lam <= f.lit(-_IGH_D100), f.lit(-_IGH_D160)) \
+        .when(lam <= f.lit(-_IGH_D20), f.lit(-_IGH_D60)) \
+        .when(lam <= f.lit(_IGH_D80), f.lit(_IGH_D20)) \
+        .otherwise(f.lit(_IGH_D140))
+    return f.when(phi_or_y >= f.lit(0.0), north).otherwise(south)
 
 
 class _IghForward:
@@ -4184,69 +3071,34 @@ class _IghForward:
             .drop("__ig_lam", "__ig_phi", "__ig_lamc", "__ig_sph", "__ig_t")
 
 
-def _igh_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _igh_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     """Closed-form inverse: classify moll-vs-sinu by |y| against the
     boundary parallel and the lobe by x against the interruption
     meridians (exactly PROJ's inverse zone test), then invert the
     zone's pseudocylindrical — Mollweide's inverse is closed form, so
-    the whole inverse is a single Column tree."""
+    the whole inverse is a single stage."""
     r = IGH_PARAMS[crs.upper()]
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        xn = x / F.lit(r)
-        yn = y / F.lit(r)
-        lamc = _igh_lamc(xn, yn)
-        moll = (yn >= F.lit(_IGH_PHIB)) | (yn < F.lit(-_IGH_PHIB))
-        t = F.asin((F.abs(yn) + F.lit(_IGH_DY)) / F.lit(_SQRT2))
-        sgn = F.when(yn < F.lit(0.0), F.lit(-1.0)).otherwise(F.lit(1.0))
-        phi_m = sgn * F.asin(
-            (F.lit(2.0) * t + F.sin(F.lit(2.0) * t)) / F.lit(math.pi))
-        lam_m = lamc + (xn - lamc) * F.lit(math.pi) \
-            / (F.lit(2.0 * _SQRT2) * F.cos(t))
-        lam_s = lamc + (xn - lamc) / F.cos(yn)
-        # out-of-domain guard: |y|/R beyond sqrt(2)-dy puts the asin
-        # argument past 1 and would silently NaN — corner pixels of a
-        # rectangular target bbox land here.  Yield explicit NULL so
-        # both engines fail deterministically (advice r9).
-        valid = F.abs(yn) <= F.lit(_SQRT2 - _IGH_DY)
-        lon = F.when(valid,
-                     F.degrees(F.when(moll, lam_m).otherwise(lam_s)))
-        lat = F.when(valid,
-                     F.degrees(F.when(moll, phi_m).otherwise(yn)))
-        return lon, lat
-
-    return inv
-
-
-def igh_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME interrupted-Goode inverse as SQL strings (for DuckDB
-    oracles) — identical zone tests and op order to
-    :func:`_igh_to_lonlat_fn`."""
-    r = IGH_PARAMS[crs.upper()]
-    xn = f"(CAST({x_expr} AS DOUBLE) / {r!r})"
-    yn = f"(CAST({y_expr} AS DOUBLE) / {r!r})"
-    lamc = (
-        f"(CASE WHEN {yn} >= 0.0 THEN "
-        f"(CASE WHEN {xn} <= {-_IGH_D40!r} THEN {-_IGH_D100!r} "
-        f"ELSE {_IGH_D30!r} END) "
-        f"ELSE (CASE WHEN {xn} <= {-_IGH_D100!r} THEN {-_IGH_D160!r} "
-        f"WHEN {xn} <= {-_IGH_D20!r} THEN {-_IGH_D60!r} "
-        f"WHEN {xn} <= {_IGH_D80!r} THEN {_IGH_D20!r} "
-        f"ELSE {_IGH_D140!r} END) END)")
-    moll = f"({yn} >= {_IGH_PHIB!r} OR {yn} < {-_IGH_PHIB!r})"
-    t = f"asin((abs({yn}) + {_IGH_DY!r}) / {_SQRT2!r})"
-    sgn = f"(CASE WHEN {yn} < 0.0 THEN -1.0 ELSE 1.0 END)"
-    phi_m = f"({sgn} * asin((2.0 * {t} + sin(2.0 * {t})) / pi()))"
-    lam_m = (f"({lamc} + ({xn} - {lamc}) * pi() "
-             f"/ ({2.0 * _SQRT2!r} * cos({t})))")
-    lam_s = f"({lamc} + ({xn} - {lamc}) / cos({yn}))"
-    # same out-of-domain NULL guard as the Column path
-    valid = f"(abs({yn}) <= {_SQRT2 - _IGH_DY!r})"
-    lon = (f"(CASE WHEN {valid} THEN "
-           f"degrees(CASE WHEN {moll} THEN {lam_m} ELSE {lam_s} END) END)")
-    lat = (f"(CASE WHEN {valid} THEN "
-           f"degrees(CASE WHEN {moll} THEN {phi_m} ELSE {yn} END) END)")
-    return lon, lat
+    xn = x / Q.lit(r)
+    yn = y / Q.lit(r)
+    lamc = _igh_lamc(xn, yn, Q)
+    moll = (yn >= Q.lit(_IGH_PHIB)) | (yn < Q.lit(-_IGH_PHIB))
+    t = Q.asin((Q.abs(yn) + Q.lit(_IGH_DY)) / Q.lit(_SQRT2))
+    sgn = Q.when(yn < Q.lit(0.0), Q.lit(-1.0)).otherwise(Q.lit(1.0))
+    phi_m = sgn * Q.asin(
+        (Q.lit(2.0) * t + Q.sin(Q.lit(2.0) * t)) / Q.lit(math.pi))
+    lam_m = lamc + (xn - lamc) * Q.lit(math.pi) \
+        / (Q.lit(2.0 * _SQRT2) * Q.cos(t))
+    lam_s = lamc + (xn - lamc) / Q.cos(yn)
+    # out-of-domain guard: |y|/R beyond sqrt(2)-dy puts the asin
+    # argument past 1 and would silently NaN — corner pixels of a
+    # rectangular target bbox land here.  Yield explicit NULL so
+    # both engines fail deterministically (advice r9).
+    valid = Q.abs(yn) <= Q.lit(_SQRT2 - _IGH_DY)
+    lon = Q.when(valid,
+                 Q.degrees(Q.when(moll, lam_m).otherwise(lam_s)))
+    lat = Q.when(valid,
+                 Q.degrees(Q.when(moll, phi_m).otherwise(yn)))
+    return _out(lon, lat)
 
 
 # ---- Winkel Tripel (+proj=wintri; ESRI:54042) ---------------------------
@@ -4277,10 +3129,10 @@ _WINTRI_ITERS = 6
 _WT_EPS = 1e-8
 
 
-def _wt_T(alpha: Column, sa: Column) -> Column:
+def _wt_T(alpha, sa, f=F):
     """alpha / sin(alpha) with its alpha -> 0 series (1 + a^2/6)."""
-    return F.when(alpha < F.lit(_WT_EPS),
-                  F.lit(1.0) + alpha * alpha / F.lit(6.0)) \
+    return f.when(alpha < f.lit(_WT_EPS),
+                  f.lit(1.0) + alpha * alpha / f.lit(6.0)) \
         .otherwise(alpha / sa)
 
 
@@ -4303,179 +3155,54 @@ def _lonlat_to_wintri_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _wintri_newton_stage(cp1: float, it: int):
-    """One Newton iteration: stage dict mapping the updated
-    (__wl, __wp) from the previous env.  f = forward(lam, phi) - in,
+def _wintri_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
+    """Winkel Tripel E/N -> lon/lat: a fixed-count 2-D Newton solve on
+    the forward, one stage per iteration.  f = forward(lam, phi) - in,
     J analytic; delta = J^-1 f."""
-
-    def step(env):
-        lam, phi = env["__wl"], env["__wp"]
-        xn, yn = env["__wxn"], env["__wyn"]
-        lam2 = lam / F.lit(2.0)
-        sl2, cl2 = F.sin(lam2), F.cos(lam2)
-        sp, cp = F.sin(phi), F.cos(phi)
-        q = F.least(cp * cl2, F.lit(1.0))
-        alpha = F.acos(q)
-        sa = F.sin(alpha)
-        t = _wt_T(alpha, sa)
-        # dT/dalpha, with its alpha -> 0 limit alpha/3
-        dt = F.when(alpha < F.lit(_WT_EPS), alpha / F.lit(3.0)) \
-            .otherwise((sa - alpha * F.cos(alpha)) / (sa * sa))
-        # dalpha/dlam, dalpha/dphi (0 at the alpha=0 singularity)
-        dal = F.when(sa < F.lit(_WT_EPS), F.lit(0.0)) \
-            .otherwise(cp * sl2 / (F.lit(2.0) * sa))
-        dap = F.when(sa < F.lit(_WT_EPS), F.lit(0.0)) \
-            .otherwise(sp * cl2 / sa)
-        f1 = F.lit(0.5) * (lam * F.lit(cp1)
-                           + F.lit(2.0) * cp * sl2 * t) - xn
-        f2 = F.lit(0.5) * (phi + sp * t) - yn
-        dxl = F.lit(0.5) * (F.lit(cp1) + F.lit(2.0) * cp
-                            * (F.lit(0.5) * cl2 * t + sl2 * dt * dal))
-        dxp = F.lit(0.5) * (F.lit(-2.0) * sp * sl2 * t
-                            + F.lit(2.0) * cp * sl2 * dt * dap)
-        dyl = F.lit(0.5) * (sp * dt * dal)
-        dyp = F.lit(0.5) * (F.lit(1.0) + cp * t + sp * dt * dap)
-        det = dxl * dyp - dxp * dyl
-        new_lam = lam - (dyp * f1 - dxp * f2) / det
-        new_phi = phi - (dxl * f2 - dyl * f1) / det
-        return (
-            F.least(F.greatest(new_lam, F.lit(-math.pi)), F.lit(math.pi)),
-            F.least(F.greatest(new_phi, F.lit(-math.pi / 2)),
-                    F.lit(math.pi / 2)),
-        )
-
-    def c_lam(env, _s=step):
-        return _s(env)[0]
-
-    def c_phi(env, _s=step):
-        return _s(env)[1]
-
-    # one combined stage would re-evaluate step() twice; emit the pair
-    # into a struct-free two-column stage instead (each fn builds its
-    # own tree — StagedTransform materializes both as columns, so the
-    # NEXT iteration references them without re-expansion)
-    return {"__wl": c_lam, "__wp": c_phi}
-
-
-def _wintri_to_lonlat_fn(crs: str) -> "StagedTransform":
     r, cp1 = WINTRI_PARAMS[crs.upper()]
-
-    def c_xn(env):
-        return env["__in_x"] / F.lit(r)
-
-    def c_yn(env):
-        return env["__in_y"] / F.lit(r)
-
-    def c_l0(env):
-        # exact on the equator: x(lam, 0) = R/2 lam (cos phi1 + 1)
-        l0 = F.lit(2.0) * env["__wxn"] / F.lit(1.0 + cp1)
-        return F.least(F.greatest(l0, F.lit(-math.pi)), F.lit(math.pi))
-
-    def c_p0(env):
+    xn, yn, lam, phi = _cols("__wxn __wyn __wl __wp")
+    lam2 = lam / Q.lit(2.0)
+    sl2, cl2 = Q.sin(lam2), Q.cos(lam2)
+    sp, cp = Q.sin(phi), Q.cos(phi)
+    alpha = Q.acos(Q.least(cp * cl2, Q.lit(1.0)))
+    sa = Q.sin(alpha)
+    t = _wt_T(alpha, sa, Q)
+    # dT/dalpha, with its alpha -> 0 limit alpha/3
+    dt = Q.when(alpha < Q.lit(_WT_EPS), alpha / Q.lit(3.0)) \
+        .otherwise((sa - alpha * Q.cos(alpha)) / (sa * sa))
+    # dalpha/dlam, dalpha/dphi (0 at the alpha=0 singularity)
+    dal = Q.when(sa < Q.lit(_WT_EPS), Q.lit(0.0)) \
+        .otherwise(cp * sl2 / (Q.lit(2.0) * sa))
+    dap = Q.when(sa < Q.lit(_WT_EPS), Q.lit(0.0)) \
+        .otherwise(sp * cl2 / sa)
+    f1 = Q.lit(0.5) * (lam * Q.lit(cp1)
+                       + Q.lit(2.0) * cp * sl2 * t) - xn
+    f2 = Q.lit(0.5) * (phi + sp * t) - yn
+    dxl = Q.lit(0.5) * (Q.lit(cp1) + Q.lit(2.0) * cp
+                        * (Q.lit(0.5) * cl2 * t + sl2 * dt * dal))
+    dxp = Q.lit(0.5) * (Q.lit(-2.0) * sp * sl2 * t
+                        + Q.lit(2.0) * cp * sl2 * dt * dap)
+    dyl = Q.lit(0.5) * (sp * dt * dal)
+    dyp = Q.lit(0.5) * (Q.lit(1.0) + cp * t + sp * dt * dap)
+    det = dxl * dyp - dxp * dyl
+    newton = {
+        "__wl": Q.least(Q.greatest(lam - (dyp * f1 - dxp * f2) / det,
+                                   Q.lit(-math.pi)), Q.lit(math.pi)),
+        "__wp": Q.least(Q.greatest(phi - (dxl * f2 - dyl * f1) / det,
+                                   Q.lit(-math.pi / 2)),
+                        Q.lit(math.pi / 2)),
+    }
+    return [
+        {"__wxn": x / Q.lit(r), "__wyn": y / Q.lit(r)},
+        # exact on the equator: x(lam, 0) = R/2 lam (cos phi1 + 1);
         # exact at the poles and to O(phi^3) near the equator
-        return F.least(F.greatest(env["__wyn"], F.lit(-math.pi / 2)),
-                       F.lit(math.pi / 2))
-
-    def c_lon(env):
-        return F.degrees(env["__wl"])
-
-    def c_lat(env):
-        return F.degrees(env["__wp"])
-
-    stages = [
-        {"__wxn": c_xn, "__wyn": c_yn},
-        {"__wl": c_l0, "__wp": c_p0},
+        {"__wl": Q.least(Q.greatest(Q.lit(2.0) * xn / Q.lit(1.0 + cp1),
+                                    Q.lit(-math.pi)), Q.lit(math.pi)),
+         "__wp": Q.least(Q.greatest(yn, Q.lit(-math.pi / 2)),
+                         Q.lit(math.pi / 2))},
+        *[newton] * _WINTRI_ITERS,
+        {"__out_x": Q.degrees(lam), "__out_y": Q.degrees(phi)},
     ]
-    for it in range(_WINTRI_ITERS):
-        stages.append(_wintri_newton_stage(cp1, it))
-    stages.append({"__out_x": c_lon, "__out_y": c_lat})
-    return StagedTransform(stages)
-
-
-def wintri_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                            src: str = "tgt") -> str:
-    """The SAME Winkel-Tripel Newton inverse as a chain of CTEs over
-    ``src`` (for DuckDB oracles) — identical arithmetic, op order,
-    guards, and iteration count to :func:`_wintri_to_lonlat_fn`.
-    Emits CTEs ``wt0..`` and finally ``wintri_ll`` = ``src`` columns
-    + ``lon``/``lat``."""
-    r, cp1 = WINTRI_PARAMS[crs.upper()]
-    steps = []
-    for it in range(_WINTRI_ITERS):
-        lam, phi = f"__wl{it}", f"__wp{it}"
-        # per-iteration helper CTE (a/sa/t/dt/partials), then update
-        pre = f"""wt{2 * it + 1} AS (
-            SELECT *,
-                   sin({lam} / 2.0) AS __sl2, cos({lam} / 2.0) AS __cl2,
-                   sin({phi}) AS __sp, cos({phi}) AS __cp
-            FROM wt{2 * it}
-        ), wt{2 * it + 1}b AS (
-            SELECT *, acos(LEAST(__cp * __cl2, 1.0)) AS __a FROM wt{2 * it + 1}
-        ), wt{2 * it + 1}c AS (
-            SELECT *, sin(__a) AS __sa,
-                   CASE WHEN __a < {_WT_EPS!r}
-                        THEN 1.0 + __a * __a / 6.0
-                        ELSE __a / sin(__a) END AS __t,
-                   CASE WHEN __a < {_WT_EPS!r} THEN __a / 3.0
-                        ELSE (sin(__a) - __a * cos(__a))
-                             / (sin(__a) * sin(__a)) END AS __dt
-            FROM wt{2 * it + 1}b
-        ), wt{2 * it + 1}d AS (
-            SELECT *,
-                   CASE WHEN __sa < {_WT_EPS!r} THEN 0.0
-                        ELSE __cp * __sl2 / (2.0 * __sa) END AS __dal,
-                   CASE WHEN __sa < {_WT_EPS!r} THEN 0.0
-                        ELSE __sp * __cl2 / __sa END AS __dap,
-                   (0.5 * ({lam} * {cp1!r} + 2.0 * __cp * __sl2 * __t)
-                    - __wxn) AS __f1,
-                   (0.5 * ({phi} + __sp * __t) - __wyn) AS __f2
-            FROM wt{2 * it + 1}c
-        ), wt{2 * it + 1}e AS (
-            SELECT *,
-                   (0.5 * ({cp1!r} + 2.0 * __cp
-                    * (0.5 * __cl2 * __t + __sl2 * __dt * __dal)))
-                       AS __dxl,
-                   (0.5 * (-2.0 * __sp * __sl2 * __t
-                    + 2.0 * __cp * __sl2 * __dt * __dap)) AS __dxp,
-                   (0.5 * (__sp * __dt * __dal)) AS __dyl,
-                   (0.5 * (1.0 + __cp * __t + __sp * __dt * __dap))
-                       AS __dyp
-            FROM wt{2 * it + 1}d
-        ), wt{2 * it + 2} AS (
-            SELECT * EXCLUDE (__sl2, __cl2, __sp, __cp, __a, __sa, __t,
-                              __dt, __dal, __dap, __f1, __f2,
-                              __dxl, __dxp, __dyl, __dyp),
-                   LEAST(GREATEST({lam} - (__dyp * __f1 - __dxp * __f2)
-                                  / (__dxl * __dyp - __dxp * __dyl),
-                                  {-math.pi!r}), {math.pi!r})
-                       AS __wl{it + 1},
-                   LEAST(GREATEST({phi} - (__dxl * __f2 - __dyl * __f1)
-                                  / (__dxl * __dyp - __dxp * __dyl),
-                                  {-math.pi / 2!r}), {math.pi / 2!r})
-                       AS __wp{it + 1}
-            FROM wt{2 * it + 1}e
-        )"""
-        steps.append(pre)
-    last = _WINTRI_ITERS
-    drops = ", ".join(
-        f"__wl{t}, __wp{t}" for t in range(_WINTRI_ITERS + 1))
-    chain = ", ".join(steps)
-    return f"""wt0 AS (
-            SELECT *, (CAST({x_expr} AS DOUBLE) / {r!r}) AS __wxn,
-                   (CAST({y_expr} AS DOUBLE) / {r!r}) AS __wyn,
-                   LEAST(GREATEST(2.0 * (CAST({x_expr} AS DOUBLE)
-                                         / {r!r}) / {1.0 + cp1!r},
-                                  {-math.pi!r}), {math.pi!r}) AS __wl0,
-                   LEAST(GREATEST((CAST({y_expr} AS DOUBLE) / {r!r}),
-                                  {-math.pi / 2!r}), {math.pi / 2!r})
-                       AS __wp0
-            FROM {src}
-        ), {chain}, wintri_ll AS (
-            SELECT * EXCLUDE (__wxn, __wyn, {drops}),
-                   degrees(__wl{last}) AS lon,
-                   degrees(__wp{last}) AS lat
-            FROM wt{2 * _WINTRI_ITERS}
-        )"""
 
 
 # ---- Natural Earth (+proj=natearth) -----------------------------------
@@ -4507,21 +3234,21 @@ NATEARTH_PARAMS: dict[str, float] = {
 _NE_ITERS = 6
 
 
-def _ne_xfac(p2):
-    """x polynomial factor (Column), nested exactly as the SQL twin:
-    A0 + p2*(A1 + p2*(A2 + p2^3*(A3 + p2*A4)))."""
-    a0, a1, a2, a3, a4 = (F.lit(v) for v in _NE_A)
+def _ne_xfac(p2, f=F):
+    """x polynomial factor A0 + p2*(A1 + p2*(A2 + p2^3*(A3 + p2*A4)));
+    ``f`` is ``F`` (forward Columns) or ``Q`` (inverse SQL text)."""
+    a0, a1, a2, a3, a4 = (f.lit(v) for v in _NE_A)
     return a0 + p2 * (a1 + p2 * (a2 + p2 * p2 * p2
                                  * (a3 + p2 * a4)))
 
 
-def _ne_yfac(p2):
-    b0, b1, b2, b3, b4 = (F.lit(v) for v in _NE_B)
+def _ne_yfac(p2, f=F):
+    b0, b1, b2, b3, b4 = (f.lit(v) for v in _NE_B)
     return b0 + p2 * (b1 + p2 * p2 * (b2 + b3 * p2 + b4 * p2 * p2))
 
 
-def _ne_dy(p2):
-    c0, c1, c2, c3, c4 = (F.lit(v) for v in _NE_C)
+def _ne_dy(p2, f=F):
+    c0, c1, c2, c3, c4 = (f.lit(v) for v in _NE_C)
     return c0 + p2 * (c1 + p2 * p2 * (c2 + c3 * p2 + c4 * p2 * p2))
 
 
@@ -4545,77 +3272,20 @@ def _lonlat_to_natearth_fn(crs: str) -> "StagedTransform":
     ])
 
 
-def _natearth_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _natearth_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
+    """Natural Earth E/N -> lon/lat: fixed-count Newton on the
+    latitude polynomial, one stage per iteration."""
     r = NATEARTH_PARAMS[crs.upper()]
-
-    def s_yn(env):
-        return env["__in_y"] / F.lit(r)
-
-    def s_phi0(env):
-        return env["__yn"]  # y/R is within ~7% of phi everywhere
-
-    def step(env):
-        phi = env["__phi"]
-        p2 = phi * phi
-        return phi - (phi * _ne_yfac(p2) - env["__yn"]) / _ne_dy(p2)
-
-    def out_x(env):
-        phi = env["__phi"]
-        p2 = phi * phi
-        return F.degrees(
-            env["__in_x"] / (F.lit(r) * _ne_xfac(p2)))
-
-    def out_y(env):
-        return F.degrees(env["__phi"])
-
-    stages: list[dict] = [{"__yn": s_yn}, {"__phi": s_phi0}]
-    stages += [{"__phi": step} for _ in range(_NE_ITERS)]
-    stages += [{"__out_x": out_x, "__out_y": out_y}]
-    return StagedTransform(stages)
-
-
-def natearth_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                              src: str = "tgt") -> str:
-    """The SAME Natural Earth inverse as a chain of CTEs over ``src``
-    (for DuckDB oracles) — identical nesting and iteration count to
-    :func:`_natearth_to_lonlat_fn`.  Emits CTEs ``ne1..`` and finally
-    ``natearth_ll`` = ``src`` columns + ``lon``/``lat``."""
-    r = NATEARTH_PARAMS[crs.upper()]
-    a0, a1, a2, a3, a4 = _NE_A
-    b0, b1, b2, b3, b4 = _NE_B
-    c0, c1, c2, c3, c4 = _NE_C
-
-    def yfac(p2):
-        return (f"({b0!r} + {p2} * ({b1!r} + {p2} * {p2} "
-                f"* ({b2!r} + {b3!r} * {p2} + {b4!r} * {p2} * {p2})))")
-
-    def dy(p2):
-        return (f"({c0!r} + {p2} * ({c1!r} + {p2} * {p2} "
-                f"* ({c2!r} + {c3!r} * {p2} + {c4!r} * {p2} * {p2})))")
-
-    def xfac(p2):
-        return (f"({a0!r} + {p2} * ({a1!r} + {p2} * ({a2!r} "
-                f"+ {p2} * {p2} * {p2} * ({a3!r} + {p2} * {a4!r}))))")
-
-    iters = "".join(f"""), ne{3 + k} AS (
-            SELECT * EXCLUDE (__phi),
-                   (__phi - (__phi * {yfac('(__phi * __phi)')} - __yn)
-                    / {dy('(__phi * __phi)')}) AS __phi
-            FROM ne{2 + k}""" for k in range(_NE_ITERS))
-    n_last = 2 + _NE_ITERS
-    return f"""ne1 AS (
-            SELECT *, (CAST({y_expr} AS DOUBLE) / {r!r}) AS __yn,
-                   CAST({x_expr} AS DOUBLE) AS __xe
-            FROM {src}
-        ), ne2 AS (
-            SELECT *, __yn AS __phi FROM ne1
-        {iters}), natearth_ll AS (
-            SELECT * EXCLUDE (__yn, __xe, __phi),
-                   degrees(__xe / ({r!r}
-                       * {xfac('(__phi * __phi)')})) AS lon,
-                   degrees(__phi) AS lat
-            FROM ne{n_last}
-        )"""
+    yn, phi = _cols("__yn __phi")
+    p2 = phi * phi
+    return [
+        {"__yn": y / Q.lit(r)},
+        {"__phi": yn},  # y/R is within ~7% of phi everywhere
+        *[{"__phi": phi - (phi * _ne_yfac(p2, Q) - yn)
+           / _ne_dy(p2, Q)}] * _NE_ITERS,
+        {"__out_x": Q.degrees(x / (Q.lit(r) * _ne_xfac(p2, Q))),
+         "__out_y": Q.degrees(phi)},
+    ]
 
 
 # ---- Eckert IV (World_Eckert_IV, ESRI:54012) --------------------------
@@ -4681,32 +3351,15 @@ class _Eck4Forward:
             .drop("__e4_lam", "__e4_sph", "__e4_t")
 
 
-def _eck4_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _eck4_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     r = ECK4_PARAMS[crs.upper()]
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        t = F.asin(y / F.lit(_ECK4_CY * r))
-        phi = F.asin(
-            (t + F.sin(t) * F.cos(t) + F.lit(2.0) * F.sin(t))
-            / F.lit(_ECK4_CP))
-        lon = F.degrees(
-            x / (F.lit(_ECK4_CX * r) * (F.lit(1.0) + F.cos(t))))
-        return lon, F.degrees(phi)
-
-    return inv
-
-
-def eck4_inverse_sql(x_expr: str, y_expr: str, crs: str) \
-        -> tuple[str, str]:
-    """The SAME Eckert-IV inverse as SQL strings (for DuckDB
-    oracles) — identical op order to :func:`_eck4_to_lonlat_fn`."""
-    r = ECK4_PARAMS[crs.upper()]
-    t = f"asin(CAST({y_expr} AS DOUBLE) / {_ECK4_CY * r!r})"
-    phi = (f"degrees(asin(({t} + sin({t}) * cos({t})"
-           f" + 2.0 * sin({t})) / {_ECK4_CP!r}))")
-    lon = (f"degrees(CAST({x_expr} AS DOUBLE) / ({_ECK4_CX * r!r}"
-           f" * (1.0 + cos({t}))))")
-    return lon, phi
+    t = Q.asin(y / Q.lit(_ECK4_CY * r))
+    phi = Q.asin(
+        (t + Q.sin(t) * Q.cos(t) + Q.lit(2.0) * Q.sin(t))
+        / Q.lit(_ECK4_CP))
+    lon = Q.degrees(
+        x / (Q.lit(_ECK4_CX * r) * (Q.lit(1.0) + Q.cos(t))))
+    return _out(lon, Q.degrees(phi))
 
 
 # ---- Miller cylindrical (World_Miller_Cylindrical, ESRI:54003) --------
@@ -4735,27 +3388,13 @@ def _lonlat_to_mill_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _mill_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _mill_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     r = MILL_PARAMS[crs.upper()]
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        lat = F.degrees(F.lit(2.5) * (
-            F.atan(F.exp(F.lit(0.8) * y / F.lit(r)))
-            - F.lit(math.pi / 4.0)))
-        lon = F.degrees(x / F.lit(r))
-        return lon, lat
-
-    return inv
-
-
-def mill_inverse_sql(x_expr: str, y_expr: str, crs: str) \
-        -> tuple[str, str]:
-    """The SAME Miller inverse as SQL strings (for DuckDB oracles)."""
-    r = MILL_PARAMS[crs.upper()]
-    lat = (f"degrees(2.5 * (atan(exp(0.8 * CAST({y_expr} AS DOUBLE)"
-           f" / {r!r})) - {math.pi / 4.0!r}))")
-    lon = f"degrees(CAST({x_expr} AS DOUBLE) / {r!r})"
-    return lon, lat
+    lat = Q.degrees(Q.lit(2.5) * (
+        Q.atan(Q.exp(Q.lit(0.8) * y / Q.lit(r)))
+        - Q.lit(math.pi / 4.0)))
+    lon = Q.degrees(x / Q.lit(r))
+    return _out(lon, lat)
 
 
 # ---- Van der Grinten I (World_Van_der_Grinten_I, ESRI:54029) ----------
@@ -4830,120 +3469,42 @@ def _lonlat_to_vandg_fn(crs: str) -> "StagedTransform":
     return StagedTransform(stages)
 
 
-def _vandg_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _vandg_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
+    """Van der Grinten E/N -> lon/lat: Snyder's closed-form cubic,
+    staged."""
     r = VANDG_PARAMS[crs.upper()]
     pr = math.pi * r
-
-    stages: list[dict] = [
-        {"__X": lambda env: env["__in_x"] / F.lit(pr),
-         "__Y": lambda env: env["__in_y"] / F.lit(pr)},
-        {"__X2": lambda env: env["__X"] * env["__X"],
-         "__Y2": lambda env: env["__Y"] * env["__Y"]},
+    x_, y_, x2, y2, c1, c2, c3, d, a1, m1, t1 = _cols(
+        "__X __Y __X2 __Y2 __c1 __c2 __c3 __d __a1 __m1 __t1")
+    return [
+        {"__X": x / Q.lit(pr), "__Y": y / Q.lit(pr)},
+        {"__X2": x_ * x_, "__Y2": y_ * y_},
         # c1..c3 (33-16..33-18)
-        {"__c1": lambda env: F.lit(-1.0) * F.abs(env["__Y"]) * (
-            F.lit(1.0) + env["__X2"] + env["__Y2"])},
-        {"__c2": lambda env: env["__c1"] - F.lit(2.0) * env["__Y2"]
-            + env["__X2"]},
-        {"__c3": lambda env: F.lit(-2.0) * env["__c1"] + F.lit(1.0)
-            + F.lit(2.0) * env["__Y2"]
-            + (env["__X2"] + env["__Y2"])
-            * (env["__X2"] + env["__Y2"])},
+        {"__c1": Q.lit(-1.0) * Q.abs(y_) * (Q.lit(1.0) + x2 + y2)},
+        {"__c2": c1 - Q.lit(2.0) * y2 + x2},
+        {"__c3": Q.lit(-2.0) * c1 + Q.lit(1.0) + Q.lit(2.0) * y2
+            + (x2 + y2) * (x2 + y2)},
         # d (33-19), a1 (33-20), m1 (33-21), theta1 (33-22)
-        {"__d": lambda env: env["__Y2"] / env["__c3"] + (
-            F.lit(2.0) * env["__c2"] * env["__c2"] * env["__c2"]
-            / (env["__c3"] * env["__c3"] * env["__c3"])
-            - F.lit(9.0) * env["__c1"] * env["__c2"]
-            / (env["__c3"] * env["__c3"])) / F.lit(27.0),
-         "__a1": lambda env: (env["__c1"] - env["__c2"] * env["__c2"]
-                              / (F.lit(3.0) * env["__c3"]))
-            / env["__c3"]},
-        {"__m1": lambda env: F.lit(2.0) * F.sqrt(
-            F.lit(-1.0) * env["__a1"] / F.lit(3.0))},
-        {"__t1": lambda env: F.acos(
-            F.lit(3.0) * env["__d"]
-            / (env["__a1"] * env["__m1"])) / F.lit(3.0)},
+        {"__d": y2 / c3 + (
+            Q.lit(2.0) * c2 * c2 * c2 / (c3 * c3 * c3)
+            - Q.lit(9.0) * c1 * c2 / (c3 * c3)) / Q.lit(27.0),
+         "__a1": (c1 - c2 * c2 / (Q.lit(3.0) * c3)) / c3},
+        {"__m1": Q.lit(2.0) * Q.sqrt(Q.lit(-1.0) * a1 / Q.lit(3.0))},
+        {"__t1": Q.acos(Q.lit(3.0) * d / (a1 * m1)) / Q.lit(3.0)},
         # phi (33-23) guarded at Y = 0; lam (33-15) guarded at X = 0
-        {"__out_y": lambda env: F.when(
-            F.abs(env["__Y"]) < F.lit(1e-12), F.lit(0.0)
-        ).otherwise(F.degrees(
-            F.signum(env["__Y"]) * F.lit(math.pi) * (
-                F.lit(-1.0) * env["__m1"] * F.cos(
-                    env["__t1"] + F.lit(math.pi / 3.0))
-                - env["__c2"] / (F.lit(3.0) * env["__c3"])))),
-         "__out_x": lambda env: F.when(
-            F.abs(env["__X"]) < F.lit(1e-12), F.lit(0.0)
-         ).otherwise(F.degrees(
-            F.lit(math.pi) * (
-                env["__X2"] + env["__Y2"] - F.lit(1.0) + F.sqrt(
-                    F.lit(1.0)
-                    + F.lit(2.0) * (env["__X2"] - env["__Y2"])
-                    + (env["__X2"] + env["__Y2"])
-                    * (env["__X2"] + env["__Y2"])))
-            / (F.lit(2.0) * env["__X"])))},
+        {"__out_y": Q.when(Q.abs(y_) < Q.lit(1e-12), Q.lit(0.0))
+            .otherwise(Q.degrees(
+                Q.signum(y_) * Q.lit(math.pi) * (
+                    Q.lit(-1.0) * m1 * Q.cos(t1 + Q.lit(math.pi / 3.0))
+                    - c2 / (Q.lit(3.0) * c3)))),
+         "__out_x": Q.when(Q.abs(x_) < Q.lit(1e-12), Q.lit(0.0))
+            .otherwise(Q.degrees(
+                Q.lit(math.pi) * (
+                    x2 + y2 - Q.lit(1.0) + Q.sqrt(
+                        Q.lit(1.0) + Q.lit(2.0) * (x2 - y2)
+                        + (x2 + y2) * (x2 + y2)))
+                / (Q.lit(2.0) * x_)))},
     ]
-    return StagedTransform(stages)
-
-
-def vandg_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                           src: str = "tgt") -> str:
-    """The SAME Van der Grinten inverse as a chain of CTEs over
-    ``src`` (for DuckDB oracles) — identical arithmetic to
-    :func:`_vandg_to_lonlat_fn`.  Emits CTEs ``vg1..`` and finally
-    ``vandg_ll`` = ``src`` columns + ``lon``/``lat``."""
-    r = VANDG_PARAMS[crs.upper()]
-    pr = math.pi * r
-    return f"""vg1 AS (
-            SELECT *, (({x_expr}) / {pr!r}) AS __X,
-                   (({y_expr}) / {pr!r}) AS __Y
-            FROM {src}
-        ), vg2 AS (
-            SELECT *, (__X * __X) AS __X2, (__Y * __Y) AS __Y2
-            FROM vg1
-        ), vg3 AS (
-            SELECT *, (-1.0 * abs(__Y)
-                       * (1.0 + __X2 + __Y2)) AS __c1
-            FROM vg2
-        ), vg4 AS (
-            SELECT *, (__c1 - 2.0 * __Y2 + __X2) AS __c2
-            FROM vg3
-        ), vg5 AS (
-            SELECT *, (-2.0 * __c1 + 1.0 + 2.0 * __Y2
-                       + (__X2 + __Y2) * (__X2 + __Y2)) AS __c3
-            FROM vg4
-        ), vg6 AS (
-            SELECT *,
-                   (__Y2 / __c3 + (2.0 * __c2 * __c2 * __c2
-                                   / (__c3 * __c3 * __c3)
-                                   - 9.0 * __c1 * __c2
-                                   / (__c3 * __c3)) / 27.0) AS __d,
-                   ((__c1 - __c2 * __c2 / (3.0 * __c3))
-                    / __c3) AS __a1
-            FROM vg5
-        ), vg7 AS (
-            SELECT *, (2.0 * sqrt(-1.0 * __a1 / 3.0)) AS __m1
-            FROM vg6
-        ), vg8 AS (
-            SELECT *, (acos(3.0 * __d / (__a1 * __m1))
-                       / 3.0) AS __t1
-            FROM vg7
-        ), vandg_ll AS (
-            SELECT * EXCLUDE (__X, __Y, __X2, __Y2, __c1, __c2,
-                              __c3, __d, __a1, __m1, __t1),
-                   CASE WHEN abs(__X) < 1e-12 THEN 0.0
-                        ELSE degrees({math.pi!r} * (
-                            __X2 + __Y2 - 1.0 + sqrt(
-                                1.0 + 2.0 * (__X2 - __Y2)
-                                + (__X2 + __Y2) * (__X2 + __Y2)))
-                            / (2.0 * __X))
-                   END AS lon,
-                   CASE WHEN abs(__Y) < 1e-12 THEN 0.0
-                        ELSE degrees(sign(__Y) * {math.pi!r} * (
-                            -1.0 * __m1 * cos(__t1
-                                + {math.pi / 3.0!r})
-                            - __c2 / (3.0 * __c3)))
-                   END AS lat
-            FROM vg8
-        )"""
 
 
 # ---- sinusoidal (MODIS grid, ESRI:54008) ------------------------------
@@ -4968,22 +3529,10 @@ def _lonlat_to_sinu_fn(crs: str) -> ColumnTransform:
     return fwd
 
 
-def _sinu_to_lonlat_fn(crs: str) -> ColumnTransform:
+def _sinu_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     r = SINU_PARAMS[crs.upper()]
-
-    def inv(x: Column, y: Column) -> tuple[Column, Column]:
-        phi = y / F.lit(r)
-        return F.degrees(x / (F.lit(r) * F.cos(phi))), F.degrees(phi)
-
-    return inv
-
-
-def sinu_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
-    """The SAME sinusoidal inverse as SQL strings (for DuckDB oracles)."""
-    r = SINU_PARAMS[crs.upper()]
-    phi = f"(CAST({y_expr} AS DOUBLE) / {r!r})"
-    lon = f"degrees(CAST({x_expr} AS DOUBLE) / ({r!r} * cos({phi})))"
-    return lon, f"degrees({phi})"
+    phi = y / Q.lit(r)
+    return _out(Q.degrees(x / (Q.lit(r) * Q.cos(phi))), Q.degrees(phi))
 
 
 # ---- Robinson (+proj=robin; ESRI:54030) ---------------------------------
@@ -4995,7 +3544,7 @@ def sinu_inverse_sql(x_expr: str, y_expr: str, crs: str) -> tuple[str, str]:
 # y = 1.3523 R Y(|lat|) sign(lat).  This implementation interpolates
 # with the natural cubic spline through the 19 published nodes
 # (coefficients solved once at import by a pure-Python tridiagonal
-# pass and embedded identically in the Column math and the SQL twin);
+# pass and embedded identically in the forward and the inverse);
 # the inverse solves the monotone Y cubic per interval with a
 # fixed-count Newton (4 iterations — the sterea/somerc discipline:
 # both engines run the SAME count).
@@ -5049,18 +3598,13 @@ ROBIN_PARAMS: dict[str, float] = {
 }
 
 
-def _robin_pick(i: Column, vals: list[float]) -> Column:
-    """CASE ladder selecting a per-interval spline constant."""
-    expr = F.lit(vals[-1])
+def _robin_pick(i, vals: list[float], f=F):
+    """CASE ladder selecting a per-interval spline constant; ``f`` is
+    ``F`` (forward Columns) or ``Q`` (inverse SQL text)."""
+    expr = f.lit(vals[-1])
     for j in range(len(vals) - 2, -1, -1):
-        expr = F.when(i == j, F.lit(vals[j])).otherwise(expr)
+        expr = f.when(i == j, f.lit(vals[j])).otherwise(expr)
     return expr
-
-
-def _robin_pick_sql(i: str, vals: list[float]) -> str:
-    arms = " ".join(f"WHEN {j} THEN {vals[j]!r}"
-                    for j in range(len(vals) - 1))
-    return f"(CASE {i} {arms} ELSE {vals[-1]!r} END)"
 
 
 def _lonlat_to_robin_fn(crs: str) -> "StagedTransform":
@@ -5107,293 +3651,152 @@ def _lonlat_to_robin_fn(crs: str) -> "StagedTransform":
     ])
 
 
-def _robin_to_lonlat_fn(crs: str) -> "StagedTransform":
+def _robin_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
+    """Robinson E/N -> lon/lat: locate the spline interval of |y|,
+    then a fixed-count Newton solve for the in-interval parameter."""
     r = ROBIN_PARAMS[crs.upper()]
     xk, yk = _ROBIN_XK * r, _ROBIN_YK * r
     xa, xb, xc, xd = (list(t) for t in zip(*_ROBIN_XC))
     ya, yb, yc, yd = (list(t) for t in zip(*_ROBIN_YC))
     nodes = list(_ROBIN_Y)
+    ay, i, s = _cols("__ay __i __s")
 
-    def c_ay(env):
-        return F.least(F.abs(env["__in_y"]) / F.lit(yk), F.lit(1.0))
+    def pick(vals):
+        return _robin_pick(i, vals, Q)
 
-    def c_i(env):
-        # largest interval whose lower node <= ay (17 comparisons),
-        # capped at the last interval
-        ay = env["__ay"]
-        i = F.lit(0)
-        for j in range(1, len(nodes) - 1):
-            i = i + F.when(ay >= F.lit(nodes[j]), 1).otherwise(0)
-        return i.cast("int")
-
-    def c_s(env):
-        # linear seed inside the interval
-        i, ay = env["__i"], env["__ay"]
-        lo = _robin_pick(i, nodes[:-1])
-        hi = _robin_pick(i, nodes[1:])
-        return (ay - lo) / (hi - lo)
-
-    def mk_step(env):
-        i, s, ay = env["__i"], env["__s"], env["__ay"]
-        f = (_robin_pick(i, ya) + _robin_pick(i, yb) * s
-             + _robin_pick(i, yc) * s * s
-             + _robin_pick(i, yd) * s * s * s) - ay
-        fp = (_robin_pick(i, yb) + F.lit(2.0) * _robin_pick(i, yc) * s
-              + F.lit(3.0) * _robin_pick(i, yd) * s * s)
-        return s - f / fp
-
-    def c_lat(env):
-        return (F.lit(5.0) * (env["__i"].cast("double") + env["__s"])
-                * F.signum(env["__in_y"] + F.lit(0.0)))
-
-    def c_lon(env):
-        i, s = env["__i"], env["__s"]
-        xf = (_robin_pick(i, xa) + _robin_pick(i, xb) * s
-              + _robin_pick(i, xc) * s * s
-              + _robin_pick(i, xd) * s * s * s)
-        return F.degrees(env["__in_x"] / (F.lit(xk) * xf))
-
-    stages = [{"__ay": c_ay}, {"__i": c_i}, {"__s": c_s}]
-    for _ in range(_ROBIN_ITERS):
-        stages.append({"__s": mk_step})
-    stages.append({"__out_x": c_lon, "__out_y": c_lat})
-    return StagedTransform(stages)
-
-
-def robin_inverse_sql_ctes(x_expr: str, y_expr: str, crs: str,
-                           src: str = "tgt") -> str:
-    """The SAME Robinson inverse as a chain of CTEs over ``src`` (for
-    DuckDB oracles) — identical arithmetic and Newton count to
-    :func:`_robin_to_lonlat_fn`.  Emits CTEs ``rb1..`` and finally
-    ``robin_ll`` = ``src`` columns + ``lon``/``lat``."""
-    r = ROBIN_PARAMS[crs.upper()]
-    xk, yk = _ROBIN_XK * r, _ROBIN_YK * r
-    xa, xb, xc, xd = (list(t) for t in zip(*_ROBIN_XC))
-    ya, yb, yc, yd = (list(t) for t in zip(*_ROBIN_YC))
-    nodes = list(_ROBIN_Y)
-    isum = " + ".join(
-        f"(CASE WHEN __ay >= {nodes[j]!r} THEN 1 ELSE 0 END)"
-        for j in range(1, len(nodes) - 1))
-    steps = []
-    for t in range(_ROBIN_ITERS):
-        cur, nxt = f"__s{t}", f"__s{t + 1}"
-        f = (f"({_robin_pick_sql('__i', list(ya))} "
-             f"+ {_robin_pick_sql('__i', list(yb))} * {cur} "
-             f"+ {_robin_pick_sql('__i', list(yc))} * {cur} * {cur} "
-             f"+ {_robin_pick_sql('__i', list(yd))} * {cur} * {cur}"
-             f" * {cur}) - __ay")
-        fp = (f"({_robin_pick_sql('__i', list(yb))} "
-              f"+ 2.0 * {_robin_pick_sql('__i', list(yc))} * {cur} "
-              f"+ 3.0 * {_robin_pick_sql('__i', list(yd))} * {cur}"
-              f" * {cur})")
-        steps.append(f"""rb{4 + t} AS (
-            SELECT *, ({cur} - ({f}) / {fp}) AS {nxt}
-            FROM rb{3 + t}
-        )""")
-    last = f"__s{_ROBIN_ITERS}"
-    xf = (f"({_robin_pick_sql('__i', list(xa))} "
-          f"+ {_robin_pick_sql('__i', list(xb))} * {last} "
-          f"+ {_robin_pick_sql('__i', list(xc))} * {last} * {last} "
-          f"+ {_robin_pick_sql('__i', list(xd))} * {last} * {last}"
-          f" * {last})")
-    lo = _robin_pick_sql("__i", nodes[:-1])
-    hi = _robin_pick_sql("__i", nodes[1:])
-    chain = ", ".join(steps)
-    return f"""rb1 AS (
-            SELECT *, LEAST(abs({y_expr}) / {yk!r}, 1.0) AS __ay,
-                   ({x_expr}) AS __rx, ({y_expr}) AS __ry
-            FROM {src}
-        ), rb2 AS (
-            SELECT *, CAST(({isum}) AS INT) AS __i FROM rb1
-        ), rb3 AS (
-            SELECT *, ((__ay - {lo}) / ({hi} - {lo})) AS __s0
-            FROM rb2
-        ), {chain}, robin_ll AS (
-            SELECT * EXCLUDE (__ay, __rx, __ry, __i,
-                              {", ".join(f"__s{t}" for t in
-                                         range(_ROBIN_ITERS + 1))}),
-                   degrees(__rx / ({xk!r} * {xf})) AS lon,
-                   (5.0 * (CAST(__i AS DOUBLE) + {last})
-                    * CASE WHEN (__ry + 0.0) > 0.0 THEN 1.0
-                           WHEN (__ry + 0.0) < 0.0 THEN -1.0
-                           ELSE 0.0 END) AS lat
-            FROM rb{3 + _ROBIN_ITERS}
-        )"""
+    # largest interval whose lower node <= ay (17 comparisons),
+    # capped at the last interval
+    idx = Q.lit(0)
+    for j in range(1, len(nodes) - 1):
+        idx = idx + Q.when(ay >= Q.lit(nodes[j]), 1).otherwise(0)
+    lo, hi = pick(nodes[:-1]), pick(nodes[1:])
+    f = (pick(ya) + pick(yb) * s + pick(yc) * s * s
+         + pick(yd) * s * s * s) - ay
+    fp = (pick(yb) + Q.lit(2.0) * pick(yc) * s
+          + Q.lit(3.0) * pick(yd) * s * s)
+    xf = (pick(xa) + pick(xb) * s + pick(xc) * s * s
+          + pick(xd) * s * s * s)
+    return [
+        {"__ay": Q.least(Q.abs(y) / Q.lit(yk), Q.lit(1.0))},
+        {"__i": idx.cast("int")},
+        {"__s": (ay - lo) / (hi - lo)},  # linear seed in the interval
+        *[{"__s": s - f / fp}] * _ROBIN_ITERS,
+        {"__out_x": Q.degrees(x / (Q.lit(xk) * xf)),
+         "__out_y": (Q.lit(5.0) * (i.cast("double") + s)
+                     * Q.signum(y + Q.lit(0.0)))},
+    ]
 
 
 #: registry of pure-Column CRS transforms (target CRS -> source CRS)
-COLUMN_TRANSFORMS: dict[tuple[str, str], ColumnTransform] = {
-    ("EPSG:4326", "EPSG:4326"): _identity,
-    ("EPSG:3857", "EPSG:3857"): _identity,
-    ("EPSG:3857", "EPSG:4326"): _mercator_to_lonlat,
-    ("EPSG:4326", "EPSG:3857"): _lonlat_to_mercator,
-}
+#: one row per CRS family, in match order: (matcher, inverse stages
+#: function, forward factory).  The matcher is a params table / set of
+#: CRS keys, or a parser returning a truthy value for a match.
+_FAMILIES: tuple = (
+    ({"EPSG:3857"}, _mercator_inverse, lambda crs: _lonlat_to_mercator),
+    (MERC_PARAMS, _merc_inverse, _lonlat_to_merc_fn),
+    (GEOS_PARAMS, _geos_inverse, _lonlat_to_geos_fn),
+    (ROTPOLE_PARAMS, _rotpole_inverse, _lonlat_to_rotpole_fn),
+    (STEREA_PARAMS, _sterea_inverse, _lonlat_to_sterea_fn),
+    (SOMERC_PARAMS, _somerc_inverse, _lonlat_to_somerc_fn),
+    (KROVAK_PARAMS, _krovak_inverse, _lonlat_to_krovak_fn),
+    (EQEARTH_PARAMS, _eqearth_inverse, _lonlat_to_eqearth_fn),
+    (CASS_PARAMS, _cass_inverse, _lonlat_to_cass_fn),
+    (POLY_PARAMS, _poly_inverse, _lonlat_to_poly_fn),
+    (PS_PARAMS, _ps_inverse, _lonlat_to_ps_fn),
+    (CEA_PARAMS, _cea_inverse, _lonlat_to_cea_fn),
+    (AEQD_PARAMS, _aeqd_inverse, _lonlat_to_aeqd_fn),
+    (ORTHO_PARAMS, _ortho_inverse, _lonlat_to_ortho_fn),
+    (NSPER_PARAMS, _nsper_inverse, _lonlat_to_nsper_fn),
+    (STEREG_PARAMS, _stereg_inverse, _lonlat_to_stereg_fn),
+    (OMERC_PARAMS, _omerc_inverse, _lonlat_to_omerc_fn),
+    (EQC_PARAMS, _eqc_inverse, _lonlat_to_eqc_fn),
+    (EQDC_PARAMS, _eqdc_inverse, _lonlat_to_eqdc_fn),
+    (LAEA_PARAMS, _laea_inverse, _lonlat_to_laea_fn),
+    (LCC_PARAMS, _lcc_inverse, _lonlat_to_lcc_fn),
+    (AEA_PARAMS, _aea_inverse, _lonlat_to_aea_fn),
+    (SINU_PARAMS, _sinu_inverse, _lonlat_to_sinu_fn),
+    (MOLL_PARAMS, _moll_inverse, _MollForward),
+    (ECK4_PARAMS, _eck4_inverse, _Eck4Forward),
+    (NATEARTH_PARAMS, _natearth_inverse, _lonlat_to_natearth_fn),
+    (GNOM_PARAMS, _gnom_inverse, _lonlat_to_gnom_fn),
+    (MILL_PARAMS, _mill_inverse, _lonlat_to_mill_fn),
+    (VANDG_PARAMS, _vandg_inverse, _lonlat_to_vandg_fn),
+    (ROBIN_PARAMS, _robin_inverse, _lonlat_to_robin_fn),
+    (HAMMER_PARAMS, _hammer_inverse, _lonlat_to_hammer_fn),
+    (IGH_PARAMS, _igh_inverse, _IghForward),
+    (WINTRI_PARAMS, _wintri_inverse, _lonlat_to_wintri_fn),
+    ({"EPSG:27700"}, _osgb_inverse, lambda crs: _lonlat_to_osgb_fn()),
+    (TM_PARAMS, _tm_inverse, _lonlat_to_tm_fn),
+    (parse_utm_crs, _utm_inverse,
+     lambda crs: _lonlat_to_utm_fn(*parse_utm_crs(crs))),
+)
 
 
-def _to_lonlat_fn(crs: str) -> ColumnTransform | None:
-    """Closed-form transform from ``crs`` into EPSG:4326, if known."""
+def _family(crs: str) -> tuple | None:
     up = crs.upper()
-    if up == "EPSG:4326":
-        return _identity
-    if up == "EPSG:3857":
-        return _mercator_to_lonlat
-    if up in MERC_PARAMS:
-        return _merc_to_lonlat_fn(up)
-    if up in GEOS_PARAMS:
-        return _geos_to_lonlat_fn(up)
-    if up in ROTPOLE_PARAMS:
-        return _rotpole_to_lonlat_fn(up)
-    if up in STEREA_PARAMS:
-        return _sterea_to_lonlat_fn(up)
-    if up in SOMERC_PARAMS:
-        return _somerc_to_lonlat_fn(up)
-    if up in KROVAK_PARAMS:
-        return _krovak_to_lonlat_fn(up)
-    if up in EQEARTH_PARAMS:
-        return _eqearth_to_lonlat_fn(up)
-    if up in CASS_PARAMS:
-        return _cass_to_lonlat_fn(up)
-    if up in POLY_PARAMS:
-        return _poly_to_lonlat_fn(up)
-    if up in PS_PARAMS:
-        return _ps_to_lonlat_fn(up)
-    if up in CEA_PARAMS:
-        return _cea_to_lonlat_fn(up)
-    if up in AEQD_PARAMS:
-        return _aeqd_to_lonlat_fn(up)
-    if up in ORTHO_PARAMS:
-        return _ortho_to_lonlat_fn(up)
-    if up in NSPER_PARAMS:
-        return _nsper_to_lonlat_fn(up)
-    if up in STEREG_PARAMS:
-        return _stereg_to_lonlat_fn(up)
-    if up in OMERC_PARAMS:
-        return _omerc_to_lonlat_fn(up)
-    if up in EQC_PARAMS:
-        return _eqc_to_lonlat_fn(up)
-    if up in EQDC_PARAMS:
-        return _eqdc_to_lonlat_fn(up)
-    if up in LAEA_PARAMS:
-        return _laea_to_lonlat_fn(up)
-    if up in LCC_PARAMS:
-        return _lcc_to_lonlat_fn(up)
-    if up in AEA_PARAMS:
-        return _aea_to_lonlat_fn(up)
-    if up in SINU_PARAMS:
-        return _sinu_to_lonlat_fn(up)
-    if up in MOLL_PARAMS:
-        return _moll_to_lonlat_fn(up)
-    if up in ECK4_PARAMS:
-        return _eck4_to_lonlat_fn(up)
-    if up in NATEARTH_PARAMS:
-        return _natearth_to_lonlat_fn(up)
-    if up in GNOM_PARAMS:
-        return _gnom_to_lonlat_fn(up)
-    if up in MILL_PARAMS:
-        return _mill_to_lonlat_fn(up)
-    if up in VANDG_PARAMS:
-        return _vandg_to_lonlat_fn(up)
-    if up in ROBIN_PARAMS:
-        return _robin_to_lonlat_fn(up)
-    if up in HAMMER_PARAMS:
-        return _hammer_to_lonlat_fn(up)
-    if up in IGH_PARAMS:
-        return _igh_to_lonlat_fn(up)
-    if up in WINTRI_PARAMS:
-        return _wintri_to_lonlat_fn(up)
-    if up == "EPSG:27700":
-        return _osgb_to_lonlat_fn()
-    if up in TM_PARAMS:
-        return _tm_to_lonlat_fn(up)
-    utm = parse_utm_crs(up)
-    if utm:
-        return _utm_to_lonlat_fn(*utm)
+    for row in _FAMILIES:
+        if (row[0](up) if callable(row[0]) else up in row[0]):
+            return row
     return None
 
 
-def _from_lonlat_fn(crs: str) -> ColumnTransform | None:
-    """Closed-form transform from EPSG:4326 into ``crs``, if known."""
+def _to_lonlat_fn(crs: str) -> SqlInverse | None:
+    """Closed-form inverse from ``crs`` into EPSG:4326, if known."""
+    row = _family(crs)
+    if row is None:
+        return None
     up = crs.upper()
-    if up == "EPSG:4326":
-        return _identity
-    if up == "EPSG:3857":
-        return _lonlat_to_mercator
-    if up in MERC_PARAMS:
-        return _lonlat_to_merc_fn(up)
-    if up in GEOS_PARAMS:
-        return _lonlat_to_geos_fn(up)
-    if up in ROTPOLE_PARAMS:
-        return _lonlat_to_rotpole_fn(up)
-    if up in STEREA_PARAMS:
-        return _lonlat_to_sterea_fn(up)
-    if up in SOMERC_PARAMS:
-        return _lonlat_to_somerc_fn(up)
-    if up in KROVAK_PARAMS:
-        return _lonlat_to_krovak_fn(up)
-    if up in EQEARTH_PARAMS:
-        return _lonlat_to_eqearth_fn(up)
-    if up in CASS_PARAMS:
-        return _lonlat_to_cass_fn(up)
-    if up in POLY_PARAMS:
-        return _lonlat_to_poly_fn(up)
-    if up in PS_PARAMS:
-        return _lonlat_to_ps_fn(up)
-    if up in CEA_PARAMS:
-        return _lonlat_to_cea_fn(up)
-    if up in AEQD_PARAMS:
-        return _lonlat_to_aeqd_fn(up)
-    if up in ORTHO_PARAMS:
-        return _lonlat_to_ortho_fn(up)
-    if up in NSPER_PARAMS:
-        return _lonlat_to_nsper_fn(up)
-    if up in STEREG_PARAMS:
-        return _lonlat_to_stereg_fn(up)
-    if up in OMERC_PARAMS:
-        return _lonlat_to_omerc_fn(up)
-    if up in EQC_PARAMS:
-        return _lonlat_to_eqc_fn(up)
-    if up in EQDC_PARAMS:
-        return _lonlat_to_eqdc_fn(up)
-    if up in LAEA_PARAMS:
-        return _lonlat_to_laea_fn(up)
-    if up in LCC_PARAMS:
-        return _lonlat_to_lcc_fn(up)
-    if up in AEA_PARAMS:
-        return _lonlat_to_aea_fn(up)
-    if up in SINU_PARAMS:
-        return _lonlat_to_sinu_fn(up)
-    if up in MOLL_PARAMS:
-        return _MollForward(up)
-    if up in ECK4_PARAMS:
-        return _Eck4Forward(up)
-    if up in NATEARTH_PARAMS:
-        return _lonlat_to_natearth_fn(up)
-    if up in GNOM_PARAMS:
-        return _lonlat_to_gnom_fn(up)
-    if up in MILL_PARAMS:
-        return _lonlat_to_mill_fn(up)
-    if up in VANDG_PARAMS:
-        return _lonlat_to_vandg_fn(up)
-    if up in ROBIN_PARAMS:
-        return _lonlat_to_robin_fn(up)
-    if up in HAMMER_PARAMS:
-        return _lonlat_to_hammer_fn(up)
-    if up in IGH_PARAMS:
-        return _IghForward(up)
-    if up in WINTRI_PARAMS:
-        return _lonlat_to_wintri_fn(up)
-    if up == "EPSG:27700":
-        return _lonlat_to_osgb_fn()
-    if up in TM_PARAMS:
-        return _lonlat_to_tm_fn(up)
-    utm = parse_utm_crs(up)
-    if utm:
-        return _lonlat_to_utm_fn(*utm)
-    return None
+    return SqlInverse(lambda x, y: row[1](x, y, up))
 
 
-def get_transform(src_crs, dst_crs) -> ColumnTransform:
-    """Transform from ``src_crs`` coords into ``dst_crs`` coords.
+def _from_lonlat_fn(crs: str):
+    """Closed-form forward from EPSG:4326 into ``crs``, if known."""
+    row = _family(crs)
+    return None if row is None else row[2](crs.upper())
+
+
+def _stages_sql(crs, x: str, y: str) -> list[dict]:
+    from xcube_spark.operators.resampling.crsparse import resolve_crs
+
+    inv = _to_lonlat_fn(resolve_crs(crs))
+    if inv is None:
+        raise ValueError(f"no closed-form inverse for {crs}")
+    return inv.build(_Sql(f"({x})"), _Sql(f"({y})"))
+
+
+def inverse_sql(crs, x: str, y: str) -> tuple[str, str]:
+    """A single-stage inverse as DuckDB SQL over the input texts
+    ``x``/``y``: returns (lon_sql, lat_sql)."""
+    stages = _stages_sql(crs, x, y)
+    if len(stages) != 1:
+        raise ValueError(f"{crs}: multi-stage inverse, use inverse_sql_ctes")
+    return _duckdb(stages[0]["__out_x"]), _duckdb(stages[0]["__out_y"])
+
+
+def inverse_sql_ctes(crs, x: str, y: str, src: str = "tgt") -> str:
+    """An inverse as DuckDB CTEs over ``src`` ending in ``ll`` = the
+    ``src`` columns + ``lon``/``lat``; ``x``/``y`` are SQL over ``src``.
+    A multi-stage inverse gets one CTE per stage (``ll1``, ``ll2``, ...)."""
+    stages = _stages_sql(crs, x, y)
+    if len(stages) == 1:
+        lon, lat = inverse_sql(crs, x, y)
+        return f"ll AS (SELECT *, {lon} AS lon, {lat} AS lat FROM {src})"
+    ctes, names, prev = [], [], src
+    for i, stage in enumerate(stages, start=1):
+        again = [n for n in stage if n in names]
+        excl = f" EXCLUDE ({', '.join(again)})" if again else ""
+        cols = ", ".join(f"{_duckdb(t)} AS {n}" for n, t in stage.items())
+        ctes.append(f"ll{i} AS (SELECT *{excl}, {cols} FROM {prev})")
+        names += [n for n in stage if n not in names]
+        prev = f"ll{i}"
+    ctes.append(f"ll AS (SELECT * EXCLUDE ({', '.join(names)}), "
+                f"__out_x AS lon, __out_y AS lat FROM {prev})")
+    return ",\n        ".join(ctes)
+
+
+def get_transform(src_crs, dst_crs):
+    """Transform from ``src_crs`` coords into ``dst_crs`` coords, for
+    :func:`apply_transform_df`.
 
     Each CRS may be an authority string (``EPSG:32633``), a PROJ.4
     parameter string (``+proj=tmerc +lat_0=…``), or a CF grid-mapping
@@ -5403,34 +3806,27 @@ def get_transform(src_crs, dst_crs) -> ColumnTransform:
     `pyproj.CRS.from_cf` / arbitrary-CRS transforms at
     `xcube/core/gridmapping/cfconv.py:211`, `transform.py`).
 
-    Prefers the pure-Column registry; falls back to a pyproj-backed
-    pandas_udf when the package is available (it is not baked into this
-    container — the fallback raises with a clear message otherwise)."""
+    Equal CRSs map through the identity; otherwise the closed-form
+    families (``_FAMILIES``) chain through a 4326 hop.  Pairs outside
+    them fall back to a pyproj-backed pandas_udf when the package is
+    available (it is not baked into this container — the fallback
+    raises with a clear message otherwise)."""
     from xcube_spark.operators.resampling.crsparse import resolve_crs
 
     src_crs = resolve_crs(src_crs)
     dst_crs = resolve_crs(dst_crs)
-    key = (src_crs, dst_crs)
-    if key in COLUMN_TRANSFORMS:
-        return COLUMN_TRANSFORMS[key]
-    # any pair that closed-form-resolves through lon/lat chains via a
-    # 4326 hop (UTM zones and polar stereographics have no per-CRS
-    # registry entries — they parse/lookup here)
-    to_ll = _to_lonlat_fn(src_crs)
-    from_ll = _from_lonlat_fn(dst_crs)
+    if src_crs.upper() == dst_crs.upper():
+        return _identity
+    to_ll = (_identity if src_crs.upper() == "EPSG:4326"
+             else _to_lonlat_fn(src_crs))
+    from_ll = (_identity if dst_crs.upper() == "EPSG:4326"
+               else _from_lonlat_fn(dst_crs))
     if to_ll is not None and from_ll is not None:
-        if dst_crs.upper() == "EPSG:4326":
+        if from_ll is _identity:
             return to_ll
-        if src_crs.upper() == "EPSG:4326":
+        if to_ll is _identity:
             return from_ll
-
-        if hasattr(to_ll, "apply_df") or hasattr(from_ll, "apply_df"):
-            return _ChainedTransform(to_ll, from_ll)
-
-        def chain(x: Column, y: Column) -> tuple[Column, Column]:
-            return from_ll(*to_ll(x, y))
-
-        return chain
+        return _Chain(to_ll, from_ll)
     try:  # pragma: no cover - pyproj absent in the build container
         import numpy as np  # noqa: F401
         import pandas as pd
@@ -5457,9 +3853,9 @@ def get_transform(src_crs, dst_crs) -> ColumnTransform:
         return transform
     except ImportError as exc:
         raise NotImplementedError(
-            f"no Column transform registered for {src_crs} -> {dst_crs} "
-            "and pyproj is not installed; register one in "
-            "COLUMN_TRANSFORMS or install pyproj"
+            f"no closed-form transform for {src_crs} -> {dst_crs} "
+            "and pyproj is not installed; add a CRS family to "
+            "_FAMILIES in reproject.py or install pyproj"
         ) from exc
 
 
@@ -5486,20 +3882,12 @@ def reproject_dataset(
     )
     tx = target.x_center_expr(F.col("x_i"))
     ty = target.y_center_expr(F.col("y_i"))
-    if hasattr(transform, "sql_fn"):
-        # string-built transform (UTM family): the whole series tree
-        # arrives as one parsed SQL expression per output instead of
-        # hundreds of Column-API py4j round trips per plan build; the
-        # parsed tree is the identical expression (r12)
-        sx_sql, sy_sql = transform.sql_fn(
-            target.x_center_sql("x_i"), target.y_center_sql("y_i"))
-        tgt = tgt.withColumns(
-            {"__tsx": F.expr(sx_sql), "__tsy": F.expr(sy_sql)})
-    else:
-        # staged transforms (datum-hop CRSs) materialize intermediates
-        # as aliased columns — one Column tree would be exponentially
-        # large
-        tgt = apply_transform_df(tgt, transform, tx, ty, "__tsx", "__tsy")
+    # SQL-text inputs: a single-stage inverse inlines them into one
+    # parsed expression per output (one server-side parse instead of
+    # hundreds of Column-API py4j round trips per plan build)
+    tgt = apply_transform_df(
+        tgt, transform, target.x_center_sql("x_i"),
+        target.y_center_sql("y_i"), "__tsx", "__tsy")
     tgt = tgt.select(
         "t_i", "y_i", "x_i",
         target.time_center_expr(F.col("t_i")).alias("time"),
@@ -5515,7 +3903,7 @@ def reproject_dataset(
         F.col("x_i").alias("__ssx"),
         *vars_,
     )
-    if hasattr(transform, "apply_df"):
+    if _staged(transform):
         # staged transforms (datum hops, fixed-count Newton solves)
         # are deep alias chains; Dynamic Partition Pruning's join-key
         # lineage walk (PartitionPruning.findExpressionAndTrackLineageDown)

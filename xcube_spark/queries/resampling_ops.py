@@ -163,6 +163,40 @@ def cube_rectify_swath(spark, sf_dir):
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
+# ---- reproject: DuckDB oracle shared by the cube_reproject_* queries ---
+
+from xcube_spark.operators.resampling.reproject import inverse_sql_ctes
+
+
+def _reproject_oracle(target: CubeGrid) -> str:
+    """The oracle of ``reproject_dataset(cube A on GRID -> target)``:
+    the target cells, the target CRS inverse over their centers (the
+    engine's own inverse text, rendered for DuckDB: one ``ll`` CTE, or
+    a CTE per stage), and the nearest gather on the 1-degree source.
+    Since engine and oracle share the inverse text, the inverse itself
+    is checked by tests/test_crs_control_points.py and the round-trip
+    tests, not by this gate."""
+    plane = target.width * target.height
+    return f"""
+        {CUBE_CTE},
+        tgt AS (
+            SELECT CAST(range // {plane} AS INT) AS t_i,
+                   CAST((range % {plane}) // {target.width} AS INT) AS y_i,
+                   CAST(range % {target.width} AS INT) AS x_i
+            FROM range({target.size})
+        ), {inverse_sql_ctes(target.crs, target.x_center_sql(),
+                             target.y_center_sql())}, f AS (
+            SELECT t_i, y_i, x_i,
+                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
+                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
+            FROM ll
+        )
+        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
+        FROM f LEFT JOIN cube c
+          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
+    """
+
+
 # ---- reproject: Web-Mercator target -----------------------------------
 
 _MERC = CubeGrid(width=36, height=20, time_periods=GRID.time_periods,
@@ -174,39 +208,13 @@ _MERC = CubeGrid(width=36, height=20, time_periods=GRID.time_periods,
 
 @query(
     "cube_reproject_mercator",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 720 AS INT) AS t_i,
-                   CAST((range % 720) // 36 AS INT) AS y_i,
-                   CAST(range % 36 AS INT) AS x_i
-            FROM range({_MERC.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   (-2000000.0 + (x_i + 0.5) * 200000.0)
-                       / 111319.49079327358 AS lon,
-                   degrees(atan((exp((-2000000.0 + (y_i + 0.5) * 200000.0)
-                                     / 6378137.0)
-                                 - exp(-((-2000000.0 + (y_i + 0.5)
-                                          * 200000.0) / 6378137.0))) / 2))
-                       AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_MERC),
 )
 def cube_reproject_mercator(spark, sf_dir):
     """reproject_dataset (reproject.py:27-507): EPSG:3857 target grid
-    over the EPSG:4326 source; the oracle applies the closed-form
-    Web-Mercator inverse (sinh written as (e^z - e^-z)/2) and re-derives
-    the nearest gather.  Index math is ulp-robust: target centers land
+    over the EPSG:4326 source; the oracle renders the same closed-form
+    Web-Mercator inverse for DuckDB (sinh written as (e^z - e^-z)/2)
+    and re-derives the nearest gather.  Index math is ulp-robust: target centers land
     well inside source cells."""
     out = reproject_dataset(_cube_a(spark), GRID, _MERC)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
@@ -248,7 +256,6 @@ def cube_rectify_idw(spark, sf_dir):
 
 # ---- reproject: UTM (transverse Mercator) target ----------------------
 
-from xcube_spark.operators.resampling.reproject import utm_inverse_sql
 
 _UTM = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 x_start=200_000.0, y_start=3_800_000.0,
@@ -256,44 +263,18 @@ _UTM = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="EPSG:32633")
 
-_UTM_LON, _UTM_LAT = utm_inverse_sql(
-    "(200000.0 + (x_i + 0.5) * 20000.0)",
-    "(3800000.0 + (y_i + 0.5) * 20000.0)", zone=33)
-
 
 @query(
     "cube_reproject_utm",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_UTM.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_UTM_LON} AS lon,
-                   {_UTM_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_UTM),
 )
 def cube_reproject_utm(spark, sf_dir):
     """reproject_dataset onto a UTM zone-33 grid — the reference's most
     common real reprojection (core/gridmapping/transform.py, pyproj
     CRS).  The closed-form Krueger-series transverse-Mercator inverse
-    (reproject.py:_utm_to_lonlat_fn; public geodesy math, 3rd order in
-    the third flattening) runs as pure Column arithmetic; the oracle
-    states the identical series in SQL (utm_inverse_sql) and re-derives
-    the nearest gather.  Target centers land well inside 1-degree
+    (reproject.py:_utm_inverse; public geodesy math, 3rd order in the
+    third flattening) is one SQL expression per output, which the
+    oracle renders for DuckDB before re-deriving the nearest gather.  Target centers land well inside 1-degree
     source cells, so sub-ulp libm differences between engines cannot
     flip an index."""
     out = reproject_dataset(_cube_a(spark), GRID, _UTM)
@@ -302,7 +283,6 @@ def cube_reproject_utm(spark, sf_dir):
 
 # ---- reproject: polar stereographic (EPSG:3413) target ----------------
 
-from xcube_spark.operators.resampling.reproject import ps_inverse_sql
 
 _PS = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                x_start=-800_000.0, y_start=-3_300_000.0,
@@ -310,42 +290,17 @@ _PS = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                crs="EPSG:3413")
 
-_PS_LON, _PS_LAT = ps_inverse_sql(
-    "(-800000.0 + (x_i + 0.5) * 40000.0)",
-    "(-3300000.0 + (y_i + 0.5) * 40000.0)", crs="EPSG:3413")
-
 
 @query(
     "cube_reproject_polar",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_PS.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_PS_LON} AS lon,
-                   {_PS_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_PS),
 )
 def cube_reproject_polar(spark, sf_dir):
     """reproject_dataset onto an NSIDC polar-stereographic grid
     (EPSG:3413, Snyder ellipsoidal closed form — reproject.py
-    _ps_to_lonlat_fn): the polar satellite CRS the reference handles
-    through pyproj.  Pure Column inverse inside codegen; the oracle
-    states the identical chi -> phi series in SQL (ps_inverse_sql).
+    _ps_inverse): the polar satellite CRS the reference handles
+    through pyproj.  One-stage inverse inside codegen; the oracle runs
+    the same chi -> phi series text in DuckDB.
     Target centers (lat 59-75N over Greenland) land well inside
     1-degree source cells, so sub-ulp libm differences cannot flip a
     gather index."""
@@ -355,7 +310,6 @@ def cube_reproject_polar(spark, sf_dir):
 
 # ---- reproject: ETRS89-LAEA (EPSG:3035) target ------------------------
 
-from xcube_spark.operators.resampling.reproject import laea_inverse_sql
 
 _LAEA = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  x_start=3_200_000.0, y_start=2_200_000.0,
@@ -363,35 +317,10 @@ _LAEA = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="EPSG:3035")
 
-_LAEA_LON, _LAEA_LAT = laea_inverse_sql(
-    "(3200000.0 + (x_i + 0.5) * 50000.0)",
-    "(2200000.0 + (y_i + 0.5) * 50000.0)", crs="EPSG:3035")
-
 
 @query(
     "cube_reproject_laea",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_LAEA.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_LAEA_LON} AS lon,
-                   {_LAEA_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_LAEA),
 )
 def cube_reproject_laea(spark, sf_dir):
     """reproject_dataset onto the ETRS89-LAEA European grid
@@ -399,9 +328,8 @@ def cube_reproject_laea(spark, sf_dir):
     (core/gridmapping/transform.py:8-9 via pyproj; judged missing in
     round 3).  Ellipsoidal Lambert azimuthal equal-area from Snyder
     1987 (authalic-latitude q, eq. 24-2..31 + the beta -> phi 3-18
-    series) as pure Column arithmetic inside codegen — no pyproj, no
-    UDF; the oracle states the identical inverse in SQL
-    (laea_inverse_sql).  The 50 km target centers (lon -9.5..25.3,
+    series) as one-stage arithmetic inside codegen — no pyproj, no
+    UDF; the oracle runs the same inverse text in DuckDB.  The 50 km target centers (lon -9.5..25.3,
     lat 42.3..60.7) sit >= 3.9e-4 deg from any 1-degree source cell
     edge, so sub-ulp libm differences cannot flip a gather index."""
     out = reproject_dataset(_cube_a(spark), GRID, _LAEA)
@@ -410,7 +338,6 @@ def cube_reproject_laea(spark, sf_dir):
 
 # ---- reproject: RGF93 / Lambert-93 (EPSG:2154) target ------------------
 
-from xcube_spark.operators.resampling.reproject import lcc_inverse_sql
 
 _LCC = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 x_start=200_000.0, y_start=6_100_000.0,
@@ -418,35 +345,10 @@ _LCC = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="EPSG:2154")
 
-_LCC_LON, _LCC_LAT = lcc_inverse_sql(
-    "(200000.0 + (x_i + 0.5) * 25000.0)",
-    "(6100000.0 + (y_i + 0.5) * 25000.0)", crs="EPSG:2154")
-
 
 @query(
     "cube_reproject_lcc",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_LCC.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_LCC_LON} AS lon,
-                   {_LCC_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_LCC),
 )
 def cube_reproject_lcc(spark, sf_dir):
     """reproject_dataset onto the French national grid (RGF93 /
@@ -454,8 +356,8 @@ def cube_reproject_lcc(spark, sf_dir):
     CRS the reference reaches through pyproj
     (core/gridmapping/transform.py:8-9).  Ellipsoidal LCC-2SP from
     Snyder 1987 (eqs. 15-1..15-11 + the chi -> phi 3-5 series) as
-    pure Column arithmetic inside codegen; the oracle states the
-    identical inverse in SQL (lcc_inverse_sql).  The 25 km target
+    one-stage arithmetic inside codegen; the oracle runs the same
+    inverse text in DuckDB.  The 25 km target
     centers sit well away from any 1-degree source cell edge, so
     sub-ulp libm differences cannot flip a gather index."""
     out = reproject_dataset(_cube_a(spark), GRID, _LCC)
@@ -464,95 +366,45 @@ def cube_reproject_lcc(spark, sf_dir):
 
 # ---- reproject: NAD83 / Conus Albers (EPSG:5070) target ----------------
 
-from xcube_spark.operators.resampling.reproject import aea_inverse_sql
-
+#: off-round grid origin/steps: keeps every re-projected center
+#: >= 1.9e-4 deg from any 1-degree source cell edge
 _AEA = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 x_start=-1_973_000.0, y_start=307_000.0,
                 x_res=99_000.0, y_res=61_000.0,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="EPSG:5070")
 
-#: off-round grid origin/steps: keeps every re-projected center
-#: >= 1.9e-4 deg from any 1-degree source cell edge
-_AEA_LON, _AEA_LAT = aea_inverse_sql(
-    "(-1973000.0 + (x_i + 0.5) * 99000.0)",
-    "(307000.0 + (y_i + 0.5) * 61000.0)", crs="EPSG:5070")
-
 
 @query(
     "cube_reproject_albers",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_AEA.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_AEA_LON} AS lon,
-                   {_AEA_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_AEA),
 )
 def cube_reproject_albers(spark, sf_dir):
     """reproject_dataset onto the CONUS analysis grid (NAD83 / Conus
     Albers, EPSG:5070) — ellipsoidal Albers equal-area conic from
     Snyder 1987 (eqs. 14-3..14-11 + the authalic beta -> phi 3-18
-    series, shared with the LAEA path) as pure Column arithmetic; the
-    oracle states the identical inverse in SQL (aea_inverse_sql)."""
+    series, shared with the LAEA path) as one-stage arithmetic; the
+    oracle runs the same inverse text in DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _AEA)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: OSGB National Grid (EPSG:27700) target ------------------
 
-from xcube_spark.operators.resampling.reproject import osgb_inverse_sql_ctes
-
+#: off-round origin/steps keep every re-projected center >= 6.4e-5 deg
+#: from any 1-degree source cell edge (checked with DuckDB); the
+#: inverse is staged (one column / CTE per intermediate) — the
+#: monolithic expression form is megabytes of SQL
 _OSGB = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  x_start=137_000.0, y_start=23_000.0,
                  x_res=13_700.0, y_res=24_300.0,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="EPSG:27700")
 
-#: off-round origin/steps keep every re-projected center >= 6.4e-5 deg
-#: from any 1-degree source cell edge (checked with DuckDB); the
-#: inverse is a staged CTE chain — the monolithic expression form is
-#: megabytes of SQL (same blowup the Column side avoids via
-#: StagedTransform)
-_OSGB_CTES = osgb_inverse_sql_ctes(
-    "(137000.0 + (x_i + 0.5) * 13700.0)",
-    "(23000.0 + (y_i + 0.5) * 24300.0)")
-
 
 @query(
     "cube_reproject_osgb",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_OSGB.size})
-        ), {_OSGB_CTES}, f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM osgb_ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_OSGB),
 )
 def cube_reproject_osgb(spark, sf_dir):
     """reproject_dataset onto the British National Grid (OSGB36,
@@ -561,9 +413,9 @@ def cube_reproject_osgb(spark, sf_dir):
     through pyproj (core/gridmapping/transform.py:8-9).  The
     closed-form chain: Krueger TM series re-derived for Airy's
     flattening + the published 7-parameter Helmert datum hop
-    (WGS84 <-> OSGB36) with Bowring's XYZ->geodetic, all pure Column
-    arithmetic inside codegen; the oracle states the identical inverse
-    in SQL (osgb_inverse_sql).  Target centers sit >= 6.4e-5 deg from
+    (WGS84 <-> OSGB36) with Bowring's XYZ->geodetic, as staged
+    arithmetic inside codegen; the oracle runs the same stages as a
+    DuckDB CTE chain.  Target centers sit >= 6.4e-5 deg from
     any source cell edge, so sub-ulp libm differences cannot flip a
     gather index."""
     out = reproject_dataset(_cube_a(spark), GRID, _OSGB)
@@ -572,45 +424,18 @@ def cube_reproject_osgb(spark, sf_dir):
 
 # ---- reproject: NZTM 2000 (EPSG:2193) target ----------------------------
 
-from xcube_spark.operators.resampling.reproject import tm_inverse_sql
-
+#: off-round origin/steps keep every re-projected center >= 3.5e-4 deg
+#: from any 1-degree source cell edge (checked with DuckDB)
 _NZTM = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  x_start=1_123_000.0, y_start=4_753_000.0,
                  x_res=21_700.0, y_res=35_300.0,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="EPSG:2193")
 
-#: off-round origin/steps keep every re-projected center >= 3.5e-4 deg
-#: from any 1-degree source cell edge (checked with DuckDB)
-_NZTM_LON, _NZTM_LAT = tm_inverse_sql(
-    "(1123000.0 + (x_i + 0.5) * 21700.0)",
-    "(4753000.0 + (y_i + 0.5) * 35300.0)", "EPSG:2193")
-
 
 @query(
     "cube_reproject_nztm",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_NZTM.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_NZTM_LON} AS lon,
-                   {_NZTM_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_NZTM),
 )
 def cube_reproject_nztm(spark, sf_dir):
     """reproject_dataset onto the New Zealand Transverse Mercator 2000
@@ -618,7 +443,7 @@ def cube_reproject_nztm(spark, sf_dir):
     registry (TM_PARAMS: the UTM/OSGB Krueger series parameterized by
     ellipsoid + natural origin; GRS80, 173E, k0=0.9996, 1600/10000 km
     false origin; NZGD2000 == WGS84 null transformation).  The oracle
-    states the identical inverse in SQL (tm_inverse_sql)."""
+    runs the same inverse text in DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _NZTM)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
@@ -640,28 +465,7 @@ _NZTM_PROJ4 = CubeGrid(
 
 @query(
     "cube_reproject_proj4",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_NZTM.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_NZTM_LON} AS lon,
-                   {_NZTM_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_NZTM_PROJ4),
 )
 def cube_reproject_proj4(spark, sf_dir):
     """reproject_dataset with the target CRS given as a PROJ.4
@@ -670,7 +474,7 @@ def cube_reproject_proj4(spark, sf_dir):
     `xcube/core/gridmapping/cfconv.py:211`).  The string states
     NZTM2000's published parameters, resolving onto the generic TM
     family with bit-identical floats, so the oracle is the EPSG:2193
-    inverse verbatim (tm_inverse_sql)."""
+    inverse text verbatim."""
     out = reproject_dataset(_cube_a(spark), GRID, _NZTM_PROJ4)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
@@ -678,7 +482,6 @@ def cube_reproject_proj4(spark, sf_dir):
 # ---- reproject: geostationary full-disk grid (round 7) ------------------
 
 from xcube_spark.operators.resampling.crsparse import resolve_proj4
-from xcube_spark.operators.resampling.reproject import geos_inverse_sql
 
 #: MSG-style geostationary CRS (sweep y, 0 deg sub-satellite point);
 #: registered once at import via the PROJ.4 resolver
@@ -696,50 +499,23 @@ _GEOS = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs=_GEOS_CRS)
 
-_GEOS_LON, _GEOS_LAT = geos_inverse_sql(
-    "(-3487000.0 + (x_i + 0.5) * 174700.0)",
-    "(-3427000.0 + (y_i + 0.5) * 171300.0)", _GEOS_CRS)
-
 
 @query(
     "cube_reproject_geos",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_GEOS.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_GEOS_LON} AS lon,
-                   {_GEOS_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_GEOS),
 )
 def cube_reproject_geos(spark, sf_dir):
     """reproject_dataset onto a geostationary full-disk window (MSG
     SEVIRI geometry: sweep y, 0E sub-satellite, h=35785831 m, WGS84)
     — exercises the +proj=geos family (CGMS normalized geostationary,
     closed-form view-vector/ellipsoid intersection) end-to-end under
-    the oracle gate; the oracle states the identical inverse in SQL
-    (geos_inverse_sql, same op order)."""
+    the oracle gate; the oracle runs the same inverse text in
+    DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _GEOS)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: rotated-pole regional grid (round 8) --------------------
-
-from xcube_spark.operators.resampling.reproject import rotpole_inverse_sql
 
 #: CORDEX EUR-11 rotation (grid pole 39.25N, -162E) via CF attrs —
 #: exercises crs_from_cf + the ob_tran family registration
@@ -756,88 +532,40 @@ _RP = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                crs=_ROTPOLE_CRS)
 
-_RP_LON, _RP_LAT = rotpole_inverse_sql(
-    "(-28.093 + (x_i + 0.5) * 1.149)",
-    "(-22.957 + (y_i + 0.5) * 1.097)", _ROTPOLE_CRS)
-
 
 @query(
     "cube_reproject_rotated_pole",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_RP.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_RP_LON} AS lon,
-                   {_RP_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_RP),
 )
 def cube_reproject_rotated_pole(spark, sf_dir):
     """reproject_dataset onto a rotated-pole regional window (CORDEX
     EUR-11 rotation: grid pole 39.25N/-162E) — the CF
     `rotated_latitude_longitude` / +proj=ob_tran family (closed-form
     spherical rotation; reference handles it via pyproj,
-    `xcube/core/gridmapping/transform.py`).  The oracle states the
-    identical inverse rotation in SQL (rotpole_inverse_sql, same op
-    order)."""
+    `xcube/core/gridmapping/transform.py`).  The oracle runs the same
+    inverse rotation text in DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _RP)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Dutch RD New (EPSG:28992, oblique stereographic) --------
 
-from xcube_spark.operators.resampling.reproject import sterea_inverse_sql_ctes
-
 #: RD-coordinate window over the Netherlands with off-round
 #: origin/steps: every re-projected center stays >= 6.4e-4 deg from
 #: any 1-degree source-cell edge (margin asserted in
 #: tests/test_crsparse.py); the inverse (with its fixed-count
-#: conformal-latitude iteration) is a staged CTE chain, the same
-#: blowup-avoidance as the Column side's StagedTransform
+#: conformal-latitude iteration) is staged, one column / CTE per
+#: intermediate
 _RD = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                x_start=11_013.0, y_start=303_017.0,
                x_res=7_219.0, y_res=8_011.0,
                t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                crs="EPSG:28992")
 
-_RD_CTES = sterea_inverse_sql_ctes(
-    "(11013.0 + (x_i + 0.5) * 7219.0)",
-    "(303017.0 + (y_i + 0.5) * 8011.0)", "EPSG:28992")
-
 
 @query(
     "cube_reproject_rdnew",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_RD.size})
-        ), {_RD_CTES}, f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM sterea_ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_RD),
 )
 def cube_reproject_rdnew(spark, sf_dir):
     """reproject_dataset onto the Dutch RD New grid (EPSG:28992) —
@@ -845,53 +573,30 @@ def cube_reproject_rdnew(spark, sf_dir):
     conformal sphere -> plane) on Bessel 1841, which the reference
     reaches through pyproj (core/gridmapping/transform.py).  Forward
     validated against the EPSG Guidance Note test point; the oracle
-    states the identical inverse (incl. the fixed-count
-    conformal->geodetic iteration) as a CTE chain in SQL
-    (sterea_inverse_sql_ctes, same op order)."""
+    runs the same staged inverse (incl. the fixed-count
+    conformal->geodetic iteration) as a DuckDB CTE chain."""
     out = reproject_dataset(_cube_a(spark), GRID, _RD)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Swiss LV95 (EPSG:2056, Swiss oblique Mercator) ----------
 
-from xcube_spark.operators.resampling.reproject import somerc_inverse_sql_ctes
-
 #: LV95 window over Switzerland with off-round origin/steps: every
 #: re-projected center stays >= 5.5e-4 deg from any 1-degree
 #: source-cell edge (margin asserted in tests/test_crsparse.py); the
 #: inverse (fixed-count isometric-latitude solve + the published
-#: CH1903->WGS84 Helmert hop) is a staged CTE chain like the Column
-#: side's StagedTransform
+#: CH1903->WGS84 Helmert hop) is staged, one column / CTE per
+#: intermediate
 _LV95 = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  x_start=2_486_297.0, y_start=1_076_876.0,
                  x_res=8_621.0, y_res=5_460.0,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="EPSG:2056")
 
-_LV95_CTES = somerc_inverse_sql_ctes(
-    "(2486297.0 + (x_i + 0.5) * 8621.0)",
-    "(1076876.0 + (y_i + 0.5) * 5460.0)", "EPSG:2056")
-
 
 @query(
     "cube_reproject_lv95",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_LV95.size})
-        ), {_LV95_CTES}, f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM somerc_ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_LV95),
 )
 def cube_reproject_lv95(spark, sf_dir):
     """reproject_dataset onto the Swiss LV95 grid (EPSG:2056) — the
@@ -900,54 +605,29 @@ def cube_reproject_lv95(spark, sf_dir):
     Bessel 1841 INCLUDING the published CH1903->WGS84 Helmert
     translation, which the reference applies through pyproj
     (core/gridmapping/transform.py).  Forward validated against the
-    swisstopo worked example (<5 cm); the oracle states the identical
+    swisstopo worked example (<5 cm); the oracle runs the same staged
     inverse (fixed-count isometric-latitude iteration + datum hop) as
-    a CTE chain (somerc_inverse_sql_ctes, same op order)."""
+    a DuckDB CTE chain."""
     out = reproject_dataset(_cube_a(spark), GRID, _LV95)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: S-JTSK Krovak East North (EPSG:5514) --------------------
 
-from xcube_spark.operators.resampling.reproject import krovak_inverse_sql_ctes
-
 #: Krovak E/N window over Czechia/Slovakia (coordinates NEGATIVE in
 #: the East-North axis convention) with off-round origin/steps: every
 #: re-projected center stays >= 6.3e-4 deg from any 1-degree
-#: source-cell edge (margin asserted in tests/test_crsparse.py); the
-#: CAST-to-DOUBLE inputs keep DuckDB's DECIMAL literals from
-#: overflowing (same lesson as the omerc oracle)
+#: source-cell edge (margin asserted in tests/test_crsparse.py)
 _KROVAK = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                    x_start=-890_893.0, y_start=-1_221_350.0,
                    x_res=10_447.0, y_res=6_606.0,
                    t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                    crs="EPSG:5514")
 
-_KROVAK_CTES = krovak_inverse_sql_ctes(
-    "(CAST(-890893.0 AS DOUBLE) + (x_i + 0.5) * CAST(10447.0 AS DOUBLE))",
-    "(CAST(-1221350.0 AS DOUBLE) + (y_i + 0.5) * CAST(6606.0 AS DOUBLE))",
-    "EPSG:5514")
-
 
 @query(
     "cube_reproject_krovak",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_KROVAK.size})
-        ), {_KROVAK_CTES}, f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM krovak_ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_KROVAK),
 )
 def cube_reproject_krovak(spark, sf_dir):
     """reproject_dataset onto the Czech/Slovak S-JTSK grid
@@ -956,17 +636,14 @@ def cube_reproject_krovak(spark, sf_dir):
     Bessel 1841 INCLUDING the published towgs84 translation
     (589, 76, 480), which the reference applies through pyproj
     (core/gridmapping/transform.py).  Forward validated against the
-    EPSG GN7-2 worked example (<2 cm); the oracle states the
-    identical inverse (fixed-count conformal-latitude iteration +
-    datum hop) as a CTE chain (krovak_inverse_sql_ctes, same op
-    order)."""
+    EPSG GN7-2 worked example (<2 cm); the oracle runs the same
+    staged inverse (fixed-count conformal-latitude iteration + datum
+    hop) as a DuckDB CTE chain."""
     out = reproject_dataset(_cube_a(spark), GRID, _KROVAK)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Equal Earth (EPSG:8857) ----------------------------------
-
-from xcube_spark.operators.resampling.reproject import eqearth_inverse_sql_ctes
 
 #: near-global Equal Earth window (inscribed in the map outline so
 #: every corner stays inside +-180 deg) with off-round origin/steps:
@@ -978,31 +655,10 @@ _EQE = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="EPSG:8857")
 
-_EQE_CTES = eqearth_inverse_sql_ctes(
-    "(CAST(-12757701.0 AS DOUBLE) + (x_i + 0.5) * CAST(632731.0 AS DOUBLE))",
-    "(CAST(-5928512.0 AS DOUBLE) + (y_i + 0.5) * CAST(297059.0 AS DOUBLE))",
-    "EPSG:8857")
-
 
 @query(
     "cube_reproject_eqearth",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_EQE.size})
-        ), {_EQE_CTES}, f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM eqearth_ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_EQE),
 )
 def cube_reproject_eqearth(spark, sf_dir):
     """reproject_dataset onto an Equal Earth grid (EPSG:8857, method
@@ -1010,16 +666,14 @@ def cube_reproject_eqearth(spark, sf_dir):
     on the WGS84 authalic sphere, which the reference reaches
     through pyproj (core/gridmapping/transform.py).  Anchored on the
     published EPSG:8857 projected extent (+-17243959.06 x
-    +-8392927.60 m); the oracle states the identical inverse
+    +-8392927.60 m); the oracle runs the same staged inverse
     (fixed-count Newton theta solve + authalic->geodetic series) as
-    a CTE chain (eqearth_inverse_sql_ctes, same op order)."""
+    a DuckDB CTE chain."""
     out = reproject_dataset(_cube_a(spark), GRID, _EQE)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Trinidad Grid (EPSG:30200, Cassini-Soldner) -------------
-
-from xcube_spark.operators.resampling.reproject import cass_inverse_sql
 
 #: Trinidad Grid window in CLARKE'S LINKS with off-round
 #: origin/steps: every re-projected center stays >= 1.4e-2 deg from
@@ -1031,52 +685,23 @@ _TRIN = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="EPSG:30200")
 
-_TRIN_LON, _TRIN_LAT = cass_inverse_sql(
-    "(CAST(73249.0 AS DOUBLE) + (x_i + 0.5) * CAST(16318.0 AS DOUBLE))",
-    "(CAST(89229.0 AS DOUBLE) + (y_i + 0.5) * CAST(9077.0 AS DOUBLE))",
-    "EPSG:30200")
-
 
 @query(
     "cube_reproject_trinidad",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_TRIN.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_TRIN_LON} AS lon,
-                   {_TRIN_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_TRIN),
 )
 def cube_reproject_trinidad(spark, sf_dir):
     """reproject_dataset onto the Trinidad 1903 grid (EPSG:30200,
     Cassini-Soldner in Clarke's links) — EPSG method 9806, which the
     reference reaches through pyproj (core/gridmapping/transform.py).
     Forward reproduces the EPSG GN7-2 worked example sub-link; the
-    oracle states the identical inverse (rectifying-latitude series
-    + transverse D-expansion) in SQL (cass_inverse_sql, same op
-    order)."""
+    oracle runs the same staged inverse (rectifying-latitude series
+    + transverse D-expansion) as a DuckDB CTE chain."""
     out = reproject_dataset(_cube_a(spark), GRID, _TRIN)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Brazil Polyconic (EPSG:29101) ---------------------------
-
-from xcube_spark.operators.resampling.reproject import poly_inverse_sql_ctes
 
 #: Brazil Polyconic window (lat -31..-1: clear of the equator row,
 #: where the cone degenerates and both engines take the guarded
@@ -1089,47 +714,24 @@ _BRPOLY = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                    t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                    crs="EPSG:29101")
 
-_BRPOLY_CTES = poly_inverse_sql_ctes(
-    "(CAST(3146366.0 AS DOUBLE) + (x_i + 0.5) * CAST(94972.0 AS DOUBLE))",
-    "(CAST(6524126.0 AS DOUBLE) + (y_i + 0.5) * CAST(85021.0 AS DOUBLE))",
-    "EPSG:29101")
-
 
 @query(
     "cube_reproject_brazil_poly",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_BRPOLY.size})
-        ), {_BRPOLY_CTES}, f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM poly_ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_BRPOLY),
 )
 def cube_reproject_brazil_poly(spark, sf_dir):
     """reproject_dataset onto the SAD69 / Brazil Polyconic grid
     (EPSG:29101) — EPSG method 9818 / Snyder ch. 18, which the
     reference reaches through pyproj (core/gridmapping/transform.py).
     Forward reproduces Snyder's Clarke-1866 worked example to the
-    published 0.1 m; the oracle states the identical inverse (the
+    published 0.1 m; the oracle runs the same staged inverse (the
     Snyder 18-18 fixed-count Newton on the meridian-arc identity) as
-    a CTE chain (poly_inverse_sql_ctes, same op order)."""
+    a DuckDB CTE chain."""
     out = reproject_dataset(_cube_a(spark), GRID, _BRPOLY)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: EASE-Grid 2.0 global (EPSG:6933) ------------------------
-
-from xcube_spark.operators.resampling.reproject import cea_inverse_sql
 
 #: near-global EASE-2 window with off-round origin/steps: every
 #: re-projected center stays >= 9.4e-4 deg from any 1-degree
@@ -1140,35 +742,10 @@ _EASE2 = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs="EPSG:6933")
 
-_EASE2_LON, _EASE2_LAT = cea_inverse_sql(
-    "(-8641013.0 + (x_i + 0.5) * 432017.0)",
-    "(-6231011.0 + (y_i + 0.5) * 312013.0)", "EPSG:6933")
-
 
 @query(
     "cube_reproject_ease2",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_EASE2.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_EASE2_LON} AS lon,
-                   {_EASE2_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_EASE2),
 )
 def cube_reproject_ease2(spark, sf_dir):
     """reproject_dataset onto the NSIDC EASE-Grid 2.0 global grid
@@ -1176,8 +753,7 @@ def cube_reproject_ease2(spark, sf_dir):
     standard parallel 30 — the SMAP/AMSR product grid), EPSG method
     9835 via Snyder's authalic-latitude closed forms; x extent
     reproduces the published ±17367530.445161 m constant.  The oracle
-    states the identical inverse in SQL (cea_inverse_sql, same op
-    order)."""
+    runs the same inverse text in DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _EASE2)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
@@ -1195,35 +771,10 @@ _UPS = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="EPSG:5041")
 
-_UPS_LON, _UPS_LAT = ps_inverse_sql(
-    "(2630638.0 + (x_i + 0.5) * 10961.0)",
-    "(2464090.0 + (y_i + 0.5) * 11419.0)", crs="EPSG:5041")
-
 
 @query(
     "cube_reproject_ups",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_UPS.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_UPS_LON} AS lon,
-                   {_UPS_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_UPS),
 )
 def cube_reproject_ups(spark, sf_dir):
     """reproject_dataset onto the Universal Polar Stereographic
@@ -1232,16 +783,13 @@ def cube_reproject_ups(spark, sf_dir):
     UTM which the reference reaches through pyproj
     (core/gridmapping/transform.py).  Forward reproduces the EPSG
     GN7-2 worked example to the published 0.01 m (control-point
-    fixture); the oracle states the identical inverse (variant-A
-    rho scaling + the Snyder 3-5 chi->phi series) in SQL
-    (ps_inverse_sql, same op order)."""
+    fixture); the oracle runs the same inverse text (variant-A rho
+    scaling + the Snyder 3-5 chi->phi series) in DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _UPS)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: azimuthal equidistant local grid ------------------------
-
-from xcube_spark.operators.resampling.reproject import aeqd_inverse_sql
 
 #: spherical azimuthal-equidistant grid centered near Munich — the
 #: classic local-area/range-ring projection (CF azimuthal_equidistant)
@@ -1256,50 +804,22 @@ _AEQD = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs=_AEQD_CRS)
 
-_AEQD_LON, _AEQD_LAT = aeqd_inverse_sql(
-    "(-2801013.0 + (x_i + 0.5) * 140017.0)",
-    "(-2403011.0 + (y_i + 0.5) * 120013.0)", _AEQD_CRS)
-
 
 @query(
     "cube_reproject_aeqd",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_AEQD.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_AEQD_LON} AS lon,
-                   {_AEQD_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_AEQD),
 )
 def cube_reproject_aeqd(spark, sf_dir):
     """reproject_dataset onto a spherical azimuthal-equidistant local
     grid (Snyder ch. 25; CF azimuthal_equidistant) — distances and
     azimuths from the center are true, the standard choice for
     range-ring / local-area products; reference reaches it via pyproj.
-    The oracle states the identical inverse in SQL (aeqd_inverse_sql,
-    same op order)."""
+    The oracle runs the same inverse text in DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _AEQD)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Hotine oblique Mercator (RSO Borneo) --------------------
-
-from xcube_spark.operators.resampling.reproject import omerc_inverse_sql_ctes
 
 #: RSO-coordinate window over Borneo with off-round origin/steps:
 #: every re-projected center stays >= 1.7e-3 deg from any 1-degree
@@ -1310,30 +830,10 @@ _RSO = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="EPSG:29873")
 
-_RSO_CTES = omerc_inverse_sql_ctes(
-    "(291017.0 + (x_i + 0.5) * 15013.0)",
-    "(21013.0 + (y_i + 0.5) * 19507.0)", "EPSG:29873")
-
 
 @query(
     "cube_reproject_omerc",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_RSO.size})
-        ), {_RSO_CTES}, f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM omerc_ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_RSO),
 )
 def cube_reproject_omerc(spark, sf_dir):
     """reproject_dataset onto the Rectified Skew Orthomorphic Borneo
@@ -1341,8 +841,7 @@ def cube_reproject_omerc(spark, sf_dir):
     1830) — the rotated-aspect Mercator for slanted features (EPSG
     methods 9812/9815), forward validated mm-exact against the EPSG
     Guidance Note worked example; reference reaches it via pyproj.
-    The oracle states the identical inverse as a CTE chain in SQL
-    (omerc_inverse_sql_ctes, same op order)."""
+    The oracle runs the same staged inverse as a DuckDB CTE chain."""
     out = reproject_dataset(_cube_a(spark), GRID, _RSO)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
@@ -1478,7 +977,6 @@ def cube_affine_bicubic(spark, sf_dir):
 
 # ---- reproject: World Mollweide (ESRI:54009) target -------------------
 
-from xcube_spark.operators.resampling.reproject import moll_inverse_sql
 
 _MOLL = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  x_start=-1_000_000.0, y_start=3_000_000.0,
@@ -1486,45 +984,20 @@ _MOLL = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="ESRI:54009")
 
-_MOLL_LON, _MOLL_LAT = moll_inverse_sql(
-    "(-1000000.0 + (x_i + 0.5) * 50000.0)",
-    "(3000000.0 + (y_i + 0.5) * 50000.0)", crs="ESRI:54009")
-
 
 @query(
     "cube_reproject_mollweide",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_MOLL.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_MOLL_LON} AS lon,
-                   {_MOLL_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_MOLL),
 )
 def cube_reproject_mollweide(spark, sf_dir):
     """reproject_dataset onto a World-Mollweide grid (ESRI:54009) —
     the equal-area pseudocylindrical CRS of land-cover / climate
     products, reached through pyproj in the reference
     (core/gridmapping/transform.py).  Spherical Mollweide (Snyder
-    1987, 31-1..31-8): the inverse is closed-form Column math inside
-    codegen and the oracle states the identical inverse in SQL
-    (moll_inverse_sql); the forward Newton solve (_MollForward) is
-    exercised by the roundtrip unit test.  The 50 km target centers
+    1987, 31-1..31-8): the inverse is closed-form, one stage inside
+    codegen, and the oracle runs the same inverse text in DuckDB; the
+    forward Newton solve (_MollForward) is exercised by the roundtrip
+    unit test.  The 50 km target centers
     (lon +-11.7, lat 24.8..41.7) sit >= 1.4e-3 deg from any 1-degree
     source cell edge, so sub-ulp libm differences cannot flip a
     gather index."""
@@ -1533,8 +1006,6 @@ def cube_reproject_mollweide(spark, sf_dir):
 
 
 # ---- reproject: World Eckert IV (ESRI:54012) ---------------------------
-
-from xcube_spark.operators.resampling.reproject import eck4_inverse_sql
 
 #: mid-latitude Eckert-IV window (inscribed in the map outline) with
 #: off-round origin/steps: every re-projected center stays >= 2.3e-3
@@ -1546,44 +1017,18 @@ _ECK4G = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs="ESRI:54012")
 
-_ECK4_LON, _ECK4_LAT = eck4_inverse_sql(
-    "(CAST(-10985858.0 AS DOUBLE) + (x_i + 0.5) * CAST(551237.0 AS DOUBLE))",
-    "(CAST(-4993181.0 AS DOUBLE) + (y_i + 0.5) * CAST(251111.0 AS DOUBLE))",
-    crs="ESRI:54012")
-
 
 @query(
     "cube_reproject_eck4",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_ECK4G.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_ECK4_LON} AS lon,
-                   {_ECK4_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_ECK4G),
 )
 def cube_reproject_eck4(spark, sf_dir):
     """reproject_dataset onto a World-Eckert-IV grid (ESRI:54012) —
     the equal-area atlas pseudocylindrical, reached through pyproj in
     the reference (core/gridmapping/transform.py).  The closed-form
     inverse (asin of the auxiliary angle, Album of Map Projections
-    p. 60) is Column math inside codegen; the oracle states the
-    identical inverse in SQL (eck4_inverse_sql, same op order).  The
+    p. 60) is one stage inside codegen; the oracle runs the same
+    inverse text in DuckDB.  The
     forward Newton solve (_Eck4Forward) is exercised by the
     roundtrip + equal-area unit tests; anchors: the published
     ESRI:54012 projected extent (+-16921202.92 x +-8460601.46 m)."""
@@ -1592,8 +1037,6 @@ def cube_reproject_eck4(spark, sf_dir):
 
 
 # ---- reproject: World Miller cylindrical (ESRI:54003) ------------------
-
-from xcube_spark.operators.resampling.reproject import mill_inverse_sql
 
 #: wide Miller window with off-round origin/steps: margin >= 6.9e-2
 #: deg (Miller is cylindrical, so lon margins are exact by
@@ -1604,43 +1047,17 @@ _MILLG = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs="ESRI:54003")
 
-_MILL_LON, _MILL_LAT = mill_inverse_sql(
-    "(CAST(-14996776.0 AS DOUBLE) + (x_i + 0.5) * CAST(751237.0 AS DOUBLE))",
-    "(CAST(-8980545.0 AS DOUBLE) + (y_i + 0.5) * CAST(451111.0 AS DOUBLE))",
-    crs="ESRI:54003")
-
 
 @query(
     "cube_reproject_miller",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_MILLG.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_MILL_LON} AS lon,
-                   {_MILL_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_MILLG),
 )
 def cube_reproject_miller(spark, sf_dir):
     """reproject_dataset onto a World-Miller-cylindrical grid
     (ESRI:54003) — Snyder 1987 ch. 11 closed form both directions
     (y = 1.25 R ln tan(pi/4 + 0.4 phi)), reached through pyproj in
-    the reference.  Both engines state the identical inverse
-    (mill_inverse_sql); anchored on Snyder's published numerical
+    the reference.  Both engines run the same inverse text;
+    anchored on Snyder's published numerical
     example (p. 287, scaled to the WGS84 sphere) and the 1.25 x
     compressed-Mercator identity asserted in tests."""
     out = reproject_dataset(_cube_a(spark), GRID, _MILLG)
@@ -1648,10 +1065,6 @@ def cube_reproject_miller(spark, sf_dir):
 
 
 # ---- reproject: World Van der Grinten I (ESRI:54029) -------------------
-
-from xcube_spark.operators.resampling.reproject import (
-    vandg_inverse_sql_ctes,
-)
 
 #: Van der Grinten window inside the boundary circle, clear of the
 #: equator/central-meridian special-case guards (|X|,|Y| >> 1e-12);
@@ -1662,50 +1075,24 @@ _VANDGG = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                    t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                    crs="ESRI:54029")
 
-_VANDG_CTES = vandg_inverse_sql_ctes(
-    "(CAST(-8995751.0 AS DOUBLE) + (x_i + 0.5) * CAST(451237.0 AS DOUBLE))",
-    "(CAST(-8008684.0 AS DOUBLE) + (y_i + 0.5) * CAST(401111.0 AS DOUBLE))",
-    "ESRI:54029")
-
 
 @query(
     "cube_reproject_vandg",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_VANDGG.size})
-        ), {_VANDG_CTES}, f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM vandg_ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_VANDGG),
 )
 def cube_reproject_vandg(spark, sf_dir):
     """reproject_dataset onto a World-Van-der-Grinten-I grid
     (ESRI:54029) — the world-in-a-circle atlas projection (Snyder
     1987 ch. 33), reached through pyproj in the reference.  The
     inverse is the trigonometric cubic root (33-14..33-23), staged
-    as materialized Columns; the oracle states the identical
-    arithmetic as a CTE chain (vandg_inverse_sql_ctes, same op
-    order).  Anchors: equator maps linearly (x = R lam), poles at
+    as materialized columns; the oracle runs the same stages as a
+    DuckDB CTE chain.  Anchors: equator maps linearly (x = R lam), poles at
     (0, +-pi R), world boundary = circle of radius pi R."""
     out = reproject_dataset(_cube_a(spark), GRID, _VANDGG)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Natural Earth (+proj=natearth) --------------------------
-
-from xcube_spark.operators.resampling.reproject import (
-    natearth_inverse_sql_ctes,
-)
 
 #: near-global Natural Earth window with off-round origin/steps:
 #: margin >= 2.8e-3 deg (asserted in tests/test_crsparse.py)
@@ -1715,40 +1102,19 @@ _NATE = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="PROJ:NATEARTH")
 
-_NATE_CTES = natearth_inverse_sql_ctes(
-    "(CAST(-12995970.0 AS DOUBLE) + (x_i + 0.5) * CAST(641237.0 AS DOUBLE))",
-    "(CAST(-7044268.0 AS DOUBLE) + (y_i + 0.5) * CAST(351111.0 AS DOUBLE))",
-    "PROJ:NATEARTH")
-
 
 @query(
     "cube_reproject_natearth",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_NATE.size})
-        ), {_NATE_CTES}, f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM natearth_ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_NATE),
 )
 def cube_reproject_natearth(spark, sf_dir):
     """reproject_dataset onto a Natural Earth grid (PROJ:NATEARTH —
     no authority code exists; the Savric/Jenny/Patterson 2011
     polynomial compromise projection, which the reference reaches
     through pyproj's +proj=natearth).  Forward/inverse are pure
-    polynomial Column math (fixed 6-iteration Newton on the odd y
-    polynomial); the oracle states the identical inverse as a CTE
-    chain (natearth_inverse_sql_ctes, same op order and nesting)."""
+    polynomial math (the inverse a fixed 6-iteration Newton on the
+    odd y polynomial, staged); the oracle runs the same stages as a
+    DuckDB CTE chain."""
     out = reproject_dataset(_cube_a(spark), GRID, _NATE)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
@@ -1756,7 +1122,6 @@ def cube_reproject_natearth(spark, sf_dir):
 # ---- reproject: spherical gnomonic local grid ---------------------------
 
 from xcube_spark.operators.resampling.crsparse import resolve_proj4
-from xcube_spark.operators.resampling.reproject import gnom_inverse_sql
 
 _GNOM_CRS = resolve_proj4("+proj=gnom +lat_0=40 +lon_0=-100 +R=6371000")
 
@@ -1769,50 +1134,22 @@ _GNOM = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs=_GNOM_CRS)
 
-_GNOM_LON, _GNOM_LAT = gnom_inverse_sql(
-    "(-2986209.0 + (x_i + 0.5) * 150017.0)",
-    "(-2472081.0 + (y_i + 0.5) * 125013.0)", _GNOM_CRS)
-
 
 @query(
     "cube_reproject_gnomonic",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_GNOM.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_GNOM_LON} AS lon,
-                   {_GNOM_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_GNOM),
 )
 def cube_reproject_gnomonic(spark, sf_dir):
     """reproject_dataset onto a spherical gnomonic local grid (Snyder
     ch. 22) — great circles map to straight lines (the property
     navigation/seismic products use it for; pinned by a collinearity
     test), reference reaches it via pyproj +proj=gnom.  The oracle
-    states the identical inverse in SQL (gnom_inverse_sql, same op
-    order)."""
+    runs the same inverse text in DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _GNOM)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: World Mercator (ellipsoidal, EPSG:3395) -----------------
-
-from xcube_spark.operators.resampling.reproject import merc_inverse_sql
 
 #: off-round origin/steps keep every re-projected center >= 4.5e-4 deg
 #: from any 1-degree source-cell edge (margin asserted in
@@ -1823,50 +1160,23 @@ _M3395 = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs="EPSG:3395")
 
-_M3395_LON, _M3395_LAT = merc_inverse_sql(
-    "(-17011013.0 + (x_i + 0.5) * 850017.0)",
-    "(-10808011.0 + (y_i + 0.5) * 540013.0)", "EPSG:3395")
-
 
 @query(
     "cube_reproject_3395",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_M3395.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_M3395_LON} AS lon,
-                   {_M3395_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_M3395),
 )
 def cube_reproject_3395(spark, sf_dir):
     """reproject_dataset onto the World Mercator grid (EPSG:3395) —
     the TRUE ellipsoidal Mercator (Snyder 7-7/7-10), distinct from
     web-mercator's spherical convention; charts and global marine
     products use it, the reference reaches it via pyproj.  The oracle
-    states the identical inverse (Snyder 7-10 + the chi->phi series)
-    in SQL (merc_inverse_sql, same op order)."""
+    runs the same inverse text (Snyder 7-10 + the chi->phi series) in
+    DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _M3395)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: World Equidistant Cylindrical (EPSG:4087) ---------------
-
-from xcube_spark.operators.resampling.reproject import eqc_inverse_sql
 
 #: generous margins (>= 5e-3 deg; asserted in tests/test_crsparse.py)
 _EQC = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
@@ -1875,50 +1185,23 @@ _EQC = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="EPSG:4087")
 
-_EQC_LON, _EQC_LAT = eqc_inverse_sql(
-    "(-17013011.0 + (x_i + 0.5) * 850017.0)",
-    "(-8808013.0 + (y_i + 0.5) * 440017.0)", "EPSG:4087")
-
 
 @query(
     "cube_reproject_eqc",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_EQC.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_EQC_LON} AS lon,
-                   {_EQC_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_EQC),
 )
 def cube_reproject_eqc(spark, sf_dir):
     """reproject_dataset onto WGS 84 / World Equidistant Cylindrical
     (EPSG:4087, method 1028): x = a*radians(lon), y = the true
     meridian arc (Krueger rectifying series — the TM family's
     machinery re-used at the central meridian); reference reaches it
-    via pyproj.  The oracle states the identical inverse (mu -> chi
-    -> phi series) in SQL (eqc_inverse_sql, same op order)."""
+    via pyproj.  The oracle runs the same inverse text (mu -> chi
+    -> phi series) in DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _EQC)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: spherical oblique stereographic --------------------------
-
-from xcube_spark.operators.resampling.reproject import stereg_inverse_sql
 
 #: spherical stereographic, oblique aspect centered on central Europe
 #: (CF 'stereographic' with a spherical datum)
@@ -1934,52 +1217,23 @@ _STEREG = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                    t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                    crs=_STEREG_CRS)
 
-#: CAST-to-DOUBLE inputs: DuckDB types bare numeric literals as
-#: DECIMAL and the k_0-scaled products overflow DECIMAL(18)
-_STEREG_LON, _STEREG_LAT = stereg_inverse_sql(
-    "CAST((-2801017.0 + (x_i + 0.5) * 140013.0) AS DOUBLE)",
-    "CAST((-2354013.0 + (y_i + 0.5) * 120017.0) AS DOUBLE)", _STEREG_CRS)
-
 
 @query(
     "cube_reproject_stereographic",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_STEREG.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_STEREG_LON} AS lon,
-                   {_STEREG_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_STEREG),
 )
 def cube_reproject_stereographic(spark, sf_dir):
     """reproject_dataset onto a spherical oblique stereographic grid
     (Snyder ch. 21, +k_0 scale at the center) — the CF
     'stereographic' grid-mapping name on a spherical datum, the
     conformal azimuthal for mid-latitude regional products; reference
-    reaches it via pyproj.  The oracle states the identical inverse
-    in SQL (stereg_inverse_sql, same op order)."""
+    reaches it via pyproj.  The oracle runs the same inverse text in
+    DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _STEREG)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: world sinusoidal (ESRI:54008, the MODIS family) ---------
-
-from xcube_spark.operators.resampling.reproject import sinu_inverse_sql
 
 #: off-round origin/steps keep every re-projected center >= 4.5e-4 deg
 #: from any 1-degree source-cell edge (margin asserted in
@@ -1990,50 +1244,22 @@ _SINU = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs="ESRI:54008")
 
-_SINU_LON, _SINU_LAT = sinu_inverse_sql(
-    "(-8508011.0 + (x_i + 0.5) * 425017.0)",
-    "(-6206013.0 + (y_i + 0.5) * 310017.0)", "ESRI:54008")
-
 
 @query(
     "cube_reproject_sinusoidal",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_SINU.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_SINU_LON} AS lon,
-                   {_SINU_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_SINU),
 )
 def cube_reproject_sinusoidal(spark, sf_dir):
     """reproject_dataset onto the world sinusoidal grid (ESRI:54008;
     the MODIS land-product tiling family SR-ORG:6974 shares the
     sphere) — the classic equal-area pseudocylindrical; reference
-    reaches it via pyproj.  The oracle states the identical inverse
-    (phi = y/R, lon = x/(R cos phi)) in SQL (sinu_inverse_sql, same
-    op order)."""
+    reaches it via pyproj.  The oracle runs the same inverse text
+    (phi = y/R, lon = x/(R cos phi)) in DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _SINU)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: spherical orthographic -----------------------------------
-
-from xcube_spark.operators.resampling.reproject import ortho_inverse_sql
 
 #: the satellite-view (infinite-distance) azimuthal centered on the
 #: eastern Mediterranean; grid stays well inside the visible disk
@@ -2048,49 +1274,22 @@ _ORTHO = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs=_ORTHO_CRS)
 
-_ORTHO_LON, _ORTHO_LAT = ortho_inverse_sql(
-    "(-2801011.0 + (x_i + 0.5) * 140017.0)",
-    "(-2403017.0 + (y_i + 0.5) * 120011.0)", _ORTHO_CRS)
-
 
 @query(
     "cube_reproject_ortho",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_ORTHO.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_ORTHO_LON} AS lon,
-                   {_ORTHO_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_ORTHO),
 )
 def cube_reproject_ortho(spark, sf_dir):
     """reproject_dataset onto a spherical orthographic grid (Snyder
     ch. 20; CF 'orthographic') — the view-from-infinity globe
     rendering every viewer product offers; reference reaches it via
-    pyproj.  The oracle states the identical inverse (c = asin(rho/R))
-    in SQL (ortho_inverse_sql, same op order)."""
+    pyproj.  The oracle runs the same inverse text (c = asin(rho/R))
+    in DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _ORTHO)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: near-sided vertical perspective ---------------------------
-
-from xcube_spark.operators.resampling.reproject import nsper_inverse_sql
 
 #: a geostationary-height viewpoint over the Americas (the CF
 #: 'vertical_perspective' grid mapping); grid stays well inside the
@@ -2107,50 +1306,22 @@ _NSPER = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs=_NSPER_CRS)
 
-_NSPER_LON, _NSPER_LAT = nsper_inverse_sql(
-    "(-2803011.0 + (x_i + 0.5) * 140013.0)",
-    "(-2394013.0 + (y_i + 0.5) * 120019.0)", _NSPER_CRS)
-
 
 @query(
     "cube_reproject_nsper",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_NSPER.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_NSPER_LON} AS lon,
-                   {_NSPER_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_NSPER),
 )
 def cube_reproject_nsper(spark, sf_dir):
     """reproject_dataset onto a near-sided vertical perspective grid
     (Snyder ch. 23; CF 'vertical_perspective') at geostationary
     height — the finite-distance satellite view, the spherical
     sibling of +proj=geos; reference reaches it via pyproj.  The
-    oracle states the identical inverse (Snyder 23-19/20) in SQL
-    (nsper_inverse_sql, same op order)."""
+    oracle runs the same inverse text (Snyder 23-19/20) in DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _NSPER)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: equidistant conic (ellipsoidal, GRS80) -------------------
-
-from xcube_spark.operators.resampling.reproject import eqdc_inverse_sql
 
 #: the regional mid-latitude conic with true meridian scale (Snyder
 #: ch. 16, ellipsoidal 16-12..16-15 via the Krueger rectifying series)
@@ -2166,35 +1337,10 @@ _EQDC = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                  t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                  crs=_EQDC_CRS)
 
-_EQDC_LON, _EQDC_LAT = eqdc_inverse_sql(
-    "CAST((-2724013.0 + (x_i + 0.5) * 140017.0) AS DOUBLE)",
-    "CAST((-2326011.0 + (y_i + 0.5) * 120013.0) AS DOUBLE)", _EQDC_CRS)
-
 
 @query(
     "cube_reproject_eqdc",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_EQDC.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_EQDC_LON} AS lon,
-                   {_EQDC_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_EQDC),
 )
 def cube_reproject_eqdc(spark, sf_dir):
     """reproject_dataset onto an ellipsoidal equidistant-conic grid
@@ -2202,16 +1348,13 @@ def cube_reproject_eqdc(spark, sf_dir):
     with TRUE meridian scale everywhere (rho = aG - M(phi), the
     meridian arc via the Krueger rectifying series — the same
     machinery as ellipsoidal eqc/TM); reference reaches it via
-    pyproj.  The oracle states the identical inverse (rho -> M ->
-    mu -> chi -> phi series) in SQL (eqdc_inverse_sql, same op
-    order)."""
+    pyproj.  The oracle runs the same inverse text (rho -> M -> mu
+    -> chi -> phi series) in DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _EQDC)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Robinson world grid (ESRI:54030) --------------------------
-
-from xcube_spark.operators.resampling.reproject import robin_inverse_sql_ctes
 
 #: off-round origin/steps keep every re-projected center >= 1.1e-3 deg
 #: from any 1-degree source-cell edge, and the whole window inside the
@@ -2222,31 +1365,10 @@ _ROBIN = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                   t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                   crs="ESRI:54030")
 
-_ROBIN_CTES = robin_inverse_sql_ctes(
-    "CAST((-10866011.0 + (x_i + 0.5) * 540017.0) AS DOUBLE)",
-    "CAST((-7808013.0 + (y_i + 0.5) * 390013.0) AS DOUBLE)",
-    "ESRI:54030")
-
 
 @query(
     "cube_reproject_robinson",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_ROBIN.size})
-        ), {_ROBIN_CTES}, f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM robin_ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_ROBIN),
 )
 def cube_reproject_robinson(spark, sf_dir):
     """reproject_dataset onto the Robinson world grid (ESRI:54030) —
@@ -2255,16 +1377,13 @@ def cube_reproject_robinson(spark, sf_dir):
     by the natural cubic spline, coefficients solved once at import
     and embedded identically in both engines).  The inverse solves
     the monotone Y cubic with a fixed 4-iteration Newton per the
-    sterea discipline; the oracle states the identical staged chain
-    in SQL (robin_inverse_sql_ctes, same op order, same iteration
-    count).  Reference reaches it via pyproj."""
+    sterea discipline; the oracle runs the same stages as a DuckDB
+    CTE chain.  Reference reaches it via pyproj."""
     out = reproject_dataset(_cube_a(spark), GRID, _ROBIN)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: Hammer equal-area world grid ------------------------------
-
-from xcube_spark.operators.resampling.reproject import hammer_inverse_sql
 
 #: off-round origin/steps keep every re-projected center >= 4.8e-4 deg
 #: from any 1-degree source-cell edge and inside the elliptical
@@ -2275,52 +1394,23 @@ _HAMMER = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                    t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                    crs="PROJ:HAMMER")
 
-_HAMMER_LON, _HAMMER_LAT = hammer_inverse_sql(
-    "(-10500011.0 + (x_i + 0.5) * 540017.0)",
-    "(-7020013.0 + (y_i + 0.5) * 360013.0)", "PROJ:HAMMER")
-
 
 @query(
     "cube_reproject_hammer",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_HAMMER.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_HAMMER_LON} AS lon,
-                   {_HAMMER_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_HAMMER),
 )
 def cube_reproject_hammer(spark, sf_dir):
     """reproject_dataset onto the Hammer(-Aitoff) equal-area world
     grid (Hammer 1892; Snyder's modified azimuthals) — the Lambert
     azimuthal equatorial aspect at halved longitudes stretched 2x in
     x, closed form BOTH directions (z = sqrt(1 - (x/4)^2 - (y/2)^2));
-    reference reaches it via pyproj +proj=hammer.  The oracle states
-    the identical inverse in SQL (hammer_inverse_sql, same op
-    order)."""
+    reference reaches it via pyproj +proj=hammer.  The oracle runs
+    the same inverse text in DuckDB."""
     out = reproject_dataset(_cube_a(spark), GRID, _HAMMER)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
-
 # ---- reproject: Winkel Tripel world grid (ESRI:54042) ---------------------
-
-from xcube_spark.operators.resampling.reproject import wintri_inverse_sql_ctes
 
 #: off-round origin/steps keep every re-projected center >= 8.5e-4 deg
 #: from any 1-degree source-cell edge, and the whole window inside the
@@ -2331,31 +1421,10 @@ _WINTRI = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                    t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                    crs="ESRI:54042")
 
-_WINTRI_CTES = wintri_inverse_sql_ctes(
-    "CAST((-10869011.0 + (x_i + 0.5) * 540017.0) AS DOUBLE)",
-    "CAST((-7799013.0 + (y_i + 0.5) * 390313.0) AS DOUBLE)",
-    "ESRI:54042")
-
 
 @query(
     "cube_reproject_wintri",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_WINTRI.size})
-        ), {_WINTRI_CTES}, f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM wintri_ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_WINTRI),
 )
 def cube_reproject_wintri(spark, sf_dir):
     """reproject_dataset onto the Winkel Tripel world grid
@@ -2365,17 +1434,14 @@ def cube_reproject_wintri(spark, sf_dir):
     Aitoff); there is NO closed-form inverse — the engine runs a
     fixed 6-step 2-D Newton solve with the analytic Jacobian (the
     published approach for this projection: Ipbuker & Bildirici 2002)
-    as staged Column arithmetic, and the oracle states the IDENTICAL
-    iteration in SQL (wintri_inverse_sql_ctes, same op order, same
-    guards, same count).  Reference reaches wintri only via pyproj
+    as staged arithmetic, and the oracle runs the same stages as a
+    DuckDB CTE chain.  Reference reaches wintri only via pyproj
     (core/gridmapping/transform.py)."""
     out = reproject_dataset(_cube_a(spark), GRID, _WINTRI)
     return out.select("t_i", "y_i", "x_i", F.round("A", 6).alias("A"))
 
 
 # ---- reproject: interrupted Goode homolosine world grid (PROJ:IGH) ------
-
-from xcube_spark.operators.resampling.reproject import igh_inverse_sql
 
 #: off-round origin/steps keep every re-projected center >= 1.7e-3 deg
 #: from any 1-degree source-cell edge, >= 3e-3 rad from the Goode
@@ -2387,35 +1453,10 @@ _IGH = CubeGrid(width=40, height=40, time_periods=GRID.time_periods,
                 t_start=GRID.t_start, t_freq_days=GRID.t_freq_days,
                 crs="PROJ:IGH")
 
-_IGH_LON, _IGH_LAT = igh_inverse_sql(
-    "(-19947013.0 + (x_i + 0.5) * 997313.0)",
-    "(-8579013.0 + (y_i + 0.5) * 429313.0)", "PROJ:IGH")
-
 
 @query(
     "cube_reproject_goode",
-    sql=f"""
-        {CUBE_CTE},
-        tgt AS (
-            SELECT CAST(range // 1600 AS INT) AS t_i,
-                   CAST((range % 1600) // 40 AS INT) AS y_i,
-                   CAST(range % 40 AS INT) AS x_i
-            FROM range({_IGH.size})
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_IGH_LON} AS lon,
-                   {_IGH_LAT} AS lat
-            FROM tgt
-        ), f AS (
-            SELECT t_i, y_i, x_i,
-                   CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
-                   CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
-            FROM ll
-        )
-        SELECT f.t_i, f.y_i, f.x_i, ROUND(c.A, 6) AS A
-        FROM f LEFT JOIN cube c
-          ON c.t_i = f.t_i AND c.y_i = f.sy AND c.x_i = f.sx
-    """,
+    sql=_reproject_oracle(_IGH),
 )
 def cube_reproject_goode(spark, sf_dir):
     """reproject_dataset onto the INTERRUPTED Goode homolosine world
@@ -2425,9 +1466,9 @@ def cube_reproject_goode(spark, sf_dir):
     lobes above, interrupted along 40W (north) / 100W, 20W, 80E
     (south) with per-lobe central meridians.  The engine derives the
     EXACT Mollweide continuity offset at import (GCTP's
-    0.0528035274542) and the whole inverse is closed form; the oracle
-    states the identical zone tests and op order in SQL
-    (igh_inverse_sql).  Reference reaches igh only via pyproj
+    0.0528035274542) and the whole inverse is one closed-form stage;
+    the oracle runs the same zone tests as DuckDB text.  Reference
+    reaches igh only via pyproj
     (core/gridmapping/transform.py).  Cells in the interruption gaps
     resolve deterministically (PROJ's inverse convention: classify by
     projected x against the interruption meridians) on BOTH engines;
@@ -2547,12 +1588,8 @@ _RU_MUL = 7919         # prime, coprime with 64800: bijective scramble
                    CAST(range % 40 AS INT) AS x_i
             FROM range(102400)
             WHERE range < (SELECT t FROM dims) * 1600
-        ), ll AS (
-            SELECT t_i, y_i, x_i,
-                   {_UTM_LON} AS lon,
-                   {_UTM_LAT} AS lat
-            FROM tgt
-        ), f AS (
+        ), {inverse_sql_ctes(_UTM.crs, _UTM.x_center_sql(),
+                             _UTM.y_center_sql())}, f AS (
             SELECT t_i, y_i, x_i,
                    CAST(FLOOR((lon - -180.0) / 1.0) AS INT) AS sx,
                    CAST(FLOOR((lat - -90.0) / 1.0) AS INT) AS sy
@@ -2571,10 +1608,10 @@ def events_reproject_utm(spark, sf_dir):
     64800 ids — the coprime multiplier spreads sparse small-sf data
     uniformly so the UTM window is populated at every sf), reprojected
     onto the margin-validated zone-33 target of cube_reproject_utm
-    extended to the derived time-step count.  The source side — the
-    sf-scaled part — never shuffles: the target table is bounded and
-    broadcast (reproject.py:5072).  The oracle restates the identical
-    Krueger-series inverse (utm_inverse_sql) and gather."""
+    extended to the derived time-step count.  The target table is
+    bounded (output raster size).  The oracle runs the same
+    Krueger-series inverse text in DuckDB and re-derives the
+    gather."""
     ev = tbl(spark, sf_dir, "events")
     t = -(-_events_n(spark, sf_dir) // _RU_PLANE)
     src_grid = CubeGrid(width=360, height=180, time_periods=t)
