@@ -3,7 +3,6 @@
 - FileSet.to_local_dir zip-slip containment (byoa.py)
 - server job/cubegen id allocation under a lock (server.py)
 - simhash 21-bit SWAR lane overflow now enforced (dedup.py)
-- zarr v3 empty-chunk-dir prune sweeps emptied parents (zarrio.py)
 """
 
 from __future__ import annotations
@@ -60,35 +59,6 @@ def test_simhash_lane_overflow_raises(spark):
         simhash(over).collect()
     assert "SWAR" in str(ei.value) or "21-bit" in str(ei.value) \
         or "token occurrences" in str(ei.value)
-
-
-def test_zarr_v3_prune_sweeps_emptied_parents(tmp_path):
-    """os.walk(topdown=False) parents list stale (already-rmdir'd)
-    children in dirnames; the prune must still remove them."""
-    root = tmp_path / "arr" / "c"
-    leaf = root / "0" / "1"
-    leaf.mkdir(parents=True)
-    keep = root / "2"
-    keep.mkdir()
-    (keep / "chunk").write_bytes(b"\x00")
-
-    # replicate the prune loop from zarrio._unchunk (kept in sync by
-    # this test's sibling assertion on the source text below)
-    for dirpath, _d, _f in os.walk(str(root), topdown=False):
-        try:
-            os.rmdir(dirpath)
-        except OSError:
-            pass
-
-    assert not (root / "0").exists()          # parent swept too
-    assert (keep / "chunk").exists()          # non-empty kept
-    assert root.exists()                      # "c" kept (non-empty)
-
-    import inspect
-
-    import xcube_spark.sources.zarrio as zarrio
-    src = inspect.getsource(zarrio)
-    assert "fails harmlessly (OSError) on non-empty dirs" in src
 
 
 def test_server_job_seq_is_locked():

@@ -413,3 +413,36 @@ def test_parquet_refs_missing_chunks_fill(spark, tmp_path):
     rows = cube.where("t_i NOT IN (1, 2)").collect()
     assert max(abs(r["A"] - want[r["t_i"], r["y_i"], r["x_i"]])
                for r in rows) == 0.0
+
+
+def test_refs_paths_keep_var_names_order(spark, tmp_path):
+    """Both refs paths return the columns in the caller's var_names
+    order and the same cells."""
+    from xcube_spark.sources.virtualize import (
+        open_kerchunk_parquet_cube, virtualize_netcdf4_mf,
+        virtualize_netcdf4_mf_parquet)
+    from xcube_spark.sources.zarrio import open_kerchunk_cube
+
+    rng = np.random.RandomState(3)
+    path = str(tmp_path / "ab.nc")
+    write_hdf5(path, {
+        "time": {"data": np.arange(2.0) * 86400.0, "dims": ["time"],
+                 "attrs": {"units": "seconds since 2020-01-01"}},
+        "lat": {"data": np.linspace(-45.0, 45.0, 6), "dims": ["lat"]},
+        "lon": {"data": np.linspace(-90.0, 90.0, 8), "dims": ["lon"]},
+        "a": {"data": rng.rand(2, 6, 8), "dims": ["time", "lat", "lon"],
+              "chunks": (1, 3, 4)},
+        "b": {"data": rng.rand(2, 6, 8), "dims": ["time", "lat", "lon"],
+              "chunks": (1, 3, 4)},
+    })
+    refs, refs_dir = str(tmp_path / "ab.json"), str(tmp_path / "ab_refs")
+    virtualize_netcdf4_mf(spark, [path], refs)
+    virtualize_netcdf4_mf_parquet(spark, [path], refs_dir)
+    by_json = open_kerchunk_cube(spark, refs, var_names=["b", "a"])
+    by_parquet = open_kerchunk_parquet_cube(spark, refs_dir,
+                                            var_names=["b", "a"])
+    cols = ["t_i", "y_i", "x_i", "time", "y", "x", "b", "a"]
+    assert by_json.columns == cols and by_parquet.columns == cols
+    assert by_json.count() == 2 * 6 * 8
+    assert by_json.exceptAll(by_parquet).count() == 0
+    assert by_parquet.exceptAll(by_json).count() == 0

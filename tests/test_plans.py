@@ -328,8 +328,8 @@ def test_jp2_read_plan_shuffle_free(spark, tmp_path):
 
 def test_netcdf4_read_plan_shuffle_free(spark, tmp_path):
     """The aligned netCDF-4 cube read is MapInPandas over the task
-    table plus broadcast axis joins — no hash-partition exchange of
-    cube-sized data anywhere in the physical plan."""
+    range with the coordinates from the generator — no hash-partition
+    exchange of cube-sized data anywhere in the physical plan."""
     import numpy as np
 
     from xcube_spark.sources.hdf5 import open_netcdf4_cube, write_hdf5
@@ -347,8 +347,8 @@ def test_netcdf4_read_plan_shuffle_free(spark, tmp_path):
     })
     cube = open_netcdf4_cube(spark, path)
     phys = cube._jdf.queryExecution().executedPlan().toString()
-    # broadcast exchanges for the 3 axis joins are fine; the only
-    # allowed shuffle is the bounded task-table round-robin
+    # no axis joins and no shuffle at all: range -> MapInPandas ->
+    # Project
     import re
 
     hash_exchanges = re.findall(r"Exchange hashpartitioning[^\n]*", phys)
@@ -530,17 +530,80 @@ def _zarr_store(spark, path, axes=None):
 
 ZARR_SCHEMA = ("struct<t_i:int,y_i:int,x_i:int,time:timestamp,y:double,"
                "x:double,v:double>")
+NC4_SCHEMA = ("struct<t_i:int,y_i:int,x_i:int,time:timestamp,y:double,"
+              "x:double,A:double,B:double>")
+#: each gridded reader's cells schema
+READER_SCHEMAS = {
+    "zarr": ZARR_SCHEMA,
+    "netcdf3": ZARR_SCHEMA,
+    "netcdf4": NC4_SCHEMA,
+    "netcdf4_unaligned": NC4_SCHEMA,
+    "kerchunk_json": ZARR_SCHEMA,
+    "kerchunk_parquet": NC4_SCHEMA,
+}
 
 
-def test_open_zarr_cube_plan_has_no_axis_join(spark, tmp_path):
+def _netcdf4_file(path, aligned=True, n_lat=6):
+    """A 2x6x8 netCDF-4 cube with variables A and B; ``aligned=False``
+    stores B contiguous (a different chunk grid from A's), ``n_lat``
+    sets the length of the lat dimension scale."""
+    import numpy as np
+
+    from xcube_spark.sources.hdf5 import write_hdf5
+
+    write_hdf5(path, {
+        "time": {"data": np.arange(2.0) * 86400, "dims": ["time"],
+                 "attrs": {"units": "seconds since 1970-01-01"}},
+        "lat": {"data": np.linspace(-10, 10, n_lat), "dims": ["lat"]},
+        "lon": {"data": np.linspace(-10, 10, 8), "dims": ["lon"]},
+        "A": {"data": np.arange(96.0).reshape(2, 6, 8),
+              "dims": ["time", "lat", "lon"], "chunks": (1, 3, 4)},
+        "B": {"data": np.zeros((2, 6, 8)), "dims": ["time", "lat", "lon"],
+              **({"chunks": (1, 3, 4)} if aligned else {})},
+    })
+    return path
+
+
+def _reader_cube(spark, tmp_path, reader):
+    """A small cube opened through ``reader`` (a READER_SCHEMAS key)."""
+    from xcube_spark.sources.hdf5 import open_netcdf4_cube
+    from xcube_spark.sources.netcdf3 import (open_netcdf_cube,
+                                             write_netcdf_cube)
+    from xcube_spark.sources.virtualize import (
+        open_kerchunk_parquet_cube, virtualize_netcdf4_mf_parquet)
+    from xcube_spark.sources.zarrio import (open_kerchunk_cube,
+                                            open_zarr_cube,
+                                            write_kerchunk_refs)
+
+    if reader == "zarr":
+        return open_zarr_cube(spark, _zarr_store(spark, str(tmp_path / "z")))
+    if reader == "netcdf3":
+        path = str(tmp_path / "c.nc")
+        write_netcdf_cube(new_cube(spark, ZGRID, {"v": "CAST(t_i AS DOUBLE)"}),
+                          path, ZGRID)
+        return open_netcdf_cube(spark, path)
+    if reader.startswith("netcdf4"):
+        return open_netcdf4_cube(spark, _netcdf4_file(
+            str(tmp_path / "c.nc"), aligned=reader == "netcdf4"))
+    if reader == "kerchunk_json":
+        refs = str(tmp_path / "refs.json")
+        write_kerchunk_refs(_zarr_store(spark, str(tmp_path / "z")), refs)
+        return open_kerchunk_cube(spark, refs)
+    refs_dir = str(tmp_path / "refs")
+    virtualize_netcdf4_mf_parquet(
+        spark, [_netcdf4_file(str(tmp_path / "c.nc"))], refs_dir)
+    return open_kerchunk_parquet_cube(spark, refs_dir)
+
+
+@pytest.mark.parametrize("reader", list(READER_SCHEMAS))
+def test_open_zarr_cube_plan_has_no_axis_join(spark, tmp_path, reader):
     """The coordinates come out of the chunk generator: the optimized
-    plan has no Join and no LocalRelation (axis table)."""
-    from xcube_spark.sources.zarrio import open_zarr_cube
-
-    cube = open_zarr_cube(spark, _zarr_store(spark, str(tmp_path / "z")))
+    plan of every gridded reader has no Join and no LocalRelation (axis
+    or task table), and its schema is the cells schema."""
+    cube = _reader_cube(spark, tmp_path, reader)
     opt = cube._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in opt and "LocalRelation" not in opt, opt
-    assert cube.schema.simpleString() == ZARR_SCHEMA
+    assert cube.schema.simpleString() == READER_SCHEMAS[reader]
 
 
 @pytest.mark.parametrize("case", ["f8", "f4", "noleap_int", "x_chunked"])
@@ -583,12 +646,16 @@ def test_open_zarr_cube_axis_schema_and_values(spark, tmp_path, case):
 
 
 def test_open_zarr_cube_short_axis_raises(spark, tmp_path):
+    from xcube_spark.sources.hdf5 import open_netcdf4_cube
     from xcube_spark.sources.zarrio import open_zarr_cube
 
     path = _zarr_store(spark, str(tmp_path / "z"),
                        {"x": (list(range(7)), "<f8", {})})
     with pytest.raises(ValueError, match="axis 'x'"):
         open_zarr_cube(spark, path)
+    path = _netcdf4_file(str(tmp_path / "short.nc"), n_lat=5)
+    with pytest.raises(ValueError, match="axis 'y'"):
+        open_netcdf4_cube(spark, path)
 
 
 def test_zarr_point_statistics_job_count(spark, tmp_path):

@@ -1054,3 +1054,52 @@ def test_mollweide_forward_inverse_roundtrip(spark):
                                                 rel=1e-9)
     assert by[(180.0, 0.0)].mx == pytest.approx(
         2 * math.sqrt(2) / math.pi * R * math.pi, rel=1e-9)
+
+
+def test_rectify_fractional_no_forced_broadcast_on_large_grid(spark):
+    """The fractional ij-lookup is target-plane-sized: a grid past the
+    cost cap must NOT carry a forced broadcast hint (AQE may still pick
+    one from runtime stats), while a small grid still does."""
+    from xcube_spark.cube.grid import CubeGrid
+    from xcube_spark.cube.new import new_cube
+    from xcube_spark.operators.resampling.rectify import rectify_dataset
+
+    def hint_count(df):
+        return df._jdf.queryExecution().analyzed().toString().count(
+            "ResolvedHint")
+
+    src_grid = CubeGrid(width=6, height=4, time_periods=1, x_res=1.0,
+                        y_res=1.0, x_start=0.0, y_start=0.0)
+    swath = new_cube(spark, src_grid, {"V": 1.0}).withColumns(
+        {"lon": F.col("x") + 0.25, "lat": F.col("y") + 0.25})
+
+    small = rectify_dataset(swath, src_grid, var_names=["V"],
+                            interpolation="bilinear")
+    big_grid = CubeGrid(width=4000, height=4000, time_periods=1, x_res=1.0,
+                        y_res=1.0, x_start=0.0, y_start=0.0)
+    big = rectify_dataset(swath, big_grid, var_names=["V"],
+                          interpolation="bilinear")
+    # both plans broadcast the 1-row dims; only the small plan may
+    # force-broadcast the lookup
+    assert hint_count(small) == hint_count(big) + 1
+
+
+def test_rectify_nearest_no_forced_broadcast_on_large_grid(spark):
+    """Same guard on the nearest path's lookup broadcast."""
+    from xcube_spark.cube.grid import CubeGrid
+    from xcube_spark.cube.new import new_cube
+    from xcube_spark.operators.resampling.rectify import rectify_dataset
+
+    src_grid = CubeGrid(width=6, height=4, time_periods=1, x_res=1.0,
+                        y_res=1.0, x_start=0.0, y_start=0.0)
+    swath = new_cube(spark, src_grid, {"V": 1.0}).withColumns(
+        {"lon": F.col("x"), "lat": F.col("y")})
+    big_grid = CubeGrid(width=4000, height=4000, time_periods=1, x_res=1.0,
+                        y_res=1.0, x_start=0.0, y_start=0.0)
+    big = rectify_dataset(swath, big_grid, var_names=["V"])
+    plan = big._jdf.queryExecution().analyzed().toString()
+    # round 9 PINS the bounded mapped side to shuffle_hash past the
+    # broadcast cap (leaving it to the optimizer flip-flopped between
+    # SMJ and an erratic runtime broadcast); what must never appear on
+    # a large grid is a FORCED BROADCAST of the plane-sized lookup
+    assert "strategy=broadcast" not in plan

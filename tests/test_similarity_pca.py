@@ -5,6 +5,7 @@ one-pass moment accumulation)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from xcube_spark.pipeline.similarity import (
     pca_moments,
@@ -232,3 +233,25 @@ def test_knn_ivfpq_rerank_orders_by_exact_distance(spark):
         # exact d2 recomputed in numpy must be non-decreasing in rank
         d2s = [float(((vecs[v] - vecs[qid]) ** 2).sum()) for v in ids]
         assert all(a <= b + 1e-9 for a, b in zip(d2s, d2s[1:])), d2s
+
+
+def test_knn_bruteforce_tie_break_deterministic(spark):
+    """Duplicate embeddings produce exact cosine ties at the k
+    boundary; the pruned plan must return the same smallest-id winners
+    as the global (cosine desc, id asc) ranking."""
+    from xcube_spark.pipeline.similarity import knn_bruteforce
+
+    # ids 10..17 all share one vector (exact ties); ids 1-2 score lower
+    rows = [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(10, 18)]
+    rows += [(1, [4.0, 3.0, 2.0, 1.0]), (2, [-1.0, -2.0, -3.0, -4.0])]
+    # adversarial order: descending ids first, single partition so one
+    # Arrow batch sees every tied row at once
+    rows.sort(key=lambda r: -r[0])
+    corpus = spark.createDataFrame(
+        rows, "vec_id int, embedding array<double>").coalesce(1)
+    queries = spark.createDataFrame(
+        [(100, [1.0, 2.0, 3.0, 4.0])], "query_id int, embedding array<double>")
+
+    out = knn_bruteforce(corpus, queries, k=4).orderBy("rank").collect()
+    assert [r["vec_id"] for r in out] == [10, 11, 12, 13]
+    assert all(r["cosine"] == pytest.approx(1.0) for r in out)

@@ -3157,24 +3157,28 @@ def _lonlat_to_wintri_fn(crs: str) -> ColumnTransform:
 
 def _wintri_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
     """Winkel Tripel E/N -> lon/lat: a fixed-count 2-D Newton solve on
-    the forward, one stage per iteration.  f = forward(lam, phi) - in,
+    the forward, two stages per iteration: the alpha terms of the
+    current estimate, then the update.  f = forward(lam, phi) - in,
     J analytic; delta = J^-1 f."""
     r, cp1 = WINTRI_PARAMS[crs.upper()]
     xn, yn, lam, phi = _cols("__wxn __wyn __wl __wp")
+    t, dt, dal, dap = _cols("__wt __wdt __wdal __wdap")
     lam2 = lam / Q.lit(2.0)
     sl2, cl2 = Q.sin(lam2), Q.cos(lam2)
     sp, cp = Q.sin(phi), Q.cos(phi)
     alpha = Q.acos(Q.least(cp * cl2, Q.lit(1.0)))
     sa = Q.sin(alpha)
-    t = _wt_T(alpha, sa, Q)
-    # dT/dalpha, with its alpha -> 0 limit alpha/3
-    dt = Q.when(alpha < Q.lit(_WT_EPS), alpha / Q.lit(3.0)) \
-        .otherwise((sa - alpha * Q.cos(alpha)) / (sa * sa))
-    # dalpha/dlam, dalpha/dphi (0 at the alpha=0 singularity)
-    dal = Q.when(sa < Q.lit(_WT_EPS), Q.lit(0.0)) \
-        .otherwise(cp * sl2 / (Q.lit(2.0) * sa))
-    dap = Q.when(sa < Q.lit(_WT_EPS), Q.lit(0.0)) \
-        .otherwise(sp * cl2 / sa)
+    terms = {
+        "__wt": _wt_T(alpha, sa, Q),
+        # dT/dalpha, with its alpha -> 0 limit alpha/3
+        "__wdt": Q.when(alpha < Q.lit(_WT_EPS), alpha / Q.lit(3.0))
+        .otherwise((sa - alpha * Q.cos(alpha)) / (sa * sa)),
+        # dalpha/dlam, dalpha/dphi (0 at the alpha=0 singularity)
+        "__wdal": Q.when(sa < Q.lit(_WT_EPS), Q.lit(0.0))
+        .otherwise(cp * sl2 / (Q.lit(2.0) * sa)),
+        "__wdap": Q.when(sa < Q.lit(_WT_EPS), Q.lit(0.0))
+        .otherwise(sp * cl2 / sa),
+    }
     f1 = Q.lit(0.5) * (lam * Q.lit(cp1)
                        + Q.lit(2.0) * cp * sl2 * t) - xn
     f2 = Q.lit(0.5) * (phi + sp * t) - yn
@@ -3200,7 +3204,7 @@ def _wintri_inverse(x: _Sql, y: _Sql, crs: str) -> list[dict]:
                                     Q.lit(-math.pi)), Q.lit(math.pi)),
          "__wp": Q.least(Q.greatest(yn, Q.lit(-math.pi / 2)),
                          Q.lit(math.pi / 2))},
-        *[newton] * _WINTRI_ITERS,
+        *[terms, newton] * _WINTRI_ITERS,
         {"__out_x": Q.degrees(lam), "__out_y": Q.degrees(phi)},
     ]
 

@@ -6,12 +6,14 @@ user callable ``get_data(chunk_index) -> ndarray``.  The Spark-native
 analog (SURVEY §2.1): a **generator DataFrame** —
 
     spark.range(num_chunks) -> mapInPandas(chunk_index -> cell rows)
+        -> project(CubeGrid cell centres)
 
 Each task materializes one chunk by calling the user function; nothing
-is stored, scans stream straight out of compute.  Filters on chunk
-coordinates prune *before* generation (the range table is tiny), which
-is exactly the virtual-store promise: IO cost proportional to the
-subset read, not the dataset size.
+is stored, scans stream straight out of compute.  The cell rows come
+from the shared emitter (sources/cells.py); the coordinates are the
+grid's closed-form cell centres.  A filter on ``t_i/y_i/x_i`` applies
+to the generated rows: it cannot cross the Python stage, so every
+chunk is generated.
 
 The user function receives the chunk's index triple and its cell-index
 bounds and returns a numpy array shaped (nt, ny, nx) per variable —
@@ -20,14 +22,14 @@ the reference's ``GenericArray.get_data`` contract re-expressed.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Mapping
+from typing import Callable, Mapping
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xcube_spark.cube.grid import CubeGrid
+from xcube_spark.sources.cells import cells_frame
 
 #: (chunk t/y/x index, (t0,t1,y0,y1,x0,x1) cell bounds) -> {var: ndarray}
 ChunkFunc = Callable[[tuple[int, int, int], tuple[int, ...]], Mapping[str, np.ndarray]]
@@ -50,41 +52,26 @@ def open_chunk_store(
 ) -> DataFrame:
     """Build the virtual cells DataFrame over ``get_data``.
 
-    The plan is ``range(num_chunks) -> mapInPandas``: chunk generation
-    is embarrassingly parallel, each Arrow batch carries whole chunks,
-    and Catalyst prunes chunks when the caller filters on ``t_i/y_i/
-    x_i`` ranges that the tiny range-table filter can express."""
+    The plan is ``range(num_chunks) -> mapInPandas -> project``: chunk
+    generation is embarrassingly parallel and each Arrow batch carries
+    whole chunks.  Values keep ``get_data``'s NaN (no NULL mapping)."""
     nt, ny, nx = chunk_grid(grid)
     ct, cy, cx = grid.chunks
-    n_chunks = nt * ny * nx
-    schema = "t_i INT, y_i INT, x_i INT, " + ", ".join(
-        f"`{v}` DOUBLE" for v in var_names
-    )
-
     tp, h, w = grid.time_periods, grid.height, grid.width
 
-    def generate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for chunk_id in pdf["id"]:
-                tc = int(chunk_id) // (ny * nx)
-                yc = (int(chunk_id) % (ny * nx)) // nx
-                xc = int(chunk_id) % nx
-                t0, t1 = tc * ct, min((tc + 1) * ct, tp)
-                y0, y1 = yc * cy, min((yc + 1) * cy, h)
-                x0, x1 = xc * cx, min((xc + 1) * cx, w)
-                arrays = get_data((tc, yc, xc), (t0, t1, y0, y1, x0, x1))
-                tt, yy, xx = np.meshgrid(
-                    np.arange(t0, t1), np.arange(y0, y1), np.arange(x0, x1),
-                    indexing="ij",
-                )
-                out = {"t_i": tt.ravel().astype("int32"),
-                       "y_i": yy.ravel().astype("int32"),
-                       "x_i": xx.ravel().astype("int32")}
-                for v in var_names:
-                    out[v] = np.asarray(arrays[v], dtype="float64").ravel()
-                yield pd.DataFrame(out)
+    def read(row):
+        tc, rem = divmod(int(row.id), ny * nx)
+        yc, xc = divmod(rem, nx)
+        t0, t1 = tc * ct, min((tc + 1) * ct, tp)
+        y0, y1 = yc * cy, min((yc + 1) * cy, h)
+        x0, x1 = xc * cx, min((xc + 1) * cx, w)
+        arrays = get_data((tc, yc, xc), (t0, t1, y0, y1, x0, x1))
+        yield (t0, y0, x0), {
+            v: np.asarray(arrays[v], "float64").reshape(
+                t1 - t0, y1 - y0, x1 - x0) for v in var_names}
 
-    cells = spark.range(n_chunks).mapInPandas(generate, schema)
+    cells = cells_frame(spark.range(nt * ny * nx), read, var_names,
+                        (tp, h, w))
     return cells.withColumns({
         "time": grid.time_center_expr(F.col("t_i")),
         "y": grid.y_center_expr(F.col("y_i")),

@@ -29,12 +29,12 @@ from __future__ import annotations
 import struct
 import zlib
 from dataclasses import dataclass, field
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from xcube_spark.sources.cells import emit_cells
 
 #: driver-side raster writers refuse above this many cells — they
 #: collect() the full raster, so they are scoped to tiles/fixtures;
@@ -229,11 +229,12 @@ def open_geotiff_cube(
     band_names: list[str] | None = None,
 ) -> DataFrame:
     """GeoTIFF/COG IFD ``level`` -> cells DataFrame
-    ``(y_i, x_i, y, x, band_1..band_n)``; single time step (``t_i`` 0).
+    ``(t_i, y_i, x_i, y, x, band_1..band_n)``; single time step
+    (``t_i`` 0), ``y``/``x`` from the TIFF affine (else the indices).
 
     Plan shape: ``range(n_blocks) -> mapInPandas(read + inflate +
-    unpredict)`` — each task reads only its own tile/strip byte range,
-    so spatial predicates prune blocks before any IO."""
+    unpredict) -> project`` (sources/cells.py) — each task reads only
+    its own tile/strip byte range."""
     ifds = _read_ifds(path)
     if not 0 <= level < len(ifds):
         raise IndexError(f"level {level} not in [0, {len(ifds)})")
@@ -242,48 +243,30 @@ def open_geotiff_cube(
     if len(names) != ifd.n_bands:
         raise ValueError(f"file has {ifd.n_bands} bands, "
                          f"got {len(names)} names")
-    n_blocks = len(ifd.offsets)
     ta = ifd.tiles_across
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def read(row):
+        b = int(row.id)
         with open(path, "rb") as f:
-            for pdf in batches:
-                for block_id in pdf["id"]:
-                    b = int(block_id)
-                    f.seek(ifd.offsets[b])
-                    raw = f.read(ifd.byte_counts[b])
-                    if ifd.tiled:
-                        ty, tx = b // ta, b % ta
-                        y0, x0 = ty * ifd.tile_h, tx * ifd.tile_w
-                        rows, cols = ifd.tile_h, ifd.tile_w
-                    else:
-                        y0, x0 = b * ifd.tile_h, 0
-                        rows = min(ifd.tile_h, ifd.height - y0)
-                        cols = ifd.width
-                    arr = _decode_block(raw, ifd, rows, cols)
-                    # trim tile padding at the right/bottom image edge
-                    r1 = min(rows, ifd.height - y0)
-                    c1 = min(cols, ifd.width - x0)
-                    arr = arr[:r1, :c1, :]
-                    yy, xx = np.meshgrid(np.arange(y0, y0 + r1),
-                                         np.arange(x0, x0 + c1),
-                                         indexing="ij")
-                    out = {"y_i": yy.ravel().astype("int32"),
-                           "x_i": xx.ravel().astype("int32")}
-                    for bi, name in enumerate(names):
-                        vals = arr[:, :, bi].astype("float64").ravel()
-                        if ifd.nodata is not None:
-                            vals = np.where(vals == ifd.nodata, np.nan,
-                                            vals)
-                        out[name] = vals
-                    yield pd.DataFrame(out)
+            f.seek(ifd.offsets[b])
+            raw = f.read(ifd.byte_counts[b])
+        if ifd.tiled:
+            ty, tx = b // ta, b % ta
+            y0, x0 = ty * ifd.tile_h, tx * ifd.tile_w
+            rows, cols = ifd.tile_h, ifd.tile_w
+        else:
+            y0, x0 = b * ifd.tile_h, 0
+            rows = min(ifd.tile_h, ifd.height - y0)
+            cols = ifd.width
+        # trim tile padding at the right/bottom image edge
+        arr = _decode_block(raw, ifd, rows, cols)[
+            : ifd.height - y0, : ifd.width - x0, :].astype("float64")
+        if ifd.nodata is not None:
+            arr[arr == ifd.nodata] = np.nan
+        yield (y0, x0), {n: arr[:, :, bi] for bi, n in enumerate(names)}
 
-    schema = "y_i INT, x_i INT, " + ", ".join(f"`{n}` DOUBLE"
-                                              for n in names)
-    cells = spark.range(n_blocks).mapInPandas(gen, schema)
-    cells = cells.select(
-        "y_i", "x_i",
-        *[F.when(~F.isnan(n), F.col(n)).alias(n) for n in names])
+    cells = emit_cells(spark.range(len(ifd.offsets)), read, names,
+                       (ifd.height, ifd.width))
 
     if ifd.pixel_scale and ifd.tiepoint:
         sx, sy = ifd.pixel_scale

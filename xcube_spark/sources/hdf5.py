@@ -23,11 +23,13 @@ model actually uses is parsed directly:
   global-heap collection).
 
 Scale model matches the Zarr/GeoTIFF/netCDF-3 readers: the driver
-parses only metadata (KBs); every chunk becomes a (address, nbytes)
-row that ``mapInPandas`` tasks read and decode executor-locally, so a
-100 TB archive of .nc granules fans out to one task per chunk with no
-driver data movement.  CF decoding (_FillValue/scale/offset, time
-units + calendar) is shared with the netCDF-3 reader.
+parses only metadata (KBs) and the dimension scales; every chunk
+region becomes a task over its (address, nbytes) entries that
+``mapInPandas`` reads and decodes executor-locally, so a 100 TB
+archive of .nc granules fans out to one task per chunk with no driver
+data movement.  The cells, coordinates and CF decoding
+(_FillValue/scale/offset, time units + calendar) come from the shared
+emitter (sources/cells.py), as for every gridded reader.
 
 The writer emits a minimal but spec-correct netCDF-4 flavoured HDF5
 file (superblock v0, old-style root group, dimension-scale ``CLASS``/
@@ -41,12 +43,11 @@ from __future__ import annotations
 import struct
 import zlib
 from dataclasses import dataclass, field
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from xcube_spark.sources.cells import cf_decode, emit_cells, region_tasks
 
 _SIG = b"\x89HDF\r\n\x1a\n"
 _UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -729,10 +730,14 @@ def open_netcdf4_cube(
     are read chunk-parallel: the driver enumerates chunk byte ranges
     from the B-tree / v4 index, and ``mapInPandas`` tasks seek, read,
     de-filter and CF-decode each chunk executor-locally.  Contiguous
-    variables fan out as per-time-plane pseudo-chunks."""
-    from xcube_spark.functions.cftime import decode_cf_time
-    from xcube_spark.sources.netcdf3 import _cf_decode
+    variables fan out as per-time-plane pseudo-chunks.
 
+    Plan: ``range(n_regions) -> mapInPandas -> project``, the
+    dimension-scale values read once on the driver and indexed per
+    cell in the task — no join.  Variables on different chunk grids
+    read one (region, variable) per task and pivot on the cell key
+    (one shuffle).  A dimension scale shorter than the data raises
+    ``ValueError``."""
     h5 = H5File(path)
     dims_of = {n: _var_dims(d) for n, d in h5.datasets.items()}
     # dimension sizes: from the dimension-scale datasets themselves
@@ -764,14 +769,15 @@ def open_netcdf4_cube(
     # driver-side chunk enumeration, grouped by region: all variables
     # share the cube chunk grid in netCDF-4 practice, so one task reads
     # every variable's chunk for its region and emits WIDE rows — no
-    # pivot, no shuffle (mirrors the zarr reader's plan shape).
-    regions: dict[tuple[int, int, int], dict[str, tuple[int, int, int]]] = {}
+    # pivot, no shuffle (the zarr reader's plan shape).  Mixed chunk
+    # grids fall back to one task per (region, variable) and a pivot.
+    regions: dict[tuple[int, int, int], list] = {}
     for n, ds in data_vars.items():
         if ds.layout == "chunked":
             seen: set = set()
             for coords, addr, nbytes, fmask in h5.chunks(ds):
-                regions.setdefault(tuple(coords), {})[n] = (
-                    addr, nbytes, fmask)
+                regions.setdefault(tuple(coords), []).append(
+                    (n, addr, nbytes, fmask))
                 seen.add(tuple(coords))
             # chunk coordinates absent from the index (sparse archive /
             # never-written regions) become fill pseudo-chunks (addr -1)
@@ -784,21 +790,20 @@ def open_netcdf4_cube(
                     off = tuple(c * s for c, s in
                                 zip(coord, ds.chunk_shape))
                     if off not in seen:
-                        regions.setdefault(off, {})[n] = (-1, 0, 0)
+                        regions.setdefault(off, []).append((n, -1, 0, 0))
         elif ds.layout == "contiguous":
             if ds.data_addr == _UNDEF:  # defined but never written
                 for t in range(tp):
-                    regions.setdefault((t, 0, 0), {})[n] = (-1, 0, 0)
+                    regions.setdefault((t, 0, 0), []).append((n, -1, 0, 0))
             else:
                 plane = h * w * ds.dtype.itemsize
                 for t in range(tp):
-                    regions.setdefault((t, 0, 0), {})[n] = (
-                        ds.data_addr + t * plane, plane, 0)
+                    regions.setdefault((t, 0, 0), []).append(
+                        (n, ds.data_addr + t * plane, plane, 0))
         else:
             raise ValueError(f"{n}: compact layout is not a cube variable")
-    aligned = all(len(vs) == len(names) for vs in regions.values())
     meta = {
-        n: (str(ds.dtype),
+        n: (ds.dtype,
             ds.chunk_shape if ds.layout == "chunked" else (1, h, w),
             ds.filters if ds.layout == "chunked" else [],
             {k: v for k, v in ds.attrs.items()
@@ -807,135 +812,31 @@ def open_netcdf4_cube(
             _fill_scalar(ds.dtype, ds.fill, ds.attrs))
         for n, ds in data_vars.items()
     }
-    if not aligned:
-        # mixed chunk grids: fall back to per-(var, chunk) tasks + pivot
-        return _open_unaligned(spark, path, regions, meta, names,
-                               (tp, h, w), h5, scales,
-                               (time_dim, y_dim, x_dim))
-    rows = [(t0, y0, x0,
-             [[n, *regions[(t0, y0, x0)][n]] for n in names])
-            for (t0, y0, x0) in sorted(regions)]
-    tasks = spark.createDataFrame(
-        rows, "t0 INT, y0 INT, x0 INT, "
-              "parts ARRAY<STRUCT<var STRING, addr LONG, nbytes LONG, "
-              "fmask LONG>>")
-    tasks = tasks.repartition(min(len(rows), 64))
+    tasks, pivot = region_tasks(regions, len(names))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def read(row):
+        origin, parts = tasks[row.id]
+        block = {}
         with open(path, "rb") as f:
-            for pdf in batches:
-                for r in pdf.itertuples():
-                    out: dict = {}
-                    grids = None
-                    for part in r.parts:
-                        n = part["var"]
-                        dt, cshape, filters, cf, fillv = meta[n]
-                        if part["addr"] < 0:  # unallocated: fill chunk
-                            arr = np.full(cshape, fillv, np.dtype(dt))
-                        else:
-                            f.seek(part["addr"])
-                            arr = decode_chunk(
-                                f.read(int(part["nbytes"])), filters,
-                                int(part["fmask"]), np.dtype(dt), cshape)
-                        ct = min(cshape[0], tp - r.t0)
-                        cy = min(cshape[1], h - r.y0)
-                        cx = min(cshape[2], w - r.x0)
-                        arr = arr[:ct, :cy, :cx]
-                        if grids is None:
-                            tt, yy, xx = np.meshgrid(
-                                np.arange(r.t0, r.t0 + ct),
-                                np.arange(r.y0, r.y0 + cy),
-                                np.arange(r.x0, r.x0 + cx), indexing="ij")
-                            grids = {
-                                "t_i": tt.ravel().astype("int32"),
-                                "y_i": yy.ravel().astype("int32"),
-                                "x_i": xx.ravel().astype("int32")}
-                        out[n] = _cf_decode(arr.ravel(), cf)
-                    yield pd.DataFrame({**grids, **out})
+            for n, addr, nbytes, fmask in parts:
+                dt, cshape, filters, cf, fillv = meta[n]
+                if addr < 0:  # unallocated: fill chunk
+                    arr = np.full(cshape, fillv, dt)
+                else:
+                    f.seek(addr)
+                    arr = decode_chunk(f.read(nbytes), filters, fmask, dt,
+                                       cshape)
+                t0, y0, x0 = origin
+                block[n] = cf_decode(arr[: tp - t0, : h - y0, : w - x0], cf)
+        yield origin, block
 
-    schema = "t_i INT, y_i INT, x_i INT, " + ", ".join(
-        f"`{n}` DOUBLE" for n in names)
-    cells = tasks.mapInPandas(gen, schema)
-    cells = cells.select(
-        "t_i", "y_i", "x_i",
-        *[F.when(~F.isnan(n), F.col(n)).alias(n) for n in names])
-
-    return _attach_axes(spark, path, cells, scales,
-                        (time_dim, y_dim, x_dim), names, h5=h5)
-
-
-def _attach_axes(spark, path, cells, scales, dims, names,
-                 h5=None) -> DataFrame:
-    """Broadcast-join the 1-D coordinate axes (+ CF time decode)."""
-    from xcube_spark.functions.cftime import decode_cf_time
-
-    for dim_name, idx_col, out_col in ((dims[0], "t_i", "time"),
-                                       (dims[1], "y_i", "y"),
-                                       (dims[2], "x_i", "x")):
-        vals, attrs = read_h5_array(path, scales[dim_name], h5=h5)
-        adf = spark.createDataFrame(pd.DataFrame({
-            idx_col: np.arange(len(vals), dtype="int32"),
-            out_col: vals.astype("float64")}))
-        if out_col == "time":
-            units = attrs.get("units", "seconds since 1970-01-01")
-            adf = adf.select(idx_col, decode_cf_time(
-                F.col("time"), units, attrs.get("calendar")).alias("time"))
-        cells = cells.join(F.broadcast(adf), idx_col)
-    return cells.select("t_i", "y_i", "x_i", "time", "y", "x", *names)
-
-
-def _open_unaligned(spark, path, regions, meta, names, shape, h5, scales,
-                    dims) -> DataFrame:
-    """Fallback for variables with differing chunk grids: per-(var,
-    chunk) tasks + one pivot shuffle on the cell key."""
-    from xcube_spark.sources.netcdf3 import _cf_decode as _cf_decode_local
-
-    tp, h, w = shape
-    rows = []
-    for (t0, y0, x0), parts in regions.items():
-        for n, (addr, nbytes, fmask) in parts.items():
-            rows.append((n, t0, y0, x0, addr, nbytes, fmask))
-    tasks = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["var", "t0", "y0", "x0",
-                                    "addr", "nbytes", "fmask"]))
-    tasks = tasks.repartition(min(len(rows), 64))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        with open(path, "rb") as f:
-            for pdf in batches:
-                for r in pdf.itertuples():
-                    dt, cshape, filters, cf, fillv = meta[r.var]
-                    if r.addr < 0:  # unallocated: fill chunk
-                        arr = np.full(cshape, fillv, np.dtype(dt))
-                    else:
-                        f.seek(r.addr)
-                        arr = decode_chunk(f.read(int(r.nbytes)), filters,
-                                           int(r.fmask), np.dtype(dt),
-                                           cshape)
-                    ct = min(cshape[0], tp - r.t0)
-                    cy = min(cshape[1], h - r.y0)
-                    cx = min(cshape[2], w - r.x0)
-                    arr = arr[:ct, :cy, :cx]
-                    tt, yy, xx = np.meshgrid(
-                        np.arange(r.t0, r.t0 + ct),
-                        np.arange(r.y0, r.y0 + cy),
-                        np.arange(r.x0, r.x0 + cx), indexing="ij")
-                    yield pd.DataFrame({
-                        "t_i": tt.ravel().astype("int32"),
-                        "y_i": yy.ravel().astype("int32"),
-                        "x_i": xx.ravel().astype("int32"),
-                        "var": r.var,
-                        "val": _cf_decode_local(arr.ravel(), cf),
-                    })
-
-    cells = tasks.mapInPandas(
-        gen, "t_i INT, y_i INT, x_i INT, var STRING, val DOUBLE")
-    cells = cells.groupBy("t_i", "y_i", "x_i").pivot("var", names).agg(
-        F.first("val"))
-    cells = cells.select(
-        "t_i", "y_i", "x_i",
-        *[F.when(~F.isnan(n), F.col(n)).alias(n) for n in names])
-    return _attach_axes(spark, path, cells, scales, dims, names, h5=h5)
+    (t_vals, t_attrs), (y_vals, _), (x_vals, _) = (
+        read_h5_array(path, scales[dim], h5=h5)
+        for dim in (time_dim, y_dim, x_dim))
+    return emit_cells(
+        spark.range(len(tasks), numPartitions=min(len(tasks), 64)), read,
+        names, (tp, h, w), {"time": t_vals, "y": y_vals, "x": x_vals},
+        t_attrs, path, pivot=pivot)
 
 
 # ---------------------------------------------------------------------------

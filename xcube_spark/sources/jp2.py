@@ -27,7 +27,6 @@ the same chunk-task plan as the GeoTIFF/Zarr/HDF5 readers.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
 
@@ -1189,44 +1188,31 @@ def open_jp2_cube(
     read and entropy-decode their own tile's byte range.  Optional
     ``x_start``/``y_end``/``res`` pin the georeferenced axis values
     (Sentinel-2 grids are regular, north-up)."""
-    import pandas as pd
     from pyspark.sql import functions as F
+
+    from xcube_spark.sources.cells import emit_cells
 
     img = parse_jp2_file(path)
     idxs = sorted(img.tiles)
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def read(row):
+        idx = idxs[int(row.id)]
+        off, ln = img.tiles[idx]
         with open(path, "rb") as f:
-            for pdf in batches:
-                for i in pdf["id"]:
-                    idx = idxs[int(i)]
-                    off, ln = img.tiles[idx]
-                    f.seek(off)
-                    body = f.read(ln)
-                    th, tw = img.tile_shape(idx)
-                    arr = _decode_tile(body, th, tw, img.levels,
-                                       img.cblk, img.bitdepth)
-                    if not img.signed:
-                        arr = arr + (1 << (img.bitdepth - 1))
-                    ty, tx = divmod(idx, img.tiles_x)
-                    y0, x0 = ty * img.tile_h, tx * img.tile_w
-                    yy, xx = np.meshgrid(np.arange(y0, y0 + th),
-                                         np.arange(x0, x0 + tw),
-                                         indexing="ij")
-                    vals = arr.astype("float64").ravel()
-                    if nodata is not None:
-                        vals = np.where(vals == nodata, np.nan, vals)
-                    yield pd.DataFrame({
-                        "y_i": yy.ravel().astype("int32"),
-                        "x_i": xx.ravel().astype("int32"),
-                        band_name: vals,
-                    })
+            f.seek(off)
+            body = f.read(ln)
+        th, tw = img.tile_shape(idx)
+        arr = _decode_tile(body, th, tw, img.levels, img.cblk, img.bitdepth)
+        if not img.signed:
+            arr = arr + (1 << (img.bitdepth - 1))
+        vals = arr.astype("float64")
+        if nodata is not None:
+            vals[vals == nodata] = np.nan
+        ty, tx = divmod(idx, img.tiles_x)
+        yield (ty * img.tile_h, tx * img.tile_w), {band_name: vals}
 
-    schema = f"y_i INT, x_i INT, `{band_name}` DOUBLE"
-    cells = spark.range(len(idxs)).mapInPandas(gen, schema)
-    cells = cells.select(
-        "y_i", "x_i",
-        F.when(~F.isnan(band_name), F.col(band_name)).alias(band_name))
+    cells = emit_cells(spark.range(len(idxs)), read, [band_name],
+                       (img.height, img.width))
     if x_start is not None and y_end is not None and res is not None:
         x = F.lit(x_start) + (F.col("x_i") + F.lit(0.5)) * F.lit(res)
         y = F.lit(y_end) - (F.col("y_i") + F.lit(0.5)) * F.lit(res)

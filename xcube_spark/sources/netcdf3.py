@@ -11,8 +11,10 @@ ingestion for the large body of classic-format earth-observation
 products.  netCDF4/HDF5 files remain out of scope (documented).
 
 Same scale model as the Zarr/GeoTIFF readers: the driver reads only
-the header (KBs); each (variable, time-step) becomes a byte range that
-``spark.range -> mapInPandas`` tasks read and decode executor-locally.
+the header and the 1-D coordinate variables (KBs); each time step is a
+``spark.range`` task that reads every variable's byte range and
+decodes it executor-locally, and the cells come out through the shared
+emitter (sources/cells.py) with no join.
 CF decoding matches the reference's xarray ``decode_cf``:
 ``_FillValue``/``missing_value`` -> NULL, then scale/offset, and CF
 ``units``/``calendar`` time handling via functions/cftime.
@@ -23,12 +25,11 @@ from __future__ import annotations
 import os
 import struct
 from dataclasses import dataclass, field
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from xcube_spark.sources.cells import cf_decode, emit_cells
 
 _NC_DIMENSION, _NC_VARIABLE, _NC_ATTRIBUTE = 0x0A, 0x0B, 0x0C
 _NC_TYPES = {1: np.dtype(">i1"), 2: np.dtype("S1"), 3: np.dtype(">i2"),
@@ -166,18 +167,6 @@ def read_netcdf_header(path: str, _buf: int = 1 << 20) -> NcFile:
                   numrecs=max(numrecs, 0), recsize=recsize)
 
 
-def _cf_decode(arr: np.ndarray, attrs: dict) -> np.ndarray:
-    out = arr.astype("float64")
-    for key in ("_FillValue", "missing_value"):
-        if key in attrs:
-            out[arr == np.asarray(attrs[key], arr.dtype)] = np.nan
-    scale = float(attrs.get("scale_factor", 1.0))
-    offset = float(attrs.get("add_offset", 0.0))
-    if scale != 1.0 or offset != 0.0:
-        out = out * scale + offset
-    return out
-
-
 def _dim_size(nc: NcFile, idx: int) -> int:
     name, size = nc.dims[idx]
     return nc.numrecs if size == 0 else size
@@ -196,9 +185,11 @@ def open_netcdf_cube(
 
     Accepts variables shaped ``(time, y, x)`` (fixed or record time
     dimension).  Per-(var, time-step) byte ranges are computed from the
-    header; ``range(T) -> mapInPandas`` reads each plane
-    executor-locally.  Dim names default to the CF-common
-    ``time/lat/lon`` and fall back to ``y``/``x``."""
+    header.  Plan: ``range(T) -> mapInPandas -> project`` — each task
+    reads its plane of every variable; the coordinate values are read
+    once on the driver and indexed per cell in the task (a dimension
+    without a coordinate variable counts cells).  Dim names default to
+    the CF-common ``time/lat/lon`` and fall back to ``y``/``x``."""
     nc = read_netcdf_header(path)
     dim_names = [d[0] for d in nc.dims]
     if y_dim not in dim_names and "y" in dim_names:
@@ -229,36 +220,21 @@ def open_netcdf_cube(
     layout = {
         n: (v.begin,
             nc.recsize if v.is_record else v.dtype.itemsize * plane,
-            str(v.dtype), dict(v.attrs))
+            v.dtype, dict(v.attrs))
         for n, v in data_vars.items()
     }
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def read(row):
+        t = int(row.id)
+        block = {}
         with open(path, "rb") as f:
-            for pdf in batches:
-                for t in pdf["id"]:
-                    t = int(t)
-                    yy, xx = np.meshgrid(np.arange(h), np.arange(w),
-                                         indexing="ij")
-                    out = {"t_i": np.full(plane, t, "int32"),
-                           "y_i": yy.ravel().astype("int32"),
-                           "x_i": xx.ravel().astype("int32")}
-                    for n in names:
-                        begin, stride, dt, attrs = layout[n]
-                        f.seek(begin + t * stride)
-                        raw = f.read(np.dtype(dt).itemsize * plane)
-                        arr = np.frombuffer(raw, np.dtype(dt))
-                        out[n] = _cf_decode(arr, attrs)
-                    yield pd.DataFrame(out)
+            for n, (begin, stride, dt, attrs) in layout.items():
+                f.seek(begin + t * stride)
+                arr = np.frombuffer(f.read(dt.itemsize * plane), dt)
+                block[n] = cf_decode(arr, attrs).reshape(1, h, w)
+        yield (t, 0, 0), block
 
-    schema = "t_i INT, y_i INT, x_i INT, " + ", ".join(
-        f"`{n}` DOUBLE" for n in names)
-    cells = spark.range(tp).mapInPandas(gen, schema)
-    cells = cells.select(
-        "t_i", "y_i", "x_i",
-        *[F.when(~F.isnan(n), F.col(n)).alias(n) for n in names])
-
-    # 1-D coordinate variables -> broadcast axis joins (+ CF time)
+    # 1-D coordinate variables, raw; a missing one counts cells
     def axis_vals(dim_idx: int, dim_name: str) -> tuple[np.ndarray, dict]:
         v = nc.variables.get(dim_name)
         if v is None or v.dims != [dim_idx]:
@@ -278,22 +254,11 @@ def open_netcdf_cube(
                 ).astype("float64")
         return vals, dict(v.attrs)
 
-    out = cells
-    for dim_name, dim_idx, idx_col, out_col in (
-            (time_dim, ti, "t_i", "time"),
-            (y_dim, yi, "y_i", "y"), (x_dim, xi, "x_i", "x")):
-        vals, attrs = axis_vals(dim_idx, dim_name)
-        adf = spark.createDataFrame(pd.DataFrame({
-            idx_col: np.arange(len(vals), dtype="int32"),
-            out_col: vals}))
-        if out_col == "time":
-            from xcube_spark.functions.cftime import decode_cf_time
-
-            units = attrs.get("units", "seconds since 1970-01-01")
-            adf = adf.select(idx_col, decode_cf_time(
-                F.col("time"), units, attrs.get("calendar")).alias("time"))
-        out = out.join(F.broadcast(adf), idx_col)
-    return out.select("t_i", "y_i", "x_i", "time", "y", "x", *names)
+    (t_vals, t_attrs), (y_vals, _), (x_vals, _) = (
+        axis_vals(ti, time_dim), axis_vals(yi, y_dim), axis_vals(xi, x_dim))
+    return emit_cells(spark.range(tp), read, names, (tp, h, w),
+                      {"time": t_vals, "y": y_vals, "x": x_vals}, t_attrs,
+                      path)
 
 
 # ---- writer (classic CDF-1, fixed layout) ------------------------------

@@ -26,13 +26,11 @@ reference's gen pipeline (iproc.py:126+, gen.py).
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from xcube_spark.sources.cells import cf_decode, emit_cells, region_tasks
 from xcube_spark.sources.hdf5 import H5File, decode_chunk
 
 _GEO_FILE = "geo_coordinates.nc"
@@ -133,99 +131,30 @@ def open_sentinel3_product(
         for y0, x0, addr, nbytes, fmask in _chunk_entries(fobj, ds, (h, w)):
             regions.setdefault((y0, x0), []).append(
                 (n, fpath, addr, nbytes, fmask))
-        meta[n] = (str(ds.dtype),
+        meta[n] = (ds.dtype,
                    ds.chunk_shape if ds.layout == "chunked" else None,
                    ds.filters if ds.layout == "chunked" else [],
                    _cf_attrs(ds))
-    aligned = all(len(parts) == len(all_names)
-                  for parts in regions.values())
+    # aligned grids (every band on the instrument grid) read with no
+    # shuffle; mixed grids pivot
+    tasks, pivot = region_tasks(regions, len(all_names))
 
-    from xcube_spark.sources.netcdf3 import _cf_decode
+    def read(row):
+        (y0, x0), parts = tasks[row.id]
+        block = {}
+        for n, fpath, addr, nbytes, fmask in parts:
+            dt, cshape, filters, cf = meta[n]
+            with open(fpath, "rb") as fh:
+                fh.seek(addr)
+                raw = fh.read(nbytes)
+            if cshape is None:  # contiguous row block
+                arr = np.frombuffer(raw, dt).reshape(-1, w)
+            else:
+                arr = decode_chunk(raw, filters, fmask, dt, cshape)
+                arr = arr[: h - y0, : w - x0]
+            block[n] = cf_decode(arr, cf)
+        yield (y0, x0), block
 
-    if aligned:
-        rows = [(y0, x0, [[n, fp, a, nb, fm]
-                          for n, fp, a, nb, fm in parts])
-                for (y0, x0), parts in sorted(regions.items())]
-        tasks = spark.createDataFrame(
-            rows, "y0 INT, x0 INT, parts ARRAY<STRUCT<var STRING, "
-                  "file STRING, addr LONG, nbytes LONG, fmask LONG>>")
-        tasks = tasks.repartition(min(len(rows), 64))
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            handles: dict[str, object] = {}
-            for pdf in batches:
-                for r in pdf.itertuples():
-                    out, grids = {}, None
-                    for part in r.parts:
-                        n = part["var"]
-                        dt, cshape, filters, cf = meta[n]
-                        fh = handles.setdefault(
-                            part["file"], open(part["file"], "rb"))
-                        fh.seek(part["addr"])
-                        raw = fh.read(int(part["nbytes"]))
-                        if cshape is None:  # contiguous row block
-                            arr = np.frombuffer(raw, np.dtype(dt))
-                            cy = len(arr) // w
-                            arr = arr.reshape(cy, w)
-                        else:
-                            arr = decode_chunk(raw, filters,
-                                               int(part["fmask"]),
-                                               np.dtype(dt), cshape)
-                            cy = min(cshape[0], h - r.y0)
-                            cx = min(cshape[1], w - r.x0)
-                            arr = arr[:cy, :cx]
-                        if grids is None:
-                            yy, xx = np.meshgrid(
-                                np.arange(r.y0, r.y0 + arr.shape[0]),
-                                np.arange(r.x0, r.x0 + arr.shape[1]),
-                                indexing="ij")
-                            grids = {"y_i": yy.ravel().astype("int32"),
-                                     "x_i": xx.ravel().astype("int32")}
-                        out[n] = _cf_decode(arr.ravel(), cf)
-                    yield pd.DataFrame({**grids, **out})
-
-        schema = "y_i INT, x_i INT, " + ", ".join(
-            f"`{n}` DOUBLE" for n in all_names)
-        cells = tasks.mapInPandas(gen, schema)
-    else:
-        rows = [(n, y0, x0, fp, a, nb, fm)
-                for (y0, x0), parts in regions.items()
-                for n, fp, a, nb, fm in parts]
-        tasks = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["var", "y0", "x0", "file",
-                                        "addr", "nbytes", "fmask"]))
-        tasks = tasks.repartition(min(len(rows), 64))
-
-        def gen1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            handles: dict[str, object] = {}
-            for pdf in batches:
-                for r in pdf.itertuples():
-                    dt, cshape, filters, cf = meta[r.var]
-                    fh = handles.setdefault(r.file, open(r.file, "rb"))
-                    fh.seek(r.addr)
-                    raw = fh.read(int(r.nbytes))
-                    if cshape is None:
-                        arr = np.frombuffer(raw, np.dtype(dt))
-                        arr = arr.reshape(len(arr) // w, w)
-                    else:
-                        arr = decode_chunk(raw, filters, int(r.fmask),
-                                           np.dtype(dt), cshape)
-                        arr = arr[:min(cshape[0], h - r.y0),
-                                  :min(cshape[1], w - r.x0)]
-                    yy, xx = np.meshgrid(
-                        np.arange(r.y0, r.y0 + arr.shape[0]),
-                        np.arange(r.x0, r.x0 + arr.shape[1]),
-                        indexing="ij")
-                    yield pd.DataFrame({
-                        "y_i": yy.ravel().astype("int32"),
-                        "x_i": xx.ravel().astype("int32"),
-                        "var": r.var,
-                        "val": _cf_decode(arr.ravel(), cf)})
-
-        cells = tasks.mapInPandas(
-            gen1, "y_i INT, x_i INT, var STRING, val DOUBLE")
-        cells = cells.groupBy("y_i", "x_i").pivot("var", all_names).agg(
-            F.first("val"))
-    return cells.select(
-        "y_i", "x_i",
-        *[F.when(~F.isnan(n), F.col(n)).alias(n) for n in all_names])
+    return emit_cells(
+        spark.range(len(tasks), numPartitions=min(len(tasks), 64)), read,
+        all_names, (h, w), pivot=pivot)

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import base64
 import json
+import os
 from typing import Iterator
 
 import numpy as np
@@ -386,131 +387,65 @@ def open_kerchunk_parquet_cube(
     var_names: list[str] | None = None,
 ):
     """Open a parquet-refs virtual cube: metadata rows (KBs) are
-    collected to build the array map; chunk-reference rows stay a
-    DataFrame and group into per-chunk-coordinate tasks with ONE
-    metadata-sized shuffle — the data bytes are ranged-read
-    executor-locally, exactly like the JSON-refs path but with no
-    driver-resident refs map at any point."""
-    from typing import Iterator
-
-    import pandas as pd
+    collected to build the array map and decode the axes; chunk-
+    reference rows stay a DataFrame and group into per-chunk-coordinate
+    tasks with ONE metadata-sized shuffle — the data bytes are
+    ranged-read executor-locally, exactly like the JSON-refs path
+    (:func:`~xcube_spark.sources.zarrio.open_kerchunk_cube`) but with
+    no driver-resident refs map at any point.  Columns follow
+    ``var_names``, else the sorted variable names."""
     from pyspark.sql import functions as F
 
-    from xcube_spark.sources.zarrio import ZarrArray, decode_chunk, decode_values
+    from xcube_spark.sources.cells import emit_cells
+    from xcube_spark.sources.zarrio import (_axes, _data_vars,
+                                            _kerchunk_arrays,
+                                            _kerchunk_fetch, decode_chunk,
+                                            decode_values)
 
     refs = spark.read.parquet(refs_dir)
     meta = {r["key"]: r["inline"]
             for r in refs.where(F.col("inline").isNotNull()).collect()}
-    arrays: dict[str, ZarrArray] = {}
-    for key, payload in meta.items():
-        if not key.endswith("/.zarray"):
-            continue
-        name = key[:-len("/.zarray")]
-        m = json.loads(payload)
-        arrays[name] = ZarrArray(
-            name=name, shape=tuple(m["shape"]), chunks=tuple(m["chunks"]),
-            dtype=m["dtype"], compressor=m["compressor"],
-            fill_value=m["fill_value"],
-            attrs=json.loads(meta.get(f"{name}/.zattrs", "{}")),
-            filters=m["filters"])
-    data_vars = {n: m for n, m in arrays.items()
-                 if len(m.shape) == 3 and n not in ("time", "y", "x")}
-    if var_names is not None:
-        missing = set(var_names) - set(data_vars)
-        if missing:
-            raise KeyError(f"variables not in refs: {sorted(missing)}")
-        data_vars = {n: data_vars[n] for n in var_names}
-    if not data_vars:
-        raise ValueError(f"no 3-D data variables in {refs_dir}")
-    names = sorted(data_vars)
-    first = data_vars[names[0]]
-    for m in data_vars.values():
-        if m.shape != first.shape or m.chunks != first.chunks:
-            raise ValueError("variables must share shape/chunks")
-    tp, h, w = first.shape
-    ct, cy, cx = first.chunks
+    base_dir = os.path.dirname(os.path.abspath(refs_dir))
+    arrays = _kerchunk_arrays(meta, refs_dir)
+    metas = _data_vars(arrays, var_names, refs_dir)
+    names = list(metas) if var_names is not None else sorted(metas)
+    tp, h, w = metas[names[0]].shape
+    ct, cy, cx = metas[names[0]].chunks
+    ntc, nyc, nxc = metas[names[0]].chunk_counts()
 
     key = F.split(F.col("key"), "/")
     coord = F.split(key.getItem(1), r"\.")
     chunk_refs = (
         refs.where(F.col("inline").isNull())
         .where(key.getItem(0).isin(names))
-        .select(key.getItem(0).alias("var"),
-                coord.getItem(0).cast("int").alias("tc"),
+        .select(coord.getItem(0).cast("int").alias("tc"),
                 coord.getItem(1).cast("int").alias("yc"),
                 coord.getItem(2).cast("int").alias("xc"),
-                "url", "offset", "length")
-        .groupBy("tc", "yc", "xc")
-        .agg(F.collect_list(
-            F.struct("var", "url", "offset", "length")).alias("parts"))
+                F.struct(key.getItem(0).alias("var"), "url", "offset",
+                         "length").alias("part"))
     )
-    # Left-join the ref rows onto the FULL chunk grid so coordinates
-    # with no reference at all (unwritten chunks of a sparse archive)
-    # still emit fill rows; per-variable gaps are filled in gen() below.
-    # The grid enumeration is a distributed range, not a driver loop.
-    ntc = (tp + ct - 1) // ct
-    nyc = (h + cy - 1) // cy
-    nxc = (w + cx - 1) // cx
+    # Every coordinate of the chunk grid gets a task, referenced or
+    # not: unwritten chunks of a sparse archive read as fill.  The grid
+    # is a distributed range whose NULL parts collect_list skips.
     grid = spark.range(ntc * nyc * nxc).select(
         (F.col("id") / (nyc * nxc)).cast("int").alias("tc"),
         ((F.col("id") / nxc) % nyc).cast("int").alias("yc"),
-        (F.col("id") % nxc).cast("int").alias("xc"))
-    tasks = grid.join(chunk_refs, ["tc", "yc", "xc"], "left")
-    metas = {n: data_vars[n] for n in names}
+        (F.col("id") % nxc).cast("int").alias("xc"),
+        F.lit(None).cast(chunk_refs.schema["part"].dataType).alias("part"))
+    tasks = chunk_refs.unionByName(grid).groupBy("tc", "yc", "xc") \
+        .agg(F.collect_list("part").alias("parts"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        handles: dict[str, object] = {}
-        for pdf in batches:
-            for r in pdf.itertuples():
-                t0, t1 = r.tc * ct, min((r.tc + 1) * ct, tp)
-                y0, y1 = r.yc * cy, min((r.yc + 1) * cy, h)
-                x0, x1 = r.xc * cx, min((r.xc + 1) * cx, w)
-                tt, yy, xx = np.meshgrid(
-                    np.arange(t0, t1), np.arange(y0, y1),
-                    np.arange(x0, x1), indexing="ij")
-                out = {"t_i": tt.ravel().astype("int32"),
-                       "y_i": yy.ravel().astype("int32"),
-                       "x_i": xx.ravel().astype("int32")}
-                parts = r.parts if isinstance(
-                    r.parts, (list, np.ndarray)) else []
-                for part in parts:
-                    m = metas[part["var"]]
-                    p = part["url"].removeprefix("file://")
-                    fh = handles.setdefault(p, open(p, "rb"))
-                    fh.seek(part["offset"])
-                    raw = fh.read(int(part["length"]))
-                    vals = decode_values(decode_chunk(raw, m), m)
-                    out[part["var"]] = \
-                        vals[: t1 - t0, : y1 - y0, : x1 - x0].ravel()
-                for n in names:  # vars with no ref at this coordinate
-                    if n not in out:
-                        m = metas[n]
-                        vals = decode_values(decode_chunk(None, m), m)
-                        out[n] = \
-                            vals[: t1 - t0, : y1 - y0, : x1 - x0].ravel()
-                yield pd.DataFrame(out)
+    def read(row):
+        fetch = _kerchunk_fetch(
+            {p["var"]: [p["url"], p["offset"], p["length"]]
+             for p in row.parts}, base_dir)
+        t0, y0, x0 = int(row.tc) * ct, int(row.yc) * cy, int(row.xc) * cx
+        block = {}
+        for n in names:  # a variable with no ref reads as fill
+            vals = decode_values(decode_chunk(fetch(n), metas[n]), metas[n])
+            block[n] = vals[: tp - t0, : h - y0, : w - x0]
+        yield (t0, y0, x0), block
 
-    schema = "t_i INT, y_i INT, x_i INT, " + ", ".join(
-        f"`{n}` DOUBLE" for n in names)
-    cells = tasks.mapInPandas(gen, schema)
-    cells = cells.select(
-        "t_i", "y_i", "x_i",
-        *[F.when(~F.isnan(n), F.col(n)).alias(n) for n in names])
-
-    from xcube_spark.functions.cftime import decode_cf_time
-
-    for name, idx in (("time", "t_i"), ("y", "y_i"), ("x", "x_i")):
-        m = arrays[name]
-        raw = meta[f"{name}/0"]
-        vals = np.frombuffer(
-            base64.b64decode(raw[len("base64:"):]), "<f8")
-        adf = spark.createDataFrame(pd.DataFrame({
-            idx: np.arange(len(vals), dtype="int32"),
-            name: vals.astype("float64")}))
-        if name == "time":
-            adf = adf.select(idx, decode_cf_time(
-                F.col("time"),
-                m.attrs.get("units", "seconds since 1970-01-01"),
-                m.attrs.get("calendar")).alias("time"))
-        cells = cells.join(F.broadcast(adf), idx)
-    return cells.select("t_i", "y_i", "x_i", "time", "y", "x", *names)
+    axes, time_attrs = _axes(arrays, _kerchunk_fetch(meta, base_dir))
+    return emit_cells(tasks, read, names, (tp, h, w), axes, time_attrs,
+                      refs_dir)

@@ -49,7 +49,7 @@ import re
 import zlib
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
-from typing import Iterator, Mapping
+from typing import Mapping
 
 import numpy as np
 import pandas as pd
@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xcube_spark.cube.grid import CubeGrid
+from xcube_spark.sources.cells import emit_cells
 
 _DTYPES = {
     "<f8": np.dtype("<f8"), "<f4": np.dtype("<f4"),
@@ -1090,7 +1091,8 @@ def open_zarr_cube(
     with no join.  The ``time``/``y``/``x`` axis arrays are decoded
     once on the driver and ship in the task closure; each task emits
     the coordinates of its cells by indexing them, and the projection
-    applies the CF time decode as a Column.  Chunk decode is
+    applies the CF time decode as a Column (the shared emitter,
+    sources/cells.py).  Chunk decode is
     embarrassingly parallel and executor-local.  An axis shorter than
     the data raises ``ValueError``.
 
@@ -1174,16 +1176,10 @@ def _sharded_as_ranged(path: str, arrays: dict[str, ZarrArray]):
     return out, fetch
 
 
-def _open_cells(
-    spark: SparkSession,
-    arrays: dict[str, ZarrArray],
-    fetch,
-    var_names: list[str] | None,
-    label: str,
-    cell_bounds: Mapping[str, tuple[int, int]] | None = None,
-) -> DataFrame:
-    """Shared reader core over a ``fetch(key) -> bytes | None`` store
-    abstraction (directory stores and kerchunk reference stores)."""
+def _data_vars(arrays: dict[str, ZarrArray], var_names: list[str] | None,
+               label: str) -> dict[str, ZarrArray]:
+    """The 3-D data variables of a store (``var_names`` order when
+    given), checked to share one shape and chunk grid."""
     data_vars = {n: m for n, m in arrays.items()
                  if len(m.shape) == 3 and n not in ("time", "y", "x")}
     if var_names is not None:
@@ -1198,48 +1194,44 @@ def _open_cells(
         if m.shape != first.shape or m.chunks != first.chunks:
             raise ValueError("variables must share shape/chunks "
                              f"({m.name} differs from {first.name})")
+    return data_vars
+
+
+def _axes(arrays: dict[str, ZarrArray], fetch) -> tuple[dict, dict | None]:
+    """The decoded ``time``/``y``/``x`` arrays a store has, and the
+    time axis' attributes."""
+    axes = {name: _axis_values(name, arrays[name], fetch)
+            for name in ("time", "y", "x") if name in arrays}
+    return axes, arrays["time"].attrs if "time" in arrays else None
+
+
+def _open_cells(
+    spark: SparkSession,
+    arrays: dict[str, ZarrArray],
+    fetch,
+    var_names: list[str] | None,
+    label: str,
+    cell_bounds: Mapping[str, tuple[int, int]] | None = None,
+) -> DataFrame:
+    """Shared reader core over a ``fetch(key) -> bytes | None`` store
+    abstraction (directory stores and kerchunk reference stores)."""
+    metas = _data_vars(arrays, var_names, label)
+    first = next(iter(metas.values()))
     tp, h, w = first.shape
     ct, cy, cx = first.chunks
     nt, ny, nx = first.chunk_counts()
-    metas = dict(data_vars)
-    names = list(metas)
-    # axis name -> (cell index column, decoded values); time first
-    axes = {}
-    for name, icol, n in (("time", "t_i", tp), ("y", "y_i", h),
-                          ("x", "x_i", w)):
-        if name in arrays:
-            vals = _axis_values(name, arrays[name], fetch)
-            if len(vals) < n:
-                raise ValueError(f"axis {name!r} of {label} has {len(vals)} "
-                                 f"values, the data has {n}")
-            axes[name] = (icol, vals[:n])
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for chunk_id in pdf["id"]:
-                tc = int(chunk_id) // (ny * nx)
-                yc = (int(chunk_id) % (ny * nx)) // nx
-                xc = int(chunk_id) % nx
-                t0, t1 = tc * ct, min((tc + 1) * ct, tp)
-                y0, y1 = yc * cy, min((yc + 1) * cy, h)
-                x0, x1 = xc * cx, min((xc + 1) * cx, w)
-                tt, yy, xx = np.meshgrid(
-                    np.arange(t0, t1), np.arange(y0, y1), np.arange(x0, x1),
-                    indexing="ij")
-                out = {"t_i": tt.ravel().astype("int32"),
-                       "y_i": yy.ravel().astype("int32"),
-                       "x_i": xx.ravel().astype("int32")}
-                for name, (icol, vals) in axes.items():
-                    out[name] = vals[out[icol]]
-                for v in names:
-                    meta = metas[v]
-                    raw = fetch(f"{v}/{metas[v].chunk_key(tc, yc, xc)}")
-                    vals = decode_values(decode_chunk(raw, meta), meta)
-                    out[v] = vals[: t1 - t0, : y1 - y0, : x1 - x0].ravel()
-                yield pd.DataFrame(out)
+    def read(row):
+        tc, rem = divmod(int(row.id), ny * nx)
+        yc, xc = divmod(rem, nx)
+        t0, y0, x0 = tc * ct, yc * cy, xc * cx
+        block = {}
+        for v, meta in metas.items():
+            raw = fetch(f"{v}/{meta.chunk_key(tc, yc, xc)}")
+            vals = decode_values(decode_chunk(raw, meta), meta)
+            block[v] = vals[: tp - t0, : h - y0, : w - x0]
+        yield (t0, y0, x0), block
 
-    schema = "t_i INT, y_i INT, x_i INT, " + ", ".join(
-        f"`{v}` DOUBLE" for v in [*axes, *names])
     rng = spark.range(nt * ny * nx)
     if cell_bounds:
         tc = (F.col("id") / (ny * nx)).cast("int")
@@ -1250,22 +1242,13 @@ def _open_cells(
             if axis in cell_bounds:
                 lo, hi = cell_bounds[axis]
                 rng = rng.where(ccol.between(lo // csize, hi // csize))
-    cells = rng.mapInPandas(gen, schema)
-    if cell_bounds:  # exact cell filter after the chunk-level prune
-        for axis, (lo, hi) in cell_bounds.items():
-            cells = cells.where(F.col(axis).between(lo, hi))
-    coords = [F.col(name) for name in axes]
-    if "time" in axes:
-        from xcube_spark.functions.cftime import decode_cf_time
-
-        t_attrs = arrays["time"].attrs
-        coords[0] = decode_cf_time(
-            F.col("time"), t_attrs.get("units", "seconds since 1970-01-01"),
-            t_attrs.get("calendar")).alias("time")
-    # Arrow carries missing as NaN; the cells model uses SQL NULL
-    return cells.select(
-        "t_i", "y_i", "x_i", *coords,
-        *[F.when(~F.isnan(v), F.col(v)).alias(v) for v in names])
+    axes, time_attrs = _axes(arrays, fetch)
+    cells = emit_cells(rng, read, list(metas), (tp, h, w), axes,
+                       time_attrs, label)
+    # exact cell filter after the chunk-level prune
+    for axis, (lo, hi) in (cell_bounds or {}).items():
+        cells = cells.where(F.col(axis).between(lo, hi))
+    return cells
 
 
 def _axis_values(name: str, meta: ZarrArray, fetch) -> np.ndarray:
@@ -1289,6 +1272,12 @@ def read_kerchunk_store(refs_path: str) -> tuple[dict[str, ZarrArray], dict]:
     with open(refs_path) as f:
         doc = json.load(f)
     refs = doc.get("refs", doc)
+    return _kerchunk_arrays(refs, refs_path), refs
+
+
+def _kerchunk_arrays(refs: Mapping, label: str) -> dict[str, ZarrArray]:
+    """The zarr v2 arrays a kerchunk key map describes (its inline
+    ``.zarray``/``.zattrs`` entries)."""
 
     def load_json(key):
         v = refs.get(key)
@@ -1315,8 +1304,8 @@ def read_kerchunk_store(refs_path: str) -> tuple[dict[str, ZarrArray], dict]:
             filters=flt,
         )
     if not arrays:
-        raise ValueError(f"no zarr arrays referenced in {refs_path}")
-    return arrays, refs
+        raise ValueError(f"no zarr arrays referenced in {label}")
+    return arrays
 
 
 def _kerchunk_fetch(refs: dict, base_dir: str):
