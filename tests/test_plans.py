@@ -182,6 +182,86 @@ def test_zarr_chunk_pushdown(spark, tmp_path):
     assert {tuple(r) for r in got} == {tuple(r) for r in want}
 
 
+def test_geotiff_chunk_pushdown(spark, tmp_path):
+    """cell_bounds on a 64x64 GeoTIFF with 16-px tiles decodes only the
+    4 tiles of the first tile row: with the other 12 tiles corrupted
+    the bounded read still succeeds, and equals the filtered full
+    read."""
+    from xcube_spark.sources.geotiff import (_read_ifds, open_geotiff_cube,
+                                             write_geotiff)
+
+    grid = CubeGrid(width=64, height=64, time_periods=1, x_res=1.0,
+                    y_res=1.0)
+    path = str(tmp_path / "t.tif")
+    write_geotiff(new_cube(spark, grid, {"A": "CAST(y_i * 64 + x_i AS DOUBLE)"}),
+                  path, ["A"], width=64, height=64, tile=16)
+    bounds = {"y_i": (0, 15)}
+    want = open_geotiff_cube(spark, path).where(
+        F.col("y_i") <= 15).collect()
+    ifd = _read_ifds(path)[0]
+    assert len(ifd.offsets) == 16
+    with open(path, "r+b") as f:
+        for off in ifd.offsets[4:]:
+            f.seek(off)
+            f.write(b"NOT A TILE")
+    got = open_geotiff_cube(spark, path, cell_bounds=bounds).collect()
+    assert len(got) == len(want) == 16 * 64
+    assert {tuple(r) for r in got} == {tuple(r) for r in want}
+
+
+def test_jp2_cell_bounds_match_filter(spark, tmp_path):
+    """cell_bounds on a JP2 returns the rows of the filtered full read."""
+    import numpy as np
+
+    from xcube_spark.sources.jp2 import open_jp2_cube, write_jp2
+
+    p = str(tmp_path / "b.jp2")
+    write_jp2(p, np.arange(64 * 64, dtype=np.uint16).reshape(64, 64),
+              tile=(32, 32))
+    want = open_jp2_cube(spark, p).where(
+        F.col("x_i").between(8, 20)).collect()
+    got = open_jp2_cube(spark, p, cell_bounds={"x_i": (8, 20)}).collect()
+    assert len(got) == len(want) == 64 * 13
+    assert {tuple(r) for r in got} == {tuple(r) for r in want}
+
+
+def test_reader_task_range_splits(spark, tmp_path):
+    """A reader's task range has no more splits than tasks: a 2-tile
+    GeoTIFF plans as 2 splits (fewer only on a 1-core session)."""
+    from xcube_spark.sources.geotiff import open_geotiff_cube, write_geotiff
+
+    grid = CubeGrid(width=32, height=16, time_periods=1, x_res=1.0,
+                    y_res=1.0)
+    path = str(tmp_path / "two.tif")
+    write_geotiff(new_cube(spark, grid, {"A": 1.0}), path, ["A"],
+                  width=32, height=16, tile=16)
+    splits = min(2, spark.sparkContext.defaultParallelism)
+    plan = _plan(open_geotiff_cube(spark, path))
+    assert f"Range (0, 2, step=1, splits={splits})" in plan, plan
+
+
+def test_write_zarr_cube_plan_one_shuffle(spark, tmp_path):
+    """The zarr writer's executed plan is one hash exchange by chunk
+    key feeding MapInArrow — no grouped pandas apply, no aggregate."""
+    import re
+
+    from xcube_spark.sources.zarrio import write_zarr_cube
+
+    n = write_zarr_cube(new_cube(spark, ZGRID, {"v": "CAST(t_i AS DOUBLE)"}),
+                        str(tmp_path / "w.zarr"), ZGRID)
+    assert n == 12
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    last = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList().last()
+    plan = last.physicalPlanDescription()
+    assert "MapInArrow" in plan and "FlatMapGroupsInPandas" not in plan
+    # the formatted plan prints the executed tree, then the initial one
+    tree = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"\bExchange \(\d+\)", tree)) == 1, plan
+    assert "Exchange SinglePartition" not in plan
+    assert "hashpartitioning(FLOOR" in plan
+
+
 def test_asof_join_is_single_shuffle(spark):
     import datetime as dt
     from xcube_spark.operators.asof import asof_join
@@ -307,7 +387,7 @@ def test_osgb_reproject_plan_stays_linear(spark):
 
 
 def test_jp2_read_plan_shuffle_free(spark, tmp_path):
-    """The JP2 open is MapInPandas over a bounded tile range — no
+    """The JP2 open is MapInArrow over a bounded tile range — no
     hash-partition exchange anywhere; each task touches only its own
     tile's byte range."""
     import re
@@ -321,13 +401,13 @@ def test_jp2_read_plan_shuffle_free(spark, tmp_path):
               % 50000, tile=(64, 64))
     cube = open_jp2_cube(spark, p)
     phys = cube._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in phys
+    assert "MapInArrow" in phys
     hash_exchanges = re.findall(r"Exchange hashpartitioning[^\n]*", phys)
     assert not hash_exchanges, hash_exchanges
 
 
 def test_netcdf4_read_plan_shuffle_free(spark, tmp_path):
-    """The aligned netCDF-4 cube read is MapInPandas over the task
+    """The aligned netCDF-4 cube read is MapInArrow over the task
     range with the coordinates from the generator — no hash-partition
     exchange of cube-sized data anywhere in the physical plan."""
     import numpy as np
@@ -347,7 +427,7 @@ def test_netcdf4_read_plan_shuffle_free(spark, tmp_path):
     })
     cube = open_netcdf4_cube(spark, path)
     phys = cube._jdf.queryExecution().executedPlan().toString()
-    # no axis joins and no shuffle at all: range -> MapInPandas ->
+    # no axis joins and no shuffle at all: range -> MapInArrow ->
     # Project
     import re
 

@@ -285,10 +285,125 @@ def test_zarr_roundtrip_bitexact(spark, tmp_path):
             == cube.where(F.col("B").isNull()).count())
 
 
+#: 1024-cell chunks: with 777-row Arrow batches each chunk spans two batches
+WGRID = CubeGrid(width=40, height=30, time_periods=4, x_res=9.0, y_res=6.0,
+                 chunks=(2, 16, 32))
+WVARS = {"v": "CAST(t_i AS DOUBLE) + 0.1 * y",
+         "nul": "CASE WHEN (x_i + y_i) % 3 = 0 THEN NULL ELSE x * 0.5 END",
+         "late": "CASE WHEN t_i >= 2 THEN NULL ELSE y END",
+         "i": "CAST(x_i * 7 - y_i AS INT)",
+         "b": "x_i % 2 = 0"}
+WCASES = {
+    "v2": ("true", {}),
+    "sparse": ("t_i < 2 OR x_i < 16", {}),
+    "v3_shards": ("true", {"zarr_format": 3, "shards": (2, 32, 64)}),
+    "packed": ("true", {"encoding": {
+        "v": {"dtype": "<i2", "scale_factor": 0.01, "add_offset": 1.0,
+              "fill_value": -32768},
+        "nul": {"dtype": "<i2", "scale_factor": 0.5, "fill_value": -1}}}),
+    "empty": ("false", {}),
+}
+
+
+def _reference_zarr(cube, path, grid, names, **kw):
+    """What ``write_zarr_cube`` must write, built on the driver: the
+    metadata of an empty write, then every chunk that holds a cell of
+    ``cube``, encoded from the collected cells."""
+    import numpy as np
+
+    from xcube_spark.sources.zarrio import (_write_bytes, encode_chunk,
+                                            encode_values, read_store,
+                                            write_zarr_cube)
+
+    assert write_zarr_cube(cube.where("false"), path, grid, names, **kw) == 0
+    metas = read_store(path)
+    chunks = metas[names[0]].chunks
+    shape = [c * n for c, n in zip(chunks, metas[names[0]].chunk_counts())]
+    data = {v: np.full(shape, np.nan) for v in names}
+    keys = set()
+    for r in cube.select("t_i", "y_i", "x_i", *[
+            F.col(v).cast("double") for v in names]).collect():
+        keys.add(tuple(i // c for i, c in zip(r[:3], chunks)))
+        for v, val in zip(names, r[3:]):
+            data[v][r[:3]] = np.nan if val is None else val
+    for key in keys:
+        cell = tuple(slice(k * c, (k + 1) * c) for k, c in zip(key, chunks))
+        for v in names:
+            meta = metas[v]
+            enc = encode_chunk(encode_values(data[v][cell], meta), meta)
+            if enc is not None:
+                _write_bytes(os.path.join(path, v, meta.chunk_key(*key)), enc)
+
+
+def _store_files(path):
+    """``{relative path: bytes}`` of a store, with each gzip member's
+    header time zeroed (v3 gzip objects record when they were made)."""
+    import re
+
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            with open(full, "rb") as f:
+                out[os.path.relpath(full, path)] = re.sub(
+                    rb"\x1f\x8b\x08\x00.{4}", b"\x1f\x8b\x08\x00\0\0\0\0",
+                    f.read(), flags=re.S)
+    return out
+
+
+@pytest.mark.parametrize("case", list(WCASES))
+def test_zarr_writer_matches_reference(spark, tmp_path, case):
+    """The streaming writer's store is byte-identical to a driver-side
+    reference write — NULL, INT and BOOLEAN variables, v3 shards (an
+    all-fill shard is skipped), CF int16 packing, a sparse cube and an
+    empty one (0 objects, metadata only) — with chunks that span Arrow
+    batches."""
+    from xcube_spark.sources.zarrio import write_zarr_cube
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    where, kw = WCASES[case]
+    cube = new_cube(spark, WGRID, WVARS).where(where)
+    names = list(WVARS)
+    old = spark.conf.get(key)
+    spark.conf.set(key, "777")
+    try:
+        n = write_zarr_cube(cube, str(tmp_path / "w"), WGRID, **kw)
+    finally:
+        spark.conf.set(key, old)
+    _reference_zarr(cube, str(tmp_path / "ref"), WGRID, names, **kw)
+    got, want = _store_files(tmp_path / "w"), _store_files(tmp_path / "ref")
+    assert sorted(got) == sorted(want)
+    assert got == want
+    objects = [p for p in got if p.split(os.sep)[0] in names and
+               os.path.basename(p) not in (".zarray", ".zattrs", "zarr.json")]
+    assert n == len(objects) and (n == 0) == (case == "empty")
+    if case == "v3_shards":  # all-fill shard: no object
+        assert os.path.join("late", "c", "1", "0", "0") not in got
+
+
+def test_chunk_store_nan_is_null(spark):
+    """NaN from a chunk store's ``get_data`` is a NULL cell."""
+    import numpy as np
+
+    from xcube_spark.sources.chunkstore import open_chunk_store
+
+    def get_data(chunk_idx, bounds):
+        t0, t1, y0, y1, x0, x1 = bounds
+        a = np.ones((t1 - t0, y1 - y0, x1 - x0))
+        a[:, 0, :] = np.nan
+        return {"V": a}
+
+    virt = open_chunk_store(spark, GRID, get_data, ["V"])
+    assert virt.where(F.isnan("V")).count() == 0
+    nulls = virt.where(F.col("V").isNull())
+    assert nulls.count() == GRID.time_periods * 2 * GRID.width
+    assert {r.y_i for r in nulls.select("y_i").distinct().collect()} == {0, 2}
+
+
 def test_zarr_write_raises_no_user_warning(spark, tmp_path):
-    """The chunk writer's applyInPandas function carries no partial
-    type hints, so pyspark has no eval type to (fail to) infer and
-    warns nothing."""
+    """The chunk writer's mapInArrow function carries no partial type
+    hints, so pyspark has no eval type to (fail to) infer and warns
+    nothing."""
     import warnings
 
     from xcube_spark.sources.zarrio import write_zarr_cube

@@ -4,31 +4,38 @@ the single ``DatasetIO.read`` contract every format driver of the
 reference returns its dataset through (xcube/core/dsio.py).
 
 A reader keeps only its format code: the header parse, a task table
-(one row per chunk, tile or plane) and ``read(row)``, which decodes
-that row's blocks as ``(origin, {var: ndarray})`` pairs — 3-D
-``(t, y, x)`` or 2-D ``(y, x)`` arrays trimmed to the data extent,
-``origin`` the cell index of their first element.  The emitter does
-the rest:
+(one row per chunk, tile or plane, :func:`task_range`) and
+``read(row)``, which decodes that row's blocks as
+``(origin, {var: ndarray})`` pairs — 3-D ``(t, y, x)`` or 2-D
+``(y, x)`` arrays trimmed to the data extent, ``origin`` the cell
+index of their first element.  The emitter does the rest:
 
+* each block becomes one Arrow record batch built straight from numpy
+  arrays — no pandas on the way;
 * the index columns come from each block's origin and shape;
 * ``time``/``y``/``x`` come from axis arrays the driver decoded once:
   they ship in the task closure and each task indexes them with its
   cells' indices, so there is no axis table and no join;
-* the projection maps NaN (Arrow's missing) to SQL NULL and applies
+* NaN becomes SQL NULL as the batch is built; the projection applies
   the CF time decode as a Column.
 
-Plan shape: ``tasks -> mapInPandas(read) -> project``.  Variables on
+Plan shape: ``tasks -> mapInArrow(read) -> project``.  Variables on
 different chunk grids (``pivot=True``) come one per block and pivot
 on the cell key and its coordinates — one shuffle, still no join.
+A filter after the open cannot cross the Python stage; readers that
+take ``cell_bounds`` drop the tasks outside them first
+(:func:`prune_tasks`) and filter the cells exactly after
+(:func:`clip_cells`).
 """
 
 from __future__ import annotations
 
+from collections import namedtuple
 from typing import Callable, Iterable, Mapping, Sequence
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 INDEX = ("t_i", "y_i", "x_i")
@@ -53,6 +60,36 @@ def cf_decode(arr: np.ndarray, attrs: Mapping) -> np.ndarray:
     return out
 
 
+def task_range(spark: SparkSession, n: int) -> DataFrame:
+    """``spark.range(n)`` with no more splits than tasks or cores: a
+    16-tile read on a 32-core session runs 16 Python tasks, not 32."""
+    return spark.range(n, numPartitions=max(
+        1, min(n, spark.sparkContext.defaultParallelism)))
+
+
+def prune_tasks(tasks: DataFrame, extents: Mapping[str, tuple[Column, int]],
+                cell_bounds: Mapping[str, tuple[int, int]] | None,
+                ) -> DataFrame:
+    """The tasks whose cells can meet ``cell_bounds`` (inclusive
+    cell-index ranges, ``{"y_i": (lo, hi)}``).  ``extents``
+    maps an index column to the task's first cell on it (a Column over
+    the task row) and a task's cell count along it; bounds on other
+    columns keep every task."""
+    for axis, (lo, hi) in (cell_bounds or {}).items():
+        if axis in extents:
+            first, size = extents[axis]
+            tasks = tasks.where((first <= hi) & (first + size > lo))
+    return tasks
+
+
+def clip_cells(cells: DataFrame,
+               cell_bounds: Mapping[str, tuple[int, int]] | None) -> DataFrame:
+    """The exact cell filter that follows :func:`prune_tasks`."""
+    for axis, (lo, hi) in (cell_bounds or {}).items():
+        cells = cells.where(F.col(axis).between(lo, hi))
+    return cells
+
+
 def region_tasks(regions: Mapping[tuple, Sequence],
                  n_vars: int) -> tuple[list, bool]:
     """Tasks ``(origin, parts)`` over chunk regions ``{origin: [one
@@ -65,14 +102,20 @@ def region_tasks(regions: Mapping[tuple, Sequence],
             for part in parts], True
 
 
+def _doubles(arr: np.ndarray) -> pa.Array:
+    """A DOUBLE column with NaN as null (SQL NULL once in Spark)."""
+    return pa.array(np.asarray(arr, "float64").ravel(), pa.float64(),
+                    from_pandas=True)
+
+
 def cells_frame(tasks: DataFrame, read: Reader, names: Sequence[str],
                 shape: Sequence[int],
                 axes: Mapping[str, np.ndarray] | None = None,
                 label: str = "", pivot: bool = False) -> DataFrame:
     """The raw cell rows of ``tasks``: the index columns of a
     ``len(shape)``-D cube, the given axis columns and ``names`` as
-    DOUBLE, NaN where missing.  An axis shorter than the data raises
-    ``ValueError``."""
+    DOUBLE, NULL where NaN.  ``read`` gets each task row as a
+    namedtuple.  An axis shorter than the data raises ``ValueError``."""
     index = INDEX[-len(shape):]
     extent = dict(zip(index, shape))
     coords = {}  # axis name -> (index column, values); time first
@@ -86,32 +129,36 @@ def cells_frame(tasks: DataFrame, read: Reader, names: Sequence[str],
                     f"the data has {extent[icol]}")
             coords[name] = (icol, vals[: extent[icol]])
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                for origin, block in read(row):
+    sql = {pa.int32(): "INT", pa.float64(): "DOUBLE", pa.string(): "STRING"}
+    out_schema = pa.schema(
+        [(c, pa.int32()) for c in index]
+        + [(c, pa.float64()) for c in coords]
+        + ([("var", pa.string()), ("val", pa.float64())] if pivot
+           else [(n, pa.float64()) for n in names]))
+
+    def gen(batches: Iterable[pa.RecordBatch]) -> Iterable[pa.RecordBatch]:
+        for batch in batches:
+            task = namedtuple("task", batch.schema.names, rename=True)
+            for values in zip(*(c.to_pylist() for c in batch.columns)):
+                for origin, block in read(task(*values)):
                     first = next(iter(block.values()))
                     grids = np.meshgrid(
-                        *[np.arange(o, o + n)
+                        *[np.arange(o, o + n, dtype="int32")
                           for o, n in zip(origin, first.shape)],
                         indexing="ij")
-                    out = {c: g.ravel().astype("int32")
-                           for c, g in zip(index, grids)}
-                    for name, (icol, vals) in coords.items():
-                        out[name] = vals[out[icol]]
+                    idx = [g.ravel() for g in grids]
+                    cols = [pa.array(i) for i in idx]
+                    cols += [_doubles(vals[idx[index.index(icol)]])
+                             for icol, vals in coords.values()]
                     if pivot:
                         (var, arr), = block.items()
-                        out["var"] = var
-                        out["val"] = np.asarray(arr, "float64").ravel()
+                        cols += [pa.repeat(var, arr.size), _doubles(arr)]
                     else:
-                        for n in names:
-                            out[n] = np.asarray(block[n], "float64").ravel()
-                    yield pd.DataFrame(out)
+                        cols += [_doubles(block[n]) for n in names]
+                    yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
 
-    schema = [f"{c} INT" for c in index] + [f"`{c}` DOUBLE" for c in coords]
-    schema += (["var STRING", "val DOUBLE"] if pivot
-               else [f"`{n}` DOUBLE" for n in names])
-    cells = tasks.mapInPandas(gen, ", ".join(schema))
+    cells = tasks.mapInArrow(gen, ", ".join(
+        f"`{f.name}` {sql[f.type]}" for f in out_schema))
     if pivot:
         cells = cells.groupBy(*index, *coords).pivot("var", list(names)) \
             .agg(F.first("val"))
@@ -124,17 +171,14 @@ def emit_cells(tasks: DataFrame, read: Reader, names: Sequence[str],
                time_attrs: Mapping | None = None, label: str = "",
                pivot: bool = False) -> DataFrame:
     """The cells DataFrame of ``tasks`` (see the module docstring):
-    :func:`cells_frame` projected to SQL NULL for missing values, with
-    ``time`` decoded by its CF ``units``/``calendar`` (``time_attrs``)."""
+    :func:`cells_frame` with ``time`` decoded by its CF
+    ``units``/``calendar`` (``time_attrs``)."""
     cells = cells_frame(tasks, read, names, shape, axes, label, pivot)
-    coords = [F.col(name) for name in AXES if name in (axes or {})]
-    if "time" in (axes or {}):
-        from xcube_spark.functions.cftime import decode_cf_time
+    if "time" not in (axes or {}):
+        return cells
+    from xcube_spark.functions.cftime import decode_cf_time
 
-        attrs = time_attrs or {}
-        coords[0] = decode_cf_time(
-            F.col("time"), attrs.get("units", "seconds since 1970-01-01"),
-            attrs.get("calendar")).alias("time")
-    return cells.select(
-        *INDEX[-len(shape):], *coords,
-        *[F.when(~F.isnan(n), F.col(n)).alias(n) for n in names])
+    attrs = time_attrs or {}
+    return cells.withColumn("time", decode_cf_time(
+        F.col("time"), attrs.get("units", "seconds since 1970-01-01"),
+        attrs.get("calendar")))

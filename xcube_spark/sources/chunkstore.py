@@ -5,7 +5,7 @@ The reference's lazy stores synthesize Zarr chunks on demand from a
 user callable ``get_data(chunk_index) -> ndarray``.  The Spark-native
 analog (SURVEY §2.1): a **generator DataFrame** —
 
-    spark.range(num_chunks) -> mapInPandas(chunk_index -> cell rows)
+    spark.range(num_chunks) -> mapInArrow(chunk_index -> cell rows)
         -> project(CubeGrid cell centres)
 
 Each task materializes one chunk by calling the user function; nothing
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xcube_spark.cube.grid import CubeGrid
-from xcube_spark.sources.cells import cells_frame
+from xcube_spark.sources.cells import cells_frame, task_range
 
 #: (chunk t/y/x index, (t0,t1,y0,y1,x0,x1) cell bounds) -> {var: ndarray}
 ChunkFunc = Callable[[tuple[int, int, int], tuple[int, ...]], Mapping[str, np.ndarray]]
@@ -52,9 +52,9 @@ def open_chunk_store(
 ) -> DataFrame:
     """Build the virtual cells DataFrame over ``get_data``.
 
-    The plan is ``range(num_chunks) -> mapInPandas -> project``: chunk
+    The plan is ``range(num_chunks) -> mapInArrow -> project``: chunk
     generation is embarrassingly parallel and each Arrow batch carries
-    whole chunks.  Values keep ``get_data``'s NaN (no NULL mapping)."""
+    one whole chunk.  A NaN from ``get_data`` is a NULL cell."""
     nt, ny, nx = chunk_grid(grid)
     ct, cy, cx = grid.chunks
     tp, h, w = grid.time_periods, grid.height, grid.width
@@ -70,7 +70,7 @@ def open_chunk_store(
             v: np.asarray(arrays[v], "float64").reshape(
                 t1 - t0, y1 - y0, x1 - x0) for v in var_names}
 
-    cells = cells_frame(spark.range(nt * ny * nx), read, var_names,
+    cells = cells_frame(task_range(spark, nt * ny * nx), read, var_names,
                         (tp, h, w))
     return cells.withColumns({
         "time": grid.time_center_expr(F.col("t_i")),

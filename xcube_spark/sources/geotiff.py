@@ -21,7 +21,9 @@ satellite COGs actually use is parsed directly from the public TIFF 6.0
 Scale model (same as the Zarr reader): the driver reads only the IFD
 metadata (KBs); tile/strip byte ranges become a ``spark.range`` chunk
 table and each task reads + decodes its own byte range via
-``mapInPandas`` — IO proportional to the subset read, executor-local.
+``mapInArrow``, executor-local; ``cell_bounds`` drops the blocks
+outside a subset before any byte is read — IO proportional to the
+subset read.
 """
 
 from __future__ import annotations
@@ -29,17 +31,19 @@ from __future__ import annotations
 import struct
 import zlib
 from dataclasses import dataclass, field
+from typing import Mapping
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xcube_spark.sources.cells import emit_cells
+from xcube_spark.sources.cells import (clip_cells, emit_cells, prune_tasks,
+                                       task_range)
 
 #: driver-side raster writers refuse above this many cells — they
 #: collect() the full raster, so they are scoped to tiles/fixtures;
 #: bulk export goes through the DISTRIBUTED zarr/parquet writers
-#: (zarrio.write_zarr_cube applyInPandas / parquet layout writer)
+#: (zarrio.write_zarr_cube / parquet layout writer)
 MAX_DRIVER_CELLS = 64_000_000  # 64M cells ~ 512 MB of float64
 
 
@@ -227,14 +231,17 @@ def open_geotiff_cube(
     path: str,
     level: int = 0,
     band_names: list[str] | None = None,
+    cell_bounds: Mapping[str, tuple[int, int]] | None = None,
 ) -> DataFrame:
     """GeoTIFF/COG IFD ``level`` -> cells DataFrame
     ``(t_i, y_i, x_i, y, x, band_1..band_n)``; single time step
     (``t_i`` 0), ``y``/``x`` from the TIFF affine (else the indices).
 
-    Plan shape: ``range(n_blocks) -> mapInPandas(read + inflate +
+    Plan shape: ``range(n_blocks) -> mapInArrow(read + inflate +
     unpredict) -> project`` (sources/cells.py) — each task reads only
-    its own tile/strip byte range."""
+    its own tile/strip byte range.  ``cell_bounds={"y_i": (lo, hi),
+    ...}`` (inclusive) reads only the blocks that meet the bounds and
+    keeps only the cells inside them, as ``open_zarr_cube`` does."""
     ifds = _read_ifds(path)
     if not 0 <= level < len(ifds):
         raise IndexError(f"level {level} not in [0, {len(ifds)})")
@@ -265,8 +272,15 @@ def open_geotiff_cube(
             arr[arr == ifd.nodata] = np.nan
         yield (y0, x0), {n: arr[:, :, bi] for bi, n in enumerate(names)}
 
-    cells = emit_cells(spark.range(len(ifd.offsets)), read, names,
-                       (ifd.height, ifd.width))
+    if ifd.tiled:
+        extents = {
+            "y_i": ((F.col("id") / ta).cast("int") * ifd.tile_h, ifd.tile_h),
+            "x_i": ((F.col("id") % ta).cast("int") * ifd.tile_w, ifd.tile_w)}
+    else:
+        extents = {"y_i": (F.col("id") * ifd.tile_h, ifd.tile_h)}
+    tasks = prune_tasks(task_range(spark, len(ifd.offsets)), extents,
+                        cell_bounds)
+    cells = emit_cells(tasks, read, names, (ifd.height, ifd.width))
 
     if ifd.pixel_scale and ifd.tiepoint:
         sx, sy = ifd.pixel_scale
@@ -278,9 +292,9 @@ def open_geotiff_cube(
     else:
         x = F.col("x_i").cast("double")
         y = F.col("y_i").cast("double")
-    return cells.select(
+    return clip_cells(cells.select(
         F.lit(0).alias("t_i"), "y_i", "x_i",
-        y.alias("y"), x.alias("x"), *names)
+        y.alias("y"), x.alias("x"), *names), cell_bounds)
 
 
 def open_geotiff_levels(spark: SparkSession, path: str,

@@ -25,7 +25,7 @@ model actually uses is parsed directly:
 Scale model matches the Zarr/GeoTIFF/netCDF-3 readers: the driver
 parses only metadata (KBs) and the dimension scales; every chunk
 region becomes a task over its (address, nbytes) entries that
-``mapInPandas`` reads and decodes executor-locally, so a 100 TB
+``mapInArrow`` reads and decodes executor-locally, so a 100 TB
 archive of .nc granules fans out to one task per chunk with no driver
 data movement.  The cells, coordinates and CF decoding
 (_FillValue/scale/offset, time units + calendar) come from the shared
@@ -47,7 +47,8 @@ from dataclasses import dataclass, field
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from xcube_spark.sources.cells import cf_decode, emit_cells, region_tasks
+from xcube_spark.sources.cells import (cf_decode, emit_cells, region_tasks,
+                                       task_range)
 
 _SIG = b"\x89HDF\r\n\x1a\n"
 _UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -728,11 +729,11 @@ def open_netcdf4_cube(
 
     Variables shaped ``(time, y, x)`` (wired by ``DIMENSION_LIST``)
     are read chunk-parallel: the driver enumerates chunk byte ranges
-    from the B-tree / v4 index, and ``mapInPandas`` tasks seek, read,
+    from the B-tree / v4 index, and ``mapInArrow`` tasks seek, read,
     de-filter and CF-decode each chunk executor-locally.  Contiguous
     variables fan out as per-time-plane pseudo-chunks.
 
-    Plan: ``range(n_regions) -> mapInPandas -> project``, the
+    Plan: ``range(n_regions) -> mapInArrow -> project``, the
     dimension-scale values read once on the driver and indexed per
     cell in the task — no join.  Variables on different chunk grids
     read one (region, variable) per task and pivot on the cell key
@@ -834,9 +835,9 @@ def open_netcdf4_cube(
         read_h5_array(path, scales[dim], h5=h5)
         for dim in (time_dim, y_dim, x_dim))
     return emit_cells(
-        spark.range(len(tasks), numPartitions=min(len(tasks), 64)), read,
-        names, (tp, h, w), {"time": t_vals, "y": y_vals, "x": x_vals},
-        t_attrs, path, pivot=pivot)
+        task_range(spark, len(tasks)), read, names, (tp, h, w),
+        {"time": t_vals, "y": y_vals, "x": x_vals}, t_attrs, path,
+        pivot=pivot)
 
 
 # ---------------------------------------------------------------------------

@@ -20,13 +20,14 @@ lossless (reversible) profile the fixtures need end-to-end:
 Scale shape: a JP2 is TILED, and every tile is an independent
 codestream segment whose byte range the SOT markers declare.  The
 Spark open path parses only the main header + SOT table driver-side
-(O(#tiles) work) and decodes tiles executor-side via mapInPandas —
+(O(#tiles) work) and decodes tiles executor-side via mapInArrow —
 the same chunk-task plan as the GeoTIFF/Zarr/HDF5 readers.
 """
 
 from __future__ import annotations
 
 import struct
+from typing import Mapping
 
 import numpy as np
 
@@ -1178,25 +1179,31 @@ def open_jp2_cube(
     y_end: float | None = None,
     res: float | None = None,
     nodata: float | None = None,
+    cell_bounds: Mapping[str, tuple[int, int]] | None = None,
 ):
     """JP2/J2K -> cells DataFrame ``(t_i, y_i, x_i, y, x, <band>)``,
     single time step — the JPEG-2000 twin of ``open_geotiff_cube``
     (reference JPEG-2000 openers: ref ``xcube/plugin.py:102-107``).
 
     Plan shape: the driver parses only the main header + SOT table
-    (``parse_jp2_file``, O(#tiles) seeks); ``mapInPandas`` tasks each
+    (``parse_jp2_file``, O(#tiles) seeks); ``mapInArrow`` tasks each
     read and entropy-decode their own tile's byte range.  Optional
     ``x_start``/``y_end``/``res`` pin the georeferenced axis values
-    (Sentinel-2 grids are regular, north-up)."""
+    (Sentinel-2 grids are regular, north-up).  ``cell_bounds={"y_i":
+    (lo, hi), ...}`` (inclusive) decodes only the tiles that meet the
+    bounds and keeps only the cells inside them, as
+    ``open_zarr_cube`` does."""
     from pyspark.sql import functions as F
 
-    from xcube_spark.sources.cells import emit_cells
+    from xcube_spark.sources.cells import (clip_cells, emit_cells,
+                                           prune_tasks, task_range)
 
     img = parse_jp2_file(path)
-    idxs = sorted(img.tiles)
 
     def read(row):
-        idx = idxs[int(row.id)]
+        idx = int(row.id)
+        if idx not in img.tiles:  # no tile-part for this tile
+            return
         off, ln = img.tiles[idx]
         with open(path, "rb") as f:
             f.seek(off)
@@ -1211,13 +1218,18 @@ def open_jp2_cube(
         ty, tx = divmod(idx, img.tiles_x)
         yield (ty * img.tile_h, tx * img.tile_w), {band_name: vals}
 
-    cells = emit_cells(spark.range(len(idxs)), read, [band_name],
-                       (img.height, img.width))
+    tasks = prune_tasks(task_range(spark, img.tiles_x * img.tiles_y), {
+        "y_i": ((F.col("id") / img.tiles_x).cast("int") * img.tile_h,
+                img.tile_h),
+        "x_i": ((F.col("id") % img.tiles_x).cast("int") * img.tile_w,
+                img.tile_w)}, cell_bounds)
+    cells = emit_cells(tasks, read, [band_name], (img.height, img.width))
     if x_start is not None and y_end is not None and res is not None:
         x = F.lit(x_start) + (F.col("x_i") + F.lit(0.5)) * F.lit(res)
         y = F.lit(y_end) - (F.col("y_i") + F.lit(0.5)) * F.lit(res)
     else:
         x = F.col("x_i").cast("double")
         y = F.col("y_i").cast("double")
-    return cells.select(F.lit(0).alias("t_i"), "y_i", "x_i",
-                        y.alias("y"), x.alias("x"), band_name)
+    return clip_cells(cells.select(F.lit(0).alias("t_i"), "y_i", "x_i",
+                                   y.alias("y"), x.alias("x"), band_name),
+                      cell_bounds)

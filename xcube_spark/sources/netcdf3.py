@@ -29,7 +29,7 @@ from dataclasses import dataclass, field
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from xcube_spark.sources.cells import cf_decode, emit_cells
+from xcube_spark.sources.cells import cf_decode, emit_cells, task_range
 
 _NC_DIMENSION, _NC_VARIABLE, _NC_ATTRIBUTE = 0x0A, 0x0B, 0x0C
 _NC_TYPES = {1: np.dtype(">i1"), 2: np.dtype("S1"), 3: np.dtype(">i2"),
@@ -185,7 +185,7 @@ def open_netcdf_cube(
 
     Accepts variables shaped ``(time, y, x)`` (fixed or record time
     dimension).  Per-(var, time-step) byte ranges are computed from the
-    header.  Plan: ``range(T) -> mapInPandas -> project`` — each task
+    header.  Plan: ``range(T) -> mapInArrow -> project`` — each task
     reads its plane of every variable; the coordinate values are read
     once on the driver and indexed per cell in the task (a dimension
     without a coordinate variable counts cells).  Dim names default to
@@ -256,7 +256,7 @@ def open_netcdf_cube(
 
     (t_vals, t_attrs), (y_vals, _), (x_vals, _) = (
         axis_vals(ti, time_dim), axis_vals(yi, y_dim), axis_vals(xi, x_dim))
-    return emit_cells(spark.range(tp), read, names, (tp, h, w),
+    return emit_cells(task_range(spark, tp), read, names, (tp, h, w),
                       {"time": t_vals, "y": y_vals, "x": x_vals}, t_attrs,
                       path)
 

@@ -13,7 +13,7 @@ with no external libraries.
 
 Scale model: the driver parses only the per-file HDF5 metadata; every
 chunk of every variable becomes a byte-range row, grouped by chunk
-region so one ``mapInPandas`` task decodes ALL variables for its
+region so one ``mapInArrow`` task decodes ALL variables for its
 region and emits wide rows — aligned chunk grids (the Sentinel-3
 ground truth: all bands share the instrument grid) read with no
 shuffle at all; mixed grids fall back to a single pivot.
@@ -30,7 +30,8 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from xcube_spark.sources.cells import cf_decode, emit_cells, region_tasks
+from xcube_spark.sources.cells import (cf_decode, emit_cells, region_tasks,
+                                       task_range)
 from xcube_spark.sources.hdf5 import H5File, decode_chunk
 
 _GEO_FILE = "geo_coordinates.nc"
@@ -155,6 +156,5 @@ def open_sentinel3_product(
             block[n] = cf_decode(arr, cf)
         yield (y0, x0), block
 
-    return emit_cells(
-        spark.range(len(tasks), numPartitions=min(len(tasks), 64)), read,
-        all_names, (h, w), pivot=pivot)
+    return emit_cells(task_range(spark, len(tasks)), read, all_names,
+                      (h, w), pivot=pivot)

@@ -12,15 +12,17 @@ zlib-compressed — so we implement it directly:
 - **Reader** (``open_zarr_cube``): store metadata is a driver-side read
   of a few small JSON files; the chunk index becomes
   ``spark.range(n_chunks)`` and each task decodes its own chunk files
-  via ``mapInPandas`` (Arrow-batched, nothing routed through the
-  driver).  Filters on chunk coordinates prune before any chunk byte is
-  read — the same IO-proportional-to-subset promise as the reference's
-  lazy xarray open.  Coordinate axes are decoded driver-side (axis
+  via ``mapInArrow`` (one Arrow batch per chunk, nothing routed
+  through the driver or through pandas).  ``cell_bounds`` prunes chunk
+  ids before any chunk byte is read — the same
+  IO-proportional-to-subset promise as the reference's lazy xarray
+  open.  Coordinate axes are decoded driver-side (axis
   arrays are metadata-sized) and emitted by the decoding task, indexed
   by the cell indices — no axis tables, no joins.
 - **Writer** (``write_zarr_cube``): cells are shuffled once by chunk
-  key, each chunk file written by the task that owns the group
-  (``applyInPandas``); only the JSON metadata is written by the driver.
+  key and sorted by it within each partition; a ``mapInArrow`` task
+  streams its sorted batches and writes each chunk's objects as the
+  chunk ends; only the JSON metadata is written by the driver.
 
 CF encode/decode semantics (matching xarray's ``decode_cf`` used by the
 reference): on read, ``raw == fill_value -> missing`` then
@@ -52,12 +54,13 @@ from datetime import datetime, timezone
 from typing import Mapping
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xcube_spark.cube.grid import CubeGrid
-from xcube_spark.sources.cells import emit_cells
+from xcube_spark.sources.cells import (clip_cells, emit_cells, prune_tasks,
+                                       task_range)
 
 _DTYPES = {
     "<f8": np.dtype("<f8"), "<f4": np.dtype("<f4"),
@@ -943,11 +946,17 @@ def write_zarr_cube(
     all-fill shards are not written (the same empty-chunk pruning the
     v2 writer does per file).
 
-    Distributed write: one shuffle keyed by shard (or chunk) index
-    (``groupBy(tc, yc, xc).applyInPandas``), each task encodes and
-    writes its own objects for every variable — the driver only
-    writes the JSON metadata and the (metadata-sized) coordinate
-    arrays.  Matches ``ZarrDatasetIO.write`` semantics
+    Distributed write: ``repartition(chunk key)
+    .sortWithinPartitions(chunk key).mapInArrow(write_part)``, one
+    shuffle keyed by shard (or chunk) index.  Only ``t_i, y_i, x_i``
+    and the variables (cast to DOUBLE) cross into Python.  Each task
+    streams its sorted Arrow batches, cuts them where the chunk key
+    changes and carries the last, possibly unfinished chunk into the
+    next batch, so it holds at most one batch plus one chunk; it
+    encodes and writes every variable's object of a chunk as the
+    chunk ends.  The driver only writes the JSON metadata and the
+    (metadata-sized) coordinate arrays.  Matches
+    ``ZarrDatasetIO.write`` semantics
     (/root/reference/xcube/core/dsio.py:500) with CF packing attrs.
     """
     from xcube_spark.cube.grid import var_names as cube_vars
@@ -1041,37 +1050,55 @@ def write_zarr_cube(
                  encode_chunk(np.zeros(1, "i1"), crs_meta))
 
     ct, cy, cx = shards if shards is not None else grid.chunks
-    meta_payload = {v: m for v, m in metas.items()}
 
-    def write_group(key, pdf):
-        tc, yc, xc = (int(k) for k in key)
+    def write_chunk(cols: list[np.ndarray]) -> int:
+        """Encode and write one chunk's objects from its cell rows
+        ``[t_i, y_i, x_i, *vars]``; the number of objects written."""
+        t, y, x = cols[:3]
+        tc, yc, xc = int(t[0]) // ct, int(y[0]) // cy, int(x[0]) // cx
         n = 0
-        for v, meta in meta_payload.items():
+        for vals, (v, meta) in zip(cols[3:], metas.items()):
             chunk = np.full(meta.chunks, np.nan, "float64")
-            chunk[pdf["t_i"] % ct, pdf["y_i"] % cy, pdf["x_i"] % cx] = \
-                pdf[v].to_numpy("float64", na_value=np.nan)
+            chunk[t % ct, y % cy, x % cx] = vals
             enc = encode_chunk(encode_values(chunk, meta), meta)
             if enc is None:  # all-fill shard: no object at all
                 continue
-            ck = os.path.join(path, v, meta.chunk_key(tc, yc, xc))
-            os.makedirs(os.path.dirname(ck), exist_ok=True)
-            _write_bytes(ck, enc)
+            _write_bytes(os.path.join(path, v, meta.chunk_key(tc, yc, xc)),
+                         enc)
             n += 1
-        return pd.DataFrame({"n": [n]})
+        return n
 
-    keyed = cube.select(
-        F.floor(F.col("t_i") / ct).cast("int").alias("tc"),
-        F.floor(F.col("y_i") / cy).cast("int").alias("yc"),
-        F.floor(F.col("x_i") / cx).cast("int").alias("xc"),
-        "t_i", "y_i", "x_i", *vars_,
+    def write_part(batches):
+        # rows arrive sorted by chunk: a chunk ends where the key
+        # changes, and the last one may go on in the next batch
+        n, open_key, pieces = 0, None, []
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            cols = [c.to_numpy(zero_copy_only=False) for c in batch.columns]
+            t, y, x = cols[:3]
+            key = np.stack([t // ct, y // cy, x // cx], axis=1)
+            cuts = np.flatnonzero((key[1:] != key[:-1]).any(axis=1)) + 1
+            for lo, hi in zip([0, *cuts], [*cuts, batch.num_rows]):
+                if pieces and tuple(key[lo]) != open_key:
+                    n += write_chunk([np.concatenate(p) for p in zip(*pieces)])
+                    pieces = []
+                open_key = tuple(key[lo])
+                pieces.append([c[lo:hi] for c in cols])
+        if pieces:
+            n += write_chunk([np.concatenate(p) for p in zip(*pieces)])
+        yield pa.RecordBatch.from_pydict({"n": pa.array([n], pa.int32())})
+
+    chunk_key = [F.floor(F.col(c) / s) for c, s in
+                 (("t_i", ct), ("y_i", cy), ("x_i", cx))]
+    rows = (
+        cube.select("t_i", "y_i", "x_i",
+                    *[F.col(v).cast("double").alias(v) for v in vars_])
+        .repartition(*chunk_key).sortWithinPartitions(*chunk_key)
+        .mapInArrow(write_part, "n int")
+        .collect()
     )
-    written = (
-        keyed.groupBy("tc", "yc", "xc")
-        .applyInPandas(write_group, "n int")
-        .agg(F.sum("n").alias("total"))
-        .collect()[0]["total"]
-    )
-    return int(written or 0)
+    return sum(r.n for r in rows)
 
 
 # ---- reader -------------------------------------------------------------
@@ -1087,7 +1114,7 @@ def open_zarr_cube(
     (``t_i, y_i, x_i, time, y, x, <vars>``), the engine's equivalent of
     ``ZarrDatasetIO.read`` (/root/reference/xcube/core/dsio.py:445).
 
-    Plan shape: ``range(n_chunks) -> mapInPandas(decode) -> project``,
+    Plan shape: ``range(n_chunks) -> mapInArrow(decode) -> project``,
     with no join.  The ``time``/``y``/``x`` axis arrays are decoded
     once on the driver and ship in the task closure; each task emits
     the coordinates of its cells by indexing them, and the projection
@@ -1232,23 +1259,15 @@ def _open_cells(
             block[v] = vals[: tp - t0, : h - y0, : w - x0]
         yield (t0, y0, x0), block
 
-    rng = spark.range(nt * ny * nx)
-    if cell_bounds:
-        tc = (F.col("id") / (ny * nx)).cast("int")
-        yc = ((F.col("id") % (ny * nx)) / nx).cast("int")
-        xc = (F.col("id") % nx).cast("int")
-        for axis, ccol, csize in (("t_i", tc, ct), ("y_i", yc, cy),
-                                  ("x_i", xc, cx)):
-            if axis in cell_bounds:
-                lo, hi = cell_bounds[axis]
-                rng = rng.where(ccol.between(lo // csize, hi // csize))
+    tc = (F.col("id") / (ny * nx)).cast("int")
+    yc = ((F.col("id") % (ny * nx)) / nx).cast("int")
+    xc = (F.col("id") % nx).cast("int")
+    tasks = prune_tasks(task_range(spark, nt * ny * nx), {
+        "t_i": (tc * ct, ct), "y_i": (yc * cy, cy), "x_i": (xc * cx, cx)},
+        cell_bounds)
     axes, time_attrs = _axes(arrays, fetch)
-    cells = emit_cells(rng, read, list(metas), (tp, h, w), axes,
-                       time_attrs, label)
-    # exact cell filter after the chunk-level prune
-    for axis, (lo, hi) in (cell_bounds or {}).items():
-        cells = cells.where(F.col(axis).between(lo, hi))
-    return cells
+    return clip_cells(emit_cells(tasks, read, list(metas), (tp, h, w), axes,
+                                 time_attrs, label), cell_bounds)
 
 
 def _axis_values(name: str, meta: ZarrArray, fetch) -> np.ndarray:
