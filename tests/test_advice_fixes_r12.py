@@ -6,9 +6,6 @@
 2. hampel_filter rejects even / non-positive windows (the exact-element
    median contract only holds for odd windows); rolling_zscore and
    holt_smooth reject window < 1.
-3. knn_bruteforce's score column defaults to the METRIC name, so
-   metric="dot" without an explicit score_col no longer mislabels
-   inner products as "cosine".
 """
 import pytest
 from pyspark.sql import Row
@@ -53,20 +50,3 @@ def test_rolling_window_validation(spark):
         rolling_zscore(df, "v", "k", ["ts"], window=0)
     with pytest.raises(ValueError, match=">= 1"):
         holt_smooth(df, "v", "k", ["ts"], window=0)
-
-
-def test_knn_bruteforce_score_col_follows_metric(spark):
-    from xcube_spark.pipeline.similarity import knn_bruteforce
-
-    emb = spark.createDataFrame(
-        [Row(vec_id=0, embedding=[1.0, 0.0]),
-         Row(vec_id=1, embedding=[0.5, 0.0]),
-         Row(vec_id=2, embedding=[2.0, 0.0])])
-    q = spark.createDataFrame([Row(query_id=0, embedding=[1.0, 0.0])])
-    dot_cols = knn_bruteforce(emb, q, k=2, metric="dot").columns
-    assert "dot" in dot_cols and "cosine" not in dot_cols
-    cos_cols = knn_bruteforce(emb, q, k=2).columns
-    assert "cosine" in cos_cols
-    # explicit score_col still wins
-    named = knn_bruteforce(emb, q, k=2, metric="dot", score_col="ip")
-    assert "ip" in named.columns

@@ -2,14 +2,10 @@
 
 Each test locks one fix so it cannot silently regress:
 - verdict #3: read_events_stream must not leak the legacy nanos conf
-- advice: knn_recall forwards column names to the approximate side
 - advice: bm25/dsir release their persisted intermediates
 """
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
 
 
 def test_read_events_stream_does_not_leak_nanos_conf(spark, sf_dir):
@@ -24,26 +20,6 @@ def test_read_events_stream_does_not_leak_nanos_conf(spark, sf_dir):
     stream = read_events_stream(spark, sf_dir)
     assert stream.isStreaming
     assert spark.conf.get(conf, None) == before
-
-
-def test_knn_recall_forwards_column_names(spark):
-    """Advice r9: knn_recall forwarded id/vec column kwargs to the
-    exact ground truth but called approx(corpus, queries, k) bare, so
-    non-default column names failed or mis-joined on the approx side."""
-    from xcube_spark.pipeline.similarity import knn_bruteforce, knn_recall
-
-    corpus = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(8)],
-        "my_id long, my_vec array<float>")
-    queries = spark.createDataFrame(
-        [(100, [3.0, 1.0])], "my_qid long, my_vec array<float>")
-    rec = knn_recall(
-        corpus, queries, k=3, approx=knn_bruteforce,
-        id_col="my_id", vec_col="my_vec", query_id_col="my_qid",
-    ).collect()
-    # approx == exact here, so recall is exactly 1.0 for the query
-    assert len(rec) == 1
-    assert rec[0].recall == pytest.approx(1.0)
 
 
 def test_bm25_and_dsir_release_persisted_intermediates(spark, sf_dir):

@@ -1,11 +1,13 @@
-"""Distributed PCA (pipeline/similarity.py): the eigen-step
-properties the SQL gate can't express (emb_pca_variance covers the
-one-pass moment accumulation)."""
+"""pipeline/similarity.py: the kNN kernels' contracts (ties, NaN
+scores, NULL vectors, column names) and near-dup pairs, plus the
+distributed-PCA eigen-step properties the SQL gate can't express
+(emb_pca_variance covers the one-pass moment accumulation)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import Row
 
 from xcube_spark.pipeline.similarity import (
     pca_moments,
@@ -255,3 +257,148 @@ def test_knn_bruteforce_tie_break_deterministic(spark):
     out = knn_bruteforce(corpus, queries, k=4).orderBy("rank").collect()
     assert [r["vec_id"] for r in out] == [10, 11, 12, 13]
     assert all(r["cosine"] == pytest.approx(1.0) for r in out)
+
+
+def test_embedding_near_dup_pairs_duplicate_ids_no_self_pairs(spark):
+    """Duplicate id values in the corpus must not produce id_a == id_b
+    rows (the oracle's a.vec_id < b.vec_id predicate excludes them);
+    distinct-id near-dup pairs are still emitted."""
+    from xcube_spark.pipeline.similarity import embedding_near_dup_pairs
+
+    base = [float(i) for i in range(64)]
+    near = [v + (0.001 if i == 0 else 0.0) for i, v in enumerate(base)]
+    far = [float(63 - i) for i in range(64)]
+    rows = [(1, base), (1, near),   # same id, near-identical vectors
+            (2, near), (3, far)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = embedding_near_dup_pairs(df, threshold=0.9).collect()
+    assert all(r.id_a != r.id_b for r in out)
+    assert any({r.id_a, r.id_b} == {1, 2} for r in out)
+
+
+def test_embedding_near_dup_pairs_cosine_is_dot_over_norms(spark):
+    """Emitted cosine must equal dot/(|a||b|) computed dot-first (the
+    oracle's op shape), not the pre-normalized-rows rounding."""
+    import numpy as np
+
+    from xcube_spark.pipeline.similarity import embedding_near_dup_pairs
+
+    rng = np.random.default_rng(7)
+    # tight cluster: same LSH bucket, high pairwise cosines
+    vecs = rng.normal(size=(6, 64)) * 0.01 + 3.0
+    rows = [(i, [float(x) for x in vecs[i]]) for i in range(6)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = embedding_near_dup_pairs(df, threshold=0.5).collect()
+    assert out
+    for r in out:
+        a, b = vecs[r.id_a], vecs[r.id_b]
+        expect = (a @ b) / (np.linalg.norm(a) * np.linalg.norm(b))
+        # gemm vs 1-D-dot accumulation still differ in the last ulp;
+        # the op SHAPE (dot first, divide once) is the contract and
+        # the 6-decimal oracle rounding absorbs the remainder
+        assert abs(r.cosine - expect) < 1e-12, (r.id_a, r.id_b)
+
+
+def test_knn_ivf_probe_selection_matches_assignment_kernel(spark):
+    """Probe selection and cell assignment must use the SAME distance
+    op order (_np_pair_d2): with n_probe=1 every query's own nearest
+    centroid (per _np_pair_d2) must be the probed cell, so a corpus
+    vector equal to the query is always found."""
+    import numpy as np
+
+    from xcube_spark.pipeline.similarity import knn_ivf
+
+    rng = np.random.default_rng(11)
+    vecs = rng.normal(size=(40, 16))
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in vecs[i]]) for i in range(40)],
+        "vec_id long, embedding array<double>")
+    cents = spark.createDataFrame(
+        [(c, [float(x) for x in vecs[c * 10]]) for c in range(4)],
+        "vec_id long, embedding array<double>")
+    # query vectors sit exactly ON corpus vectors (not the centroids)
+    queries = spark.createDataFrame(
+        [(100 + i, [float(x) for x in vecs[i * 7 + 1]]) for i in range(5)],
+        "query_id long, embedding array<double>")
+    out = knn_ivf(corpus, queries, cents, k=1, n_probe=1).collect()
+    got = {r.query_id: r.vec_id for r in out}
+    assert got == {100 + i: i * 7 + 1 for i in range(5)}
+
+
+def test_knn_recall_forwards_column_names(spark):
+    """Advice r9: knn_recall forwarded id/vec column kwargs to the
+    exact ground truth but called approx(corpus, queries, k) bare, so
+    non-default column names failed or mis-joined on the approx side."""
+    from xcube_spark.pipeline.similarity import knn_bruteforce, knn_recall
+
+    corpus = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(8)],
+        "my_id long, my_vec array<float>")
+    queries = spark.createDataFrame(
+        [(100, [3.0, 1.0])], "my_qid long, my_vec array<float>")
+    rec = knn_recall(
+        corpus, queries, k=3, approx=knn_bruteforce,
+        id_col="my_id", vec_col="my_vec", query_id_col="my_qid",
+    ).collect()
+    # approx == exact here, so recall is exactly 1.0 for the query
+    assert len(rec) == 1
+    assert rec[0].recall == pytest.approx(1.0)
+
+
+def test_knn_bruteforce_score_col_follows_metric(spark):
+    from xcube_spark.pipeline.similarity import knn_bruteforce
+
+    emb = spark.createDataFrame(
+        [Row(vec_id=0, embedding=[1.0, 0.0]),
+         Row(vec_id=1, embedding=[0.5, 0.0]),
+         Row(vec_id=2, embedding=[2.0, 0.0])])
+    q = spark.createDataFrame([Row(query_id=0, embedding=[1.0, 0.0])])
+    dot_cols = knn_bruteforce(emb, q, k=2, metric="dot").columns
+    assert "dot" in dot_cols and "cosine" not in dot_cols
+    cos_cols = knn_bruteforce(emb, q, k=2).columns
+    assert "cosine" in cos_cols
+    # explicit score_col still wins
+    named = knn_bruteforce(emb, q, k=2, metric="dot", score_col="ip")
+    assert "ip" in named.columns
+
+
+@pytest.mark.parametrize("kernel",
+                         ["bruteforce", "lsh", "ivf", "pq", "ivfpq"])
+def test_knn_null_vectors_are_never_candidates(spark, kernel):
+    """A corpus row with a NULL vector is never a candidate and a query
+    with a NULL vector returns no rows; neither raises.  Every kernel
+    returns exactly what it returns once those rows are removed."""
+    from xcube_spark.pipeline import similarity as sim
+
+    vecs = np.random.default_rng(5).normal(size=(40, 64))
+    null_id = 5  # inside the PQ / IVF-PQ model samples
+    corpus = spark.createDataFrame(
+        [(i, None if i == null_id else [float(x) for x in vecs[i]])
+         for i in range(40)],
+        "vec_id long, embedding array<double>").coalesce(1)
+    queries = spark.createDataFrame(
+        [(q, None if q == 2 else [float(x) for x in vecs[q]])
+         for q in (1, 2, 3)],
+        "query_id long, embedding array<double>")
+    cents = spark.createDataFrame(
+        [(c, [float(x) for x in vecs[10 * c + 1]]) for c in range(4)],
+        "vec_id long, embedding array<double>")
+    run = {
+        "bruteforce": lambda c, q: sim.knn_bruteforce(c, q, k=40),
+        "lsh": lambda c, q: sim.knn_lsh(c, q, k=40, n_planes=1),
+        "ivf": lambda c, q: sim.knn_ivf(c, q, cents, k=40, n_probe=4),
+        "pq": lambda c, q: sim.knn_pq(c, q, k=40),
+        "ivfpq": lambda c, q: sim.knn_ivfpq(c, q, k=40, n_cells=4,
+                                            n_probe=4, ksub=8),
+    }[kernel]
+
+    def rows(df):
+        return sorted((r[0], r[1], r[3], r[2]) for r in df.collect())
+
+    got = rows(run(corpus, queries))
+    want = rows(run(corpus.where(f"vec_id != {null_id}"),
+                    queries.where("query_id != 2")))
+    assert {g[0] for g in got} == {1, 3}
+    assert null_id not in {g[1] for g in got}
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    assert [g[3] for g in got] == pytest.approx([w[3] for w in want])

@@ -587,3 +587,114 @@ def test_stream_holt_equals_batch(spark, sf_dir):
         .alias("f"))
     cols = ("event_id", "user_id", "l", "t", "f")
     assert _rows(got, *cols) == _rows(want, *cols)
+
+
+def test_near_dup_state_store_replay_after_partial_append(spark):
+    """Crash between the sig append and the bands append, then replay
+    the same batch in a fresh store instance (fresh process): the
+    batch_id-tagged merge must complete the partial append without
+    duplicating state rows (ADVICE r7 exactly-once)."""
+    from pyspark.sql import types as T
+
+    from xcube_spark.pipeline.dedup import (NearDupStateStore,
+                                            incremental_near_dedup)
+
+    docs = _near_dup_corpus(spark)
+    b0 = docs.where("doc_id < 20")
+    b1 = docs.where("doc_id >= 20")
+    store = NearDupStateStore(spark, "t_ndstore_replay")
+    store.drop()
+    try:
+        store.merge_batch(b0, batch_id=0)
+
+        crashed = NearDupStateStore(spark, "t_ndstore_replay")
+        orig_append = NearDupStateStore._append
+
+        def boom(self, df, table, bucket_col):
+            if table == self.bands_table:
+                raise RuntimeError("simulated crash before bands append")
+            orig_append(self, df, table, bucket_col)
+
+        NearDupStateStore._append = boom
+        try:
+            import pytest
+            with pytest.raises(RuntimeError):
+                crashed.merge_batch(b1, batch_id=1)
+        finally:
+            NearDupStateStore._append = orig_append
+        # sig rows for batch 1 are in; bands rows are not
+
+        replay = NearDupStateStore(spark, "t_ndstore_replay")
+        replay.merge_batch(b1, batch_id=1)
+
+        sig = spark.table(replay.sig_table)
+        n_docs = docs.count()
+        assert sig.count() == n_docs  # no doubled signature rows
+        assert sig.select("doc_id").distinct().count() == n_docs
+        bands = spark.table(replay.bands_table)
+        assert bands.count() == bands.distinct().count()
+        assert (bands.where("__batch = 1").select("doc_id")
+                .distinct().count() == b1.count())
+
+        schema = T.StructType(
+            [T.StructField("doc_id", T.LongType())]
+            + [T.StructField(f"h{j}", T.StringType()) for j in range(8)]
+            + [T.StructField("is_dup", T.BooleanType())])
+        want = incremental_near_dedup(
+            spark.createDataFrame([], schema), docs)
+        assert ({(r.doc_id, r.is_dup) for r in replay.flags().collect()}
+                == {(r.doc_id, r.is_dup) for r in want.collect()})
+    finally:
+        store.drop()
+
+
+def test_near_dup_state_store_compact(spark):
+    """compact() merges the per-batch file accumulation into one file
+    per bucket, leaves rows (incl. __batch tags) unchanged, and keeps
+    the candidate join bucket-local (no state-side exchange)."""
+    import glob
+    import os
+    from urllib.parse import urlparse
+
+    from xcube_spark.pipeline.dedup import (NearDupStateStore,
+                                            minhash_sig_state)
+
+    docs = _near_dup_corpus(spark)
+    store = NearDupStateStore(spark, "t_ndstore_compact", n_buckets=4)
+    store.drop()
+    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        for b, (lo, hi) in enumerate(((0, 10), (10, 20), (20, 30),
+                                      (30, 40))):
+            store.merge_batch(
+                docs.where(f"doc_id >= {lo} AND doc_id < {hi}"),
+                batch_id=b)
+        before = sorted((r.doc_id, r.is_dup, r["__batch"])
+                        for r in spark.table(store.sig_table).collect())
+        wh = urlparse(
+            spark.conf.get("spark.sql.warehouse.dir", "")).path
+        sig_dir = os.path.join(wh, store.sig_table.lower())
+        n_before = len(glob.glob(os.path.join(sig_dir, "part-*")))
+        assert n_before > 4  # one file set per batch accumulated
+
+        store.compact()
+
+        n_after = len(glob.glob(os.path.join(sig_dir, "part-*")))
+        assert n_after <= 4 < n_before
+        after = sorted((r.doc_id, r.is_dup, r["__batch"])
+                       for r in spark.table(store.sig_table).collect())
+        assert after == before
+
+        # the candidate join over the compacted state is still a
+        # bucketed in-place scan: no exchange on the state side
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        batch_sig = minhash_sig_state(
+            docs.where("doc_id >= 35")).drop("is_dup")
+        cand = store._old_candidates(store._bkey_bands(batch_sig))
+        plan = cand._jdf.queryExecution().executedPlan().toString()
+        state_side = plan[plan.rindex("Sort [bkey"):]
+        assert "Bucketed: true" in state_side
+        assert "Exchange" not in state_side
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
+        store.drop()

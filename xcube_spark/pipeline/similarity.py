@@ -1,16 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-Driver-mandated extension (no xcube counterpart).  Two physical paths:
+Driver-mandated extension (no xcube counterpart).
 
-- **brute-force top-k**: broadcast the (small) query set against the
-  corpus, compute cosine with built-in higher-order array functions
-  (``zip_with`` + ``aggregate`` — JVM-side, no Python), rank per query
-  with a window.  Correct baseline at any corpus size: one streaming
-  pass, shuffle only on |queries| * k candidate rows.
-- **LSH-bucketed (random hyperplanes)**: sign-sketch each vector into a
-  B-bit bucket key; only same-bucket (plus multi-probe neighbor) pairs
-  are compared.  At 100 TB this bounds the join fan-out the same way
-  minhash banding does for text.
+The five fused kNN kernels (:func:`knn_bruteforce`, :func:`knn_lsh`,
+:func:`knn_ivf`, :func:`knn_pq`, :func:`knn_ivfpq`) are one corpus
+scan, :func:`_topk_scan`.  The query set and each kernel's index model
+are model-sized, so they collect on the driver and ship in the closure
+of ONE ``mapInArrow`` pass.  Every Arrow batch is scored against every
+query (exact cosine or inner product; the LSH bucket or IVF cell as a
+candidate mask; PQ / IVF-PQ asymmetric distance tables), each query's
+candidates are pruned to a lossless local top-k, and a ``row_number``
+window ranks the surviving partitions x |queries| x ~k rows: the
+local-prune / global-merge shape of distributed top-k.  Nothing
+corpus-sized joins, shuffles or broadcasts.
+
+:func:`knn_hamming` and :func:`knn_ivfpq_rerank` are Column plans with
+no Arrow scan.
 """
 
 from __future__ import annotations
@@ -78,6 +83,97 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _topk_scan(
+    corpus: DataFrame,
+    queries: DataFrame,
+    scorer,
+    k: int,
+    score_col: str,
+    descending: bool,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Top-k per query from ONE ``mapInArrow`` scan of ``corpus``:
+    the skeleton every fused kNN kernel shares.
+
+    The query set is broadcast-small by contract, so it collects once;
+    a query whose vector is NULL is dropped there and returns no rows.
+    ``scorer(qvecs)`` gets the ``(Q, dim)`` query matrix on the driver
+    and returns the kernel's batch scorer (or ``None`` when its model
+    admits no candidate), which ships in the scan's closure.  Per Arrow
+    batch the scorer is called as ``score_batch(v, others)``: ``v`` is
+    the ``(n, dim)`` batch matrix, ``others`` a ``(Q, n)`` mask of rows
+    whose id differs from query ``qi``'s (self-exclusion); it yields
+    ``(qi, cand, score)``, the candidate row positions of query ``qi``
+    and their scores.  Rows with a NULL vector are dropped before the
+    scorer sees the batch, so they are never candidates.
+
+    The bounded local top-k prune (:func:`_local_top_k`, the
+    map-side-combine analog for rank) keeps at most partitions x
+    |queries| x ~k rows; any row in a partition's true top-k is also in
+    its batch's top-k with boundary ties kept, so the prune is lossless
+    under the global ``(score DESC|ASC, id ASC)`` order, and the
+    ``row_number`` window then ranks a metadata-sized set."""
+    import numpy as np
+    import pyarrow as pa
+
+    q_rows = [r for r in queries.select(query_id_col, vec_col).collect()
+              if r[vec_col] is not None]
+    qids = [r[query_id_col] for r in q_rows]
+    score_batch = scorer(np.asarray(
+        [r[vec_col] for r in q_rows], dtype=np.float64)) if q_rows else None
+    id_t = dict(corpus.dtypes)[id_col]
+    q_t = dict(queries.dtypes)[query_id_col]
+    q_pa = _pa_type_for(q_t)
+
+    def topk(batches):
+        if score_batch is None:
+            return
+        qarr = np.asarray(qids)
+        for b in batches:
+            vec = b.column("__vec")
+            if vec.null_count:
+                b = b.filter(vec.is_valid())
+                vec = b.column("__vec")
+            n = b.num_rows
+            if not n:
+                continue
+            # list columns expose their flat values buffer, so the
+            # (n, dim) matrix is a zero-copy reshape — no per-row
+            # Python object materialization
+            v = np.asarray(vec.flatten()).reshape(n, -1)
+            ids_col = b.column(id_col)
+            ids = np.asarray(ids_col.to_numpy(zero_copy_only=False))
+            others = ids[None, :] != qarr[:, None]
+            out_q, out_i, out_s = [], [], []
+            for qi, cand, score in score_batch(v, others):
+                if not cand.size:
+                    continue
+                order = _local_top_k(score, ids, cand, k, descending)
+                out_q.append(np.full(order.size, qarr[qi]))
+                out_i.append(cand[order])
+                out_s.append(score[order])
+            if not out_i:
+                continue
+            take = pa.array(np.concatenate(out_i), type=pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.concatenate(out_q), type=q_pa),
+                 ids_col.take(take),
+                 pa.array(np.concatenate(out_s), type=pa.float64())],
+                names=[query_id_col, id_col, score_col])
+
+    scored = corpus.select(
+        F.col(id_col),
+        F.col(vec_col).cast("array<double>").alias("__vec"),
+    ).mapInArrow(
+        topk, f"{query_id_col} {q_t}, {id_col} {id_t}, {score_col} double")
+    by_score = F.desc(score_col) if descending else F.asc(score_col)
+    w = Window.partitionBy(query_id_col).orderBy(by_score, F.asc(id_col))
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k)
+
+
 def knn_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -89,7 +185,7 @@ def knn_bruteforce(
     score_col: str | None = None,
 ) -> DataFrame:
     """Exact similarity top-k per query: model-sized query set x ONE
-    corpus scan.
+    corpus scan (:func:`_topk_scan`).
 
     ``metric``: "cosine" (normalized) or "dot" (raw inner product —
     the MIPS objective; retrieval systems that train un-normalized
@@ -99,86 +195,34 @@ def knn_bruteforce(
 
     Output: (query_id, vec_id, <score_col>, rank<=k); ``score_col``
     defaults to the METRIC name ("cosine"/"dot") so a "dot" run never
-    emits inner products under a "cosine" header.  The query set is
-    broadcast-small by contract, so it collects once and ships in the
-    kernel closure (round 7 — previously a broadcast join duplicated
-    every corpus row |queries| times through Arrow; the fused form
-    scans each corpus row ONCE and scores all queries with a single
-    (n, dim) x (dim, Q) matmul).  The bounded local top-k prune (the
-    map-side-combine analog for rank) cuts the rank shuffle to at
-    most partitions x |queries| x ~k rows; any row in a partition's
-    true top-k is also in its batch's top-k with boundary ties kept,
-    so the prune is lossless under the global (cosine desc, id asc)
-    order, and the window then ranks a metadata-sized set.
+    emits inner products under a "cosine" header.  Each batch scores
+    all queries with a single (n, dim) x (dim, Q) matmul.  A corpus
+    row with a NULL vector is never a candidate; a query with a NULL
+    vector returns no rows.
     """
     import numpy as np
-    import pyarrow as pa
-
-    q_rows = queries.select(query_id_col, vec_col).collect()
-    qids = [r[query_id_col] for r in q_rows]
-    qvecs = (np.asarray([r[vec_col] for r in q_rows], dtype=np.float64)
-             if q_rows else np.zeros((0, 1)))
-    qnorm = np.linalg.norm(qvecs, axis=1) if q_rows else np.zeros(0)
-
-    def score_topk(batches):
-        # mapInArrow: list columns expose their flat values buffer, so
-        # the (n, dim) matrix is a zero-copy reshape — no per-row
-        # Python object materialization
-        if not qids:
-            return
-        qarr = np.asarray(qids)
-        for b in batches:
-            n = b.num_rows
-            if not n:
-                continue
-            v = np.asarray(b.column("__vec").flatten()).reshape(n, -1)
-            ids_col = b.column(id_col)
-            ids = np.asarray(ids_col.to_numpy(zero_copy_only=False))
-            cos_all = v @ qvecs.T
-            if metric == "cosine":
-                cos_all = cos_all / (
-                    np.linalg.norm(v, axis=1)[:, None] * qnorm[None, :])
-            out_q, out_i, out_c = [], [], []
-            for qi in range(len(qarr)):
-                cand = np.nonzero(ids != qarr[qi])[0]  # self-exclusion
-                if not cand.size:
-                    continue
-                cos = cos_all[cand, qi]
-                order = _local_top_k(cos, ids, cand, k, descending=True)
-                out_q.append(np.full(order.size, qarr[qi]))
-                out_i.append(cand[order])
-                out_c.append(cos[order])
-            if not out_i:
-                continue
-            take = pa.array(np.concatenate(out_i), type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_q), type=q_pa),
-                 ids_col.take(take),
-                 pa.array(np.concatenate(out_c), type=pa.float64())],
-                names=[query_id_col, id_col, score_col])
 
     if metric not in ("cosine", "dot"):
         raise ValueError(f"unknown metric: {metric!r}")
-    if score_col is None:
-        # keep the score column's NAME truthful to the metric: a "dot"
-        # run must not emit inner products under a "cosine" header
-        score_col = metric
-    id_t = dict(corpus.dtypes)[id_col]
-    q_t = dict(queries.dtypes)[query_id_col]
-    q_pa = _pa_type_for(q_t)
-    pruned = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("__vec"),
-    ).mapInArrow(
-        score_topk,
-        f"{query_id_col} {q_t}, {id_col} {id_t}, {score_col} double")
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc(score_col), F.asc(id_col)
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+
+    def scorer(qvecs):
+        qnorm = np.linalg.norm(qvecs, axis=1)
+
+        def score_batch(v, others):
+            s = v @ qvecs.T
+            if metric == "cosine":
+                s = s / (np.linalg.norm(v, axis=1)[:, None]
+                         * qnorm[None, :])
+            for qi in range(len(qvecs)):
+                cand = np.flatnonzero(others[qi])
+                yield qi, cand, s[cand, qi]
+
+        return score_batch
+
+    return _topk_scan(
+        corpus, queries, scorer, k,
+        metric if score_col is None else score_col, True,
+        id_col, vec_col, query_id_col)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -238,12 +282,17 @@ def knn_lsh(
     bucket with the query.  ``probe_radius=1`` enables multi-probe:
     the QUERY side also probes every bucket at Hamming distance 1
     (each sign bit flipped), trading a (1 + n_planes)-fold growth of
-    the tiny broadcast query table for recall — the corpus side still
-    joins exactly one bucket per row, which is the scale invariant."""
+    each query's probe set for recall — each corpus row still lands in
+    exactly one bucket, which is the scale invariant.
+
+    One corpus scan (:func:`_topk_scan`): bucket membership is a
+    per-batch mask, and the cosine of the candidates is scored in the
+    same pass (outputs round to 6 decimals downstream).
+    A corpus row with a NULL vector is never a candidate; a query with
+    a NULL vector returns no rows."""
     if probe_radius not in (0, 1):
         raise ValueError("probe_radius must be 0 or 1")
     import numpy as np
-    import pyarrow as pa
 
     planes = _hyperplanes(dim, n_planes, seed)
     pmat = np.asarray(planes, dtype=np.float64)  # (n_planes, dim)
@@ -261,70 +310,27 @@ def knn_lsh(
             out |= (acc >= 0).astype(np.int64) << b
         return out
 
-    q_rows = queries.select(query_id_col, vec_col).collect()
-    qids = [r[query_id_col] for r in q_rows]
-    qvecs = (np.asarray([r[vec_col] for r in q_rows], dtype=np.float64)
-             if q_rows else np.zeros((0, dim)))
-    probe_sets: list[set[int]] = []
-    if qids:
+    def scorer(qvecs):
         qb = buckets(qvecs)
         qn = np.linalg.norm(qvecs, axis=1)
-        for qi in range(len(qids)):
+        probe_sets: list[set[int]] = []
+        for qi in range(len(qvecs)):
             s = {int(qb[qi])}
             if probe_radius == 1:  # every sign bit flipped once
                 s |= {int(qb[qi]) ^ (1 << b) for b in range(n_planes)}
             probe_sets.append(s)
 
-    # round 7: fused single-scan kernel (the knn_pq treatment) — the
-    # query side is model-sized, so the bucket equi-join collapses to
-    # a per-batch membership mask; cosine + lossless local top-k run
-    # in the same pass (outputs round to 6 decimals downstream, the
-    # knn_bruteforce einsum precedent)
-    def fused_scan(batches):
-        if not qids:
-            return
-        qarr = np.asarray(qids)
-        for b in batches:
-            n = b.num_rows
-            if not n:
-                continue
-            v = np.asarray(b.column("__vec").flatten()).reshape(n, -1)
-            ids_col = b.column(id_col)
-            ids = np.asarray(ids_col.to_numpy(zero_copy_only=False))
+        def score_batch(v, others):
             cb = buckets(v)
             vnorm = np.linalg.norm(v, axis=1)
-            out_q, out_i, out_c = [], [], []
-            for qi in range(len(qarr)):
-                mask = np.isin(cb, list(probe_sets[qi])) \
-                    & (ids != qarr[qi])
-                cand = np.nonzero(mask)[0]
-                if not cand.size:
-                    continue
-                cos = (v[cand] @ qvecs[qi]) / (vnorm[cand] * qn[qi])
-                order = _local_top_k(cos, ids, cand, k, descending=True)
-                out_q.append(np.full(order.size, qarr[qi]))
-                out_i.append(cand[order])
-                out_c.append(cos[order])
-            if not out_i:
-                continue
-            take = pa.array(np.concatenate(out_i), type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_q), type=q_pa),
-                 ids_col.take(take),
-                 pa.array(np.concatenate(out_c), type=pa.float64())],
-                names=[query_id_col, id_col, "cosine"])
+            for qi, probe in enumerate(probe_sets):
+                cand = np.flatnonzero(np.isin(cb, list(probe)) & others[qi])
+                yield qi, cand, (v[cand] @ qvecs[qi]) / (vnorm[cand] * qn[qi])
 
-    id_t = dict(corpus.dtypes)[id_col]
-    q_t = dict(queries.dtypes)[query_id_col]
-    q_pa = _pa_type_for(q_t)
-    scored = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("__vec"),
-    ).mapInArrow(
-        fused_scan,
-        f"{query_id_col} {q_t}, {id_col} {id_t}, cosine double")
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+        return score_batch
+
+    return _topk_scan(corpus, queries, scorer, k, "cosine", True,
+                      id_col, vec_col, query_id_col)
 
 
 def embedding_near_dup_pairs(
@@ -594,14 +600,11 @@ def knn_ivf(
     scan cost is corpus/cells * n_probe distance computations instead
     of the full corpus.  The centroid table is MODEL-sized by
     definition (train_ivf_centroids' contract: only the model
-    collects), so — round 7, the knn_pq treatment — assignment,
-    probe masking, cosine scoring and a lossless local top-k run
-    fused in ONE mapInArrow pass over the raw corpus (numpy einsum
-    kernels, the knn_bruteforce precedent: outputs round to 6
-    decimals so engine-level ulp differences are absorbed); only
-    partitions x |queries| x ~k candidates reach the rank window."""
+    collects), so assignment, probe masking and cosine scoring run in
+    ONE corpus scan (:func:`_topk_scan`; outputs round to 6 decimals
+    downstream).  A corpus row with a NULL vector is never a
+    candidate; a query with a NULL vector returns no rows."""
     import numpy as np
-    import pyarrow as pa
 
     c_rows = centroids.select(
         F.col(id_col).cast("long").alias("cid"),
@@ -610,70 +613,30 @@ def knn_ivf(
     cent_ids = [int(r["cid"]) for r in c_rows]
     cents = np.asarray([r["v"] for r in c_rows], dtype=np.float64)
 
-    q_rows = queries.select(query_id_col, vec_col).collect()
-    qids = [r[query_id_col] for r in q_rows]
-    qvecs = (np.asarray([r[vec_col] for r in q_rows], dtype=np.float64)
-             if q_rows else np.zeros((0, 1)))
-    probe_sets: list[set[int]] = []
-    if qids and cent_ids:
+    def scorer(qvecs):
+        if not cent_ids:
+            return None
         qn = np.linalg.norm(qvecs, axis=1)
         # _np_pair_d2, NOT the expanded |q|^2-2qc+|c|^2 form: probe
         # ranking is discrete, and a last-ulp op-order difference vs
         # the cell-assignment kernel (same function below) or the
         # oracle's list_distance flips near-tie probes — changing the
-        # whole candidate set (ADVICE r7 op-order-parity discipline).
+        # whole candidate set.
         d2 = _np_pair_d2(qvecs, cents)
-        for qi in range(len(qids)):
-            order = np.lexsort((np.asarray(cent_ids), d2[qi]))
-            probe_sets.append({int(i) for i in order[:n_probe]})
+        probes = [np.lexsort((np.asarray(cent_ids), row))[:n_probe]
+                  for row in d2]
 
-    def fused_scan(batches):
-        if not qids:
-            return
-        qarr = np.asarray(qids)
-        for b in batches:
-            n = b.num_rows
-            if not n:
-                continue
-            v = np.asarray(b.column("__vec").flatten()).reshape(n, -1)
-            ids_col = b.column(id_col)
-            ids = np.asarray(ids_col.to_numpy(zero_copy_only=False))
+        def score_batch(v, others):
             cell_ix = np.argmin(_np_pair_d2(v, cents), axis=1)
             vnorm = np.linalg.norm(v, axis=1)
-            out_q, out_i, out_c = [], [], []
-            for qi in range(len(qarr)):
-                mask = np.isin(cell_ix, list(probe_sets[qi])) \
-                    & (ids != qarr[qi])
-                cand = np.nonzero(mask)[0]
-                if not cand.size:
-                    continue
-                cos = (v[cand] @ qvecs[qi]) / (vnorm[cand] * qn[qi])
-                order = _local_top_k(cos, ids, cand, k, descending=True)
-                out_q.append(np.full(order.size, qarr[qi]))
-                out_i.append(cand[order])
-                out_c.append(cos[order])
-            if not out_i:
-                continue
-            take = pa.array(np.concatenate(out_i), type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_q), type=q_pa),
-                 ids_col.take(take),
-                 pa.array(np.concatenate(out_c), type=pa.float64())],
-                names=[query_id_col, id_col, "cosine"])
+            for qi, probe in enumerate(probes):
+                cand = np.flatnonzero(np.isin(cell_ix, probe) & others[qi])
+                yield qi, cand, (v[cand] @ qvecs[qi]) / (vnorm[cand] * qn[qi])
 
-    id_t = dict(corpus.dtypes)[id_col]
-    q_t = dict(queries.dtypes)[query_id_col]
-    q_pa = _pa_type_for(q_t)
-    scored = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("__vec"),
-    ).mapInArrow(
-        fused_scan,
-        f"{query_id_col} {q_t}, {id_col} {id_t}, cosine double")
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+        return score_batch
+
+    return _topk_scan(corpus, queries, scorer, k, "cosine", True,
+                      id_col, vec_col, query_id_col)
 
 
 # --------------------------------------------------------------------------
@@ -808,21 +771,15 @@ def knn_pq(
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """PQ approximate top-k via asymmetric distance computation (ADC),
-    fused into ONE corpus scan (the ``knn_bruteforce`` treatment,
-    round 7 — VERDICT r6 flagged the old element_at-lookup broadcast
-    join, whose un-pruned |corpus| x |queries| output flowed into the
-    rank window, as a 2.9x-DuckDB constant factor at sf1).
+    fused into ONE corpus scan (:func:`_topk_scan`).
 
     The MODEL — the m x ksub codebook plus the query vectors, both
     model-sized by contract (queries must already fit a broadcast) —
-    collects once and ships in the kernel closure.  A single
-    ``mapInArrow`` pass over the raw corpus then (1) PQ-encodes each
-    Arrow batch (vectorized subspace distances, argmin with the
-    lowest-cid tie-break), (2) scores every query against the codes
-    by gathering the precomputed ADC tables, and (3) applies a
-    lossless local top-k prune (threshold = k-th smallest distance,
-    boundary ties kept, exact (d2, id) lexicographic order), so the
-    rank shuffle carries at most partitions x |queries| x ~k rows.
+    collects once and ships in the kernel closure.  The scan then
+    (1) PQ-encodes each Arrow batch (vectorized subspace distances,
+    argmin with the lowest-cid tie-break) and (2) scores every query
+    against the codes by gathering the precomputed ADC tables; the
+    local top-k prune keeps the exact (d2, id) lexicographic order.
 
     Float-order parity with the oracle: every subspace distance is
     accumulated dim-by-dim LEFT TO RIGHT (``diff * diff`` then ``+``,
@@ -836,9 +793,10 @@ def knn_pq(
     broadcasts, and the only driver materialization is the model.
 
     Output: (query_id, vec_id, pq_d2 [approx squared L2], rank<=k).
+    A corpus row with a NULL vector is never a candidate nor a sampled
+    codebook entry; a query with a NULL vector returns no rows.
     """
     import numpy as np
-    import pyarrow as pa
 
     # ---- model collection (two pushdown-filtered, model-sized jobs)
     if codebook is None:
@@ -850,7 +808,7 @@ def knn_pq(
         )
         cb_entries = [
             (s, int(r["cid"]), r["v"][s * dsub:(s + 1) * dsub])
-            for r in samp for s in range(m)
+            for r in samp if r["v"] is not None for s in range(m)
         ]
     else:
         cb_entries = [
@@ -869,77 +827,34 @@ def knn_pq(
             np.asarray([cv for _, cv in ent], dtype=np.float64),
         ))
 
-    q_rows = queries.select(query_id_col, vec_col).collect()
-    qids = [r[query_id_col] for r in q_rows]
-    qvecs = (
-        np.asarray([r[vec_col] for r in q_rows], dtype=np.float64)
-        if q_rows else np.zeros((0, m * dsub))
-    )
+    def scorer(qvecs):
+        # per-query ADC tables, +inf in slots absent from the codebook
+        tables = np.full((len(qvecs), m * ksub), np.inf)
+        for s in range(m):
+            cids, mat = cents[s]
+            if cids.size:
+                d2 = _np_pair_d2(qvecs[:, s * dsub:(s + 1) * dsub], mat)
+                tables[:, s * ksub + cids] = d2
 
-    _pair_d2 = _np_pair_d2
-
-    # per-query ADC tables, +inf in slots absent from the codebook
-    tables = np.full((len(qids), m * ksub), np.inf)
-    for s in range(m):
-        cids, mat = cents[s]
-        if len(qids) and cids.size:
-            d2 = _pair_d2(qvecs[:, s * dsub:(s + 1) * dsub], mat)
-            tables[:, s * ksub + cids] = d2
-
-    def fused_scan(batches):
-        if not qids:
-            return
-        qarr = np.asarray(qids)
-        for b in batches:
-            n = b.num_rows
-            if not n:
-                continue
-            v = np.asarray(b.column("__vec").flatten()).reshape(n, -1)
-            ids_col = b.column(id_col)
-            ids = np.asarray(ids_col.to_numpy(zero_copy_only=False))
+        def score_batch(v, others):
             # encode + ADC gather, one subspace at a time; the m terms
             # accumulate left to right like the oracle's
             # ((d0 + d1) + d2) + d3
             acc = None
             for s in range(m):
                 cids, mat = cents[s]
-                d2 = _pair_d2(v[:, s * dsub:(s + 1) * dsub], mat)
+                d2 = _np_pair_d2(v[:, s * dsub:(s + 1) * dsub], mat)
                 code = cids[np.argmin(d2, axis=1)]
                 t = tables[:, s * ksub + code]  # (Q, n)
                 acc = t if acc is None else acc + t
-            out_q, out_i, out_d = [], [], []
-            for qi in range(len(qarr)):
-                d = acc[qi]
-                cand = np.nonzero(ids != qarr[qi])[0]  # self-exclusion
-                sel = cand[_local_top_k(d[cand], ids, cand, k,
-                                        descending=False)]
-                out_q.append(np.full(sel.size, qarr[qi]))
-                out_i.append(sel)
-                out_d.append(d[sel])
-            if not out_i:
-                continue
-            take = pa.array(np.concatenate(out_i), type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_q), type=q_pa),
-                 ids_col.take(take),
-                 pa.array(np.concatenate(out_d), type=pa.float64())],
-                names=[query_id_col, id_col, "pq_d2"])
+            for qi in range(len(tables)):
+                cand = np.flatnonzero(others[qi])
+                yield qi, cand, acc[qi][cand]
 
-    id_t = dict(corpus.dtypes)[id_col]
-    q_t = dict(queries.dtypes)[query_id_col]
-    q_pa = _pa_type_for(q_t)
-    scored = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("__vec"),
-    ).mapInArrow(
-        fused_scan,
-        f"{query_id_col} {q_t}, {id_col} {id_t}, pq_d2 double")
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc("pq_d2"), F.asc(id_col)
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+        return score_batch
+
+    return _topk_scan(corpus, queries, scorer, k, "pq_d2", False,
+                      id_col, vec_col, query_id_col)
 
 
 def train_pq_codebooks(
@@ -1035,24 +950,20 @@ def knn_ivfpq(
     fixed-order sums, so approximate distances hash-match
     cross-engine.
 
-    Round 7: fused into ONE mapInArrow corpus scan (the knn_pq
-    treatment).  The whole index model — n_cells centroids, the ksub
-    residual codebook (residuals of the lowest-id vectors against
-    their own assigned centroids), each query's probe list and
-    per-(query, cell) ADC tables — derives from the lowest-id sample
-    plus the queries, both model-sized, so it is computed driver-side
-    in numpy with the IDENTICAL left-to-right IEEE op order
-    (:func:`_np_pair_d2`) and ships in the kernel closure.  The
-    kernel assigns, residual-encodes, gathers and locally top-k
-    prunes each Arrow batch in one pass; nothing corpus-sized joins,
-    shuffles or broadcasts, and the rank window sees only
-    partitions x |queries| x ~k candidates.
+    The whole index model — n_cells centroids, the ksub residual
+    codebook (residuals of the lowest-id vectors against their own
+    assigned centroids), each query's probe list and per-(query, cell)
+    ADC tables — derives from the lowest-id sample plus the queries,
+    both model-sized, so it is computed driver-side in numpy with the
+    IDENTICAL left-to-right IEEE op order (:func:`_np_pair_d2`) and
+    ships in the closure of ONE corpus scan (:func:`_topk_scan`),
+    which assigns, residual-encodes and gathers each Arrow batch.
 
-    Output: (query_id, vec_id, pq_d2, rank<=k)."""
+    Output: (query_id, vec_id, pq_d2, rank<=k).  A corpus row with a
+    NULL vector is never a candidate nor a sampled centroid or
+    codebook entry; a query with a NULL vector returns no rows."""
     import numpy as np
-    import pyarrow as pa
 
-    dim = m * dsub
     n_model = max(n_cells, ksub)
     samp = (
         corpus.where(F.col(id_col) < n_model)
@@ -1061,7 +972,7 @@ def knn_ivfpq(
         .collect()
     )
     sample = {int(r["cid"]): np.asarray(r["v"], dtype=np.float64)
-              for r in samp}
+              for r in samp if r["v"] is not None}
     cent_ids = sorted(c for c in sample if c < n_cells)
     cents = np.asarray([sample[c] for c in cent_ids])  # (nc, dim)
 
@@ -1071,7 +982,7 @@ def knn_ivfpq(
         return np.argmin(_np_pair_d2(v, cents), axis=1)
 
     # residual codebook: residuals of the lowest-id vectors against
-    # their OWN assigned centroid (mirrors the old rcb derivation)
+    # their OWN assigned centroid
     rcb_ids = sorted(c for c in sample if c < ksub)
     rcb_mat = None
     if rcb_ids and len(cent_ids):
@@ -1081,19 +992,17 @@ def knn_ivfpq(
         rcb_mat = [rv[:, s * dsub:(s + 1) * dsub] for s in range(m)]
     rcb_cids = np.asarray(rcb_ids, dtype=np.int64)
 
-    q_rows = queries.select(query_id_col, vec_col).collect()
-    qids = [r[query_id_col] for r in q_rows]
-    # per query: probe cells (top n_probe by (qd, ccid)) and a
-    # per-cell flat ADC table over the query's residual
-    probes: list[list[tuple[int, "np.ndarray"]]] = []
-    if qids and len(cent_ids) and rcb_mat is not None:
-        qv = np.asarray([r[vec_col] for r in q_rows], dtype=np.float64)
+    def scorer(qv):
+        if rcb_mat is None:
+            return None
+        # per query: probe cells (top n_probe by (qd, ccid)) and a
+        # per-cell flat ADC table over the query's residual
         qd = _np_pair_d2(qv, cents)  # (Q, nc)
-        for qi in range(len(qids)):
+        probes: list[list[tuple[int, "np.ndarray"]]] = []
+        for qi in range(len(qv)):
             order = np.lexsort((np.asarray(cent_ids), qd[qi]))
-            cells = order[:n_probe]
             per_cell = []
-            for ci in cells:
+            for ci in order[:n_probe]:
                 qrv = qv[qi] - cents[ci]
                 table = np.full(m * ksub, np.inf)
                 for s in range(m):
@@ -1103,68 +1012,30 @@ def knn_ivfpq(
                 per_cell.append((int(ci), table))
             probes.append(per_cell)
 
-    def fused_scan(batches):
-        if not probes:
-            return
-        qarr = np.asarray(qids)
-        for b in batches:
-            n = b.num_rows
-            if not n:
-                continue
-            v = np.asarray(b.column("__vec").flatten()).reshape(n, dim)
-            ids_col = b.column(id_col)
-            ids = np.asarray(ids_col.to_numpy(zero_copy_only=False))
+        def score_batch(v, others):
             cell_ix = assign(v)
             rv = v - cents[cell_ix]
-            codes = np.empty((n, m), dtype=np.int64)
+            codes = np.empty((v.shape[0], m), dtype=np.int64)
             for s in range(m):
                 d2 = _np_pair_d2(rv[:, s * dsub:(s + 1) * dsub],
                                  rcb_mat[s])
                 codes[:, s] = rcb_cids[np.argmin(d2, axis=1)]
-            out_q, out_i, out_d = [], [], []
-            for qi in range(len(qarr)):
+            for qi, per_cell in enumerate(probes):
                 cand_list, d_list = [], []
-                for ci, table in probes[qi]:
-                    rows = np.nonzero(
-                        (cell_ix == ci) & (ids != qarr[qi]))[0]
-                    if not rows.size:
-                        continue
-                    acc = table[0 * ksub + codes[rows, 0]]
+                for ci, table in per_cell:
+                    rows = np.flatnonzero((cell_ix == ci) & others[qi])
+                    acc = table[codes[rows, 0]]
                     for s in range(1, m):  # fixed l-to-r ADC sum
                         acc = acc + table[s * ksub + codes[rows, s]]
                     cand_list.append(rows)
                     d_list.append(acc)
-                if not cand_list:
-                    continue
-                cand = np.concatenate(cand_list)
-                d = np.concatenate(d_list)
-                order = _local_top_k(d, ids, cand, k, descending=False)
-                out_q.append(np.full(order.size, qarr[qi]))
-                out_i.append(cand[order])
-                out_d.append(d[order])
-            if not out_i:
-                continue
-            take = pa.array(np.concatenate(out_i), type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_q), type=q_pa),
-                 ids_col.take(take),
-                 pa.array(np.concatenate(out_d), type=pa.float64())],
-                names=[query_id_col, id_col, "pq_d2"])
+                if cand_list:
+                    yield qi, np.concatenate(cand_list), np.concatenate(d_list)
 
-    id_t = dict(corpus.dtypes)[id_col]
-    q_t = dict(queries.dtypes)[query_id_col]
-    q_pa = _pa_type_for(q_t)
-    scored = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("__vec"),
-    ).mapInArrow(
-        fused_scan,
-        f"{query_id_col} {q_t}, {id_col} {id_t}, pq_d2 double")
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc("pq_d2"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+        return score_batch
+
+    return _topk_scan(corpus, queries, scorer, k, "pq_d2", False,
+                      id_col, vec_col, query_id_col)
 
 
 # ---------------------------------------------------------------------------

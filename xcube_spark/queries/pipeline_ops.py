@@ -250,8 +250,8 @@ def _bucket_sql(vec: str) -> str:
 )
 def emb_knn_lsh(spark, sf_dir):
     """knn_lsh (pipeline/similarity.py): single-probe sign-sketch LSH —
-    each corpus vector joins exactly one bucket (the scale path next to
-    the brute-force baseline emb_knn_cosine)."""
+    each corpus vector lands in exactly one bucket (the scale path next
+    to the brute-force baseline emb_knn_cosine)."""
     emb = tbl(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -961,8 +961,8 @@ def doc_audio_features(spark, sf_dir):
 def emb_knn_lsh_multiprobe(spark, sf_dir):
     """knn_lsh with probe_radius=1 (multi-probe): the query side also
     searches every bucket one sign-flip away, recovering neighbors
-    that landed just across a hyperplane.  Corpus rows still join
-    exactly one bucket — only the broadcast query table grows
+    that landed just across a hyperplane.  Corpus rows still land in
+    exactly one bucket — only each query's probe set grows
     (x (1 + n_planes)), so the scale shape is unchanged."""
     emb = tbl(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -1322,7 +1322,7 @@ def emb_knn_recall(spark, sf_dir):
     """Recall@10 of single-probe LSH against the brute-force ground
     truth (pipeline/similarity.py knn_recall) — the standard ANN
     quality metric run AS A PLAN: one fused corpus scan for the
-    truth, the LSH bucket join for the approximation, a left-semi
+    truth, one for the LSH approximation, a left-semi
     hit count, all post-ranking work metadata-sized (|queries| x k).
     Evaluating an index build's recall on sampled queries against a
     100 TB corpus costs two corpus scans.  The oracle restates both

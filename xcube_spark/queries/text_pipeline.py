@@ -298,8 +298,10 @@ def doc_fingerprint(spark, sf_dir):
     """,
 )
 def emb_knn_cosine(spark, sf_dir):
-    """Brute-force cosine top-k (similarity-search baseline): broadcast
-    query set, JVM-side zip_with/aggregate dot products, window rank."""
+    """Brute-force cosine top-k (similarity-search baseline): the query
+    set collects once and every corpus batch is scored in one
+    ``mapInArrow`` scan (numpy matmul, local top-k prune), then a
+    window ranks the survivors."""
     emb = tbl(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )

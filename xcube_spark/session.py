@@ -20,10 +20,13 @@ directory reads per task in a warm worker, most of the fixed cost of a
 ``mapInPandas``/pandas-UDF task.  CPython 3.13 made that method lazy
 and the daemon patches nothing there.  The daemon re-reads an archive
 only when its mtime or size changed, then runs ``pyspark.daemon``
-unchanged.  Precondition: worker processes must be able to import
-``xcube_spark``, which the package's UDF closures already require.
-Set ``spark.python.daemon.module`` to ``pyspark.daemon`` through
-``SPARK_GRAFT_CONF`` to use the stock daemon.
+unchanged.  Worker processes must be able to import ``xcube_spark``
+(the daemon and the package's UDF closures need it), so the session
+puts the directory that holds the package on their path through
+``spark.executorEnv.PYTHONPATH`` (Spark merges it with the workers'
+own ``PYTHONPATH``); a script run from any directory works without
+exporting it.  Set ``spark.python.daemon.module`` to ``pyspark.daemon``
+through ``SPARK_GRAFT_CONF`` to use the stock daemon.
 """
 
 from __future__ import annotations
@@ -96,6 +99,10 @@ def get_session(
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     conf["spark.default.parallelism"] = str(cpus)
+    # worker processes import xcube_spark; Spark puts this entry after
+    # pyspark's own and before the worker environment's PYTHONPATH
+    conf["spark.executorEnv.PYTHONPATH"] = os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__)))
     # deployment/scale overrides from the environment (JSON map of
     # conf key -> value): production values (bigger shuffle partition
     # counts, cluster codecs, ...) stay parameterised while the local

@@ -301,7 +301,10 @@ def encode_chunk(arr: np.ndarray, meta: ZarrArray) -> bytes | None:
         if meta.compressor.get("id") == "gzip":
             import gzip
 
-            data = gzip.compress(data, meta.compressor.get("level", 1))
+            # mtime=0: the member header holds no write time, so one
+            # cube written twice gives the same bytes
+            data = gzip.compress(data, meta.compressor.get("level", 1),
+                                 mtime=0)
         else:
             data = zlib.compress(data, meta.compressor.get("level", 1))
     return data
