@@ -28,6 +28,20 @@ def load(spark, sf_dir, name):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def two_file_stream(spark, df, src, first):
+    """Write ``df`` under ``src`` as two parquet files, the rows where
+    the SQL predicate ``first`` holds and then the rest, and return a
+    streaming read of them that takes one file per micro-batch."""
+    df.where(first).coalesce(1).write.parquet(src + "/p=a")
+    df.where(f"NOT ({first})").coalesce(1).write.parquet(src + "/p=b")
+    return (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+    )
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",

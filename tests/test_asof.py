@@ -189,3 +189,24 @@ def test_interval_join_plans_as_equi_join(spark):
     assert "NestedLoop" not in plan
     assert "CartesianProduct" not in plan
     assert "HashJoin" in plan or "SortMergeJoin" in plan
+
+
+def test_asof_join_equal_ts_right_rows_tie_break_deterministic(spark):
+    """Multiple right rows sharing (by, ts): the join must pick the
+    same one on every run/partitioning — the documented rule is
+    pick-max over the right payload struct."""
+    from xcube_spark.operators.asof import asof_join
+
+    left = spark.createDataFrame(
+        [("u1", 100), ("u2", 100)], "user string, ts long")
+    # three right rows per user at the SAME timestamp, distinct payloads
+    right_rows = [("u1", 50, v, f"p{v}") for v in (3, 1, 2)] + [
+        ("u2", 50, v, f"p{v}") for v in (7, 9, 8)]
+    for n_parts in (1, 3, 7):
+        right = spark.createDataFrame(
+            right_rows, "user string, ts long, val long, tag string"
+        ).repartition(n_parts)
+        out = {r.user: (r.val, r.tag)
+               for r in asof_join(left, right, on="ts", by=["user"]).collect()}
+        # pick-max struct: (__rts, val, tag) maximal -> highest val
+        assert out == {"u1": (3, "p3"), "u2": (9, "p9")}, n_parts

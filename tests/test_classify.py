@@ -9,6 +9,7 @@ import hashlib
 import pytest
 from pyspark.sql import Row, functions as F
 
+from tests.conftest import two_file_stream
 from xcube_spark.pipeline.classify import knn_classify, nb_classify, nb_train
 from xcube_spark.pipeline.similarity import random_projection_int8, rp_sign
 
@@ -198,15 +199,8 @@ def test_streaming_nb_sink_matches_batch_training(spark, tmp_path):
     from xcube_spark.streaming.sketch_sink import run_nb_counts_stream
 
     docs = _docs(spark).select("doc_id", "lang", "text")
-    src = str(tmp_path / "nb_src")
-    docs.where("doc_id < 12").coalesce(1).write.parquet(src + "/p=a")
-    docs.where("doc_id >= 12").coalesce(1).write.parquet(src + "/p=b")
-    stream = (
-        spark.readStream.schema("doc_id long, lang string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    stream = two_file_stream(
+        spark, docs, str(tmp_path / "nb_src"), "doc_id < 12")
     state = run_nb_counts_stream(
         stream, str(tmp_path / "nb_state"), str(tmp_path / "nb_ckpt"),
         label_col="lang", n_buckets=64)

@@ -356,3 +356,40 @@ def test_image_dct_phash_brightness_invariant(spark):
     assert out[0] == out[1]          # brightness shift: AC bits fixed
     assert out[0] != out[2]          # texture vs flat must differ
     assert 0 <= out[0] < (1 << 15)
+
+
+def test_audio_oracle_signed_int16_matches_spark_decode(spark):
+    """A payload byte pair with high byte >= 0x80 decodes to a NEGATIVE
+    sample on the Spark side ('<i2'); the fixed oracle SQL applies the
+    same wrap, so peak/sum_sq agree beyond pure-ASCII payloads."""
+    import duckdb
+
+    from xcube_spark.pipeline.multimodal import audio_features
+    from xcube_spark.queries import load_all
+
+    # Sample pair (0x10, 0x90) = unsigned 36880 -> signed -28656.
+    # Spark decodes the raw binary literal; DuckDB addresses the
+    # latin-1-decoded text per character (codepoint == byte < 256).
+    payload = bytes([0x10, 0x90, 0x40, 0x00])  # samples: -28656, 64
+    mm = spark.createDataFrame(
+        [(1,)], "doc_id long").withColumn(
+        "payload", F.lit(payload)).withColumn(
+        "meta", F.struct(F.lit(len(payload)).alias("byte_len"),
+                         F.lit("audio/pcm").alias("mime"),
+                         F.md5(F.col("payload")).alias("digest")))
+    got = audio_features(mm, frame=64).collect()[0]
+    assert got.peak == 28656
+    assert got.sum_sq == 28656 ** 2 + 64 ** 2
+    assert got.n_clipped == 0
+
+    # oracle twin on the same bytes, expressed as a 1-row documents view
+    sql = load_all()["doc_audio_features"].sql
+    con = duckdb.connect()
+    text = payload.decode("latin-1")
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.execute("INSERT INTO documents VALUES (1, ?)", [text])
+    row = con.execute(sql).fetchone()
+    # columns: doc_id, n_samples, n_frames, peak, sum_sq, n_clipped
+    assert row[3] == got.peak
+    assert row[4] == got.sum_sq
+    assert row[5] == got.n_clipped

@@ -11,7 +11,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import load
+from tests.conftest import load, two_file_stream
 from xcube_spark.pipeline.curation import decontaminate
 from xcube_spark.pipeline.sketches import (
     bloom_decontaminate,
@@ -190,17 +190,8 @@ def test_streaming_hll_sink_matches_batch(spark, tmp_path):
 
     rows = [(i, f"text {i % 37}") for i in range(80)]
     all_docs = spark.createDataFrame(rows, "doc_id long, text string")
-    src = str(tmp_path / "hll_src")
-    all_docs.where("doc_id < 40").coalesce(1).write.parquet(
-        src + "/part=a")
-    all_docs.where("doc_id >= 40").coalesce(1).write.parquet(
-        src + "/part=b")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    stream = two_file_stream(
+        spark, all_docs, str(tmp_path / "hll_src"), "doc_id < 40")
     state = run_incremental_hll_stream(
         stream, str(tmp_path / "hll_state"),
         str(tmp_path / "hll_ckpt"), col="text", p=8)
@@ -220,15 +211,8 @@ def test_streaming_cms_sink_matches_batch(spark, tmp_path):
 
     rows = [(i, f"g{i % 13}") for i in range(90)]
     grams = spark.createDataFrame(rows, "doc_id long, ngram string")
-    src = str(tmp_path / "cms_src")
-    grams.where("doc_id < 45").coalesce(1).write.parquet(src + "/p=a")
-    grams.where("doc_id >= 45").coalesce(1).write.parquet(src + "/p=b")
-    stream = (
-        spark.readStream.schema("doc_id long, ngram string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    stream = two_file_stream(
+        spark, grams, str(tmp_path / "cms_src"), "doc_id < 45")
     state = run_incremental_cms_stream(
         stream, str(tmp_path / "cms_state"),
         str(tmp_path / "cms_ckpt"), d=4, w=256)
@@ -313,17 +297,8 @@ def test_streaming_kmv_sink_matches_batch(spark, tmp_path):
 
     rows = [(i, f"text {i % 97}") for i in range(160)]
     all_docs = spark.createDataFrame(rows, "doc_id long, text string")
-    src = str(tmp_path / "kmv_src")
-    all_docs.where("doc_id < 80").coalesce(1).write.parquet(
-        src + "/part=a")
-    all_docs.where("doc_id >= 80").coalesce(1).write.parquet(
-        src + "/part=b")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    stream = two_file_stream(
+        spark, all_docs, str(tmp_path / "kmv_src"), "doc_id < 80")
     state = run_incremental_kmv_stream(
         stream, str(tmp_path / "kmv_state"),
         str(tmp_path / "kmv_ckpt"), col="text", k=64)
@@ -381,15 +356,8 @@ def test_streaming_probe_sink_matches_batch_training(spark, tmp_path):
              + 5 * ((i * 3) % 5 + 1)) for i in range(60)]
     feats = spark.createDataFrame(
         rows, "doc_id long, x1 long, x2 long, y long")
-    src = str(tmp_path / "probe_src")
-    feats.where("doc_id < 30").coalesce(1).write.parquet(src + "/p=a")
-    feats.where("doc_id >= 30").coalesce(1).write.parquet(src + "/p=b")
-    stream = (
-        spark.readStream.schema("doc_id long, x1 long, x2 long, y long")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    stream = two_file_stream(
+        spark, feats, str(tmp_path / "probe_src"), "doc_id < 30")
     state = run_incremental_probe_stream(
         stream, str(tmp_path / "probe_state"),
         str(tmp_path / "probe_ckpt"))
@@ -415,15 +383,8 @@ def test_streaming_pca_sink_matches_batch_moments(spark, tmp_path):
     rows = [(i, [float((i * 7 + j * 3) % 11) for j in range(8)])
             for i in range(40)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    src = str(tmp_path / "pca_src")
-    emb.where("vec_id < 20").coalesce(1).write.parquet(src + "/p=a")
-    emb.where("vec_id >= 20").coalesce(1).write.parquet(src + "/p=b")
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    stream = two_file_stream(
+        spark, emb, str(tmp_path / "pca_src"), "vec_id < 20")
     state = run_pca_moments_stream(
         stream, str(tmp_path / "pca_state"), str(tmp_path / "pca_ckpt"))
     row = state.collect()[0]
@@ -479,15 +440,8 @@ def test_streaming_bloom_sink_matches_batch_filter(spark, tmp_path,
 
     docs = load(spark, sf_dir, "documents")
     bench = docs.where("doc_id % 97 = 0").select("doc_id", "text")
-    src = str(tmp_path / "bloom_src")
-    bench.where("doc_id % 194 = 0").coalesce(1).write.parquet(src + "/p=a")
-    bench.where("doc_id % 194 != 0").coalesce(1).write.parquet(src + "/p=b")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    stream = two_file_stream(
+        spark, bench, str(tmp_path / "bloom_src"), "doc_id % 194 = 0")
     state = run_bloom_filter_stream(
         stream, str(tmp_path / "bloom_state"),
         str(tmp_path / "bloom_ckpt"), n=3, m_bits=1 << 12, k=3)

@@ -4,9 +4,15 @@ state-contract unit checks."""
 
 from __future__ import annotations
 
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import two_file_stream
+from xcube_spark.pipeline.dedup import NearDupStateStore
 from xcube_spark.queries import tbl
+from xcube_spark.streaming import dedup_sink, sketch_sink
 from xcube_spark.streaming.events import (
     read_events_stream,
     run_stream_to_table,
@@ -179,19 +185,9 @@ def test_streaming_incremental_dedup_equals_batch(spark, tmp_path):
 
     rows = [(i, f"text {i % 7}") for i in range(60)]  # 7 digest groups
     all_docs = spark.createDataFrame(rows, "doc_id long, text string")
-    src = str(tmp_path / "docs_src")
-    # two files -> two micro-batches with maxFilesPerTrigger=1
-    all_docs.where("doc_id < 30").coalesce(1).write.parquet(
-        src + "/part=a")
-    all_docs.where("doc_id >= 30").coalesce(1).write.parquet(
-        src + "/part=b")
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    # two files -> two micro-batches
+    stream = two_file_stream(
+        spark, all_docs, str(tmp_path / "docs_src"), "doc_id < 30")
     final = run_incremental_dedup_stream(
         stream, str(tmp_path / "state"), str(tmp_path / "ckpt"))
     got = {r.digest: (r.canonical_id, r.group_size)
@@ -372,15 +368,8 @@ def test_streaming_incremental_near_dedup_equals_batch(spark, tmp_path):
         run_incremental_near_dedup_stream)
 
     docs = _near_dup_corpus(spark)
-    src = str(tmp_path / "near_src")
-    docs.where("doc_id < 20").coalesce(1).write.parquet(src + "/part=a")
-    docs.where("doc_id >= 20").coalesce(1).write.parquet(src + "/part=b")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    stream = two_file_stream(
+        spark, docs, str(tmp_path / "near_src"), "doc_id < 20")
     final = run_incremental_near_dedup_stream(
         stream, str(tmp_path / "near_state"), str(tmp_path / "near_ckpt"))
     schema = T.StructType(
@@ -499,15 +488,8 @@ def test_streaming_near_dedup_bucketed_equals_batch(spark, tmp_path):
         run_incremental_near_dedup_stream_bucketed)
 
     docs = _near_dup_corpus(spark)
-    src = str(tmp_path / "nb_src")
-    docs.where("doc_id < 20").coalesce(1).write.parquet(src + "/part=a")
-    docs.where("doc_id >= 20").coalesce(1).write.parquet(src + "/part=b")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    stream = two_file_stream(
+        spark, docs, str(tmp_path / "nb_src"), "doc_id < 20")
     store = run_incremental_near_dedup_stream_bucketed(
         stream, "t_ndstore_sink", str(tmp_path / "nb_marker"),
         str(tmp_path / "nb_ckpt"))
@@ -698,3 +680,95 @@ def test_near_dup_state_store_compact(spark):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
         store.drop()
+
+
+# ---- exactly-once replay: every foreachBatch state sink ------------------
+
+
+def _texts(spark):
+    rows = [(i, f"text {i % 5}") for i in range(40)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _grams(spark):
+    rows = [(i, f"g{i % 13}") for i in range(40)]
+    return spark.createDataFrame(rows, "doc_id long, ngram string")
+
+
+def _feats(spark):
+    rows = [(i, i % 7 + 1, (i * 3) % 5 + 1, 3 + 2 * (i % 7 + 1)
+             + 5 * ((i * 3) % 5 + 1)) for i in range(40)]
+    return spark.createDataFrame(
+        rows, "doc_id long, x1 long, x2 long, y long")
+
+
+def _embeddings(spark):
+    rows = [(i, [float((i * 7 + j * 3) % 11) for j in range(8)])
+            for i in range(40)]
+    return spark.createDataFrame(
+        rows, "doc_id long, embedding array<double>")
+
+
+def _labeled(spark):
+    rows = [(i, "aa" if i % 3 else "bb", f"text {i % 5}")
+            for i in range(40)]
+    return spark.createDataFrame(
+        rows, "doc_id long, lang string, text string")
+
+
+def _bucketed_flags(stream, state_dir, ckpt):
+    return dedup_sink.run_incremental_near_dedup_stream_bucketed(
+        stream, "t_ndstore_replay", state_dir, ckpt).flags()
+
+
+#: sink -> (input frame, run(stream, state_dir, checkpoint) -> state)
+_REPLAY_SINKS = {
+    "dedup": (_texts, dedup_sink.run_incremental_dedup_stream),
+    "near_dedup": (_near_dup_corpus,
+                   dedup_sink.run_incremental_near_dedup_stream),
+    "near_dedup_bucketed": (_near_dup_corpus, _bucketed_flags),
+    "hll": (_texts, sketch_sink.run_incremental_hll_stream),
+    "cms": (_grams, sketch_sink.run_incremental_cms_stream),
+    "kmv": (_texts, sketch_sink.run_incremental_kmv_stream),
+    "probe": (_feats, sketch_sink.run_incremental_probe_stream),
+    "pca": (_embeddings, sketch_sink.run_pca_moments_stream),
+    "nb": (_labeled, lambda s, d, c: sketch_sink.run_nb_counts_stream(
+        s, d, c, n_buckets=64)),
+    "bloom": (_texts, sketch_sink.run_bloom_filter_stream),
+}
+
+
+def _check_dedup_first(rows):
+    first = {r.digest: (r.canonical_id, r.group_size) for r in rows}
+    assert len(first) == 5
+    assert all(size == 8 for _, size in first.values())
+
+
+@pytest.mark.parametrize("sink", list(_REPLAY_SINKS))
+def test_sink_replay_leaves_state_unchanged(spark, tmp_path, sink):
+    """Replaying the whole stream against an already-published state
+    (the crash-between-publish-and-checkpoint-commit scenario, forced
+    here by wiping the checkpoint) must leave the state unchanged —
+    the batch-id guard skips batches already folded into the state.
+    The exact-dedup, CMS, probe, PCA and NB merges add and the near-dup
+    sinks append rows, so without the guard a replay changes them."""
+    frame, run = _REPLAY_SINKS[sink]
+    stream = two_file_stream(
+        spark, frame(spark), str(tmp_path / "src"), "doc_id < 20")
+    state_dir = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    try:
+        first = sorted(run(stream, state_dir, ckpt).collect())
+        assert first
+        if sink == "dedup":
+            _check_dedup_first(first)
+
+        # wipe the checkpoint: Spark replays every batch from scratch
+        # with the same restarting batch ids
+        shutil.rmtree(ckpt)
+        second = sorted(
+            run(stream, state_dir, str(tmp_path / "ckpt2")).collect())
+        assert second == first
+    finally:
+        if sink == "near_dedup_bucketed":
+            NearDupStateStore(spark, "t_ndstore_replay").drop()

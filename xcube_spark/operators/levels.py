@@ -61,10 +61,11 @@ def compute_levels(
 ) -> list[tuple[DataFrame, CubeGrid]]:
     """All pyramid levels [(level_df, level_grid), ...], level 0 first.
 
-    Levels are lazy DataFrames — materialize with ``write_levels`` to
-    get the reference's ``.levels`` persistence (level.py:139-205);
-    in the relational model each level is its own parquet table,
-    partitioned like the base layout.
+    Levels are lazy DataFrames — materialize the same levels with
+    ``mldataset.write_mldataset(BaseMultiLevelDataset(cube, grid, num,
+    method), path)`` to get the reference's ``.levels`` persistence
+    (level.py:139-205); in the relational model each level is its own
+    parquet table, partitioned like the base layout.
     """
     num = num or num_levels(grid)
     out: list[tuple[DataFrame, CubeGrid]] = [(cube, grid)]
@@ -91,17 +92,3 @@ def select_level(
             break
     return best
 
-
-def write_levels(
-    levels: list[tuple[DataFrame, CubeGrid]],
-    base_path: str,
-    partition_cols: tuple[str, ...] = ("t_i",),
-) -> None:
-    """Persist each level as ``{base}/L{l}`` parquet (level.py:139-205),
-    partitioned by coarse time so bbox+time queries prune files."""
-    for lvl, (df, _) in enumerate(levels):
-        (
-            df.write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(f"{base_path}/L{lvl}")
-        )

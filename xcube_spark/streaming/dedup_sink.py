@@ -12,11 +12,18 @@ file (atomic on a local/posix store: the pointer is os.replace'd).
 On a cluster the state would live in a transactional keyed table
 (bucketed by digest, per write_bucketed_table, so each batch's merge
 join is bucket-local); the merge algebra is identical.
+
+Every sink here and in :mod:`xcube_spark.streaming.sketch_sink` runs
+one exactly-once protocol (:func:`_versioned_state_stream`).  One state
+directory belongs to one checkpoint: a fresh checkpoint restarts batch
+ids at 0, so its batches up to the published id are skipped as
+replays and their data is dropped without an error.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -43,21 +50,78 @@ def _current_version(state_dir: str) -> int | None:
     return None
 
 
-def read_dedup_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Current state, or an empty frame before the first batch."""
+def _read_state(spark: SparkSession, state_dir: str,
+                schema: T.StructType | str) -> DataFrame:
     version = _current_version(state_dir)
     if version is not None:
         return spark.read.parquet(os.path.join(state_dir, f"v{version}"))
-    return spark.createDataFrame([], STATE_SCHEMA)
+    return spark.createDataFrame([], schema)
 
 
-def _publish(state: DataFrame, state_dir: str, batch_id: int) -> None:
-    version = f"v{batch_id}"
-    state.write.mode("overwrite").parquet(os.path.join(state_dir, version))
+def read_dedup_state(spark: SparkSession, state_dir: str) -> DataFrame:
+    """Current state, or an empty frame before the first batch."""
+    return _read_state(spark, state_dir, STATE_SCHEMA)
+
+
+def _swap_pointer(state_dir: str, batch_id: int) -> None:
     tmp = _pointer(state_dir) + ".tmp"
     with open(tmp, "w") as f:
-        f.write(version)
+        f.write(f"v{batch_id}")
     os.replace(tmp, _pointer(state_dir))  # atomic pointer swap
+
+
+def _drain_exactly_once(
+    stream: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    apply: Callable[[DataFrame, int], bool],
+) -> None:
+    """Drain ``stream`` with ``Trigger.AvailableNow``; per micro-batch
+    above the ``state_dir/_CURRENT`` id, run ``apply(batch_df,
+    batch_id)`` and swap the pointer to the batch when it returns
+    True.  Ids at or below it are replays (crash after the swap,
+    before the checkpoint commit) and are skipped; under a new
+    checkpoint they hold new data, which is dropped."""
+    os.makedirs(state_dir, exist_ok=True)
+
+    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        applied = _current_version(state_dir)
+        if applied is not None and applied >= batch_id:
+            return  # replayed batch already folded in
+        if apply(batch_df, batch_id):
+            _swap_pointer(state_dir, batch_id)
+
+    (stream.writeStream.foreachBatch(upsert)
+     .option("checkpointLocation", checkpoint_dir)
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
+
+
+def _versioned_state_stream(
+    stream: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    schema: T.StructType | str,
+    fold: Callable[[DataFrame, DataFrame], DataFrame | None],
+) -> DataFrame:
+    """Fold each new micro-batch into the current version (or an
+    empty frame of ``schema``) with ``fold(state, batch_df)``, write
+    the result as ``v{batch_id}`` (``None`` writes nothing) and return
+    the drained state.  One state directory belongs to one checkpoint
+    (see :func:`_drain_exactly_once`)."""
+
+    def apply(batch_df: DataFrame, batch_id: int) -> bool:
+        state = fold(_read_state(batch_df.sparkSession, state_dir, schema),
+                     batch_df)
+        if state is None:
+            return False
+        state.write.mode("overwrite").parquet(
+            os.path.join(state_dir, f"v{batch_id}"))
+        return True
+
+    _drain_exactly_once(stream, state_dir, checkpoint_dir, apply)
+    return _read_state(stream.sparkSession, state_dir, schema)
 
 
 def run_incremental_dedup_stream(
@@ -74,38 +138,17 @@ def run_incremental_dedup_stream(
     Each micro-batch costs one batch-sized shuffle plus the
     digest-keyed merge join — independent of how much corpus the
     state already summarizes.  foreachBatch alone gives at-least-once
-    delivery: after a crash between ``_publish`` and the checkpoint
+    delivery: after a crash between the publish and the checkpoint
     commit, Spark replays the batch, and because
     ``incremental_exact_dedup`` ADDS group counts, re-merging an
-    already-applied batch would double-count.  The guard below makes
-    the sink exactly-once: the pointer file records the batch id of
-    the last applied batch, and a replayed batch whose id is already
-    (or older than) the published version is skipped — the published
+    already-applied batch would double-count.  The batch-id guard
+    (:func:`_drain_exactly_once`) skips a replayed batch whose id is
+    already (or older than) the published version — the published
     state is exactly the post-batch state the first attempt wrote."""
-    os.makedirs(state_dir, exist_ok=True)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        applied = _current_version(state_dir)
-        if applied is not None and applied >= batch_id:
-            # Replay of a batch already folded into the published
-            # state (crash after _publish, before checkpoint commit):
-            # merging again would double group_size — skip.
-            return
-        state = read_dedup_state(spark, state_dir)
-        merged = incremental_exact_dedup(
-            state, batch_df, text_col=text_col, id_col=id_col
-        )
-        _publish(merged, state_dir, batch_id)
-
-    q = (
-        doc_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return read_dedup_state(doc_stream.sparkSession, state_dir)
+    return _versioned_state_stream(
+        doc_stream, state_dir, checkpoint_dir, STATE_SCHEMA,
+        lambda state, batch_df: incremental_exact_dedup(
+            state, batch_df, text_col=text_col, id_col=id_col))
 
 
 def run_incremental_near_dedup_stream(
@@ -126,43 +169,19 @@ def run_incremental_near_dedup_stream(
     and replayed-batch guard.  Re-merging a replayed batch would
     duplicate its signature rows, so the exactly-once pointer guard is
     load-bearing here too."""
-    from pyspark.sql import types as TT
-
     from xcube_spark.pipeline.dedup import incremental_near_dedup
 
-    os.makedirs(state_dir, exist_ok=True)
-    empty_schema = TT.StructType(
-        [TT.StructField(id_col, TT.LongType())]
-        + [TT.StructField(f"h{j}", TT.StringType())
+    schema = T.StructType(
+        [T.StructField(id_col, T.LongType())]
+        + [T.StructField(f"h{j}", T.StringType())
            for j in range(num_hashes)]
-        + [TT.StructField("is_dup", TT.BooleanType())])
-
-    def read_state(spark: SparkSession) -> DataFrame:
-        version = _current_version(state_dir)
-        if version is not None:
-            return spark.read.parquet(
-                os.path.join(state_dir, f"v{version}"))
-        return spark.createDataFrame([], empty_schema)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        applied = _current_version(state_dir)
-        if applied is not None and applied >= batch_id:
-            return  # replayed batch already folded in
-        merged = incremental_near_dedup(
-            read_state(spark), batch_df, k=k, num_hashes=num_hashes,
+        + [T.StructField("is_dup", T.BooleanType())])
+    return _versioned_state_stream(
+        doc_stream, state_dir, checkpoint_dir, schema,
+        lambda state, batch_df: incremental_near_dedup(
+            state, batch_df, k=k, num_hashes=num_hashes,
             num_bands=num_bands, min_agree=min_agree,
-            text_col=text_col, id_col=id_col)
-        _publish(merged, state_dir, batch_id)
-
-    q = (
-        doc_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return read_state(doc_stream.sparkSession)
+            text_col=text_col, id_col=id_col))
 
 
 def run_incremental_near_dedup_stream_bucketed(
@@ -194,30 +213,15 @@ def run_incremental_near_dedup_stream_bucketed(
     """
     from xcube_spark.pipeline.dedup import NearDupStateStore
 
-    os.makedirs(marker_dir, exist_ok=True)
     store = NearDupStateStore(
         doc_stream.sparkSession, table_name, k=k,
         num_hashes=num_hashes, num_bands=num_bands,
         min_agree=min_agree, text_col=text_col, id_col=id_col,
         n_buckets=n_buckets)
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        applied = _current_version(marker_dir)
-        if applied is not None and applied >= batch_id:
-            return  # replayed batch already folded in
-        # batch_id-tagged merge: idempotent even when a crash landed
-        # between the two table appends and this marker (ADVICE r7)
+    def apply(batch_df: DataFrame, batch_id: int) -> bool:
         store.merge_batch(batch_df, batch_id=batch_id)
-        tmp = _pointer(marker_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"v{batch_id}")
-        os.replace(tmp, _pointer(marker_dir))
+        return True
 
-    q = (
-        doc_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_exactly_once(doc_stream, marker_dir, checkpoint_dir, apply)
     return store

@@ -1,12 +1,13 @@
 """Streaming sketch maintenance: HyperLogLog registers and count-min
 counters as foreachBatch state sinks.
 
-Same architecture as :mod:`xcube_spark.streaming.dedup_sink` (atomic
-versioned publish + replay guard), but the state here is strictly
-sketch-sized — m registers / d*w counters — so a stream can summarize
-an unbounded corpus with kilobytes of state and O(batch) work per
-micro-batch.  Register max-merge is idempotent and counter add-merge
-is guarded by the batch-id pointer, so both sinks are exactly-once.
+Each sink is a fold run by :mod:`xcube_spark.streaming.dedup_sink`'s
+protocol (atomic versioned publish + replay guard; one state directory
+per checkpoint), but the state here is strictly sketch-sized — m
+registers / d*w counters — so a stream can summarize an unbounded
+corpus with kilobytes of state and O(batch) work per micro-batch.
+Register max-merge is idempotent and counter add-merge is guarded by
+the batch-id pointer, so both sinks are exactly-once.
 
 Merging is value-exact, not approximate-exact: the published sketch
 after any sequence of micro-batches is bit-identical to the sketch of
@@ -18,49 +19,13 @@ single-pass recompute.
 
 from __future__ import annotations
 
-import os
+from pyspark.sql import DataFrame
 
-from pyspark.sql import DataFrame, SparkSession
-
-from xcube_spark.pipeline.sketches import (
-    cms_build,
-    cms_merge,
-    hll_merge,
-    hll_state,
-)
+from xcube_spark.pipeline.sketches import cms_merge, hll_merge
+from xcube_spark.streaming.dedup_sink import _versioned_state_stream
 
 HLL_STATE_SCHEMA = "reg BIGINT, rho INT"
 CMS_STATE_SCHEMA = "row INT, pos BIGINT, cnt BIGINT"
-
-
-def _pointer(state_dir: str) -> str:
-    return os.path.join(state_dir, "_CURRENT")
-
-
-def _current_version(state_dir: str) -> int | None:
-    ptr = _pointer(state_dir)
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            return int(f.read().strip().lstrip("v"))
-    return None
-
-
-def _read_state(spark: SparkSession, state_dir: str,
-                schema: str) -> DataFrame:
-    version = _current_version(state_dir)
-    if version is not None:
-        return spark.read.parquet(os.path.join(state_dir, f"v{version}"))
-    return spark.createDataFrame([], schema)
-
-
-def _publish(state: DataFrame, state_dir: str, batch_id: int) -> None:
-    version = f"v{batch_id}"
-    state.write.mode("overwrite").parquet(
-        os.path.join(state_dir, version))
-    tmp = _pointer(state_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(version)
-    os.replace(tmp, _pointer(state_dir))
 
 
 def run_incremental_hll_stream(
@@ -75,26 +40,9 @@ def run_incremental_hll_stream(
     Replayed batches are skipped via the published-version guard
     (max-merge is idempotent anyway, but the guard keeps the
     version history linear)."""
-    os.makedirs(state_dir, exist_ok=True)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        applied = _current_version(state_dir)
-        if applied is not None and applied >= batch_id:
-            return
-        state = _read_state(spark, state_dir, HLL_STATE_SCHEMA)
-        _publish(hll_merge(state, batch_df, col, p), state_dir,
-                 batch_id)
-
-    q = (
-        doc_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _read_state(doc_stream.sparkSession, state_dir,
-                       HLL_STATE_SCHEMA)
+    return _versioned_state_stream(
+        doc_stream, state_dir, checkpoint_dir, HLL_STATE_SCHEMA,
+        lambda state, batch_df: hll_merge(state, batch_df, col, p))
 
 
 def run_incremental_cms_stream(
@@ -109,26 +57,10 @@ def run_incremental_cms_stream(
     counter state.  Counter addition is NOT idempotent, so the
     version guard is load-bearing here: a replayed batch must not
     double-count (the dedup-sink exactly-once argument)."""
-    os.makedirs(state_dir, exist_ok=True)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        applied = _current_version(state_dir)
-        if applied is not None and applied >= batch_id:
-            return
-        state = _read_state(spark, state_dir, CMS_STATE_SCHEMA)
-        _publish(cms_merge(state, batch_df, gram_col, d=d, w=w),
-                 state_dir, batch_id)
-
-    q = (
-        gram_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _read_state(gram_stream.sparkSession, state_dir,
-                       CMS_STATE_SCHEMA)
+    return _versioned_state_stream(
+        gram_stream, state_dir, checkpoint_dir, CMS_STATE_SCHEMA,
+        lambda state, batch_df: cms_merge(state, batch_df, gram_col,
+                                          d=d, w=w))
 
 
 KMV_STATE_SCHEMA = "w BIGINT"
@@ -148,26 +80,9 @@ def run_incremental_kmv_stream(
     history linear anyway."""
     from xcube_spark.pipeline.sketches import kmv_merge
 
-    os.makedirs(state_dir, exist_ok=True)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        applied = _current_version(state_dir)
-        if applied is not None and applied >= batch_id:
-            return
-        state = _read_state(spark, state_dir, KMV_STATE_SCHEMA)
-        _publish(kmv_merge(state, batch_df, col, k), state_dir,
-                 batch_id)
-
-    q = (
-        doc_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _read_state(doc_stream.sparkSession, state_dir,
-                       KMV_STATE_SCHEMA)
+    return _versioned_state_stream(
+        doc_stream, state_dir, checkpoint_dir, KMV_STATE_SCHEMA,
+        lambda state, batch_df: kmv_merge(state, batch_df, col, k))
 
 
 PROBE_STATE_SCHEMA = ("n BIGINT, s1 BIGINT, s2 BIGINT, s11 BIGINT, "
@@ -193,26 +108,10 @@ def run_incremental_probe_stream(
     (the CMS exactly-once argument)."""
     from xcube_spark.pipeline.curation import probe_merge
 
-    os.makedirs(state_dir, exist_ok=True)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        applied = _current_version(state_dir)
-        if applied is not None and applied >= batch_id:
-            return
-        state = _read_state(spark, state_dir, PROBE_STATE_SCHEMA)
-        _publish(probe_merge(state, batch_df, y_col, x1_col, x2_col),
-                 state_dir, batch_id)
-
-    q = (
-        feat_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _read_state(feat_stream.sparkSession, state_dir,
-                       PROBE_STATE_SCHEMA)
+    return _versioned_state_stream(
+        feat_stream, state_dir, checkpoint_dir, PROBE_STATE_SCHEMA,
+        lambda state, batch_df: probe_merge(state, batch_df, y_col,
+                                            x1_col, x2_col))
 
 
 PCA_STATE_SCHEMA = "n BIGINT, s ARRAY<DOUBLE>, g ARRAY<DOUBLE>"
@@ -234,46 +133,29 @@ def run_pca_moments_stream(
     is load-bearing (the CMS exactly-once argument).  The
     drift-monitoring shape: re-fit the rotation from kilobytes of
     state at any watermark, never rescan the corpus."""
+    import numpy as np
+
     from xcube_spark.pipeline.similarity import (pca_moments,
                                                  pca_moments_merge)
 
-    os.makedirs(state_dir, exist_ok=True)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        applied = _current_version(state_dir)
-        if applied is not None and applied >= batch_id:
-            return
-        if batch_df.isEmpty():
-            m = None
-        else:
-            m = pca_moments(batch_df, vec_col)
-        prev = _read_state(spark, state_dir, PCA_STATE_SCHEMA).collect()
+    def fold(state: DataFrame, batch_df: DataFrame) -> DataFrame | None:
+        m = None if batch_df.isEmpty() else pca_moments(batch_df, vec_col)
+        prev = state.collect()
         if prev:
-            import numpy as np
-
             row = prev[0]
             d = len(row.s)
             pm = (int(row.n), np.asarray(row.s),
                   np.asarray(row.g).reshape(d, d))
             m = pm if m is None else pca_moments_merge(pm, m)
         if m is None:
-            return
+            return None  # empty first batch: nothing to publish
         n, s, g = m
-        state = spark.createDataFrame(
+        return batch_df.sparkSession.createDataFrame(
             [(int(n), [float(x) for x in s],
               [float(x) for x in g.reshape(-1)])], PCA_STATE_SCHEMA)
-        _publish(state, state_dir, batch_id)
 
-    q = (
-        emb_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _read_state(emb_stream.sparkSession, state_dir,
-                       PCA_STATE_SCHEMA)
+    return _versioned_state_stream(
+        emb_stream, state_dir, checkpoint_dir, PCA_STATE_SCHEMA, fold)
 
 
 def run_nb_counts_stream(
@@ -297,27 +179,11 @@ def run_nb_counts_stream(
     from xcube_spark.pipeline.classify import (NB_STATE_SCHEMA,
                                                nb_merge)
 
-    os.makedirs(state_dir, exist_ok=True)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        applied = _current_version(state_dir)
-        if applied is not None and applied >= batch_id:
-            return
-        state = _read_state(spark, state_dir, NB_STATE_SCHEMA)
-        _publish(nb_merge(state, batch_df, label_col=label_col,
-                          n_buckets=n_buckets, text_col=text_col),
-                 state_dir, batch_id)
-
-    q = (
-        doc_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _read_state(doc_stream.sparkSession, state_dir,
-                       NB_STATE_SCHEMA)
+    return _versioned_state_stream(
+        doc_stream, state_dir, checkpoint_dir, NB_STATE_SCHEMA,
+        lambda state, batch_df: nb_merge(
+            state, batch_df, label_col=label_col, n_buckets=n_buckets,
+            text_col=text_col))
 
 
 BLOOM_STATE_SCHEMA = "bloom ARRAY<BIGINT>"
@@ -339,31 +205,16 @@ def run_bloom_filter_stream(
     always the filter of everything seen, and corpus shards probe it
     broadcast (bloom_decontaminate(bloom=...)).  Bit-OR merge is
     idempotent, so replays are harmless even without the version
-    guard — the guard stays for uniformity with the other sinks."""
+    guard."""
     from xcube_spark.pipeline.curation import ngrams_narrow
     from xcube_spark.pipeline.sketches import (bloom_filter_build,
                                                bloom_merge)
 
-    os.makedirs(state_dir, exist_ok=True)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        applied = _current_version(state_dir)
-        if applied is not None and applied >= batch_id:
-            return
+    def fold(state: DataFrame, batch_df: DataFrame) -> DataFrame:
         fresh = bloom_filter_build(
             ngrams_narrow(batch_df, text_col, n), "ngram",
             m_bits=m_bits, k=k)
-        state = _read_state(spark, state_dir, BLOOM_STATE_SCHEMA)
-        merged = fresh if state.isEmpty() else bloom_merge(state, fresh)
-        _publish(merged, state_dir, batch_id)
+        return fresh if state.isEmpty() else bloom_merge(state, fresh)
 
-    q = (
-        doc_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _read_state(doc_stream.sparkSession, state_dir,
-                       BLOOM_STATE_SCHEMA)
+    return _versioned_state_stream(
+        doc_stream, state_dir, checkpoint_dir, BLOOM_STATE_SCHEMA, fold)
